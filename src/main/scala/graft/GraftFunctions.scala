@@ -15,27 +15,17 @@ import graft.functions._
 object GraftFunctions {
 
   /**
-   * Pin a frame that several downstream consumers re-read. Default is
-   * `persist(DISK_ONLY)`: blocks spill to executor disk but the
+   * Pin a frame that several downstream consumers re-read:
+   * `persist(DISK_ONLY)`. Blocks spill to executor disk but the
    * LINEAGE SURVIVES, so a lost executor recomputes its blocks instead
    * of killing the job — the property `localCheckpoint` gives up (it
-   * truncates lineage and pins blocks with no fallback; acceptable
-   * only on a single machine). `spark.graft.pin`:
-   *  - "disk" (default): persist(DISK_ONLY), recomputable.
-   *  - "reliable": df.checkpoint() — durable copy in the configured
-   *    checkpoint dir (the cluster-profile choice when lineage is too
-   *    expensive to replay).
-   *  - "local": localCheckpoint(), the old single-machine behavior.
+   * truncates lineage and pins blocks with no fallback).
    */
-  private[graft] def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.sparkSession.conf.get("spark.graft.pin", "disk") match {
-      case "local" => df.localCheckpoint()
-      case "reliable" => df.checkpoint()
-      case _ =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        pinnedFrames.add(p)
-        p
-    }
+  private[graft] def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    pinnedFrames.add(p)
+    p
+  }
 
   // Pinned frames outlive their operator call on purpose (the
   // RETURNED lazy frame references them; unpersisting inside the
@@ -70,8 +60,7 @@ object GraftFunctions {
    *    run).
    *  - On a cluster with NO checkpoint dir, falls back to
    *    localCheckpoint — configure spark.checkpoint.dir to get
-   *    executor-loss durability. `spark.graft.pin.iter=local` forces
-   *    the old behavior.
+   *    executor-loss durability.
    */
   private[graft] def pinIter(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sc = df.sparkSession.sparkContext
@@ -81,17 +70,13 @@ object GraftFunctions {
     // dedup_components, 1.69 -> 2.30 s A/B: the cache-based
     // checkpoint's MEMORY_AND_DISK persist of every round's state
     // costs more here than the recompute it avoids.)
-    df.sparkSession.conf.get("spark.graft.pin.iter", "reliable") match {
-      case "local" => df.localCheckpoint()
-      case _ =>
-        if (sc.getCheckpointDir.isEmpty) {
-          if (sc.isLocal)
-            sc.setCheckpointDir(
-              java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-          else return df.localCheckpoint()
-        }
-        df.checkpoint()
+    if (sc.getCheckpointDir.isEmpty) {
+      if (sc.isLocal)
+        sc.setCheckpointDir(
+          java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      else return df.localCheckpoint()
     }
+    df.checkpoint()
   }
 
   /**
@@ -127,11 +112,15 @@ object GraftFunctions {
     // ments pass too. A plan that isn't such a chain either already
     // has cluster-wide parallelism downstream of its shuffle or isn't
     // a scan heal candidate at all, so skipping it loses nothing.
+    import org.apache.spark.sql.catalyst.expressions.PlanExpression
     import org.apache.spark.sql.catalyst.plans.logical._
     def narrowChain(l: LogicalPlan): Boolean = l match {
       case _: LeafNode => true
       case r: Repartition if !r.shuffle => narrowChain(r.child) // coalesce
-      case n @ (_: Project | _: Filter | _: SubqueryAlias | _: Generate) =>
+      // a subquery inside the node's expressions executes eagerly
+      // under the Dataset.rdd probe just like an upstream exchange
+      case n @ (_: Project | _: Filter | _: SubqueryAlias | _: Generate)
+          if !n.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) =>
         n.children.forall(narrowChain)
       case _ => false
     }
@@ -318,8 +307,6 @@ object GraftFunctions {
                 extraProbes: Int = 2, seed: Long = 42L): Column =
     call_function("graft_lsh_probes", vec, lit(numTables), lit(bitsPerTable),
       lit(extraProbes), lit(seed))
-  def docFingerprint(text: Column, seed: Long = 42L): Column =
-    call_function("graft_fingerprint", text, lit(seed))
   def shingleHashes(text: Column, shingleWords: Int = 3): Column =
     call_function("graft_shingle_hashes", text, lit(shingleWords))
   /** Winnowing sketch hashes (MOSS fingerprint), sorted signed-asc. */

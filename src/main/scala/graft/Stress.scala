@@ -54,7 +54,7 @@ object Stress {
     time("knn_flat_cosine") {
       VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine").count() }
     time("knn_batch_16q") {
-      VectorSearch.knnBatchAgg(corpus, queries16, "vec_id", "embedding", 10, "cosine").count() }
+      VectorSearch.knnBatchGeneric(corpus, queries16, "vec_id", "embedding", 10, "cosine").count() }
     time("knn_batch_16q_fused") {
       VectorSearch.knnBatchFused(corpus, queries16, "vec_id", "embedding", 10, "cosine").count() }
     time("lsh_knn(ad-hoc: signatures recomputed)") {

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import graft.GraftFunctions._
 import graft.operators.{IvfIndex, IvfPq, PqIndex, TextAnalysis, VectorSearch}
 
@@ -191,7 +191,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * directory must never reach schema inference.
     *
     * Memoized ONE-DIRECTIONALLY: only `true` is cached (dropped with
-    * the other serving caches — [[dropResolveCaches]]). A `false` is
+    * the other serving caches — [[invalidateIndexes]]). A `false` is
     * never cached, so an empty→nonempty transition inside a single
     * mutation (first ingest writes the store, then reads [[chunks]]
     * before the end-of-mutation invalidate) can never be masked; the
@@ -310,36 +310,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     touchMeta("algorithm" -> a)
   }
 
-  // IVF is the one index with driver-side state (centroids); built
-  // lazily once per library generation and dropped on any mutation.
-  private var ivfState: Option[(KMeansModel, DataFrame)] = None
-  // Emptiness is re-checked at most once per store generation: the
-  // grid/ivf dispatch guard would otherwise run a full isEmpty job on
-  // every search call even for a populated library. "Empty" means no
-  // SEARCHABLE rows: a store holding only pending (null-embedding)
-  // chunks has nothing to fit a k-means/grid to and nothing a search
-  // could return — the empty-library contract applies to it verbatim
-  // (the fits would otherwise crash on a zero-row frame AFTER passing
-  // a chunks-based guard).
-  private var emptyCache: Option[Boolean] = None
-  private def storeIsEmpty: Boolean = emptyCache.getOrElse {
-    val e = searchable.isEmpty; emptyCache = Some(e); e
-  }
-  // Grid serving state, cached per store generation: the fitted bounds
-  // (tiny parquet) and the per-cell occupancy histogram — re-reading
-  // them per query would put two driver round-trips on the hot path.
-  private var gridMetaCache: Option[(Array[Double], Array[Double], Int, Int)] = None
-  private var gridCountsCache: Option[Seq[(String, Long)]] = None
-  // PQ serving state per store generation: stored codebooks (tiny
-  // parquet) and, for libraries without a persisted index, the lazy
-  // in-memory fit + encoded corpus (the PQ analog of ivfState).
-  private var pqBooksCache: Option[PqIndex.Codebooks] = None
-  private var pqState: Option[(PqIndex.Codebooks, DataFrame)] = None
-  // IVF-PQ serving state per store generation: stored centroids +
-  // codebooks (tiny parquets) and the lazy in-memory fit for
-  // libraries without the persisted index.
-  private var ivfpqSideCache: Option[(Seq[(Int, Array[Double])], PqIndex.Codebooks)] = None
-  private var ivfpqState: Option[IvfPq.Index] = None
   // Dev/test probe: the resolution scan scope of the most recent
   // deleteVictims, per tree — the partition directories the victim-
   // file resolution actually opened (or the tree root when a
@@ -353,17 +323,17 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // generation listing under each geometry base, the loaded geometry
   // itself (keyed by the RESOLVED sidecar suffix, so an epoch-pinned
   // searchAt and a head search that land on the same sidecar share
-  // one load), and tree non-emptiness — cached between mutations. On
-  // an object store each uncached search otherwise pays 1-2 LISTs +
-  // 1-2 GETs of pure latency (r11 verdict "What's wrong #3"). Dropped
-  // together by [[dropResolveCaches]] from every path that changes
-  // what resolution would answer: invalidateIndexes (all ingest/
-  // delete/restore/repair), sweepOrphanGeom + vacuumGeometry (sidecar
-  // deletes), installRebuild (new sidecar generation), and the index
-  // drops. Cross-instance staleness matches the long-standing serving
-  // caches (gridMetaCache etc.): another writer's commit is seen at
-  // this instance's next own mutation, the documented multi-writer
-  // read contract.
+  // one load), tree non-emptiness, and the per-generation facts of
+  // [[memoAt]] — cached between mutations. On an object store each
+  // uncached search otherwise pays 1-2 LISTs + 1-2 GETs of pure
+  // latency (r11 verdict "What's wrong #3"). Dropped together by
+  // [[invalidateIndexes]] from every path that changes what
+  // resolution would answer: every ingest/delete/restore/repair,
+  // sweepOrphanGeom + vacuumGeometry (sidecar deletes),
+  // installRebuild (new sidecar generation), and the index drops.
+  // Cross-instance staleness: another writer's commit is seen at this
+  // instance's next own mutation, the documented multi-writer read
+  // contract.
   // TrieMaps, not mutable.HashMap: a reader thread may be serving
   // search() while a writer thread's mutation clears these (the
   // streaming foreachBatch + concurrent-reader shape) — concurrent
@@ -372,22 +342,17 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private val geomGensCache = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
   private val geomLoadCache = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
   private val visibleCache = scala.collection.concurrent.TrieMap.empty[String, Unit]
+  private val genMemo = scala.collection.concurrent.TrieMap.empty[(String, Long), Any]
+  /** Load-once fact about generation `gen` of tree `tree` — store
+    * emptiness, grid cell occupancy. Head and epoch-pinned searches
+    * resolving the same generation share one entry. */
+  private def memoAt[T](tree: String, gen: Long)(load: => T): T =
+    genMemo.getOrElseUpdate((tree, gen), load).asInstanceOf[T]
   /** Test probe: filesystem LISTs issued by serving resolution (cache
     * misses in [[geomGens]]/[[hasVisibleData]]). A repeated search
     * must not advance it. Plain var: the specs that read it are
     * single-threaded; a torn count under races costs nothing. */
   private[graft] var resolveListCount: Long = 0L
-  private def dropResolveCaches(): Unit = {
-    geomGensCache.clear(); geomLoadCache.clear(); visibleCache.clear()
-    epochInfoCache.clear()
-    // tree-level memos (generation listings, head + pinned frames)
-    // drop for ALL trees, not just the mutation's footprint: a
-    // footprint-scoped maintenance loop (only ever rebuilding pq)
-    // must still adopt another instance's commits to the OTHER trees
-    // at its next own mutation — the documented multi-writer read
-    // contract ("stale until this instance next mutates").
-    epochTrees.foreach(_._2.invalidate())
-  }
   /** Test probe: TOTAL filesystem LISTs serving resolution has issued
     * for this library — sidecar-generation listings, tree-emptiness
     * probes, and each tree's manifest-generation listings. A repeated
@@ -395,45 +360,30 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private[graft] def servingListCount: Long =
     resolveListCount + epochTrees.map(_._2.genListCount).sum
 
+  /** Drop every serving memo. Tree-level memos (generation listings,
+    * head + pinned frames) drop for ALL trees, not just the
+    * mutation's footprint: a footprint-scoped maintenance loop (only
+    * ever rebuilding pq) must still adopt another instance's commits
+    * to the OTHER trees at its next own mutation — the documented
+    * multi-writer read contract ("stale until this instance next
+    * mutates"). */
   private[graft] def invalidateIndexes(): Unit = {
-    dropResolveCaches()
-    ivfState.foreach(_._2.unpersist())
-    ivfState = None
-    emptyCache = None
-    gridMetaCache = None
-    gridCountsCache = None
-    pqBooksCache = None
-    pqState.foreach(_._2.unpersist())
-    pqState = None
-    ivfpqSideCache = None
-    ivfpqState.foreach(_.encoded.unpersist())
-    ivfpqState = None
-    storeTree.invalidate()
-    lshTree.invalidate()
-    gridTree.invalidate()
-    ivfTree.invalidate()
-    pqTree.invalidate()
-    ivfpqTree.invalidate()
+    relist()
+    geomLoadCache.clear(); genMemo.clear(); epochInfoCache.clear()
   }
-  private def ivfIndex: (KMeansModel, DataFrame) = ivfState.getOrElse {
-    val (model, assigned) = IvfIndex.build(searchable, "embedding")
-    val cached = assigned.persist()
-    ivfState = Some((model, cached))
-    (model, cached)
+
+  /** Drop only the memos of what the filesystem LISTS — generation
+    * listings, sidecar listings, tree non-emptiness, tree frames.
+    * Loaded geometry stays: it is keyed by the resolved sidecar, whose
+    * content never changes. */
+  private def relist(): Unit = {
+    geomGensCache.clear(); visibleCache.clear()
+    epochTrees.foreach(_._2.invalidate())
   }
-  private def pqInMemory: (PqIndex.Codebooks, DataFrame) = pqState.getOrElse {
-    val base = pqBase(searchable)
-    val books = PqIndex.train(base, "__nvec")
-    val enc = PqIndex.encodeExact(base, "__nvec", books).drop("__nvec").persist()
-    pqState = Some((books, enc))
-    (books, enc)
-  }
-  private def ivfpqInMemory: IvfPq.Index = ivfpqState.getOrElse {
-    val idx0 = IvfPq.train(pqBase(searchable), "__nvec")
-    val idx = idx0.copy(encoded = idx0.encoded.drop("__nvec").persist())
-    ivfpqState = Some(idx)
-    idx
-  }
+
+  /** True when the store holds no SEARCHABLE rows (see
+    * [[Resolution.storeEmpty]]). */
+  private def storeIsEmpty: Boolean = head.storeEmpty
 
   /** The reference clamps k to [1, 100] (schemas/search_schema.py:26). */
   private def clampK(k: Int): Int = math.min(math.max(k, 1), 100)
@@ -449,45 +399,19 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** Append an embedded+indexed batch to the store and, for each
     * on-disk index present, its derived rows to that index — ingest
-    * stays incremental, indexes never rebuild on append. */
+    * stays incremental, indexes never rebuild on append (short of the
+    * schema migrations in [[Layout.append]]). */
   private def appendBatch(batch0: DataFrame): Unit = withWriterLock {
     // Cluster store files by doc_id: parquet keeps per-row-group
     // min/max stats, so a doc_id predicate (documentChunks, targeted
     // deletes) skips whole row groups of a sorted file. At 100 TB this
     // is the poor-man's z-order — free at write time, no layout change.
-    val batch = batch0.sortWithinPartitions(col("source"), col("doc_id"))
-    val indexDirExists = hadoopFs(indexPath)
-      .exists(new org.apache.hadoop.fs.Path(indexPath))
-    if (indexDirExists || hasIvfIndex || hasGridIndex || hasPqIndex || hasIvfPqIndex) {
-      // Multi-sink write: cache the embedded batch so the expensive
-      // embed + signature pass runs once, not once per sink.
-      val b = batch.persist()
-      storeTree.appendCommitted(b, 0L)
-      if (indexDirExists) {
-        // Schema migration = rebuild, never a mixed-generation append:
-        // an index written before `quant` rode along would read the
-        // new files' codes as null for old rows and silently drop them
-        // from a quantized phase 1. Rebuilding from the (already
-        // appended) store upgrades every row at once. A dataless index
-        // directory (everything deleted copy-on-write) rebuilds too —
-        // its schema is unreadable.
-        if (!hasPartitionedIndex || !partitionedIndex.columns.contains("quant")
-            || !partitionedIndex.columns.contains("source"))
-          buildPartitionedIndex()
-        else lshTree.appendCommitted(indexRows(b), indexMaxRecordsPerFile)
-      }
-      if (hasIvfIndex) appendOrRebuildIvf(b)
-      if (hasGridIndex) appendGridRows(b)
-      if (hasPqIndex) appendPqRows(b)
-      if (hasIvfPqIndex) appendIvfPqRows(b)
-      b.unpersist()
-    } else {
-      // persist: the manifest commit's touched-dir resolution and the
-      // write would otherwise each run the embed pass
-      val b = batch.persist()
-      storeTree.appendCommitted(b, 0L)
-      b.unpersist()
-    }
+    // persist: the embed + signature pass runs once, not once per sink
+    // (the store manifest commit's touched-dir resolution counts as one)
+    val b = batch0.sortWithinPartitions(col("source"), col("doc_id")).persist()
+    storeTree.appendCommitted(b, 0L)
+    layouts.foreach(l => if (l.tracked) l.append(b))
+    b.unpersist()
     invalidateIndexes()
     touchMeta()
   }
@@ -606,21 +530,24 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * through the library's preferred index algorithm — the analog of
    * the reference switching index classes per library
    * (tests/test_integration_algorithms.py).
+   *
+   * `filter` (the reference's per-library search scoping,
+   * vector_service.py:186, generalized to arbitrary metadata
+   * predicates over doc_id/source/n_tokens/chunk_idx/chunk_text):
+   * restricts the SEARCHABLE SET — all k results satisfy it, and it
+   * is applied scan-side (inside the pruned partitions of the
+   * persisted layouts, pushed down to the store scan otherwise),
+   * never post-hoc on a shortlist. See [[route]].
    */
   def search(queryText: String, k: Int = 10, metric: String = "cosine",
              filter: Option[Column] = None): DataFrame =
-    dispatch(queryFrame(queryText), clampK(k), metric, filter)
-
-  /** Empty (chunk_id, score) result — the empty-library answer for
-    * index paths whose builds cannot run on zero rows. */
-  private def emptyHits: DataFrame =
-    chunks.select(col("chunk_id"), lit(0.0).as("score")).limit(0)
+    route(head, algo, filter, new Ask(queryFrame(queryText), batch = false, clampK(k), metric))
 
   /** True when `f` resolves against `df`'s schema — i.e. the predicate
     * can be applied to an index layout's own rows. Checked by ANALYZING
     * the filter over a zero-row projection (no data is read). Old
     * layouts written before metadata rode in index rows fail this and
-    * fall back to a store-backed scan (correct, just less pruned;
+    * route like an absent layout (correct, just less pruned;
     * rebuilding the index upgrades them). */
   private def covers(df: DataFrame, f: Column): Boolean =
     try { df.limit(0).where(f).queryExecution.analyzed; true }
@@ -629,133 +556,109 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private def applyF(df: DataFrame, filter: Option[Column]): DataFrame =
     filter.fold(df)(df.where)
 
-  /** Exact search over the filtered store — the fallback serving a
-    * metadata-scoped search when the persisted index layout predates
-    * the metadata columns (exact results are a superset-recall answer;
-    * a rebuild restores the pruned path). */
-  private def flatFiltered(q: DataFrame, f: Column, kk: Int,
-                           metric: String): DataFrame =
-    VectorSearch.knnFlat(searchable.where(f).select(col("chunk_id"), col("embedding")),
-      q, "chunk_id", "embedding", kk, metric)
+  /** Where a search reads: the store frame at generation `storeGen`,
+    * and per persisted layout its (frame, generation) when it serves
+    * — [[head]] or an epoch ([[at]]). Layouts resolve on demand: a
+    * search opens only the layout its algorithm routes through. */
+  private final class Resolution(storeAt: => DataFrame, storeGenAt: => Long,
+                                 val layout: Layout => Option[(DataFrame, Long)]) {
+    lazy val store: DataFrame = storeAt
+    lazy val storeGen: Long = storeGenAt
+    /** No SEARCHABLE rows, checked once per store generation. A store
+      * holding only pending (null-embedding) chunks has nothing to fit
+      * a k-means/grid to and nothing a search could return, so the
+      * empty-library contract applies to it verbatim. */
+    def storeEmpty: Boolean =
+      memoAt("store", storeGen)(store.where(col("embedding").isNotNull).isEmpty)
+  }
+
+  /** The library as its heads stand now. */
+  private def head: Resolution =
+    new Resolution(chunks, headGenOf(storeTree),
+      l => if (l.present) Some((l.tree.open(), headGenOf(l.tree))) else None)
+
+  /** The library as of epoch `e`: every tree at the generation the
+    * epoch recorded; a layout the epoch predates is absent. */
+  private def at(e: Long): Resolution = {
+    val info = epochInfo(e)
+    new Resolution(storeTree.openAt(info("store")), info("store"),
+      l => info.get(l.name).map(g => (l.tree.openAt(g), g)))
+  }
+
+  /** One search's query side and kernel choice: the query frame (one
+    * `qvec` row, or `query_id`-keyed rows when `batch`), clamped k and
+    * metric. Single and batch searches run different kernels — a
+    * batch of one is a different plan — so every store-side route
+    * below, and every [[Layout.probe]], picks its twin from here. */
+  private final class Ask(val q: DataFrame, val batch: Boolean, val kk: Int, val metric: String) {
+    private def vecs(store: DataFrame) = store.select(col("chunk_id"), col("embedding"))
+    /** (chunk_id, score), or (query_id, chunk_id, score, rank) — no rows. */
+    def empty(store: DataFrame): DataFrame =
+      if (batch) q.limit(0).select(col("query_id"),
+        lit("").as("chunk_id"), lit(0.0).as("score"), lit(0).as("rank"))
+      else store.select(col("chunk_id"), lit(0.0).as("score")).limit(0)
+    def exact(store: DataFrame): DataFrame =
+      if (batch) VectorSearch.knnBatchGeneric(vecs(store), q, "chunk_id", "embedding", kk, metric)
+      else VectorSearch.knnFlat(vecs(store), q, "chunk_id", "embedding", kk, metric)
+    /** Probe of the `lsh_buckets` column every store row carries. */
+    def lshColumn(store: DataFrame): DataFrame =
+      if (batch) VectorSearch.lshKnnBatchIndexed(store, q, "chunk_id", "embedding",
+        "lsh_buckets", kk, metric, numTables, bitsPerTable, seed)
+      else VectorSearch.lshKnnIndexed(store, q, "chunk_id", "embedding",
+        "lsh_buckets", kk, metric, numTables, bitsPerTable, seed)
+    /** The reference's GridIndex.search semantics (widen until >= 2k
+      * candidates), so sparse neighborhoods still fill k. */
+    def gridExpanding(store: DataFrame): DataFrame =
+      if (batch) VectorSearch.gridKnnExpandingBatch(vecs(store), q, "chunk_id", "embedding", kk, metric)
+      else VectorSearch.gridKnnExpanding(vecs(store), q, "chunk_id", "embedding", kk, metric)
+    def quantized(store: DataFrame): DataFrame =
+      if (batch) VectorSearch.knnQuantizedBatch(store, q, "chunk_id", "embedding", "quant", kk, metric)
+      else VectorSearch.knnQuantizedIndexed(store, q, "chunk_id", "embedding", "quant", kk, metric)
+    /** 1-bit rung: Hamming phase 1 over the stored packed-sign column
+      * (8 bytes/row at 64 dims), exact re-rank. A store predating the
+      * bits column (schema-evolution guard) packs on the fly. */
+    def binary(store: DataFrame): DataFrame =
+      if (store.columns.contains("bits"))
+        if (batch) VectorSearch.knnBinaryBatch(store, q, "chunk_id", "embedding", "bits", kk, metric)
+        else VectorSearch.knnBinaryIndexed(store, q, "chunk_id", "embedding", "bits", kk, metric)
+      else if (batch) VectorSearch.knnBinaryBatch(
+        vecs(store).withColumn("bits", bitPack(col("embedding"))),
+        q, "chunk_id", "embedding", "bits", kk, metric)
+      else VectorSearch.knnBinary(vecs(store), q, "chunk_id", "embedding", kk, metric)
+  }
 
   /**
-   * Single-query search routed through the preferred algorithm —
-   * shared by the text and raw-vector entry points.
-   *
-   * `filter` (the reference's per-library search scoping,
-   * vector_service.py:186, generalized to arbitrary metadata
-   * predicates over doc_id/source/n_tokens/chunk_idx/chunk_text):
-   * restricts the SEARCHABLE SET — all k results satisfy it, and it
-   * is applied scan-side (inside the pruned partitions of the
-   * lsh/ivf/pq/ivfpq layouts, pushed down to the store scan for
-   * flat/quantized/binary), never post-hoc on a shortlist.
+   * The one search router — head and epoch-pinned, single and batch.
+   * An algorithm backed by a persisted layout probes it when the
+   * resolution holds one whose rows carry `filter`'s columns (the
+   * predicate then applies inside the pruned scan). Otherwise — no
+   * layout, or a layout written before the metadata columns rode in
+   * its rows — it routes as a store-only library: lsh probes the
+   * store's bucket column, grid runs the expanding probe, and
+   * ivf/pq/ivfpq answer with an exact scan, like flat. The fitted
+   * algorithms (grid/ivf/pq/ivfpq) answer [] on a store with no
+   * searchable rows (reference empty-library semantics); the other
+   * scans handle empty input natively.
    */
-  private def dispatch(q: DataFrame, kk: Int, metric: String,
-                       filter: Option[Column] = None): DataFrame = {
-    // grid bounds and k-means fits need rows; an empty library answers
-    // [] on every algorithm (reference empty-library semantics). The
-    // flat/lsh/quantized scans handle empty input natively.
-    if ((algo == "grid" || algo == "ivf" || algo == "pq" || algo == "ivfpq")
-        && storeIsEmpty)
-      return emptyHits
-    algo match {
-      case "flat" =>
-        VectorSearch.knnFlat(applyF(searchable, filter)
-          .select(col("chunk_id"), col("embedding")),
-          q, "chunk_id", "embedding", kk, metric)
-      case "lsh" =>
-        VectorSearch.lshKnnIndexed(applyF(searchable, filter), q,
-          "chunk_id", "embedding", "lsh_buckets",
-          kk, metric, numTables, bitsPerTable, seed)
-      case "grid" if hasGridIndex && filter.isEmpty =>
-        // probe the persisted fitted grid: no per-query bounds
-        // aggregate, partition-pruned cell scan.
-        val (lo, hi, gd, cpd) = gridBoundsStored()
-        VectorSearch.gridKnnIndexed(gridTree.open(),
-          lo, hi, q, "chunk_id", "embedding", kk, metric, gd, cpd,
-          countsOpt = Some(gridCounts()))
-      case "grid" if hasGridIndex
-          && covers(gridTree.open(), filter.get) =>
-        // Filtered search THROUGH the fitted index: the expanding-rule
-        // radius resolves from the per-cell occupancy of the FILTERED
-        // rows — one narrow (cell, predicate-cols) aggregate over the
-        // cell-partitioned layout, not a corpus bounds pass — and the
-        // probe scan stays partition-pruned to the chosen cells with
-        // the predicate pushed inside them. Results are expanding-rule
-        // honest by construction: identical to running the expanding
-        // probe over the filtered subset under the frozen fitted
-        // bounds. Pre-metadata cell layouts fail covers() and take the
-        // store-backed fallback below (rebuild upgrades them).
-        val (lo, hi, gd, cpd) = gridBoundsStored()
-        val filtered = gridTree.open().where(filter.get)
-        VectorSearch.gridKnnIndexed(filtered, lo, hi, q,
-          "chunk_id", "embedding", kk, metric, gd, cpd,
-          countsOpt = Some(VectorSearch.gridCellCounts(filtered)))
-      case "grid" =>
-        // expanding-radius probe — the reference's GridIndex.search
-        // semantics (widen until >= 2k candidates), so sparse
-        // neighborhoods still fill k
-        VectorSearch.gridKnnExpanding(applyF(searchable, filter)
-          .select(col("chunk_id"), col("embedding")),
-          q, "chunk_id", "embedding", kk, metric)
-      case "ivf" if hasIvfIndex =>
-        // manifest-planned open + driver-resolved probe cells; the
-        // predicate applies INSIDE the cluster-pruned scan
-        val assigned = ivfTree.open()
-        if (filter.forall(covers(assigned, _)))
-          IvfIndex.searchAssigned(applyF(assigned, filter), ivfCentersStored(),
-            q, "chunk_id", "embedding", kk, metric = metric)
-        else flatFiltered(q, filter.get, kk, metric)
-      case "ivf" =>
-        val (model, assigned) = ivfIndex
-        IvfIndex.search(applyF(assigned, filter), model, q,
-          "chunk_id", "embedding", kk, metric = metric)
-      case "quantized" =>
-        VectorSearch.knnQuantizedIndexed(applyF(searchable, filter), q,
-          "chunk_id", "embedding", "quant", kk, metric)
-      case "binary" if chunks.columns.contains("bits") =>
-        // 1-bit rung: Hamming phase 1 over the stored packed-sign
-        // column (8 bytes/row at 64 dims), exact re-rank
-        VectorSearch.knnBinaryIndexed(applyF(searchable, filter), q,
-          "chunk_id", "embedding", "bits", kk, metric)
-      case "binary" =>
-        // store predates the bits column (schema-evolution guard, same
-        // contract as the quant-column index rebuild): pack on the fly
-        VectorSearch.knnBinary(applyF(searchable, filter)
-          .select(col("chunk_id"), col("embedding")),
-          q, "chunk_id", "embedding", kk, metric)
-      case "pq" if hasPqIndex =>
-        // codes-only ADC scan of the persisted index; exact re-rank on
-        // the survivors' float rows
-        val codes = pqTree.open()
-        if (filter.forall(covers(codes, _)))
-          PqIndex.search(applyF(codes, filter), pqBooksStored(), q,
-            "chunk_id", "embedding", kk, metric, normalized = true)
-        else flatFiltered(q, filter.get, kk, metric)
-      case "pq" =>
-        val (books, enc) = pqInMemory
-        if (filter.forall(covers(enc, _)))
-          PqIndex.search(applyF(enc, filter), books, q, "chunk_id", "embedding",
-            kk, metric, normalized = true)
-        else flatFiltered(q, filter.get, kk, metric)
-      case "ivfpq" if hasIvfPqIndex =>
-        // partition-pruned (nProbe cells) + column-pruned (codes-only
-        // phase 1) scan of the persisted layout; exact re-rank. Side
-        // tables come from the per-generation cache (like the batch
-        // path) — not re-read from parquet per query.
-        val (centers, books) = ivfpqSideStored()
-        val encoded = ivfpqTree.open()
-        if (filter.forall(covers(encoded, _)))
-          IvfPq.search(IvfPq.Index(centers, books, applyF(encoded, filter)),
-            q, "chunk_id", "embedding", kk, metric = metric, normalized = true)
-        else flatFiltered(q, filter.get, kk, metric)
-      case "ivfpq" =>
-        val idx = ivfpqInMemory
-        if (filter.forall(covers(idx.encoded, _)))
-          IvfPq.search(idx.copy(encoded = applyF(idx.encoded, filter)), q,
-            "chunk_id", "embedding", kk, metric = metric, normalized = true)
-        else flatFiltered(q, filter.get, kk, metric)
-    }
+  private def route(r: Resolution, alg: String, filter: Option[Column], a: Ask): DataFrame = {
+    val layout = layouts.find(_.name == alg)
+    if (layout.exists(_.geomBases.nonEmpty) && r.storeEmpty) return a.empty(r.store)
+    def store = applyF(r.store.where(col("embedding").isNotNull), filter)
+    val probed = for {
+      l <- layout
+      (frame, gen) <- r.layout(l)
+      if filter.forall(covers(frame, _))
+    } yield l.probe(frame, gen, filter, a)
+    probed.getOrElse(alg match {
+      case "flat" | "ivf" | "pq" | "ivfpq" => a.exact(store)
+      case "lsh" => a.lshColumn(store)
+      case "grid" => a.gridExpanding(store)
+      case "quantized" => a.quantized(store)
+      case "binary" => a.binary(store)
+      case other => throw new IllegalArgumentException(
+        s"unknown index algorithm '$other' (expected one of " +
+        s"${VectorLibrary.algorithms.mkString(", ")})")
+    })
   }
 
   /**
@@ -769,8 +672,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     if (qvec.length != dim)
       throw new IllegalArgumentException(
         s"query dimension ${qvec.length} does not match library dimension $dim")
-    dispatch(spark.range(1).select(
-      typedLit(qvec).cast("array<float>").as("qvec")), clampK(k), metric, filter)
+    route(head, algo, filter, new Ask(spark.range(1).select(
+      typedLit(qvec).cast("array<float>").as("qvec")), batch = false, clampK(k), metric))
   }
 
   /**
@@ -800,25 +703,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * shape; otherwise it falls back to the integer column probe over
     * the stored `lsh_buckets` (full scan of one small column). Both
     * paths return identical results (same probes, same stored
-    * signatures, same exact re-rank). */
+    * signatures, same exact re-rank). A metadata predicate composes
+    * with the probe predicate INSIDE the pruned scan. */
   def searchApprox(queryText: String, k: Int = 10,
                    metric: String = "cosine",
-                   filter: Option[Column] = None): DataFrame = {
-    // The metadata predicate composes with the probe predicate INSIDE
-    // the pruned (tbl, bucket) scan — partition pruning picks the
-    // probed directories, the pushed-down row filter drops non-matching
-    // row groups there; candidates never include filtered-out rows. An
-    // index written before metadata rode in its rows falls back to the
-    // store's bucket-column probe over the filtered store.
-    if (hasPartitionedIndex && filter.forall(covers(partitionedIndex, _)))
-      VectorSearch.lshKnnPartitioned(applyF(partitionedIndex, filter),
-        queryFrame(queryText),
-        "chunk_id", "embedding", clampK(k), metric, numTables, bitsPerTable, seed)
-    else
-      VectorSearch.lshKnnIndexed(applyF(searchable, filter), queryFrame(queryText),
-        "chunk_id", "embedding", "lsh_buckets",
-        clampK(k), metric, numTables, bitsPerTable, seed)
-  }
+                   filter: Option[Column] = None): DataFrame =
+    route(head, "lsh", filter, new Ask(queryFrame(queryText), batch = false, clampK(k), metric))
 
   /**
    * Two-phase approximate search served ENTIRELY from the partitioned
@@ -863,100 +753,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    */
   def searchBatch(queryTexts: Seq[String], k: Int = 10,
                   metric: String = "cosine",
-                  filter: Option[Column] = None): DataFrame = {
-    val kk = clampK(k)
-    val queries = queriesFrame(queryTexts)
-    if ((algo == "grid" || algo == "ivf" || algo == "pq" || algo == "ivfpq")
-        && storeIsEmpty)
-      return queries.limit(0).select(col("query_id"),
-        lit("").as("chunk_id"), lit(0.0).as("score"), lit(0).as("rank"))
-    // Metadata-scoped batch fallback for layouts predating the
-    // metadata columns: one exact pass over the filtered store.
-    def flatBatchFiltered(f: Column): DataFrame =
-      VectorSearch.knnBatchGeneric(
-        searchable.where(f).select(col("chunk_id"), col("embedding")),
-        queries, "chunk_id", "embedding", kk, metric)
-    algo match {
-      case "flat" =>
-        VectorSearch.knnBatchGeneric(applyF(searchable, filter)
-          .select(col("chunk_id"), col("embedding")),
-          queries, "chunk_id", "embedding", kk, metric)
-      case "lsh" => approxBatch(queries, kk, metric, filter)
-      case "grid" if hasGridIndex && filter.isEmpty =>
-        val (lo, hi, gd, cpd) = gridBoundsStored()
-        VectorSearch.gridKnnIndexedBatch(gridTree.open(),
-          lo, hi, queries, "chunk_id", "embedding", kk, metric, gd, cpd,
-          countsOpt = Some(gridCounts()))
-      case "grid" if hasGridIndex
-          && covers(gridTree.open(), filter.get) =>
-        // filtered batch through the fitted index — same contract as
-        // the single-query arm: radii from the FILTERED per-cell
-        // occupancy, predicate inside the cell-pruned scan
-        val (lo, hi, gd, cpd) = gridBoundsStored()
-        val filtered = gridTree.open().where(filter.get)
-        VectorSearch.gridKnnIndexedBatch(filtered, lo, hi, queries,
-          "chunk_id", "embedding", kk, metric, gd, cpd,
-          countsOpt = Some(VectorSearch.gridCellCounts(filtered)))
-      case "grid" =>
-        // no fitted index, or a pre-metadata cell layout that cannot
-        // resolve the predicate: expanding probe over the filtered
-        // store (rebuild upgrades the layout)
-        VectorSearch.gridKnnExpandingBatch(applyF(searchable, filter)
-          .select(col("chunk_id"), col("embedding")),
-          queries, "chunk_id", "embedding", kk, metric)
-      case "ivf" if hasIvfIndex =>
-        val assigned = ivfTree.open()
-        if (filter.forall(covers(assigned, _)))
-          IvfIndex.searchAssignedBatch(applyF(assigned, filter),
-            ivfCentersStored(), queries, "chunk_id", "embedding", kk,
-            metric = metric)
-        else flatBatchFiltered(filter.get)
-      case "ivf" =>
-        // same lazy in-memory build the single-query path uses — a
-        // read API must not persist a new on-disk layout as a side
-        // effect
-        val (model, assigned) = ivfIndex
-        IvfIndex.searchBatch(applyF(assigned, filter), model, queries,
-          "chunk_id", "embedding", kk, metric = metric)
-      case "quantized" =>
-        VectorSearch.knnQuantizedBatch(applyF(searchable, filter), queries,
-          "chunk_id", "embedding", "quant", kk, metric)
-      case "binary" if chunks.columns.contains("bits") =>
-        VectorSearch.knnBinaryBatch(applyF(searchable, filter), queries,
-          "chunk_id", "embedding", "bits", kk, metric)
-      case "binary" =>
-        VectorSearch.knnBinaryBatch(
-          applyF(searchable, filter).select(col("chunk_id"), col("embedding"))
-            .withColumn("bits", bitPack(col("embedding"))),
-          queries, "chunk_id", "embedding", "bits", kk, metric)
-      case "pq" if hasPqIndex =>
-        val codes = pqTree.open()
-        if (filter.forall(covers(codes, _)))
-          PqIndex.searchBatch(applyF(codes, filter), pqBooksStored(),
-            queries, "chunk_id", "embedding", kk, metric, normalized = true)
-        else flatBatchFiltered(filter.get)
-      case "pq" =>
-        val (books, enc) = pqInMemory
-        if (filter.forall(covers(enc, _)))
-          PqIndex.searchBatch(applyF(enc, filter), books, queries,
-            "chunk_id", "embedding", kk, metric, normalized = true)
-        else flatBatchFiltered(filter.get)
-      case "ivfpq" if hasIvfPqIndex =>
-        val encoded = ivfpqTree.open()
-        if (filter.forall(covers(encoded, _)))
-          IvfPq.searchBatch(
-            IvfPq.Index(ivfpqSideStored()._1, ivfpqSideStored()._2,
-              applyF(encoded, filter)),
-            queries, "chunk_id", "embedding", kk, metric = metric, normalized = true)
-        else flatBatchFiltered(filter.get)
-      case "ivfpq" =>
-        val idx = ivfpqInMemory
-        if (filter.forall(covers(idx.encoded, _)))
-          IvfPq.searchBatch(idx.copy(encoded = applyF(idx.encoded, filter)),
-            queries, "chunk_id", "embedding", kk, metric = metric, normalized = true)
-        else flatBatchFiltered(filter.get)
-    }
-  }
+                  filter: Option[Column] = None): DataFrame =
+    route(head, algo, filter, new Ask(queriesFrame(queryTexts), batch = true, clampK(k), metric))
 
   /** Batch approximate search: N query texts answered in ONE pass over
     * the LSH index. With the partitioned index present, the scan reads
@@ -967,7 +765,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def searchApproxBatch(queryTexts: Seq[String], k: Int = 10,
                         metric: String = "cosine",
                         filter: Option[Column] = None): DataFrame =
-    approxBatch(queriesFrame(queryTexts), clampK(k), metric, filter)
+    route(head, "lsh", filter, new Ask(queriesFrame(queryTexts), batch = true, clampK(k), metric))
 
   /**
    * Diversity-aware search (MMR, the RAG retrieval endpoint): the
@@ -1011,18 +809,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  private def approxBatch(queries: DataFrame, kk: Int,
-                          metric: String = "cosine",
-                          filter: Option[Column] = None): DataFrame = {
-    if (hasPartitionedIndex && filter.forall(covers(partitionedIndex, _)))
-      VectorSearch.lshKnnPartitionedBatch(applyF(partitionedIndex, filter), queries,
-        "chunk_id", "embedding", kk, metric, numTables, bitsPerTable, seed)
-    else
-      VectorSearch.lshKnnBatchIndexed(applyF(searchable, filter), queries,
-        "chunk_id", "embedding", "lsh_buckets", kk, metric,
-        numTables, bitsPerTable, seed)
-  }
-
   // --- bucket-partitioned exploded LSH index -------------------------
   // The on-disk analog of the reference's in-memory per-bucket lists
   // (LSHIndex._tables, algorithms.py:300-360): one directory per
@@ -1052,23 +838,112 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // upgraded by the next mutation. Maintenance resolution scans
   // (victim files, compaction occupancy) stay listing-based: they run
   // under the single-writer discipline the COW design already assumes.
-  private def intTree(root: String, cols: String*) = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    new graft.plans.ManifestedTree(spark, root,
-      StructType(cols.map(c => StructField(c, IntegerType))))
-  }
-  private def strTree(root: String, cols: String*) = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    new graft.plans.ManifestedTree(spark, root,
-      StructType(cols.map(c => StructField(c, StringType))))
-  }
-  private val lshTree = intTree(indexPath, "tbl", "bucket")
+
   // The STORE itself carries the same discipline — it is the biggest
   // tree of all, and the one a recovery re-derives everything from.
-  private val storeTree = strTree(path, "source")
+  private val storeTree = new graft.plans.ManifestedTree(spark, path,
+    StructType(Seq(StructField("source", StringType))))
+
+  /**
+   * One persisted index layout: everything that differs between the
+   * five lives in its entry of [[layouts]], and every per-index list
+   * of the library — epochs, leases, serving memos, compaction,
+   * vacuum, repair, ingest appends, copy-on-write deletes, search
+   * routing — is a loop over that table.
+   *
+   * `dir` is the layout's directory (rows tree + geometry sidecars),
+   * `root` its manifested rows tree, partitioned by `partCols`, with
+   * data files rolling at `maxRecords` rows.
+   */
+  private abstract class Layout(val name: String, val dir: String, root: String,
+                                val partCols: Seq[String], partType: DataType,
+                                val maxRecords: Int) {
+    val tree = new graft.plans.ManifestedTree(spark, root,
+      StructType(partCols.map(StructField(_, partType))))
+    /** The fitted geometry the rows decode under. */
+    type Geom
+    /** Generation-numbered geometry sidecar bases (`<base>.g<gen>`). */
+    def geomBases: Seq[String] = Nil
+    /** Geometry serving tree generation `gen`, loaded once per resolved
+      * sidecar ([[geomLoad]]). */
+    def geomAt(gen: Long): Geom
+    final def headGeom: Geom = geomAt(headGenOf(tree))
+    /** Built and holding data: searches probe it. */
+    def present: Boolean = hasVisibleData(root)
+    /** Ingest keeps it current. */
+    def tracked: Boolean = present
+    /** Rebuild from the store with the params `_library.json` records. */
+    def rebuild(meta: Map[String, String]): Unit
+    /** A batch's rows under the frozen head geometry. */
+    protected def rows(batch: DataFrame): DataFrame
+    /** Columns an append needs the stored rows to carry. */
+    protected def appendCols: Seq[String] = Nil
+    /** False when the stored rows predate [[appendCols]]. */
+    final def current: Boolean = appendCols.isEmpty || present &&
+      scala.util.Try(tree.open().columns).toOption.exists(cs => appendCols.forall(cs.contains))
+    /** Append a batch under the FROZEN geometry — unless the stored
+      * rows predate a column the batch carries, in which case rebuild
+      * from the (already appended) store instead: a mixed-generation
+      * append would read old rows' codes/metadata as null, silently
+      * dropping them from a quantized phase 1 or a filtered search. */
+    final def append(batch: DataFrame): Unit = {
+      sweepOrphanGeom(this)
+      if (current) tree.appendCommitted(rows(batch), maxRecords)
+      else rebuild(readMeta())
+    }
+    /** Partition directories holding a delete's victims. */
+    def victimDirs(victims: DataFrame): Seq[String]
+    /** True when [[victimDirs]] re-derives placement and must be
+      * coverage-checked ([[deleteVictims]]). */
+    def derivedDirs: Boolean = false
+    /** Single-query or batch probe over one resolved (frame, gen). */
+    def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame
+  }
+
+  /** The five layouts, in epoch/maintenance order. */
+  private lazy val layouts: Seq[Layout] =
+    Seq(lshLayout, ivfLayout, gridLayout, pqLayout, ivfpqLayout)
+
+  private def escape(v: String): String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
+
+  /** `cluster=` directories of the victims' re-derived cells. */
+  private def clusterDirs(l: Layout, withCluster: DataFrame): Seq[String] =
+    withCluster.select(col("cluster")).distinct().collect()
+      .filter(!_.isNullAt(0))
+      .map(r => s"${l.tree.root}/cluster=${r.getInt(0)}").toSeq
+
+  /** Drop a layout's directory (search then routes as if it was never
+    * built — see [[route]]). */
+  private def dropLayout(l: Layout): Unit = withTreeLocks(Seq(l.name)) {
+    hadoopFs(l.dir).delete(new org.apache.hadoop.fs.Path(l.dir), true)
+    invalidateIndexes()
+  }
+
+  private object lshLayout extends Layout("lsh", indexPath, indexPath,
+      Seq("tbl", "bucket"), IntegerType, indexMaxRecordsPerFile) {
+    type Geom = Unit
+    def geomAt(gen: Long): Unit = ()
+    // a dataless directory (everything deleted copy-on-write) is
+    // still maintained: its append rebuilds
+    override def tracked: Boolean =
+      hadoopFs(indexPath).exists(new org.apache.hadoop.fs.Path(indexPath))
+    override protected def appendCols = Seq("quant", "source")
+    def rebuild(meta: Map[String, String]): Unit = buildPartitionedIndex()
+    protected def rows(batch: DataFrame): DataFrame = indexRows(batch)
+    def victimDirs(victims: DataFrame): Seq[String] =
+      victims.select(posexplode(col("lsh_buckets")).as(Seq("tbl", "bucket")))
+        .distinct().collect()
+        .map(r => s"$indexPath/tbl=${r.getInt(0)}/bucket=${r.getInt(1)}").toSeq
+    def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame =
+      if (a.batch) VectorSearch.lshKnnPartitionedBatch(applyF(frame, filter), a.q,
+        "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed)
+      else VectorSearch.lshKnnPartitioned(applyF(frame, filter), a.q,
+        "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed)
+  }
 
   /** The bucket-partitioned index, memoized per manifest generation. */
-  private def partitionedIndex: DataFrame = lshTree.open()
+  private def partitionedIndex: DataFrame = lshLayout.tree.open()
 
   /** Exploded index rows of an embedded chunk batch, clustered per
     * (tbl, bucket) partition directory and SORTED BY chunk_id within
@@ -1106,9 +981,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * full rewrite. */
   def buildPartitionedIndex(): Unit = withTreeLocks(Seq("lsh")) {
     val storeSnapGen = storeTree.snapshotGen() // before the row frames plan
-    installRebuild(lshTree, healAppend = Some(b =>
-      lshTree.appendCommitted(indexRows(b), indexMaxRecordsPerFile)),
-      storeSnapGen = storeSnapGen) { (tmp, _) =>
+    installRebuild(lshLayout.tree, Some(lshLayout), storeSnapGen) { (tmp, _) =>
       indexRows(chunks).write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", indexMaxRecordsPerFile)
         .partitionBy("tbl", "bucket").parquet(tmp)
@@ -1159,7 +1032,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * way: an ingest landing between capture and plan makes the heal
     * fire on an already-included batch (empty anti-join, no append). */
   private def installRebuild(tree: graft.plans.ManifestedTree,
-                             healAppend: Option[DataFrame => Unit] = None,
+                             layout: Option[Layout] = None,
                              storeSnapGen: Long = -1L)
                             (write: (String, Long) => Unit): Unit = {
     import org.apache.hadoop.fs.Path
@@ -1219,7 +1092,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // older geometry.
     val committed = tree.commitReplaceAll(fresh)
     // new sidecar generation + new tree head: resolution answers change
-    dropResolveCaches()
+    invalidateIndexes()
     // If an interleaved commit advanced THIS tree between the gen
     // prediction and the replace (commitFull retried onto a fresh
     // number), the staged sidecars are numbered at the interleaver's
@@ -1228,8 +1101,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // under the fresh geometry and (b) the interleaved generation
     // keeps resolving the geometry ITS rows were encoded under.
     if (committed != gen) {
-      geomBases.collectFirst { case (t, bases) if t eq tree => bases }
-        .foreach(_.foreach { base =>
+      layout.toSeq.flatMap(_.geomBases).foreach { base =>
           val src = new Path(base + geomSuffix(gen))
           val gfs = hadoopFs(base)
           if (!gfs.exists(src) || !gfs.rename(src, new Path(base + geomSuffix(committed))))
@@ -1237,14 +1109,14 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
               s"committed at generation $committed (predicted $gen) and " +
               s"its staged geometry at $src is gone — an interleaved " +
               "writer swept it; re-run this index build")
-        })
+      }
       // a concurrent reader may have repopulated geomGensCache from
       // the pre-rename listing in the rename window — drop again so
       // the renamed sidecar resolves without waiting for this
       // instance's next mutation (mirrors sweepOrphanGeom)
-      dropResolveCaches()
+      invalidateIndexes()
     }
-    healAppend.foreach(healRebuildSkew(tree, storeSnapGen, _))
+    layout.foreach(l => healRebuildSkew(tree, storeSnapGen, l.append))
   }
 
   /** Commit-time skew detection (r11 verdict #3): if the store head
@@ -1262,13 +1134,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
                               append: DataFrame => Unit): Unit = {
     if (storeTree.freshHeadGen() <= storeSnapGen) return
     // see the interleaved batch: this instance's store caches predate
-    // it — and the geometry head caches must re-resolve at the
-    // JUST-COMMITTED generation so the append encodes under the new
-    // frozen geometry, not the pre-build one
+    // it (the append's head geometry already resolves at the
+    // JUST-COMMITTED generation — installRebuild dropped the memos)
     storeTree.invalidate()
-    emptyCache = None
-    gridMetaCache = None; gridCountsCache = None
-    pqBooksCache = None; ivfpqSideCache = None
     val ids = tree.open().select(col("chunk_id")).distinct()
     val missing = searchable
       .join(ids, Seq("chunk_id"), "left_anti").persist()
@@ -1298,28 +1166,25 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * build's geometry for rows it never encoded. A tree with no
     * committed generations sweeps every suffixed sidecar (nothing can
     * resolve them, and the next commit is generation 1). */
-  private def sweepOrphanGeom(tree: graft.plans.ManifestedTree): Unit =
-    geomBases.collectFirst { case (t, bases) if t eq tree => bases }
-      .foreach { bases =>
-        // this runs only at the head of a mutation (under the tree's
-        // lease): re-resolve EVERYTHING from disk — including the
-        // tree's own generation listing (r12 memo), which may predate
-        // another instance's rebuild; a stale head here would sweep
-        // that rebuild's LIVE sidecar as an "orphan"
-        dropResolveCaches()
-        tree.invalidate()
-        // headGenOf: a legacy data-bearing manifest-less tree reads as
-        // MaxValue (sweep nothing); a never-committed empty tree as -1
-        // (every suffixed sidecar is an orphan)
-        val head = headGenOf(tree)
-        bases.foreach { base =>
-          geomGens(base).filter(g => head < 0 || g > head).foreach { g =>
-            hadoopFs(base).delete(
-              new org.apache.hadoop.fs.Path(base + geomSuffix(g)), true)
-          }
-        }
-        geomGensCache.clear()
+  private def sweepOrphanGeom(l: Layout): Unit = if (l.geomBases.nonEmpty) {
+    // this runs only at the head of a mutation (under the tree's
+    // lease): re-list EVERYTHING from disk — including the tree's own
+    // generation listing (r12 memo), which may predate another
+    // instance's rebuild; a stale head here would sweep that
+    // rebuild's LIVE sidecar as an "orphan"
+    relist()
+    // headGenOf: a legacy data-bearing manifest-less tree reads as
+    // MaxValue (sweep nothing); a never-committed empty tree as -1
+    // (every suffixed sidecar is an orphan)
+    val head = headGenOf(l.tree)
+    l.geomBases.foreach { base =>
+      geomGens(base).filter(g => head < 0 || g > head).foreach { g =>
+        hadoopFs(base).delete(
+          new org.apache.hadoop.fs.Path(base + geomSuffix(g)), true)
       }
+    }
+    geomGensCache.clear()
+  }
 
   // --- generation-numbered geometry sidecars ---------------------------
   // IVF/PQ/IVF-PQ centroids+codebooks+stats and grid bounds are tiny
@@ -1338,7 +1203,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private def geomSuffix(gen: Long): String = f".g$gen%09d"
 
   /** Sidecar generations recorded beside `base`, ascending. Memoized
-    * per base ([[dropResolveCaches]]) — one listing per cache life,
+    * per base ([[invalidateIndexes]]) — one listing per cache life,
     * not one per search. */
   private def geomGens(base: String): Seq[Long] =
     geomGensCache.getOrElseUpdate(base, {
@@ -1384,20 +1249,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       if (hasVisibleData(tree.root.stripSuffix("/"))) Long.MaxValue else -1L
     }
 
-  /** True when geometry RESOLVABLE AT THE TREE HEAD exists for `base`:
-    * a suffixed sidecar the head resolves, or the plain pre-versioning
-    * path. A crash orphan beside a never-committed empty tree does
-    * not count as an index. */
-  private def hasGeom(base: String, tree: graft.plans.ManifestedTree): Boolean =
-    geomGens(base).exists(_ <= headGenOf(tree)) ||
-      hadoopFs(base).exists(new org.apache.hadoop.fs.Path(base))
-
   /** Drop the partitioned index (search falls back to the column probe). */
-  def dropPartitionedIndex(): Unit = withTreeLocks(Seq("lsh")) {
-    hadoopFs(indexPath).delete(new org.apache.hadoop.fs.Path(indexPath), true)
-    lshTree.invalidate()
-    dropResolveCaches()
-  }
+  def dropPartitionedIndex(): Unit = dropLayout(lshLayout)
 
   /**
    * Selective compaction of the partitioned LSH index — the OPTIMIZE
@@ -1412,10 +1265,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    */
   def compactPartitionedIndex(maxFilesPerPartition: Int = 4,
                               vacuumAfter: Boolean = true): Int = withTreeLocks(Seq("lsh")) {
-    if (!hasPartitionedIndex) return 0
-    lshTree.compact(maxFilesPerPartition, indexMaxRecordsPerFile,
-      Seq("chunk_id"), vacuumAfter = vacuumAfter)
+    if (!hasPartitionedIndex) 0
+    else compactLayout(lshLayout, maxFilesPerPartition, vacuumAfter)
   }
+
+  private def compactLayout(l: Layout, maxFilesPerPartition: Int, vacuumAfter: Boolean): Int =
+    l.tree.compact(maxFilesPerPartition, l.maxRecords, Seq("chunk_id"), vacuumAfter = vacuumAfter)
 
   /**
    * One maintenance pass over the store AND every persisted derived
@@ -1433,28 +1288,15 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
                      vacuumAfter: Boolean = true): Map[String, Int] = withWriterLock {
     // compaction swaps advance tree generations — sweep crash-orphan
     // geometry first so no swap commit lands on an orphan's number
-    geomBases.foreach { case (t, _) => sweepOrphanGeom(t) }
-    val passes = Seq(
-      // the store compacts to training-shard-sized files (1M chunk
-      // rows), not the index trees' delete-granularity bound
-      ("store", hasVisibleData(path), () =>
-        storeTree.compact(maxFilesPerPartition, 1L << 20, Seq("doc_id"),
-          vacuumAfter = vacuumAfter)),
-      ("lsh", hasPartitionedIndex, () =>
-        compactPartitionedIndex(maxFilesPerPartition, vacuumAfter)),
-      ("ivf", hasIvfIndex, () =>
-        ivfTree.compact(maxFilesPerPartition, IvfIndex.maxRecordsPerFile,
-          Seq("chunk_id"), vacuumAfter = vacuumAfter)),
-      ("grid", hasGridIndex, () =>
-        gridTree.compact(maxFilesPerPartition, indexMaxRecordsPerFile,
-          Seq("chunk_id"), vacuumAfter = vacuumAfter)),
-      ("pq", hasPqIndex, () =>
-        pqTree.compact(maxFilesPerPartition, indexMaxRecordsPerFile,
-          Seq("chunk_id"), vacuumAfter = vacuumAfter)),
-      ("ivfpq", hasIvfPqIndex, () =>
-        ivfpqTree.compact(maxFilesPerPartition, indexMaxRecordsPerFile,
-          Seq("chunk_id"), vacuumAfter = vacuumAfter)))
-    val out = passes.collect { case (n, true, run) => n -> run() }.toMap
+    layouts.foreach(sweepOrphanGeom)
+    // the store compacts to training-shard-sized files (1M chunk rows),
+    // not the index trees' delete-granularity bound
+    val store =
+      if (!hasVisibleData(path)) None
+      else Some("store" -> storeTree.compact(maxFilesPerPartition, 1L << 20,
+        Seq("doc_id"), vacuumAfter = vacuumAfter))
+    val out = (store ++ layouts.collect { case l if l.present =>
+      l.name -> compactLayout(l, maxFilesPerPartition, vacuumAfter) }).toMap
     invalidateIndexes()
     out
   }
@@ -1481,11 +1323,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // on a crash-orphan sidecar's number — vacuumGeometry would then
     // keep the failed build's geometry and delete the legitimate one.
     // Same sweep-before-commit rule as every other non-rebuild commit.
-    geomBases.foreach { case (t, _) => sweepOrphanGeom(t) }
-    val removed = Map(
-      "store" -> storeTree, "lsh" -> lshTree, "ivf" -> ivfTree,
-      "grid" -> gridTree, "pq" -> pqTree, "ivfpq" -> ivfpqTree)
-      .map { case (n, t) => n -> t.vacuum(olderThanMs, retainNone) }
+    layouts.foreach(sweepOrphanGeom)
+    val removed = epochTrees.map { case (n, t) => n -> t.vacuum(olderThanMs, retainNone) }.toMap
     // crash-stranded rebuild tmp siblings: no manifest references them
     // and (dot-prefixed) no listing scans them, so only this sweep —
     // or the same index rebuilding again — ever reclaims one
@@ -1514,14 +1353,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     }
   }
 
-  /** The geometry-sidecar bases of every encoded tree. */
-  private def geomBases: Seq[(graft.plans.ManifestedTree, Seq[String])] = Seq(
-    gridTree -> Seq(s"$gridPath/bounds"),
-    ivfTree -> Seq(s"$ivfPath/centroids", s"$ivfPath/stats"),
-    pqTree -> Seq(s"$pqPath/books"),
-    ivfpqTree -> Seq(s"$ivfpqPath/centroids", s"$ivfpqPath/books",
-      s"$ivfpqPath/stats"))
-
   /** Remove geometry sidecar generations no retained row-tree
     * generation resolves to — including crash orphans numbered above
     * the head (a prediction whose commit never happened). The plain
@@ -1530,9 +1361,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * the number of sidecar directories removed. */
   private def vacuumGeometry(): Int = {
     var removed = 0
-    geomBases.foreach { case (tree, bases) =>
-      val retained = tree.generations().map(_._1)
-      if (retained.nonEmpty) bases.foreach { base =>
+    layouts.foreach { l =>
+      val retained = l.tree.generations().map(_._1)
+      if (retained.nonEmpty) l.geomBases.foreach { base =>
         val gens = geomGens(base)
         val needed: Set[Long] =
           retained.flatMap(g => gens.filter(_ <= g).maxOption).toSet
@@ -1543,7 +1374,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         }
       }
     }
-    if (removed > 0) dropResolveCaches()
+    if (removed > 0) invalidateIndexes()
     removed
   }
 
@@ -1610,41 +1441,20 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     try {
       val storeIds = store.select(col("chunk_id"))
       val m = readMeta()
-      val targets: Seq[(String, Boolean, () => DataFrame,
-          DataFrame => Unit, () => Unit)] = Seq(
-        ("lsh", hasPartitionedIndex, () => partitionedIndex,
-          b => lshTree.appendCommitted(indexRows(b), indexMaxRecordsPerFile),
-          () => buildPartitionedIndex()),
-        ("ivf", hasIvfIndex, () => ivfTree.open(),
-          b => appendOrRebuildIvf(b),
-          () => buildIvfIndex(ivfCentroids)),
-        ("grid", hasGridIndex, () => gridTree.open(),
-          b => appendGridRows(b),
-          () => buildGridIndex(m.getOrElse("grid_dims", "4").toInt,
-            m.getOrElse("grid_cells_per_dim", "4").toInt)),
-        ("pq", hasPqIndex, () => pqTree.open(),
-          b => appendPqRows(b),
-          () => buildPqIndex(m.getOrElse("pq_m", "8").toInt,
-            m.getOrElse("pq_k", "16").toInt)),
-        ("ivfpq", hasIvfPqIndex, () => ivfpqTree.open(),
-          b => appendIvfPqRows(b),
-          () => buildIvfPqIndex(m.getOrElse("ivfpq_ncentroids", "16").toInt,
-            m.getOrElse("ivfpq_m", "8").toInt,
-            m.getOrElse("ivfpq_k", "16").toInt)))
-      val out = targets.collect { case (n, true, frame, append, rebuild) =>
-        val tf = frame()
+      val out = layouts.collect { case l if l.present =>
+        val tf = l.tree.open()
         if (!tf.columns.contains("chunk_id")) {
           // pre-chunk_id schema generation: migration = rebuild
-          rebuild(); n -> (0L, -1L)
+          l.rebuild(m); l.name -> (0L, -1L)
         } else {
           val ids = tf.select(col("chunk_id")).distinct()
           val ghosts = ids.join(storeIds, Seq("chunk_id"), "left_anti").count()
           val missing = store.join(ids, Seq("chunk_id"), "left_anti").persist()
           try {
             val nMissing = missing.count()
-            if (ghosts > 0) rebuild()
-            else if (nMissing > 0) append(missing)
-            n -> (nMissing, ghosts)
+            if (ghosts > 0) l.rebuild(m)
+            else if (nMissing > 0) l.append(missing)
+            l.name -> (nMissing, ghosts)
           } finally missing.unpersist()
         }
       }.toMap
@@ -1708,9 +1518,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** Every persisted tree, by epoch name. A `def`: the tree vals are
     * declared across the class body and this must not capture them at
     * construction order. */
-  private def epochTrees: Seq[(String, graft.plans.ManifestedTree)] = Seq(
-    "store" -> storeTree, "lsh" -> lshTree, "ivf" -> ivfTree,
-    "grid" -> gridTree, "pq" -> pqTree, "ivfpq" -> ivfpqTree)
+  private def epochTrees: Seq[(String, graft.plans.ManifestedTree)] =
+    ("store" -> storeTree) +: layouts.map(l => l.name -> l.tree)
 
   /** Record the current per-tree generation tuple as a new epoch.
     * Skips when nothing is manifested yet (pre-first-commit, or the
@@ -1912,118 +1721,34 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def restoreToEpoch(e: Long): Map[String, (Long, Long)] =
     restoreTo(epochInfo(e)("store"))
 
-  /** Approximate search pinned to epoch `e`: probes the LSH index AT
-    * the epoch's generation (falling back to a bucket probe over the
-    * epoch's store when the index predates the epoch), so the result
-    * can never straddle the store/index commit window — the
-    * consistency-critical twin of [[searchApprox]]. */
+  /** Approximate search pinned to epoch `e` — [[searchAt]] with the
+    * lsh algorithm: probes the LSH index AT the epoch's generation
+    * (falling back to a bucket probe over the epoch's store when the
+    * index predates the epoch), so the result can never straddle the
+    * store/index commit window. */
   def searchApproxAt(e: Long, queryText: String, k: Int = 10,
-                     metric: String = "cosine"): DataFrame = {
-    val info = epochInfo(e)
-    info.get("lsh") match {
-      case Some(g) =>
-        VectorSearch.lshKnnPartitioned(lshTree.openAt(g),
-          queryFrame(queryText),
-          "chunk_id", "embedding", clampK(k), metric,
-          numTables, bitsPerTable, seed)
-      case None =>
-        VectorSearch.lshKnnIndexed(chunksAt(e), queryFrame(queryText),
-          "chunk_id", "embedding", "lsh_buckets",
-          clampK(k), metric, numTables, bitsPerTable, seed)
-    }
-  }
+                     metric: String = "cosine"): DataFrame =
+    searchAt(e, queryText, k, metric, algorithm = Some("lsh"))
 
   /**
    * Epoch-pinned search routed through any index algorithm — the
-   * fully consistent twin of [[search]]: every tree opens AT the
-   * epoch's recorded generation, and the encoded algorithms (grid/
-   * ivf/pq/ivfpq) decode under the GEOMETRY GENERATION serving that
-   * tree generation ([[geomSuffixAt]]) — so the result for epoch `e`
-   * is stable across later ingests, deletes, AND index rebuilds (the
-   * r10 caveat this closes: pinned code frames used to decode against
-   * the current centroids/codebooks/bounds). An algorithm whose index
-   * tree predates the epoch falls back to the exact scan over the
-   * epoch's store. Valid on the same retention horizon as
-   * [[consistentAt]].
+   * fully consistent twin of [[search]], through the same [[route]]:
+   * every tree opens AT the epoch's recorded generation, and the
+   * encoded algorithms (grid/ivf/pq/ivfpq) decode under the GEOMETRY
+   * GENERATION serving that tree generation ([[geomSuffixAt]]) — so
+   * the result for epoch `e` is stable across later ingests, deletes,
+   * AND index rebuilds (the r10 caveat this closes: pinned code frames
+   * used to decode against the current centroids/codebooks/bounds).
+   * An algorithm whose index tree predates the epoch routes as if the
+   * layout was never built. Valid on the same retention horizon as
+   * [[consistentAt]]. On a static library it equals [[search]].
    */
   def searchAt(e: Long, queryText: String, k: Int = 10,
                metric: String = "cosine",
                algorithm: Option[String] = None,
-               filter: Option[Column] = None): DataFrame = {
-    val info = epochInfo(e)
-    val kk = clampK(k)
-    val q = queryFrame(queryText)
-    // searchable twin of the head dispatch: pending (null-embedding)
-    // rows of the pinned store are invisible here too
-    def store = applyF(chunksAt(e).where(col("embedding").isNotNull), filter)
-    def flatAt: DataFrame =
-      VectorSearch.knnFlat(store.select(col("chunk_id"), col("embedding")),
-        q, "chunk_id", "embedding", kk, metric)
-    // `filter` mirrors the head dispatch's scoping contract against
-    // the PINNED frames: applied scan-side (inside the pinned pruned
-    // layouts when their rows carry the predicate columns, pushed to
-    // the pinned store scan for flat/lsh/quantized/binary), with the
-    // same exact-over-filtered-store fallback for pre-metadata
-    // layouts — never post-hoc on a shortlist.
-    algorithm.getOrElse(algo) match {
-      case "flat" => flatAt
-      case "lsh" if filter.isEmpty => searchApproxAt(e, queryText, k, metric)
-      case "lsh" =>
-        // the head's filtered-lsh shape over the pinned store rows
-        // (bucket columns ride in the store, so no index tree needed)
-        VectorSearch.lshKnnIndexed(store, q,
-          "chunk_id", "embedding", "lsh_buckets",
-          kk, metric, numTables, bitsPerTable, seed)
-      case "quantized" =>
-        VectorSearch.knnQuantizedIndexed(store, q,
-          "chunk_id", "embedding", "quant", kk, metric)
-      case "binary" =>
-        if (store.columns.contains("bits"))
-          VectorSearch.knnBinaryIndexed(store, q,
-            "chunk_id", "embedding", "bits", kk, metric)
-        else VectorSearch.knnBinary(
-          store.select(col("chunk_id"), col("embedding")),
-          q, "chunk_id", "embedding", kk, metric)
-      case "grid" => info.get("grid") match {
-        case Some(g) if filter.forall(covers(gridTree.openAt(g), _)) =>
-          val (lo, hi, gd, cpd) = gridBoundsAt(g)
-          val cells = applyF(gridTree.openAt(g), filter)
-          VectorSearch.gridKnnIndexed(cells, lo, hi, q,
-            "chunk_id", "embedding", kk, metric, gd, cpd,
-            countsOpt = Some(VectorSearch.gridCellCounts(cells)))
-        case Some(_) => flatAt // pre-metadata pinned cells: exact fallback
-        case None =>
-          VectorSearch.gridKnnExpanding(
-            store.select(col("chunk_id"), col("embedding")),
-            q, "chunk_id", "embedding", kk, metric)
-      }
-      case "ivf" => info.get("ivf") match {
-        case Some(g) if filter.forall(covers(ivfTree.openAt(g), _)) =>
-          IvfIndex.searchAssigned(applyF(ivfTree.openAt(g), filter),
-            ivfCentersAt(g),
-            q, "chunk_id", "embedding", kk, metric = metric)
-        case _ => flatAt
-      }
-      case "pq" => info.get("pq") match {
-        case Some(g) if filter.forall(covers(pqTree.openAt(g), _)) =>
-          PqIndex.search(applyF(pqTree.openAt(g), filter), pqBooksAt(g), q,
-            "chunk_id", "embedding", kk, metric, normalized = true)
-        case _ => flatAt
-      }
-      case "ivfpq" => info.get("ivfpq") match {
-        case Some(g) if filter.forall(covers(ivfpqTree.openAt(g), _)) =>
-          val (centers, books) = ivfpqSideAt(g)
-          IvfPq.search(
-            IvfPq.Index(centers, books, applyF(ivfpqTree.openAt(g), filter)),
-            q, "chunk_id", "embedding", kk, metric = metric,
-            normalized = true)
-        case _ => flatAt
-      }
-      case other => throw new IllegalArgumentException(
-        s"unknown index algorithm '$other' (expected one of " +
-        s"${VectorLibrary.algorithms.mkString(", ")})")
-    }
-  }
+               filter: Option[Column] = None): DataFrame =
+    route(at(e), algorithm.getOrElse(algo), filter,
+      new Ask(queryFrame(queryText), batch = false, clampK(k), metric))
 
   /** Batch twin of [[searchAt]] — the epoch-pinned completion of the
     * "every search algorithm has a batch twin" matrix: N query texts
@@ -2038,84 +1763,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def searchAtBatch(e: Long, queryTexts: Seq[String], k: Int = 10,
                     metric: String = "cosine",
                     algorithm: Option[String] = None,
-                    filter: Option[Column] = None): DataFrame = {
-    val info = epochInfo(e)
-    val kk = clampK(k)
-    val queries = queriesFrame(queryTexts)
-    def store = applyF(chunksAt(e).where(col("embedding").isNotNull), filter)
-    def flatAt: DataFrame =
-      VectorSearch.knnBatchGeneric(
-        store.select(col("chunk_id"), col("embedding")),
-        queries, "chunk_id", "embedding", kk, metric)
-    algorithm.getOrElse(algo) match {
-      case "flat" => flatAt
-      case "lsh" => info.get("lsh") match {
-        case Some(g) if filter.isEmpty =>
-          // pinned partitioned probe: the union of all queries' probe
-          // partitions reads once (same planning-time pruning as the
-          // head batch), against the epoch's index generation
-          VectorSearch.lshKnnPartitionedBatch(lshTree.openAt(g), queries,
-            "chunk_id", "embedding", kk, metric,
-            numTables, bitsPerTable, seed)
-        case _ =>
-          // index predates the epoch, or a filter scopes the probe:
-          // bucket-column probe over the pinned store rows
-          VectorSearch.lshKnnBatchIndexed(store, queries,
-            "chunk_id", "embedding", "lsh_buckets", kk, metric,
-            numTables, bitsPerTable, seed)
-      }
-      case "quantized" =>
-        VectorSearch.knnQuantizedBatch(store, queries,
-          "chunk_id", "embedding", "quant", kk, metric)
-      case "binary" =>
-        if (store.columns.contains("bits"))
-          VectorSearch.knnBinaryBatch(store, queries,
-            "chunk_id", "embedding", "bits", kk, metric)
-        else VectorSearch.knnBinaryBatch(
-          store.select(col("chunk_id"), col("embedding"))
-            .withColumn("bits", bitPack(col("embedding"))),
-          queries, "chunk_id", "embedding", "bits", kk, metric)
-      case "grid" => info.get("grid") match {
-        case Some(g) if filter.forall(covers(gridTree.openAt(g), _)) =>
-          val (lo, hi, gd, cpd) = gridBoundsAt(g)
-          val cells = applyF(gridTree.openAt(g), filter)
-          VectorSearch.gridKnnIndexedBatch(cells, lo, hi, queries,
-            "chunk_id", "embedding", kk, metric, gd, cpd,
-            countsOpt = Some(VectorSearch.gridCellCounts(cells)))
-        case Some(_) => flatAt // pre-metadata pinned cells: exact fallback
-        case None =>
-          VectorSearch.gridKnnExpandingBatch(
-            store.select(col("chunk_id"), col("embedding")),
-            queries, "chunk_id", "embedding", kk, metric)
-      }
-      case "ivf" => info.get("ivf") match {
-        case Some(g) if filter.forall(covers(ivfTree.openAt(g), _)) =>
-          IvfIndex.searchAssignedBatch(applyF(ivfTree.openAt(g), filter),
-            ivfCentersAt(g), queries, "chunk_id", "embedding", kk,
-            metric = metric)
-        case _ => flatAt
-      }
-      case "pq" => info.get("pq") match {
-        case Some(g) if filter.forall(covers(pqTree.openAt(g), _)) =>
-          PqIndex.searchBatch(applyF(pqTree.openAt(g), filter),
-            pqBooksAt(g), queries, "chunk_id", "embedding", kk, metric,
-            normalized = true)
-        case _ => flatAt
-      }
-      case "ivfpq" => info.get("ivfpq") match {
-        case Some(g) if filter.forall(covers(ivfpqTree.openAt(g), _)) =>
-          val (centers, books) = ivfpqSideAt(g)
-          IvfPq.searchBatch(
-            IvfPq.Index(centers, books, applyF(ivfpqTree.openAt(g), filter)),
-            queries, "chunk_id", "embedding", kk, metric = metric,
-            normalized = true)
-        case _ => flatAt
-      }
-      case other => throw new IllegalArgumentException(
-        s"unknown index algorithm '$other' (expected one of " +
-        s"${VectorLibrary.algorithms.mkString(", ")})")
-    }
-  }
+                    filter: Option[Column] = None): DataFrame =
+    route(at(e), algorithm.getOrElse(algo), filter,
+      new Ask(queriesFrame(queryTexts), batch = true, clampK(k), metric))
 
   /**
    * Copy-on-write removal of the victim chunks from the store AND
@@ -2155,7 +1805,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       if (nVictims == 0L) return 0L
       // COW swap commits advance the geometry trees' generations —
       // sweep crash-orphan sidecars so no commit lands on one
-      geomBases.foreach { case (t, _) => sweepOrphanGeom(t) }
+      layouts.foreach(sweepOrphanGeom)
       // Targeted deletes have a tiny id set: ship it as a broadcast
       // LOCAL relation so the file-resolution and rewrite joins stay
       // map-side (joining against the persisted distributed frame
@@ -2216,45 +1866,35 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         }
       }
 
-      /** victimFilesOf over ONLY the given partition directories of a
-        * tree — for indexes whose victim DIRECTORIES are derivable
-        * from the victims themselves, the id scan prunes to those
+      /** The files holding victim rows under the given partition
+        * directories of a tree — the id scan prunes to those
         * directories and the result is the exact file set holding
         * victim rows. The two-level resolution matters because
         * directories are NOT small: LSH buckets and grid cells are
         * skewed by construction (near-duplicate corpora pile identical
         * signatures into few buckets), so "rewrite the victim dirs"
         * can degenerate to rewriting a fifth of the index, while the
-        * victim FILES stay bounded by indexMaxRecordsPerFile each. */
-      val audit = new scala.collection.concurrent.TrieMap[String, Seq[String]]()
-      def victimFilesUnder(label: String, tree: graft.plans.ManifestedTree,
-                           dirs: Seq[String]): Seq[String] = {
-        val (live, present) = liveUnder(tree, dirs)
-        audit.put(label, present)
-        if (live.isEmpty) Seq.empty
-        else victimFilesOf(
-          spark.read.option("basePath", tree.root.stripSuffix("/"))
-            .parquet(live: _*))
-      }
-
-      /** Pruned resolution for the cluster-partitioned trees (IVF /
-        * IVF-PQ): `withCluster` re-derives each victim's cell map-side
-        * (the same exact-fold argmin appends place rows by), so the id
-        * + file-metadata scan opens ONLY the victim cluster
-        * directories — never the whole tree. One combined job returns
-        * the victim files AND how many victims they cover; a shortfall
+        * victim FILES stay bounded by indexMaxRecordsPerFile each.
+        *
+        * `derived` marks directories re-derived from each victim's
+        * vector (the IVF / IVF-PQ cells: the same exact-fold argmin
+        * appends place rows by). Then one combined job returns the
+        * victim files AND how many victims they cover; a shortfall
         * (possible for plain IVF, whose BUILD-time placement is
         * MLlib's norm-optimized distance and can flip an FP near-tie
         * against the exact argmin) falls back loudly to the full-tree
         * scan, so pruning is an optimization, never a correctness
         * trade. */
-      def victimFilesByCluster(label: String, tree: graft.plans.ManifestedTree,
-                               withCluster: DataFrame): Seq[String] = {
+      val audit = new scala.collection.concurrent.TrieMap[String, Seq[String]]()
+      def victimFilesUnder(label: String, tree: graft.plans.ManifestedTree,
+                           dirs: Seq[String], derived: Boolean): Seq[String] = {
         val treeRoot = tree.root.stripSuffix("/")
-        val dirs = withCluster.select(col("cluster")).distinct().collect()
-          .filter(!_.isNullAt(0))
-          .map(r => s"$treeRoot/cluster=${r.getInt(0)}").toSeq
         val (live, present) = liveUnder(tree, dirs)
+        if (!derived) {
+          audit.put(label, present)
+          return if (live.isEmpty) Seq.empty
+            else victimFilesOf(spark.read.option("basePath", treeRoot).parquet(live: _*))
+        }
         val (files, covered) =
           if (live.isEmpty) (Seq.empty[String], 0L)
           else {
@@ -2276,21 +1916,21 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           victimFilesOf(tree.open())
         }
       }
-      def escape(v: String): String =
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
 
       // Resolve every victim file up front, while live data is intact.
       // Every resolution is a pruned id + file-metadata scan: the
-      // store prunes to the victims' source= partitions, the LSH scan
-      // to the (tbl, bucket) dirs from the victims' stored signatures,
-      // the grid scan to their cells under the stored frozen bounds,
-      // and the IVF / IVF-PQ scans to the victims' re-derived cluster
-      // directories (coverage-checked, full-tree fallback). The
-      // resolutions are independent read-only jobs over the persisted
-      // victim frame — they run concurrently (as do the rewrites
-      // below): a targeted delete's latency is a handful of SMALL
-      // jobs, so the serial job-launch overhead would dominate the
-      // actual I/O.
+      // store prunes to the victims' source= partitions, each layout
+      // to the directories its [[Layout.victimDirs]] derives from the
+      // victims (the LSH scan to the (tbl, bucket) dirs of their
+      // stored signatures, the grid scan to their cells under the
+      // stored frozen bounds, the IVF / IVF-PQ scans to their
+      // re-derived cluster directories — coverage-checked, full-tree
+      // fallback). Pending (null-embedding) victims are in NO index.
+      // The resolutions are independent read-only jobs over the
+      // persisted victim frame — they run concurrently (as do the
+      // rewrites below): a targeted delete's latency is a handful of
+      // SMALL jobs, so the serial job-launch overhead would dominate
+      // the actual I/O.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -2298,60 +1938,16 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         fs.map(Await.result(_, Duration.Inf))
       val storeFilesF = Future(step("resolve-store-files") {
         victimFilesUnder("store", storeTree, victims.select(col("source")).distinct()
-          .collect().map(r => s"$path/source=${escape(r.getString(0))}").toSeq)
+          .collect().map(r => s"$path/source=${escape(r.getString(0))}").toSeq,
+          derived = false)
       })
-      val lshFilesF = Future(step("resolve-lsh-files") {
-        if (hasPartitionedIndex)
-          victimFilesUnder("lsh", lshTree, victims
-            .select(posexplode(col("lsh_buckets")).as(Seq("tbl", "bucket")))
-            .distinct().collect()
-            .map(r => s"$indexPath/tbl=${r.getInt(0)}/bucket=${r.getInt(1)}").toSeq)
+      val layoutFilesF = layouts.map(l => Future(step(s"resolve-${l.name}-files") {
+        if (l.present) victimFilesUnder(l.name, l.tree, l.victimDirs(victims), l.derivedDirs)
         else Seq.empty[String]
-      })
-      val ivfFilesF = Future(step("resolve-ivf-files") {
-        // victim cells re-derive map-side against the stored centroids
-        // (what appendAssign placed rows by); build-time MLlib
-        // placement agrees except on FP near-ties, which the coverage
-        // fallback absorbs
-        if (hasIvfIndex)
-          // pending (null-embedding) victims are in NO index — they
-          // cannot be assigned to a cell and have no files to resolve
-          victimFilesByCluster("ivf", ivfTree,
-            IvfIndex.assignExact(victims.where(col("embedding").isNotNull),
-              "embedding", ivfCentersStored()))
-        else Seq.empty[String]
-      })
-      val gridFilesF = Future(step("resolve-grid-files") {
-        if (hasGridIndex) {
-          val (lo, hi, _, cpd) = gridBoundsStored()
-          victimFilesUnder("grid", gridTree, victims
-            .select(VectorSearch.cellKeyCol(col("embedding"), lo, hi, cpd).as("cell"))
-            .distinct().collect().filter(!_.isNullAt(0))
-            .map(r => s"$gridPath/cells/cell=${escape(r.getString(0))}").toSeq)
-        } else Seq.empty[String]
-      })
-      val pqFilesF = Future(step("resolve-pq-files") {
-        if (hasPqIndex)
-          victimFilesUnder("pq", pqTree, victims.select(col("source")).distinct()
-            .collect().map(r => s"$pqPath/codes/source=${escape(r.getString(0))}").toSeq)
-        else Seq.empty[String]
-      })
-      val ivfpqFilesF = Future(step("resolve-ivfpq-files") {
-        // exact replay of the build/append geometry: assignExact over
-        // the L2-normalized vectors against the stored coarse
-        // centroids IS how every encoded row was placed, so the
-        // pruned dirs are the victim cells bit-for-bit
-        if (hasIvfPqIndex)
-          victimFilesByCluster("ivfpq", ivfpqTree,
-            IvfIndex.assignExact(
-              victims.where(col("embedding").isNotNull)
-                .withColumn("__nvec", l2Normalize(col("embedding"))),
-              "__nvec", ivfpqSideStored()._1))
-        else Seq.empty[String]
-      })
-      val Seq(storeFiles, lshFiles, ivfFiles, gridFiles, pqFiles, ivfpqFiles) =
-        awaitAll(Seq(storeFilesF, lshFilesF, ivfFilesF, gridFilesF, pqFilesF,
-          ivfpqFilesF))
+      }))
+      val storeFiles +: layoutFiles = awaitAll(storeFilesF +: layoutFilesF)
+      val victimFiles = layouts.zip(layoutFiles).filter(_._2.nonEmpty)
+      def cowTmp(l: String) = s"$root/$name/.${l}_cow"
 
       // Phase 1: rewrite ONLY the victim files' survivors into
       // partition-mirrored tmp trees. basePath keeps the partition
@@ -2361,11 +1957,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       // ONE partition directory, so map tasks already hold
       // partition-aligned rows and the dynamic-partition writer emits
       // them directly — a shuffle here measured 9x the whole rewrite.
-      // The scan is forced to ONE TASK PER FILE: the cost of this job
-      // is parquet reader/writer setup (~100ms per tiny file, measured
-      // via the step probe), and Spark's default bin-packing lumps all
-      // the small victim files into a couple of tasks, serializing
-      // those setups; per-file tasks spread them across the cluster.
       def rewrite(treeRoot: String, files: Seq[String], tmp: String,
                   partCols: Seq[String], sorted: Boolean = false): Unit = {
         hadoopFs(tmp).delete(new org.apache.hadoop.fs.Path(tmp), true)
@@ -2384,16 +1975,11 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           .option("maxRecordsPerFile", indexMaxRecordsPerFile)
           .partitionBy(partCols: _*).parquet(tmp)
       }
-      val storeTmp = s"$root/$name/.chunks_cow"
-      val idxTmp = s"$root/$name/.lsh_index_cow"
-      val ivfTmp = s"$root/$name/.ivf_index_cow"
-      val gridTmp = s"$root/$name/.grid_index_cow"
-      val pqTmp = s"$root/$name/.pq_index_cow"
-      val ivfpqTmp = s"$root/$name/.ivfpq_index_cow"
       // The scans are forced to small splits: the cost of these jobs
-      // is parquet reader/writer setup over few bounded files, and the
-      // default bin-packing would lump them into one or two tasks,
-      // serializing those setups.
+      // is parquet reader/writer setup (~100ms per tiny file, measured
+      // via the step probe) over few bounded files, and the default
+      // bin-packing would lump them into one or two tasks, serializing
+      // those setups.
       // SESSION-GLOBAL conf save/restore: safe only because mutations
       // are single-writer (withWriterLock serializes them per library,
       // and Verify's concurrent query pool runs read-only queries —
@@ -2403,24 +1989,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
       spark.conf.set("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
       try {
-        awaitAll(Seq(
-          Future(step(s"rewrite-store (${storeFiles.size} files)")(
-            rewrite(path, storeFiles, storeTmp, Seq("source"), sorted = true))),
-          Future(if (lshFiles.nonEmpty)
-            step(s"rewrite-lsh (${lshFiles.size} files)")(
-              rewrite(indexPath, lshFiles, idxTmp, Seq("tbl", "bucket")))),
-          Future(if (ivfFiles.nonEmpty)
-            step(s"rewrite-ivf (${ivfFiles.size} files)")(
-              rewrite(s"$ivfPath/assigned", ivfFiles, ivfTmp, Seq("cluster")))),
-          Future(if (gridFiles.nonEmpty)
-            step(s"rewrite-grid (${gridFiles.size} files)")(
-              rewrite(s"$gridPath/cells", gridFiles, gridTmp, Seq("cell")))),
-          Future(if (pqFiles.nonEmpty)
-            step(s"rewrite-pq (${pqFiles.size} files)")(
-              rewrite(s"$pqPath/codes", pqFiles, pqTmp, Seq("source")))),
-          Future(if (ivfpqFiles.nonEmpty)
-            step(s"rewrite-ivfpq (${ivfpqFiles.size} files)")(
-              rewrite(s"$ivfpqPath/encoded", ivfpqFiles, ivfpqTmp, Seq("cluster"))))))
+        awaitAll(Future(step(s"rewrite-store (${storeFiles.size} files)")(
+          rewrite(path, storeFiles, cowTmp("chunks"), Seq("source"), sorted = true))) +:
+          victimFiles.map { case (l, files) =>
+            Future(step(s"rewrite-${l.name} (${files.size} files)")(
+              rewrite(l.tree.root, files, cowTmp(s"${l.name}_index"), l.partCols)))
+          })
       } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
 
       // Phase 2: per-directory file swaps (store first — it is the
@@ -2429,28 +2003,23 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       // replacement files are captured from the tmp tree BEFORE
       // cowTree consumes it, so the commit references exactly those
       // plus the untouched survivors — neither a crashed writer's
-      // orphans nor the victims can be adopted.
+      // orphans nor the victims can be adopted. A two-level layout
+      // (lsh's tbl=/bucket=) can be left with empty parents.
       def swapCommitted(label: String, tree: graft.plans.ManifestedTree,
-                        tmp: String, victimFiles: Seq[String]): Unit =
-        step(label) {
+                        tmp: String, victimFiles: Seq[String],
+                        nested: Boolean): Unit =
+        step(s"swap-$label") {
           val freshRel = graft.plans.ManifestedTree.listTree(spark, tmp, None)
           cowTree(tree.root, tmp, victimFiles, retainVictims =
             graft.plans.ManifestedTree.manifestExists(spark, tree.root))
+          if (nested) pruneEmptyParents(tree.root)
           tree.commitSwap(victimFiles, freshRel)
         }
-      swapCommitted("swap-store", storeTree, storeTmp, storeFiles)
-      if (lshFiles.nonEmpty) step("swap-lsh") {
-        val freshRel = graft.plans.ManifestedTree.listTree(spark, idxTmp, None)
-        cowTree(indexPath, idxTmp, lshFiles, retainVictims =
-          graft.plans.ManifestedTree.manifestExists(spark, indexPath))
-        pruneEmptyParents(indexPath)
-        lshTree.commitSwap(lshFiles, freshRel)
+      swapCommitted("store", storeTree, cowTmp("chunks"), storeFiles, nested = false)
+      victimFiles.foreach { case (l, files) =>
+        swapCommitted(l.name, l.tree, cowTmp(s"${l.name}_index"), files,
+          nested = l.partCols.size > 1)
       }
-      if (ivfFiles.nonEmpty) swapCommitted("swap-ivf", ivfTree, ivfTmp, ivfFiles)
-      if (gridFiles.nonEmpty) swapCommitted("swap-grid", gridTree, gridTmp, gridFiles)
-      if (pqFiles.nonEmpty) swapCommitted("swap-pq", pqTree, pqTmp, pqFiles)
-      if (ivfpqFiles.nonEmpty)
-        swapCommitted("swap-ivfpq", ivfpqTree, ivfpqTmp, ivfpqFiles)
       lastDeleteAudit = audit.toMap
       nVictims
     } finally {
@@ -2567,40 +2136,60 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // assign against the FROZEN bounds (clamped, exactly like any
   // out-of-range vector), so ingest never refits.
   private val gridPath = s"$root/$name/grid_index"
-  private val gridTree = strTree(s"$gridPath/cells", "cell")
+
+  private object gridLayout extends Layout("grid", gridPath, s"$gridPath/cells",
+      Seq("cell"), StringType, indexMaxRecordsPerFile) {
+    /** (lo, hi, gridDims, cellsPerDim) of the fitted grid. */
+    type Geom = (Array[Double], Array[Double], Int, Int)
+    override def geomBases = Seq(s"$gridPath/bounds")
+    // A legacy plain sidecar predates the cells_per_dim column and
+    // falls back to the meta file.
+    def geomAt(gen: Long): Geom =
+      geomLoad(s"$gridPath/bounds", gen) { path =>
+        val rows = spark.read.parquet(path).collect().sortBy(_.getInt(0))
+        val cpd =
+          if (rows.nonEmpty && rows.head.schema.fieldNames.contains("cells_per_dim"))
+            rows.head.getAs[Int]("cells_per_dim")
+          else readMeta().getOrElse("grid_cells_per_dim", "4").toInt
+        (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), rows.length, cpd)
+      }
+    def rebuild(meta: Map[String, String]): Unit =
+      buildGridIndex(meta.getOrElse("grid_dims", "4").toInt,
+        meta.getOrElse("grid_cells_per_dim", "4").toInt)
+    protected def rows(batch: DataFrame): DataFrame = {
+      val (lo, hi, _, cpd) = headGeom
+      gridRows(batch, lo, hi, cpd)
+    }
+    def victimDirs(victims: DataFrame): Seq[String] = {
+      val (lo, hi, _, cpd) = headGeom
+      victims.select(VectorSearch.cellKeyCol(col("embedding"), lo, hi, cpd).as("cell"))
+        .distinct().collect().filter(!_.isNullAt(0))
+        .map(r => s"$gridPath/cells/cell=${escape(r.getString(0))}").toSeq
+    }
+    /** Per-cell occupancy of generation `gen`, counted once. */
+    def counts(frame: DataFrame, gen: Long): Seq[(String, Long)] =
+      memoAt(this.name, gen)(VectorSearch.gridCellCounts(frame))
+    // A filtered probe resolves its expanding-rule radius from the
+    // per-cell occupancy of the FILTERED rows — one narrow (cell,
+    // predicate-cols) aggregate over the cell-partitioned layout, not
+    // a corpus bounds pass — and the probe scan stays partition-pruned
+    // to the chosen cells with the predicate pushed inside them:
+    // identical to running the expanding probe over the filtered
+    // subset under the frozen fitted bounds.
+    def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame = {
+      val (lo, hi, gd, cpd) = geomAt(gen)
+      val cells = applyF(frame, filter)
+      val occupancy = Some(
+        if (filter.isEmpty) counts(frame, gen) else VectorSearch.gridCellCounts(cells))
+      if (a.batch) VectorSearch.gridKnnIndexedBatch(cells, lo, hi, a.q,
+        "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy)
+      else VectorSearch.gridKnnIndexed(cells, lo, hi, a.q,
+        "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy)
+    }
+  }
 
   /** True when the persisted grid index has been built and holds data. */
-  def hasGridIndex: Boolean = hasVisibleData(s"$gridPath/cells")
-
-  /** (lo, hi, gridDims, cellsPerDim) of the stored fitted grid,
-    * cached per store generation. */
-  private def gridBoundsStored(): (Array[Double], Array[Double], Int, Int) =
-    gridMetaCache.getOrElse {
-      val meta = gridBoundsAt(headGenOf(gridTree))
-      gridMetaCache = Some(meta)
-      meta
-    }
-
-  /** Fitted grid geometry serving tree generation `gen`, loaded once
-    * per resolved sidecar ([[geomLoad]]). A legacy plain sidecar
-    * predates the cells_per_dim column and falls back to the meta
-    * file. */
-  private def gridBoundsAt(gen: Long): (Array[Double], Array[Double], Int, Int) =
-    geomLoad(s"$gridPath/bounds", gen) { path =>
-      val rows = spark.read.parquet(path).collect().sortBy(_.getInt(0))
-      val cpd =
-        if (rows.nonEmpty && rows.head.schema.fieldNames.contains("cells_per_dim"))
-          rows.head.getAs[Int]("cells_per_dim")
-        else readMeta().getOrElse("grid_cells_per_dim", "4").toInt
-      (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), rows.length, cpd)
-    }
-
-  /** Per-cell occupancy of the grid index, cached per store generation. */
-  private def gridCounts(): Seq[(String, Long)] = gridCountsCache.getOrElse {
-    val c = VectorSearch.gridCellCounts(gridTree.open())
-    gridCountsCache = Some(c)
-    c
-  }
+  def hasGridIndex: Boolean = gridLayout.present
 
   /** Build (or rebuild) the persisted grid index: one bounds aggregate
     * over the store, one cell-clustered write. Search under algorithm
@@ -2611,8 +2200,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     import spark.implicits._
     val storeSnapGen = storeTree.snapshotGen() // before the bounds fit plans
     val (lo, hi) = VectorSearch.gridBounds(searchable, "embedding", gridDims)
-    installRebuild(gridTree, healAppend = Some(appendGridRows),
-      storeSnapGen = storeSnapGen) { (tmp, gen) =>
+    installRebuild(gridLayout.tree, Some(gridLayout), storeSnapGen) { (tmp, gen) =>
       // ROWS FIRST: the Overwrite write nukes the whole tmp dir,
       // including anything staged under it. Then the geometry sidecar
       // (cells_per_dim rides IN it so an epoch-pinned read decodes
@@ -2630,21 +2218,13 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$tmp/${VectorLibrary.GeomStageDir}/bounds${geomSuffix(gen)}")
     }
-    gridMetaCache = None
-    gridCountsCache = None
     touchMeta("grid_dims" -> gridDims.toString,
       "grid_cells_per_dim" -> cellsPerDim.toString)
   }
 
   /** Drop the persisted grid index (search falls back to the ad-hoc
     * expanding probe over the store). */
-  def dropGridIndex(): Unit = withTreeLocks(Seq("grid")) {
-    hadoopFs(gridPath).delete(new org.apache.hadoop.fs.Path(gridPath), true)
-    gridTree.invalidate()
-    dropResolveCaches()
-    gridMetaCache = None
-    gridCountsCache = None
-  }
+  def dropGridIndex(): Unit = dropLayout(gridLayout)
 
   /** Cell-keyed (chunk_id, embedding, cell) rows of a batch under the
     * given bounds, clustered per cell directory and sorted by chunk_id
@@ -2664,24 +2244,53 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       .repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("chunk_id"))
 
-  /** Append a batch to the grid index under the frozen fitted bounds. */
-  private def appendGridRows(batch: DataFrame): Unit = {
-    sweepOrphanGeom(gridTree)
-    val (lo, hi, _, cellsPerDim) = gridBoundsStored()
-    gridTree.appendCommitted(gridRows(batch, lo, hi, cellsPerDim),
-      indexMaxRecordsPerFile)
-  }
-
   // --- on-disk IVF index ---------------------------------------------
   // Cluster-partitioned assignment + tiny centroid table (the serving
-  // layout IvfIndex.writeIndex documents). Unlike the in-memory cached
-  // build, this survives the session: a new cluster reopening the
+  // layout IvfIndex.writeIndex documents): a new cluster reopening the
   // library probes it with zero build cost.
   private val ivfPath = s"$root/$name/ivf_index"
-  private val ivfTree = intTree(s"$ivfPath/assigned", "cluster")
+
+  private object ivfLayout extends Layout("ivf", ivfPath, s"$ivfPath/assigned",
+      Seq("cluster"), IntegerType, IvfIndex.maxRecordsPerFile) {
+    type Geom = Seq[(Int, Array[Double])]
+    override def geomBases = Seq(s"$ivfPath/centroids", s"$ivfPath/stats")
+    // Sorted by cluster id — assignExact's lowest-cluster tie-break
+    // must see a deterministic order regardless of parquet row order.
+    def geomAt(gen: Long): Geom =
+      geomLoad(s"$ivfPath/centroids", gen) { path =>
+        spark.read.parquet(path).collect()
+          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+          .sortBy(_._1)
+      }
+    // Built = centroids RESOLVABLE AT THE TREE HEAD: a suffixed sidecar
+    // the head resolves, or the plain pre-versioning path. A crash
+    // orphan beside a never-committed empty tree does not count.
+    override def present: Boolean = {
+      val base = s"$ivfPath/centroids"
+      geomGens(base).exists(_ <= headGenOf(tree)) ||
+        hadoopFs(base).exists(new org.apache.hadoop.fs.Path(base))
+    }
+    override protected def appendCols = Seq("doc_id", "source", "n_tokens")
+    def rebuild(meta: Map[String, String]): Unit =
+      buildIvfIndex(meta.get("ivf_centroids").map(_.toInt).getOrElse(16))
+    protected def rows(batch: DataFrame): DataFrame =
+      IvfIndex.assignExact(batch.select(col("chunk_id"), col("embedding"),
+        col("doc_id"), col("source"), col("n_tokens")), "embedding", headGeom)
+    // victim cells re-derive map-side against the stored centroids
+    // (what appendAssign placed rows by); build-time MLlib placement
+    // agrees except on FP near-ties, which the coverage fallback absorbs
+    def victimDirs(victims: DataFrame): Seq[String] = clusterDirs(this,
+      IvfIndex.assignExact(victims.where(col("embedding").isNotNull), "embedding", headGeom))
+    override def derivedDirs = true
+    def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame =
+      if (a.batch) IvfIndex.searchAssignedBatch(applyF(frame, filter), geomAt(gen), a.q,
+        "chunk_id", "embedding", a.kk, metric = a.metric)
+      else IvfIndex.searchAssigned(applyF(frame, filter), geomAt(gen), a.q,
+        "chunk_id", "embedding", a.kk, metric = a.metric)
+  }
 
   /** True when the on-disk IVF index has been built. */
-  def hasIvfIndex: Boolean = hasGeom(s"$ivfPath/centroids", ivfTree)
+  def hasIvfIndex: Boolean = ivfLayout.present
 
   /** Build (or rebuild) the on-disk IVF index: one distributed k-means
     * fit + a cluster-partitioned write. `search` under algorithm "ivf"
@@ -2693,8 +2302,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     val (model, assigned) = IvfIndex.build(
       searchable.select(col("chunk_id"), col("embedding"),
         col("doc_id"), col("source"), col("n_tokens")), "embedding", nCentroids)
-    installRebuild(ivfTree, healAppend = Some(appendOrRebuildIvf),
-      storeSnapGen = storeSnapGen) { (tmp, gen) =>
+    installRebuild(ivfLayout.tree, Some(ivfLayout), storeSnapGen) { (tmp, gen) =>
       IvfIndex.writeIndex(assigned, model, ivfPath, assignedPath = Some(tmp),
         sidecarSuffix = geomSuffix(gen),
         sidecarDir = Some(s"$tmp/${VectorLibrary.GeomStageDir}"))
@@ -2708,56 +2316,14 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private def ivfCentroids: Int =
     readMeta().get("ivf_centroids").map(_.toInt).getOrElse(16)
 
-  /** The stored IVF centroid table (tiny single-file parquet, read per
-    * probe — the same cost the path-based probe paid). */
-  private def ivfCentersStored(): Seq[(Int, Array[Double])] =
-    ivfCentersAt(headGenOf(ivfTree))
-
-  /** IVF centroids serving tree generation `gen`, loaded once per
-    * resolved sidecar ([[geomLoad]]). Sorted by cluster id —
-    * assignExact's lowest-cluster tie-break must see a deterministic
-    * order regardless of parquet row order. */
-  private def ivfCentersAt(gen: Long): Seq[(Int, Array[Double])] =
-    geomLoad(s"$ivfPath/centroids", gen) { path =>
-      spark.read.parquet(path).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-        .sortBy(_._1)
-    }
-
-  /** Append a batch to the IVF index — unless the existing assigned
-    * rows predate the metadata columns, in which case rebuild from the
-    * (already appended) store instead. Same schema-migration contract
-    * as the partitioned index's `quant`/`source` guard in
-    * [[appendBatch]]: a mixed-generation append would read pre-upgrade
-    * rows with null metadata, and a filtered search would then
-    * silently drop every old row inside the cluster-pruned scan. */
-  private def appendOrRebuildIvf(b: DataFrame): Unit = {
-    sweepOrphanGeom(ivfTree)
-    val assignedCurrent =
-      scala.util.Try(ivfTree.open().columns).toOption
-        .exists(cs => Seq("doc_id", "source", "n_tokens").forall(cs.contains))
-    if (assignedCurrent)
-      ivfTree.appendCommitted(
-        IvfIndex.assignExact(
-          b.select(col("chunk_id"), col("embedding"),
-            col("doc_id"), col("source"), col("n_tokens")),
-          "embedding", ivfCentersStored()),
-        IvfIndex.maxRecordsPerFile)
-    else buildIvfIndex(ivfCentroids)
-  }
-
-  /** Drop the on-disk IVF index (search falls back to the lazy
-    * in-memory build). */
-  def dropIvfIndex(): Unit = withTreeLocks(Seq("ivf")) {
-    hadoopFs(ivfPath).delete(new org.apache.hadoop.fs.Path(ivfPath), true)
-    ivfTree.invalidate()
-    dropResolveCaches()
-  }
+  /** Drop the on-disk IVF index (search then answers ivf with an exact
+    * scan of the store). */
+  def dropIvfIndex(): Unit = dropLayout(ivfLayout)
 
   /** Current IVF drift ratio (1.0 = as healthy as at build). */
   def ivfDrift: Double =
-    IvfIndex.assignmentDrift(spark, ivfPath, assignedOpt = Some(ivfTree.open()),
-      sidecarSuffix = geomSuffixAt(s"$ivfPath/centroids", headGenOf(ivfTree)))
+    IvfIndex.assignmentDrift(spark, ivfPath, assignedOpt = Some(ivfLayout.tree.open()),
+      sidecarSuffix = geomSuffixAt(s"$ivfPath/centroids", headGenOf(ivfLayout.tree)))
 
   /**
    * Re-fit the IVF centroids when appended data has drifted away from
@@ -2770,7 +2336,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def refitIvfIfDrifted(threshold: Double = 1.5): Boolean = withTreeLocks(Seq("ivf")) {
     if (!hasIvfIndex) return false
     if (ivfDrift <= threshold) return false
-    buildIvfIndex(ivfCentroids)
+    ivfLayout.rebuild(readMeta())
     true
   }
 
@@ -2784,28 +2350,35 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // codebooks (ingest never refits), the same contract as the grid's
   // frozen bounds and the IVF centroids.
   private val pqPath = s"$root/$name/pq_index"
-  private val pqTree = strTree(s"$pqPath/codes", "source")
 
-  /** True when the persisted PQ index has been built and holds data. */
-  def hasPqIndex: Boolean = hasVisibleData(s"$pqPath/codes")
-
-  /** Stored codebooks, cached per store generation (tiny parquet). */
-  private def pqBooksStored(): PqIndex.Codebooks = pqBooksCache.getOrElse {
-    val books = pqBooksAt(headGenOf(pqTree))
-    pqBooksCache = Some(books)
-    books
+  private object pqLayout extends Layout("pq", pqPath, s"$pqPath/codes",
+      Seq("source"), StringType, indexMaxRecordsPerFile) {
+    type Geom = PqIndex.Codebooks
+    override def geomBases = Seq(s"$pqPath/books")
+    def geomAt(gen: Long): Geom =
+      geomLoad(s"$pqPath/books", gen) { path =>
+        spark.read.parquet(path).collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+          .groupBy(_._1).toSeq.sortBy(_._1)
+          .map { case (s, ws) =>
+            (s, ws.sortBy(_._2).map(w => (w._2, w._3)).toSeq) }
+      }
+    def rebuild(meta: Map[String, String]): Unit =
+      buildPqIndex(meta.getOrElse("pq_m", "8").toInt, meta.getOrElse("pq_k", "16").toInt)
+    protected def rows(batch: DataFrame): DataFrame = pqCodeRows(pqBase(batch), headGeom)
+    def victimDirs(victims: DataFrame): Seq[String] =
+      victims.select(col("source")).distinct().collect()
+        .map(r => s"$pqPath/codes/source=${escape(r.getString(0))}").toSeq
+    // codes-only ADC scan; exact re-rank on the survivors' float rows
+    def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame =
+      if (a.batch) PqIndex.searchBatch(applyF(frame, filter), geomAt(gen), a.q,
+        "chunk_id", "embedding", a.kk, a.metric, normalized = true)
+      else PqIndex.search(applyF(frame, filter), geomAt(gen), a.q,
+        "chunk_id", "embedding", a.kk, a.metric, normalized = true)
   }
 
-  /** PQ codebooks serving tree generation `gen`, loaded once per
-    * resolved sidecar ([[geomLoad]]). */
-  private def pqBooksAt(gen: Long): PqIndex.Codebooks =
-    geomLoad(s"$pqPath/books", gen) { path =>
-      spark.read.parquet(path).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (s, ws) =>
-          (s, ws.sortBy(_._2).map(w => (w._2, w._3)).toSeq) }
-    }
+  /** True when the persisted PQ index has been built and holds data. */
+  def hasPqIndex: Boolean = pqLayout.present
 
   /** Normalized-vector projection of a chunk batch for PQ encoding.
     * Carries the filterable metadata so codes-resident phase-1 scans
@@ -2829,8 +2402,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     val base = pqBase(searchable)
     val books = PqIndex.train(base, "__nvec", m, kk)
     import spark.implicits._
-    installRebuild(pqTree, healAppend = Some(appendPqRows),
-      storeSnapGen = storeSnapGen) { (tmp, gen) =>
+    installRebuild(pqLayout.tree, Some(pqLayout), storeSnapGen) { (tmp, gen) =>
       // rows FIRST (the Overwrite write nukes tmp, including staged
       // sidecars), then the codebooks into the staging dir
       pqCodeRows(base, books)
@@ -2842,25 +2414,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$tmp/${VectorLibrary.GeomStageDir}/books${geomSuffix(gen)}")
     }
-    pqBooksCache = None
     touchMeta("pq_m" -> m.toString, "pq_k" -> kk.toString)
   }
 
-  /** Append a batch's codes under the frozen stored codebooks. */
-  private def appendPqRows(batch: DataFrame): Unit = {
-    sweepOrphanGeom(pqTree)
-    pqTree.appendCommitted(pqCodeRows(pqBase(batch), pqBooksStored()),
-      indexMaxRecordsPerFile)
-  }
-
-  /** Drop the persisted PQ index (search falls back to the lazy
-    * in-memory fit). */
-  def dropPqIndex(): Unit = withTreeLocks(Seq("pq")) {
-    hadoopFs(pqPath).delete(new org.apache.hadoop.fs.Path(pqPath), true)
-    pqTree.invalidate()
-    dropResolveCaches()
-    pqBooksCache = None
-  }
+  /** Drop the persisted PQ index (search then answers pq with an
+    * exact scan of the store). */
+  def dropPqIndex(): Unit = dropLayout(pqLayout)
 
   // --- persisted IVF-PQ index -------------------------------------------
   // The composed serving layout (operators.IvfPq): ONE parquet table
@@ -2872,28 +2431,51 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // tracks cosine, like the pq layout). Appends assign + encode under
   // the FROZEN geometry; targeted deletes copy-on-write victim files.
   private val ivfpqPath = s"$root/$name/ivfpq_index"
-  private val ivfpqTree = intTree(s"$ivfpqPath/encoded", "cluster")
+
+  private object ivfpqLayout extends Layout("ivfpq", ivfpqPath, s"$ivfpqPath/encoded",
+      Seq("cluster"), IntegerType, indexMaxRecordsPerFile) {
+    /** (coarse centroids, residual codebooks), each side loaded once
+      * per resolved sidecar. */
+    type Geom = (Seq[(Int, Array[Double])], PqIndex.Codebooks)
+    override def geomBases =
+      Seq(s"$ivfpqPath/centroids", s"$ivfpqPath/books", s"$ivfpqPath/stats")
+    def geomAt(gen: Long): Geom =
+      (geomLoad(s"$ivfpqPath/centroids", gen) { path =>
+         IvfPq.readCenters(spark, ivfpqPath,
+           path.stripPrefix(s"$ivfpqPath/centroids")) },
+       geomLoad(s"$ivfpqPath/books", gen) { path =>
+         IvfPq.readBooks(spark, ivfpqPath,
+           path.stripPrefix(s"$ivfpqPath/books")) })
+    def rebuild(meta: Map[String, String]): Unit =
+      buildIvfPqIndex(meta.getOrElse("ivfpq_ncentroids", "16").toInt,
+        meta.getOrElse("ivfpq_m", "8").toInt, meta.getOrElse("ivfpq_k", "16").toInt)
+    protected def rows(batch: DataFrame): DataFrame = {
+      val (centers, books) = headGeom
+      ivfpqRowsClustered(
+        IvfPq.encodeFrozen(pqBase(batch), "__nvec", centers, books).drop("__nvec"))
+    }
+    // exact replay of the build/append geometry: assignExact over the
+    // L2-normalized vectors against the stored coarse centroids IS how
+    // every encoded row was placed, so the pruned dirs are the victim
+    // cells bit-for-bit
+    def victimDirs(victims: DataFrame): Seq[String] = clusterDirs(this,
+      IvfIndex.assignExact(victims.where(col("embedding").isNotNull)
+        .withColumn("__nvec", l2Normalize(col("embedding"))), "__nvec", headGeom._1))
+    override def derivedDirs = true
+    // partition-pruned (nProbe cells) + column-pruned (codes-only
+    // phase 1) scan; exact re-rank
+    def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame = {
+      val (centers, books) = geomAt(gen)
+      val idx = IvfPq.Index(centers, books, applyF(frame, filter))
+      if (a.batch) IvfPq.searchBatch(idx, a.q, "chunk_id", "embedding", a.kk,
+        metric = a.metric, normalized = true)
+      else IvfPq.search(idx, a.q, "chunk_id", "embedding", a.kk,
+        metric = a.metric, normalized = true)
+    }
+  }
 
   /** True when the persisted IVF-PQ index has been built and holds data. */
-  def hasIvfPqIndex: Boolean = hasVisibleData(s"$ivfpqPath/encoded")
-
-  /** Stored centroids + codebooks, cached per store generation. */
-  private def ivfpqSideStored(): (Seq[(Int, Array[Double])], PqIndex.Codebooks) =
-    ivfpqSideCache.getOrElse {
-      val side = ivfpqSideAt(headGenOf(ivfpqTree))
-      ivfpqSideCache = Some(side)
-      side
-    }
-
-  /** IVF-PQ geometry serving tree generation `gen`, each side loaded
-    * once per resolved sidecar ([[geomLoad]]). */
-  private def ivfpqSideAt(gen: Long): (Seq[(Int, Array[Double])], PqIndex.Codebooks) =
-    (geomLoad(s"$ivfpqPath/centroids", gen) { path =>
-       IvfPq.readCenters(spark, ivfpqPath,
-         path.stripPrefix(s"$ivfpqPath/centroids")) },
-     geomLoad(s"$ivfpqPath/books", gen) { path =>
-       IvfPq.readBooks(spark, ivfpqPath,
-         path.stripPrefix(s"$ivfpqPath/books")) })
+  def hasIvfPqIndex: Boolean = ivfpqLayout.present
 
   /** Encoded rows clustered per coarse-cluster directory. */
   private def ivfpqRowsClustered(encoded: DataFrame): DataFrame =
@@ -2908,8 +2490,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     val storeSnapGen = storeTree.snapshotGen() // before the coarse fit plans
     val idx = IvfPq.train(pqBase(searchable), "__nvec", nCentroids, m, kk)
     import spark.implicits._
-    installRebuild(ivfpqTree, healAppend = Some(appendIvfPqRows),
-      storeSnapGen = storeSnapGen) { (tmp, gen) =>
+    installRebuild(ivfpqLayout.tree, Some(ivfpqLayout), storeSnapGen) { (tmp, gen) =>
       // rows FIRST (the Overwrite write nukes tmp, including staged
       // sidecars), then the geometry set into the staging dir
       ivfpqRowsClustered(idx.encoded.drop("__nvec"))
@@ -2933,30 +2514,13 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$stage/stats${geomSuffix(gen)}")
     }
-    ivfpqSideCache = None
     touchMeta("ivfpq_ncentroids" -> nCentroids.toString,
       "ivfpq_m" -> m.toString, "ivfpq_k" -> kk.toString)
   }
 
-  /** Append a batch under the frozen stored centroids + codebooks. */
-  private def appendIvfPqRows(batch: DataFrame): Unit = {
-    sweepOrphanGeom(ivfpqTree)
-    val (centers, books) = ivfpqSideStored()
-    ivfpqTree.appendCommitted(
-      ivfpqRowsClustered(
-        IvfPq.encodeFrozen(pqBase(batch), "__nvec", centers, books)
-          .drop("__nvec")),
-      indexMaxRecordsPerFile)
-  }
-
-  /** Drop the persisted IVF-PQ index (search falls back to the lazy
-    * in-memory fit). */
-  def dropIvfPqIndex(): Unit = withTreeLocks(Seq("ivfpq")) {
-    hadoopFs(ivfpqPath).delete(new org.apache.hadoop.fs.Path(ivfpqPath), true)
-    ivfpqTree.invalidate()
-    dropResolveCaches()
-    ivfpqSideCache = None
-  }
+  /** Drop the persisted IVF-PQ index (search then answers ivfpq with
+    * an exact scan of the store). */
+  def dropIvfPqIndex(): Unit = dropLayout(ivfpqLayout)
 
   /** (n, mean_sq_dist) of the encoded rows' NORMALIZED vectors against
     * their assigned coarse centroid — the coarse-assignment quality of
@@ -2964,7 +2528,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * drift from the cells, residuals grow and ADC fidelity decays, so
     * coarse drift is the refit signal for BOTH quantizers). */
   private def ivfpqMeanSqDist(): DataFrame =
-    ivfpqMeanSqDistOf(ivfpqTree.open(), ivfpqSideStored()._1)
+    ivfpqMeanSqDistOf(ivfpqLayout.tree.open(), ivfpqLayout.headGeom._1)
 
   /** [[ivfpqMeanSqDist]] over an explicit (encoded, centers) pair —
     * the build path computes the baseline from its in-hand frames
@@ -2990,7 +2554,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     require(hasIvfPqIndex, s"library $name has no IVF-PQ index (buildIvfPqIndex first)")
     val statsBase = s"$ivfpqPath/stats"
     val base = spark.read
-      .parquet(statsBase + geomSuffixAt(statsBase, headGenOf(ivfpqTree)))
+      .parquet(statsBase + geomSuffixAt(statsBase, headGenOf(ivfpqLayout.tree)))
       .head.getAs[Double]("mean_sq_dist")
     val cur = ivfpqMeanSqDist().head.getAs[Double]("mean_sq_dist")
     if (base > 0.0) cur / base else 1.0
@@ -3002,9 +2566,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def refitIvfPqIfDrifted(threshold: Double = 1.5): Boolean = withTreeLocks(Seq("ivfpq")) {
     if (!hasIvfPqIndex) return false
     if (ivfpqDrift <= threshold) return false
-    val m = readMeta()
-    buildIvfPqIndex(m.getOrElse("ivfpq_ncentroids", "16").toInt,
-      m.getOrElse("ivfpq_m", "8").toInt, m.getOrElse("ivfpq_k", "16").toInt)
+    ivfpqLayout.rebuild(readMeta())
     true
   }
 
@@ -3012,8 +2574,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * member of the LSH/grid/IVF observability family. */
   def ivfpqIndexInfo: DataFrame = {
     require(hasIvfPqIndex, s"library $name has no IVF-PQ index (buildIvfPqIndex first)")
-    val total = ivfpqSideStored()._1.size
-    ivfpqTree.open()
+    val total = ivfpqLayout.headGeom._1.size
+    ivfpqLayout.tree.open()
       .groupBy(col("cluster")).agg(count(lit(1)).as("cluster_size"))
       .agg(
         count(lit(1)).as("occupied_clusters"),
@@ -3079,7 +2641,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    */
   def ivfIndexInfo: DataFrame = {
     require(hasIvfIndex, s"library $name has no IVF index (buildIvfIndex first)")
-    val perCluster = ivfTree.open()
+    val perCluster = ivfLayout.tree.open()
       .groupBy(col("cluster")).agg(count(lit(1)).as("cluster_size"))
     val total = ivfCentroids
     perCluster.agg(
@@ -3103,8 +2665,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    */
   def gridIndexInfo: DataFrame = {
     require(hasGridIndex, s"library $name has no grid index (buildGridIndex first)")
-    val (_, _, gd, cpd) = gridBoundsStored()
-    val counts = gridCounts()
+    val (_, _, gd, cpd) = gridLayout.headGeom
+    val counts = gridLayout.counts(gridLayout.tree.open(), headGenOf(gridLayout.tree))
     val total = math.pow(cpd.toDouble, gd.toDouble).toLong
     import spark.implicits._
     Seq((counts.size.toLong,
@@ -3280,9 +2842,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // generations and the quantized probe would read null codes for
     // old rows, silently dropping them from phase 1 — the exact guard
     // appendBatch applies, applied once at stream start.
-    if (hadoopFs(path).exists(new org.apache.hadoop.fs.Path(path)) &&
-        (!hasPartitionedIndex || !partitionedIndex.columns.contains("quant")
-          || !partitionedIndex.columns.contains("source")))
+    if (hadoopFs(path).exists(new org.apache.hadoop.fs.Path(path)) && !lshLayout.current)
       buildPartitionedIndex()
     // replay idempotence mirrors plain ingestStream: only the first
     // batch after a (re)start can be a replay — anti-join it against
@@ -3320,13 +2880,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           } { b =>
             try {
               storeTree.appendCommitted(b, 0L)
-              lshTree.appendCommitted(indexRows(b), indexMaxRecordsPerFile)
               // mirror appendBatch: every derived index stays current and
               // session caches drop, so ivf/grid/flat search sees the arrivals
-              if (hasIvfIndex) appendOrRebuildIvf(b)
-              if (hasGridIndex) appendGridRows(b)
-              if (hasPqIndex) appendPqRows(b)
-              if (hasIvfPqIndex) appendIvfPqRows(b)
+              layouts.foreach(l => if ((l eq lshLayout) || l.tracked) l.append(b))
               invalidateIndexes()
             } finally b.unpersist()
           }
@@ -3382,22 +2938,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // the rewritten store so stale signatures never serve. Deletes no
     // longer come through here — deleteVictims copy-on-writes only the
     // victim index partitions.
-    if (reindex && hasPartitionedIndex) buildPartitionedIndex()
-    if (reindex && hasIvfIndex) buildIvfIndex(ivfCentroids)
-    if (reindex && hasGridIndex) {
-      val m = readMeta()
-      buildGridIndex(m.getOrElse("grid_dims", "4").toInt,
-        m.getOrElse("grid_cells_per_dim", "4").toInt)
-    }
-    if (reindex && hasPqIndex) {
-      val m = readMeta()
-      buildPqIndex(m.getOrElse("pq_m", "8").toInt, m.getOrElse("pq_k", "16").toInt)
-    }
-    if (reindex && hasIvfPqIndex) {
-      val m = readMeta()
-      buildIvfPqIndex(m.getOrElse("ivfpq_ncentroids", "16").toInt,
-        m.getOrElse("ivfpq_m", "8").toInt, m.getOrElse("ivfpq_k", "16").toInt)
-    }
+    if (reindex) layouts.foreach(l => if (l.present) l.rebuild(readMeta()))
     touchMeta()
   }
 
@@ -3502,8 +3043,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    */
   def manifestInfo: DataFrame = {
     import spark.implicits._
-    Seq("store" -> storeTree, "lsh" -> lshTree, "ivf" -> ivfTree,
-      "grid" -> gridTree, "pq" -> pqTree, "ivfpq" -> ivfpqTree)
+    epochTrees
       .filter { case (_, t) => hadoopFs(t.root)
         .exists(new org.apache.hadoop.fs.Path(t.root)) }
       .map { case (n, t) =>
@@ -3695,17 +3235,25 @@ object VectorLibrary {
       val tmp = java.nio.file.Files.createTempDirectory("graft-benchlib")
       // The per-process build dir would otherwise outlive the JVM and
       // accumulate a full store + index copy in /tmp per bench/verify
-      // run (r14, ADVICE): remove it recursively at JVM exit.
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          Files.walk(tmp).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => { try Files.deleteIfExists(p) catch { case _: Throwable => () } })
-        } catch { case _: Throwable => () }))
+      // run (r14, ADVICE): one exit hook removes every one of them.
+      tempDirCleanup
+      tempDirs.add(tmp)
       val built = new VectorLibrary(spark, tmp.toString, "bench")
       built.addDocuments(Tables.load(spark, dir, "documents"))
       built.buildPartitionedIndex()
       built
     })
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private lazy val tempDirCleanup: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => tempDirs.forEach { dir =>
+      import java.nio.file.{Files, Path}
+      try {
+        val walk = Files.walk(dir)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => { try Files.deleteIfExists(p) catch { case _: Throwable => () } })
+        finally walk.close()
+      } catch { case _: Throwable => () }
+    }))
 }

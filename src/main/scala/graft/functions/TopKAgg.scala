@@ -6,16 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import graft.operators.TopKBuffer
 
 /**
  * Native top-k aggregate: `graft_topk(id, score, k)` keeps the k best
  * (score desc, id asc) pairs in a bounded binary heap.
  *
- * This is the Catalyst-level twin of operators.TopKAggregator (the
- * public-API `Aggregator` version): `update` reads the input
- * InternalRow directly — no encoder round-trip per row — and the
- * buffer serializes as 16 bytes/entry only at shuffle boundaries.
+ * `update` reads the input InternalRow directly — no encoder
+ * round-trip per row — and the [[TopKBuffer]] serializes as 16
+ * bytes/entry only at shuffle boundaries.
  * Partial aggregation runs map-side, so a batched k-NN shuffles
  * k rows per (group x partition) regardless of corpus size.
  */

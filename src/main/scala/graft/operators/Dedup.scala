@@ -394,14 +394,6 @@ object Dedup {
       .orderBy(col("doc_a").asc, col("doc_b").asc)
   }
 
-  /** Word n-gram shingle strings of a token array. */
-  def shingleStrings(toks: Column, n: Int): Column = {
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /**
    * Embedding-cosine near-dup pairs, blocked by `label` — the
    * ORACLE TWIN: labels are SQL-expressible, so DuckDB can verify the

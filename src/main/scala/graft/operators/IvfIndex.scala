@@ -476,19 +476,4 @@ object IvfIndex {
     })
     search(assigned, model, query, idCol, vecCol, k, nProbe)
   }
-
-  /** Build-once/probe-many twin of `ivfKnnCached` over a SPILLED
-    * assignment: the probe reads fewer cells (nProbe=1 by default) and
-    * the boundary replication recovers the recall the narrower probe
-    * would lose. */
-  def ivfKnnSpillCached(emb: DataFrame, query: DataFrame, idCol: String, vecCol: String,
-                        k: Int, cacheKey: String, nCentroids: Int = 16,
-                        nProbe: Int = 1, spillFactor: Double = 1.2): DataFrame = {
-    val key = s"${System.identityHashCode(emb.sparkSession)}|$cacheKey|spill$nCentroids|$spillFactor"
-    val (model, assigned) = built.computeIfAbsent(key, _ => {
-      val (m, a) = buildSpill(emb, vecCol, nCentroids, spillFactor = spillFactor)
-      (m, a.persist())
-    })
-    searchSpill(assigned, model, query, idCol, vecCol, k, nProbe)
-  }
 }

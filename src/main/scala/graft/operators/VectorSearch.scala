@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftFunctions._
+import graft.functions.TopKBuffer
 
 /**
  * k-NN search operators — the Spark re-expression of the reference's
@@ -63,12 +64,6 @@ object VectorSearch {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  /**
-   * Batched top-k via partial aggregation (the 100 TB path): a bounded
-   * heap per (query x partition) combines map-side, so the shuffle
-   * carries k rows per query per partition instead of the whole scored
-   * cross product. Same output contract as knnBatch.
-   */
   /** Batch exact k-NN for arbitrary id types: broadcast queries over
     * one corpus scan, per-query bounded top-k (native heap aggregate
     * for long ids, a rank window over the scored rows otherwise). */
@@ -80,19 +75,6 @@ object VectorSearch {
     finishPerQueryTopK(scored, idCol, k)
   }
 
-  def knnBatchAgg(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-                  k: Int, metric: String): DataFrame = {
-    val scored = corpus.join(broadcast(queries))
-      .select(col("query_id"), col(idCol).cast("long").as("id"),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    scored.groupBy(col("query_id"))
-      .agg(topKAgg(col("id"), col("score"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("r0", "pair")))
-      .select(col("query_id"), col("pair.id").as(idCol), col("pair.score").as("score"),
-        (col("r0") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id").asc, col("rank").asc)
-  }
-
   /**
    * Fused batched top-k: one corpus pass with |queries| bounded heaps
    * per partition (mapPartitions — justified as the last-resort tier
@@ -100,7 +82,7 @@ object VectorSearch {
    * every query cannot be expressed without materializing the
    * |corpus| x |queries| cross product). Partials are k rows per
    * (query x partition); the global merge is a tiny native top-k
-   * aggregate. Output contract identical to knnBatch/knnBatchAgg.
+   * aggregate. Output contract identical to knnBatch/knnBatchGeneric.
    */
   def knnBatchFused(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
                     k: Int, metric: String): DataFrame = {

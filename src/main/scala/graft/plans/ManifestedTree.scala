@@ -437,13 +437,6 @@ final class ManifestedTree(
     else commitFull(listFiles(None), Some(schemaHint))
   }
 
-  /** Adopt the current on-disk listing as a full generation — the
-    * MIGRATION commit for a pre-existing parquet layout entering the
-    * manifest discipline (a tree with retained history must never use
-    * this: the listing includes manifest-dead bytes; rebuilds commit
-    * their exact output via [[commitReplaceAll]] instead). */
-  def commitSnapshot(): Unit = commitFull(listFiles(None), None)
-
   /** Commit a copy-on-write file swap as a delta: the victim files
     * leave the manifest, the replacement files (captured from the
     * rewrite's tmp tree BEFORE the swap consumed it) join it.

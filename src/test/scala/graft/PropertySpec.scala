@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{TextHash, VectorOps}
-import graft.operators.TopKBuffer
+import graft.functions.TopKBuffer
 
 /** Seeded randomized properties of the kernel data structures (no
   * Spark session needed — pure JVM). */

@@ -2512,6 +2512,25 @@ class VectorLibrarySpec extends AnyFunSuite {
       assert(pinned(alg) == before(alg),
         s"pinned filtered $alg search changed across a mutation")
     }
+
+    // head == searchAt(latest epoch) where no layout can serve: a filter
+    // no layout row carries (what every filter is to a pre-metadata
+    // layout), and a library with no persisted layout at all
+    val bare = new VectorLibrary(spark, root, "pinf-bare")
+    bare.addDocuments(docs.filter(col("doc_id") < 30))
+    val unserved = Seq(
+      ("uncovered filter", lib, Some(col("chunk_idx") <= 1 && f)),
+      ("no layout, filtered", bare, Some(f)),
+      ("no layout", bare, None))
+    for ((what, l, flt) <- unserved; alg <- algos) {
+      l.setAlgorithm(alg)
+      val head = l.search(q, k = 8, filter = flt)
+        .collect().map(_.toSeq.mkString("|")).toSeq
+      val pin = l.searchAt(l.epochs.last, q, k = 8, algorithm = Some(alg), filter = flt)
+        .collect().map(_.toSeq.mkString("|")).toSeq
+      assert(pin == head, s"$what: pinned $alg diverged from head")
+    }
+    bare.delete()
     lib.delete()
   }
 
