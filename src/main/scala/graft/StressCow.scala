@@ -24,7 +24,6 @@ object StressCow {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.configure(spark)
-    spark.conf.set("spark.graft.debug.timing", "true")
 
     val root = java.nio.file.Files.createTempDirectory("graft-cow-stress").toString
     val lib = new VectorLibrary(spark, root, "cow")

@@ -400,7 +400,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** Append an embedded+indexed batch to the store and, for each
     * on-disk index present, its derived rows to that index — ingest
     * stays incremental, indexes never rebuild on append (short of the
-    * schema migrations in [[Layout.append]]). */
+    * schema migrations in [[appendLayouts]]). The store commits first;
+    * the layouts then append concurrently, each to its own tree
+    * ([[appendLayouts]], [[fanOut]]). */
   private def appendBatch(batch0: DataFrame): Unit = withWriterLock {
     // Cluster store files by doc_id: parquet keeps per-row-group
     // min/max stats, so a doc_id predicate (documentChunks, targeted
@@ -410,7 +412,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // (the store manifest commit's touched-dir resolution counts as one)
     val b = batch0.sortWithinPartitions(col("source"), col("doc_id")).persist()
     storeTree.appendCommitted(b, 0L)
-    layouts.foreach(l => if (l.tracked) l.append(b))
+    appendLayouts(b, layouts.filter(_.tracked))
     b.unpersist()
     invalidateIndexes()
     touchMeta()
@@ -881,16 +883,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     /** False when the stored rows predate [[appendCols]]. */
     final def current: Boolean = appendCols.isEmpty || present &&
       scala.util.Try(tree.open().columns).toOption.exists(cs => appendCols.forall(cs.contains))
-    /** Append a batch under the FROZEN geometry — unless the stored
-      * rows predate a column the batch carries, in which case rebuild
-      * from the (already appended) store instead: a mixed-generation
-      * append would read old rows' codes/metadata as null, silently
-      * dropping them from a quantized phase 1 or a filtered search. */
-    final def append(batch: DataFrame): Unit = {
-      sweepOrphanGeom(this)
-      if (current) tree.appendCommitted(rows(batch), maxRecords)
-      else rebuild(readMeta())
-    }
+    /** Append a batch's rows under the FROZEN head geometry, as one
+      * manifest delta ([[appendLayouts]] swept orphan sidecars first). */
+    final def appendFrozen(batch: DataFrame): Unit =
+      tree.appendCommitted(rows(batch), maxRecords)
     /** Partition directories holding a delete's victims. */
     def victimDirs(victims: DataFrame): Seq[String]
     /** True when [[victimDirs]] re-derives placement and must be
@@ -903,6 +899,73 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** The five layouts, in epoch/maintenance order. */
   private lazy val layouts: Seq[Layout] =
     Seq(lshLayout, ivfLayout, gridLayout, pqLayout, ivfpqLayout)
+
+  /** Append a batch to the layouts `ls` — the index half of every
+    * ingest ([[appendBatch]], [[ingestStreamIndexed]]) and of the
+    * repair and rebuild-skew heals. Each layout appends under its
+    * FROZEN geometry, unless its stored rows predate a column the
+    * batch carries ([[Layout.current]]): then it rebuilds from the
+    * (already appended) store instead, because a mixed-generation
+    * append would read old rows' codes/metadata as null, silently
+    * dropping them from a quantized phase 1 or a filtered search.
+    *
+    * The orphan-sidecar sweeps (which must precede each tree's
+    * commit) and the `current` decisions run on the calling thread.
+    * The frozen appends then run concurrently ([[fanOut]]): one row
+    * job and one manifest delta per layout, each on its own tree, so
+    * an ingest pays the slowest layout's append instead of the sum.
+    * Rebuilds run last, on the calling thread: a rebuild re-enters
+    * the writer lease and its tree's lease, JVM monitors this thread
+    * holds, so on a pool thread it would block forever. */
+  private def appendLayouts(batch: DataFrame, ls: Seq[Layout]): Unit = {
+    ls.foreach(sweepOrphanGeom)
+    val (frozen, migrating) = ls.partition(_.current)
+    fanOut(frozen.map(l => () => l.appendFrozen(batch)))
+    migrating.foreach(_.rebuild(readMeta()))
+  }
+
+  /** The write path's fan-out pool: one thread per tree, six in all,
+    * so a delete's six resolutions never queue behind each other.
+    * Daemon threads that time out when idle: a library that is not
+    * writing holds none. */
+  private lazy val fanOutPool: java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = new java.util.concurrent.ThreadPoolExecutor(
+      TreeOrder.size, TreeOrder.size, 30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-$name-fanout-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** Run `tasks` concurrently on [[fanOutPool]]; their results, in
+    * order. Waits for EVERY task before returning or throwing, then
+    * throws the first failure with the others attached as suppressed:
+    * a task still running after the caller's `finally` (an unpersisted
+    * input, a released lease) would race the next mutation. A task
+    * must not take the writer lease or a tree lease — those are JVM
+    * monitors the calling thread holds. A lone task runs on the
+    * calling thread. */
+  private def fanOut[A](tasks: Seq[() => A]): Seq[A] =
+    if (tasks.size <= 1) tasks.map(_())
+    else {
+      val running = tasks.map(t =>
+        fanOutPool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
+      val outcomes = running.map { f =>
+        try Right(f.get())
+        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
+      }
+      outcomes.collect { case Left(e) => e } match {
+        case first +: rest =>
+          rest.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.collect { case Right(a) => a }
+      }
+    }
 
   private def escape(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
@@ -1116,7 +1179,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       // instance's next mutation (mirrors sweepOrphanGeom)
       invalidateIndexes()
     }
-    layout.foreach(l => healRebuildSkew(tree, storeSnapGen, l.append))
+    layout.foreach(l => healRebuildSkew(tree, storeSnapGen, appendLayouts(_, Seq(l))))
   }
 
   /** Commit-time skew detection (r11 verdict #3): if the store head
@@ -1453,7 +1516,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           try {
             val nMissing = missing.count()
             if (ghosts > 0) l.rebuild(m)
-            else if (nMissing > 0) l.append(missing)
+            else if (nMissing > 0) appendLayouts(missing, Seq(l))
             l.name -> (nMissing, ghosts)
           } finally missing.unpersist()
         }
@@ -1784,24 +1847,24 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * manifested tree — fresh files rename in beside the untouched
    * originals and the manifest commitSwap flips visibility, so a
    * concurrent reader mid-plan on the previous generation (or pinned
-   * to an epoch) never sees a path vanish (see [[cowTree]]). Returns
-   * the number of chunks removed.
+   * to an epoch) never sees a path vanish (see [[cowTree]]).
+   *
+   * Phase 1 fans out twice through [[fanOut]], on the library's
+   * six-thread pool: the six victim-file resolutions (store + five
+   * layouts), then the survivor rewrites. Each fan-out waits for every
+   * task before it rethrows the first failure, so no rewrite is still
+   * writing into a `.<tree>_cow` tmp tree when this returns or throws.
+   * Every read plans from manifest entries and the tree's schema
+   * record: no schema-inference or listing job. Phase 2's swaps and
+   * commits run on the calling thread, store first. Returns the number
+   * of chunks removed.
    */
   private def deleteVictims(victims0: DataFrame): Long = {
-    // dev probe (StressCow): per-step wall times on stderr
-    val debugTiming = spark.conf.get("spark.graft.debug.timing", "false") == "true"
-    def step[A](name: String)(body: => A): A =
-      if (!debugTiming) body
-      else {
-        val t = System.nanoTime(); val r = body
-        System.err.println(f"[cow-step] $name: ${(System.nanoTime() - t) / 1e9}%.2fs")
-        r
-      }
     val victims = victims0
       .select(col("chunk_id"), col("source"), col("lsh_buckets"), col("embedding"))
       .persist()
     try {
-      val nVictims = step("count-victims")(victims.count())
+      val nVictims = victims.count()
       if (nVictims == 0L) return 0L
       // COW swap commits advance the geometry trees' generations —
       // sweep crash-orphan sidecars so no commit lands on one
@@ -1827,8 +1890,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           .join(victimIds, Seq("chunk_id"), "left_semi")
           .select(col("f")).distinct().collect().map(_.getString(0)).toSeq
 
-      /** (manifest-LIVE files, directories that actually hold any) of
-        * a tree under the given absolute partition directories — the
+      /** (manifest-LIVE entries, directories that actually hold any)
+        * of a tree under the given absolute partition directories — the
         * resolution scan's input and its audit record. NEVER
         * the directory listing: live dirs also hold manifest-DEAD
         * bytes at their original paths (COW victims retained for the
@@ -1839,7 +1902,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         * duplicate survivors into the fresh commit. A pre-manifest
         * tree has no dead-byte concept; its listing IS the live set. */
       def liveUnder(tree: graft.plans.ManifestedTree,
-                    dirs: Seq[String]): (Seq[String], Seq[String]) = {
+                    dirs: Seq[String]): (Seq[(String, Long)], Seq[String]) = {
         val treeRoot = tree.root.stripSuffix("/")
         tree.readManifest() match {
           case Some(entries) =>
@@ -1851,10 +1914,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
             // one pass over the entries yields both the matched files
             // and which candidate dirs hold any
             val matched = scala.collection.mutable.LinkedHashSet.empty[String]
-            val files = entries.flatMap { case (rel, _) =>
-              prefixed.find(t => rel.startsWith(t._2)).map { case (d, _) =>
+            val files = entries.filter { case (rel, _) =>
+              prefixed.find(t => rel.startsWith(t._2)).exists { case (d, _) =>
                 matched += d
-                s"$treeRoot/$rel"
+                true
               }
             }
             (files, dirs.filter(matched))
@@ -1862,7 +1925,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
             val fs = hadoopFs(treeRoot)
             val present = dirs.filter(d =>
               fs.exists(new org.apache.hadoop.fs.Path(d)))
-            (present, present)
+            (tree.listFiles(Some(present.map(_.stripPrefix(treeRoot + "/")))), present)
         }
       }
 
@@ -1884,21 +1947,34 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         * MLlib's norm-optimized distance and can flip an FP near-tie
         * against the exact argmin) falls back loudly to the full-tree
         * scan, so pruning is an optimization, never a correctness
-        * trade. */
+        * trade.
+        *
+        * Every scan reads its files through their manifest entries and
+        * the tree's schema record ([[graft.plans.ManifestedTree.openEntries]]):
+        * no schema-inference job, no parallel-listing job. Returns the
+        * victim files' manifest entries. */
       val audit = new scala.collection.concurrent.TrieMap[String, Seq[String]]()
       def victimFilesUnder(label: String, tree: graft.plans.ManifestedTree,
-                           dirs: Seq[String], derived: Boolean): Seq[String] = {
+                           dirs: Seq[String], derived: Boolean): Seq[(String, Long)] = {
         val treeRoot = tree.root.stripSuffix("/")
         val (live, present) = liveUnder(tree, dirs)
+        /** The entries among `from` of the scanned `files`. */
+        def entriesOf(files: Seq[String], from: Seq[(String, Long)]): Seq[(String, Long)] = {
+          val hit = files.map(tree.relPathOf).toSet
+          val found = from.filter(e => hit(e._1))
+          require(found.size == hit.size, s"delete: victim files of $label " +
+            s"outside its live set: ${(hit -- found.map(_._1)).mkString(", ")}")
+          found
+        }
         if (!derived) {
           audit.put(label, present)
           return if (live.isEmpty) Seq.empty
-            else victimFilesOf(spark.read.option("basePath", treeRoot).parquet(live: _*))
+            else entriesOf(victimFilesOf(tree.openEntries(live)), live)
         }
         val (files, covered) =
           if (live.isEmpty) (Seq.empty[String], 0L)
           else {
-            val row = spark.read.option("basePath", treeRoot).parquet(live: _*)
+            val row = tree.openEntries(live)
               .select(col("chunk_id"), col("_metadata.file_path").as("f"))
               .join(victimIds, Seq("chunk_id"), "left_semi")
               .agg(collect_set(col("f")).as("files"),
@@ -1906,14 +1982,15 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
               .head
             (row.getSeq[String](0).toSeq, row.getLong(1))
           }
-        if (covered == nVictims) { audit.put(label, present); files }
+        if (covered == nVictims) { audit.put(label, present); entriesOf(files, live) }
         else {
           System.err.println(s"[cow] $label: pruned resolution covered " +
             s"$covered/$nVictims victims — falling back to full-tree scan")
           audit.put(label, Seq(treeRoot))
           // full-tree fallback stays manifest-planned for the same
           // dead-byte reason as the pruned path
-          victimFilesOf(tree.open())
+          entriesOf(victimFilesOf(tree.open()),
+            tree.readManifest().getOrElse(tree.listFiles(None)))
         }
       }
 
@@ -1928,24 +2005,16 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       // fallback). Pending (null-embedding) victims are in NO index.
       // The resolutions are independent read-only jobs over the
       // persisted victim frame — they run concurrently (as do the
-      // rewrites below): a targeted delete's latency is a handful of
-      // SMALL jobs, so the serial job-launch overhead would dominate
-      // the actual I/O.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def awaitAll[A](fs: Seq[Future[A]]): Seq[A] =
-        fs.map(Await.result(_, Duration.Inf))
-      val storeFilesF = Future(step("resolve-store-files") {
-        victimFilesUnder("store", storeTree, victims.select(col("source")).distinct()
+      // rewrites below, both through [[fanOut]]): a targeted delete's
+      // latency is a handful of SMALL jobs, so the serial job-launch
+      // overhead would dominate the actual I/O.
+      val storeFiles +: layoutFiles = fanOut(
+        (() => victimFilesUnder("store", storeTree, victims.select(col("source")).distinct()
           .collect().map(r => s"$path/source=${escape(r.getString(0))}").toSeq,
-          derived = false)
-      })
-      val layoutFilesF = layouts.map(l => Future(step(s"resolve-${l.name}-files") {
-        if (l.present) victimFilesUnder(l.name, l.tree, l.victimDirs(victims), l.derivedDirs)
-        else Seq.empty[String]
-      }))
-      val storeFiles +: layoutFiles = awaitAll(storeFilesF +: layoutFilesF)
+          derived = false)) +:
+        layouts.map(l => () =>
+          if (l.present) victimFilesUnder(l.name, l.tree, l.victimDirs(victims), l.derivedDirs)
+          else Seq.empty[(String, Long)]))
       val victimFiles = layouts.zip(layoutFiles).filter(_._2.nonEmpty)
       def cowTmp(l: String) = s"$root/$name/.${l}_cow"
 
@@ -1957,11 +2026,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       // ONE partition directory, so map tasks already hold
       // partition-aligned rows and the dynamic-partition writer emits
       // them directly — a shuffle here measured 9x the whole rewrite.
-      def rewrite(treeRoot: String, files: Seq[String], tmp: String,
+      def rewrite(tree: graft.plans.ManifestedTree, files: Seq[(String, Long)], tmp: String,
                   partCols: Seq[String], sorted: Boolean = false): Unit = {
         hadoopFs(tmp).delete(new org.apache.hadoop.fs.Path(tmp), true)
-        val survivors = spark.read.option("basePath", treeRoot)
-          .parquet(files: _*)
+        val survivors = tree.openEntries(files)
           .join(victimIds, Seq("chunk_id"), "left_anti")
         // Preserve each tree's clustering invariant on the survivors
         // (store: (source, doc_id); indexes: partition cols +
@@ -1977,7 +2045,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       }
       // The scans are forced to small splits: the cost of these jobs
       // is parquet reader/writer setup (~100ms per tiny file, measured
-      // via the step probe) over few bounded files, and the default
+      // per step) over few bounded files, and the default
       // bin-packing would lump them into one or two tasks, serializing
       // those setups.
       // SESSION-GLOBAL conf save/restore: safe only because mutations
@@ -1989,11 +2057,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
       spark.conf.set("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
       try {
-        awaitAll(Future(step(s"rewrite-store (${storeFiles.size} files)")(
-          rewrite(path, storeFiles, cowTmp("chunks"), Seq("source"), sorted = true))) +:
-          victimFiles.map { case (l, files) =>
-            Future(step(s"rewrite-${l.name} (${files.size} files)")(
-              rewrite(l.tree.root, files, cowTmp(s"${l.name}_index"), l.partCols)))
+        fanOut((() => rewrite(storeTree, storeFiles, cowTmp("chunks"), Seq("source"),
+            sorted = true)) +:
+          victimFiles.map { case (l, files) => () =>
+            rewrite(l.tree, files, cowTmp(s"${l.name}_index"), l.partCols)
           })
       } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
 
@@ -2005,19 +2072,19 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       // plus the untouched survivors — neither a crashed writer's
       // orphans nor the victims can be adopted. A two-level layout
       // (lsh's tbl=/bucket=) can be left with empty parents.
-      def swapCommitted(label: String, tree: graft.plans.ManifestedTree,
-                        tmp: String, victimFiles: Seq[String],
-                        nested: Boolean): Unit =
-        step(s"swap-$label") {
-          val freshRel = graft.plans.ManifestedTree.listTree(spark, tmp, None)
-          cowTree(tree.root, tmp, victimFiles, retainVictims =
-            graft.plans.ManifestedTree.manifestExists(spark, tree.root))
-          if (nested) pruneEmptyParents(tree.root)
-          tree.commitSwap(victimFiles, freshRel)
-        }
-      swapCommitted("store", storeTree, cowTmp("chunks"), storeFiles, nested = false)
+      def swapCommitted(tree: graft.plans.ManifestedTree, tmp: String,
+                        victimFiles: Seq[(String, Long)], nested: Boolean): Unit = {
+        val treeRoot = tree.root.stripSuffix("/")
+        val victimPaths = victimFiles.map(e => s"$treeRoot/${e._1}")
+        val freshRel = graft.plans.ManifestedTree.listTree(spark, tmp, None)
+        cowTree(tree.root, tmp, victimPaths, retainVictims =
+          graft.plans.ManifestedTree.manifestExists(spark, tree.root))
+        if (nested) pruneEmptyParents(tree.root)
+        tree.commitSwap(victimPaths, freshRel)
+      }
+      swapCommitted(storeTree, cowTmp("chunks"), storeFiles, nested = false)
       victimFiles.foreach { case (l, files) =>
-        swapCommitted(l.name, l.tree, cowTmp(s"${l.name}_index"), files,
+        swapCommitted(l.tree, cowTmp(s"${l.name}_index"), files,
           nested = l.partCols.size > 1)
       }
       lastDeleteAudit = audit.toMap
@@ -2257,11 +2324,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // Sorted by cluster id — assignExact's lowest-cluster tie-break
     // must see a deterministic order regardless of parquet row order.
     def geomAt(gen: Long): Geom =
-      geomLoad(s"$ivfPath/centroids", gen) { path =>
-        spark.read.parquet(path).collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-          .sortBy(_._1)
-      }
+      geomLoad(s"$ivfPath/centroids", gen)(IvfIndex.readCentroids(spark, _))
     // Built = centroids RESOLVABLE AT THE TREE HEAD: a suffixed sidecar
     // the head resolves, or the plain pre-versioning path. A crash
     // orphan beside a never-committed empty tree does not count.
@@ -2356,13 +2419,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     type Geom = PqIndex.Codebooks
     override def geomBases = Seq(s"$pqPath/books")
     def geomAt(gen: Long): Geom =
-      geomLoad(s"$pqPath/books", gen) { path =>
-        spark.read.parquet(path).collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-          .groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (s, ws) =>
-            (s, ws.sortBy(_._2).map(w => (w._2, w._3)).toSeq) }
-      }
+      geomLoad(s"$pqPath/books", gen)(PqIndex.readBooks(spark, _, "c"))
     def rebuild(meta: Map[String, String]): Unit =
       buildPqIndex(meta.getOrElse("pq_m", "8").toInt, meta.getOrElse("pq_k", "16").toInt)
     protected def rows(batch: DataFrame): DataFrame = pqCodeRows(pqBase(batch), headGeom)
@@ -2882,7 +2939,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
               storeTree.appendCommitted(b, 0L)
               // mirror appendBatch: every derived index stays current and
               // session caches drop, so ivf/grid/flat search sees the arrivals
-              layouts.foreach(l => if ((l eq lshLayout) || l.tracked) l.append(b))
+              appendLayouts(b, layouts.filter(l => (l eq lshLayout) || l.tracked))
               invalidateIndexes()
             } finally b.unpersist()
           }

@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
 import graft.GraftFunctions._
 
 /**
@@ -184,13 +185,26 @@ object IvfIndex {
     // broadcast-join + min(struct) form, but map-side only (no groupBy
     // shuffle) and it PRESERVES every input column — metadata rides
     // into the assigned rows so filtered searches prune on them.
-    val centers = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+    val centers = readCentroids(spark, s"$path/centroids")
     assignExact(rows, vecCol, centers)
       .write.mode("append")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("cluster").parquet(s"$path/assigned")
   }
+
+  /** Schema of a centroid sidecar, as every index build writes it. */
+  private val centroidSchema = new StructType()
+    .add("cluster", IntegerType).add("centroid", ArrayType(DoubleType))
+
+  /** The centroid sidecar at `dir`, sorted by cluster id (the
+    * lowest-cluster tie-break of [[assignExact]] must see one order
+    * whatever the parquet row order). Read with its schema given: one
+    * job, no schema-inference job. */
+  def readCentroids(spark: org.apache.spark.sql.SparkSession,
+                    dir: String): Seq[(Int, Array[Double])] =
+    spark.read.schema(centroidSchema).parquet(dir).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+      .sortBy(_._1)
 
   /**
    * Drift ratio of the index: current mean squared assignment
@@ -219,8 +233,7 @@ object IvfIndex {
                     query: DataFrame, idCol: String, vecCol: String, k: Int,
                     nProbe: Int = 4, metric: String = "cosine",
                     rowFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val centers = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+    val centers = readCentroids(spark, s"$path/centroids")
     val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
     val probe = nearestClusters(centers, qv, nProbe)
     // rowFilter applies INSIDE the cluster-pruned scan (partition
@@ -247,8 +260,7 @@ object IvfIndex {
                          queries: DataFrame, idCol: String, vecCol: String, k: Int,
                          nProbe: Int = 4, metric: String = "cosine",
                          rowFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val centers = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+    val centers = readCentroids(spark, s"$path/centroids")
     val assigned = spark.read.parquet(s"$path/assigned")
     batchProbe(rowFilter.fold(assigned)(assigned.where), centers, queries,
       idCol, vecCol, k, nProbe, metric)

@@ -329,15 +329,10 @@ object IvfPq {
   /** The tiny side tables of a written index. */
   def readCenters(spark: SparkSession, path: String,
                   sidecarSuffix: String = ""): Seq[(Int, Array[Double])] =
-    spark.read.parquet(s"$path/centroids$sidecarSuffix").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-      .sortBy(_._1)
+    IvfIndex.readCentroids(spark, s"$path/centroids$sidecarSuffix")
   def readBooks(spark: SparkSession, path: String,
                 sidecarSuffix: String = ""): PqIndex.Codebooks =
-    spark.read.parquet(s"$path/books$sidecarSuffix").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (s, ws) => (s, ws.sortBy(_._2).map(w => (w._2, w._3)).toSeq) }
+    PqIndex.readBooks(spark, s"$path/books$sidecarSuffix", "codeword")
 
   /** Assign rows to EXISTING centroids and encode under EXISTING
     * codebooks — the frozen-geometry append path of an inverted file

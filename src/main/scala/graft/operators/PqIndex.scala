@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
 
 /**
  * Product quantization (Jegou, Douze, Schmid, "Product Quantization
@@ -37,6 +38,18 @@ object PqIndex {
   /** For each subspace s (in order), its codewords (j, centroid(ds)),
     * ordered by j. */
   type Codebooks = Seq[(Int, Seq[(Int, Array[Double])])]
+
+  /** The codebook sidecar at `dir` — rows (s, j, `wordCol`): subspace,
+    * codeword index, codeword — grouped per subspace in index order.
+    * Read with its schema given: one job, no schema-inference job. */
+  def readBooks(spark: org.apache.spark.sql.SparkSession, dir: String,
+                wordCol: String): Codebooks =
+    spark.read.schema(new StructType().add("s", IntegerType)
+        .add("j", IntegerType).add(wordCol, ArrayType(DoubleType)))
+      .parquet(dir).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (s, ws) => (s, ws.sortBy(_._2).map(w => (w._2, w._3)).toSeq) }
 
   /** Fit per-subspace codebooks: m independent k-means on vector
     * slices. Distinct seeds per subspace keep the fits decorrelated. */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, InterpretedPredicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -122,26 +122,60 @@ object ManifestFileIndex {
   /**
    * DataFrame over manifest entries, schema-equivalent to
    * `spark.read.parquet(root)` on the same live files (data columns
-   * followed by the partition columns). The only filesystem I/O at
-   * open is ONE footer read for the data schema — file discovery,
-   * sizes and partition values all come from the manifest. Rebuild
-   * the frame per manifest generation (callers memoize per
+   * followed by the partition columns). File discovery, sizes and
+   * partition values all come from the manifest. The data schema comes
+   * from `schema`, the generation's `#schema` record (read schema:
+   * data columns, then partition columns), so an open performs no
+   * filesystem I/O and launches no Spark job. Only a legacy generation
+   * without a record reads ONE footer ([[footerSchema]], no job).
+   * Rebuild the frame per manifest generation (callers memoize per
    * generation already); `refresh()` is deliberately a no-op.
    */
   def read(spark: SparkSession, root: String, entries: Seq[(String, Long)],
-           partitionSchema: StructType): DataFrame = {
+           partitionSchema: StructType,
+           schema: Option[StructType]): DataFrame = {
     require(entries.nonEmpty, "empty manifest: nothing to plan")
     val rootPath = new Path(root)
     val qualified = rootPath.getFileSystem(
       spark.sparkContext.hadoopConfiguration).makeQualified(rootPath)
     // One generation writes one schema (schema evolution rebuilds the
-    // layout wholesale), so any single footer is authoritative.
+    // layout wholesale), so the record — or any single footer — is
+    // authoritative.
     val dataSchema = StructType(
-      spark.read.parquet(s"$root/${entries.head._1}").schema
+      nullable(schema.getOrElse(footerSchema(spark, s"$root/${entries.head._1}")))
         .filterNot(f => partitionSchema.fieldNames.contains(f.name)))
     val index = new ManifestFileIndex(spark, qualified, entries, partitionSchema)
     spark.baseRelationToDataFrame(HadoopFsRelation(
       index, partitionSchema, dataSchema, None, new ParquetFileFormat,
       Map.empty[String, String])(spark))
+  }
+
+  /** The read schema of one parquet file, as `spark.read.parquet(file)`
+    * infers it, from one footer read and no Spark job: Spark records
+    * the written frame's schema in every footer it writes, and every
+    * file of a graft tree is written by Spark. */
+  def footerSchema(spark: SparkSession, file: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf))
+    val recorded = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally reader.close()
+    require(recorded != null, s"$file: no Spark schema in its parquet footer")
+    nullable(DataType.fromJson(recorded).asInstanceOf[StructType])
+  }
+
+  /** `t` with every field, array element and map value nullable — the
+    * normalization a parquet read applies to the schema it infers, so
+    * a recorded schema compares equal to `spark.read.parquet(..).schema`. */
+  def nullable(t: StructType): StructType = {
+    def go(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = go(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(go(e), containsNull = true)
+      case MapType(k, v, _) => MapType(go(k), go(v), valueContainsNull = true)
+      case other => other
+    }
+    go(t).asInstanceOf[StructType]
   }
 }

@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * What the manifest buys at 100 TB, per layout:
  *  - OPEN COST: a reader plans from one small file chain via
  *    [[ManifestFileIndex]] — zero filesystem list/stat calls instead of
- *    a recursive listing over thousands of partition directories.
+ *    a recursive listing over thousands of partition directories, and
+ *    no footer read or Spark job: the chain's `#schema` record is the
+ *    read schema.
  *  - ATOMIC COMMITS: every commit installs a NEW immutable manifest
  *    file under a fresh generation number (tmp + rename-to-nonexistent,
  *    atomic on HDFS/posix); there is no delete-then-replace window in
@@ -36,7 +38,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * On-disk protocol (all root-level, invisible to data listings):
  *  - `_manifest.<gen>.full.txt`  — complete live set at generation
  *    <gen> (zero-padded), one `path<TAB>size` line per file, optional
- *    leading `#schema<TAB><json>` directive recording the read schema.
+ *    leading `#schema<TAB><json>` directive recording the read schema
+ *    (data columns as a parquet read reports them, then the partition
+ *    columns). Every commit keeps it describing the live files: a
+ *    rebuild records its fresh files' schema. Older writers carried
+ *    the previous record into a rebuild's snapshot, so a resolve
+ *    checks a full snapshot's record against one footer.
  *  - `_manifest.<gen>.delta.txt` — changes vs generation <gen>-1:
  *    `+<TAB>path<TAB>size` adds, `-<TAB>path` removes (same optional
  *    `#schema` directive).
@@ -115,10 +122,27 @@ final class ManifestedTree(
   }
 
   private def resolveState(): Option[Chain] = stateCache.orElse {
-    val c = resolveChain(fs, root)
+    val c = resolve(None)
     stateCache = c
     c
   }
+
+  /** The chain on disk up to `upTo`, its `#schema` record checked
+    * against the files when only the full snapshot carries it. Older
+    * writers carried the previous record forward into a rebuild's
+    * full snapshot, so such a record can predate a layout migration;
+    * a delta's record comes from the rows it appended. The check is
+    * one driver-side footer read of the first entry and no Spark job;
+    * when the column names disagree, the footer's record wins. */
+  private def resolve(upTo: Option[Long]): Option[Chain] =
+    resolveChain(fs, root, upTo).map { c =>
+      if (!c.fullRecord) c
+      else recordOf(c.entries.head._1) match {
+        case Some(r) if !c.schema.exists(_.fieldNames.sameElements(r.fieldNames)) =>
+          c.copy(schema = Some(r))
+        case _ => c
+      }
+    }
 
   /** Live `(relativePath, sizeBytes)` entries of the current manifest
     * generation, or None on a pre-manifest tree. Sizes ride in the
@@ -234,19 +258,13 @@ final class ManifestedTree(
     val prev = resolveState()
     val gen = prev.map(_.gen).getOrElse(0L) + 1
     val disk = assertHeadFresh(gen)
-    // Persist a read-schema record with every full snapshot so an
-    // empty generation (delete-everything) still opens as a typed
-    // empty frame. Derived from (in order): the caller's hint, the
-    // carried-forward record, or ONE footer read (full commits are
-    // rare — builds and rebases — so the read is off the hot path).
+    // Persist a read-schema record with every full snapshot: opens
+    // plan from it (no footer read), and an empty generation
+    // (delete-everything) still opens as a typed empty frame. Derived
+    // from (in order): the caller's hint, the carried-forward record,
+    // or ONE footer read.
     val schema = schemaHint.orElse(prev.flatMap(_.schema))
-      .orElse(files.headOption.flatMap { case (rel, _) =>
-        // best-effort: an unreadable first entry (tests commit
-        // synthetic manifests) just leaves the generation schema-less
-        scala.util.Try(StructType(spark.read.parquet(s"$root/$rel").schema
-          .filterNot(f => partitionSchema.fieldNames.contains(f.name))
-          ++ partitionSchema.fields)).toOption
-      })
+      .orElse(files.headOption.flatMap(f => recordOf(f._1)))
     val header = schema.map(s => s"#schema\t${s.json}\n").getOrElse("")
     val body = files.sortBy(_._1)
       .map { case (p, s) => s"$p\t$s" }.mkString("\n")
@@ -274,7 +292,22 @@ final class ManifestedTree(
     * geometry sidecar onto the FOREIGN generation and the fresh rows
     * would decode under an older geometry). */
   def commitReplaceAll(fresh: Seq[(String, Long)]): Long =
-    commitFull(fresh, None)
+    // the record describes the FRESH set: a rebuild may change the
+    // schema (a layout migration), so carrying the previous record
+    // forward would misdescribe every later open. Only an empty fresh
+    // set, which has no footer to read, keeps the previous record.
+    commitFull(fresh, fresh.headOption.flatMap(f => recordOf(f._1)))
+
+  /** The `#schema` record of a generation whose files share the schema
+    * of `rel`: its footer's data columns (nullable, as a parquet read
+    * reports them), then the partition columns. One footer read, no
+    * Spark job. Best-effort: an unreadable file (tests commit synthetic
+    * manifests) yields None. */
+  private def recordOf(rel: String): Option[StructType] =
+    scala.util.Try(StructType(
+      ManifestFileIndex.footerSchema(spark, s"$root/$rel")
+        .filterNot(f => partitionSchema.fieldNames.contains(f.name))
+      ++ partitionSchema.fields)).toOption
 
   /** Commit a delta, refreshing once if the cached head went stale. A
     * delta references immutable FILES (appends add fresh files, swaps
@@ -418,12 +451,12 @@ final class ManifestedTree(
         }.mkString("/")
       }.toSeq
     // read schema this batch would produce: data columns in frame
-    // order (nullable — a parquet read never reports required fields),
-    // partition columns (declared types) at the end — exactly the
-    // ManifestFileIndex.read column order
-    val schemaHint = StructType(
-      rows.schema.filterNot(f => partCols.contains(f.name))
-        .map(_.copy(nullable = true)) ++ partitionSchema.fields)
+    // order (nullable at every level — a parquet read never reports
+    // required fields or elements), partition columns (declared types)
+    // at the end — exactly the ManifestFileIndex.read column order
+    val schemaHint = StructType(ManifestFileIndex.nullable(
+      StructType(rows.schema.filterNot(f => partCols.contains(f.name))))
+      ++ partitionSchema.fields)
     val manifested = resolveState().isDefined
     val pre =
       if (manifested) listFiles(Some(touched)).map(_._1).toSet
@@ -442,14 +475,17 @@ final class ManifestedTree(
     * rewrite's tmp tree BEFORE the swap consumed it) join it.
     * `victimsAbs` are absolute victim paths as the resolution scan
     * reported them. */
-  def commitSwap(victimsAbs: Seq[String], fresh: Seq[(String, Long)]): Unit = {
+  def commitSwap(victimsAbs: Seq[String], fresh: Seq[(String, Long)]): Unit =
+    commitDelta(victimsAbs.map(relPathOf), fresh, None)
+
+  /** The manifest-relative path of an absolute file path under this
+    * tree, in the form a scan's `_metadata.file_path` reports it. */
+  def relPathOf(abs: String): String = {
     val rootStr = {
       val s = fs.makeQualified(new Path(root)).toUri.getPath
       if (s.endsWith("/")) s else s + "/"
     }
-    val victimsRel = victimsAbs
-      .map(f => new Path(f).toUri.getPath.stripPrefix(rootStr))
-    commitDelta(victimsRel, fresh, None)
+    new Path(abs).toUri.getPath.stripPrefix(rootStr)
   }
 
   /** Commit a compaction as a delta: every manifest entry under
@@ -756,7 +792,8 @@ final class ManifestedTree(
 
   /** The tree as a DataFrame, memoized per manifest generation:
     * manifest-planned ([[ManifestFileIndex]] — zero list/stat calls,
-    * partition pruning kept) when sizes are present; a legacy
+    * partition pruning kept, the read schema from the generation's
+    * `#schema` record, so no job) when sizes are present; a legacy
     * size-less manifest demotes to the per-file read (one stat per
     * entry); an EMPTY generation (delete-everything) opens as a typed
     * empty frame from the manifest's schema record. Only a tree that
@@ -766,11 +803,7 @@ final class ManifestedTree(
     * mid-compaction tree). */
   def open(): DataFrame = openCache.getOrElse {
     val df = resolveState() match {
-      case Some(c) if c.entries.nonEmpty && c.entries.forall(_._2 >= 0) =>
-        ManifestFileIndex.read(spark, root, c.entries, partitionSchema)
-      case Some(c) if c.entries.nonEmpty =>
-        spark.read.option("basePath", root)
-          .parquet(c.entries.map(f => s"$root/${f._1}"): _*)
+      case Some(c) if c.entries.nonEmpty => plan(c.entries, c.schema)
       case Some(c) => c.schema match {
         case Some(s) =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
@@ -790,6 +823,23 @@ final class ManifestedTree(
     openCache = Some(df)
     df
   }
+
+  /** The frame over `entries`, a subset of the current generation's
+    * live files (or of a pre-manifest tree's listing), planned like
+    * [[open]]: no listing, no inference job. */
+  def openEntries(entries: Seq[(String, Long)]): DataFrame = {
+    require(entries.nonEmpty, s"manifested tree $root: no files to open")
+    plan(entries, resolveState().flatMap(_.schema))
+  }
+
+  /** A frame over one generation's non-empty `entries` read with its
+    * `#schema` record; a legacy size-less entry demotes the read to
+    * `spark.read` (one stat per file). */
+  private def plan(entries: Seq[(String, Long)], schema: Option[StructType]): DataFrame =
+    if (entries.forall(_._2 >= 0))
+      ManifestFileIndex.read(spark, root, entries, partitionSchema, schema)
+    else spark.read.option("basePath", root)
+      .parquet(entries.map(f => s"$root/${f._1}"): _*)
 
   // --- snapshot reads + rollback (the lake RESTORE shape) -------------
 
@@ -848,12 +898,8 @@ final class ManifestedTree(
 
   private def openAtUncached(gen: Long): DataFrame = {
     genListCount += 1 // resolveChain lists the manifest directory
-    ManifestedTree.resolveChain(fs, root, Some(gen)) match {
-      case Some(c) if c.entries.nonEmpty && c.entries.forall(_._2 >= 0) =>
-        ManifestFileIndex.read(spark, root, c.entries, partitionSchema)
-      case Some(c) if c.entries.nonEmpty =>
-        spark.read.option("basePath", root)
-          .parquet(c.entries.map(f => s"$root/${f._1}"): _*)
+    resolve(Some(gen)) match {
+      case Some(c) if c.entries.nonEmpty => plan(c.entries, c.schema)
       case Some(c) => c.schema match {
         case Some(s) =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
@@ -874,7 +920,7 @@ final class ManifestedTree(
     * generation keep their grace copy. Same on-disk-files caveat as
     * [[openAt]]. */
   def rollbackTo(gen: Long): Unit =
-    ManifestedTree.resolveChain(fs, root, Some(gen)) match {
+    resolve(Some(gen)) match {
       case Some(c) => commitFull(c.entries, c.schema)
       case None => throw new IllegalArgumentException(
         s"manifested tree $root: no generation <= $gen is retained " +
@@ -924,7 +970,10 @@ object ManifestedTree {
       // commits: the writer's O(batch) collision probe (does an
       // addition re-add a live path?) must not hash the whole tree per
       // commit — ManifestLadder holds the delta commit to O(batch)
-      paths: Set[String])
+      paths: Set[String],
+      // the record came from the full snapshot, not from a delta, over
+      // a non-empty live set (see the class's resolve)
+      fullRecord: Boolean = false)
 
   /** All manifest generation files under `root`:
     * (generation, isFull, path). The legacy `_manifest.txt` reports as
@@ -987,23 +1036,26 @@ object ManifestedTree {
           s"manifest chain at $root is torn: missing generation(s) " +
           missing.mkString(","))
       var schema: Option[StructType] = None
-      def parse(lines: Seq[String]): Seq[String] = lines.filter { l =>
+      var recordInDelta = false
+      def parse(lines: Seq[String], delta: Boolean): Seq[String] = lines.filter { l =>
         if (l.startsWith("#")) {
-          if (l.startsWith("#schema\t"))
+          if (l.startsWith("#schema\t")) {
             schema = Some(DataType.fromJson(l.stripPrefix("#schema\t"))
               .asInstanceOf[StructType])
+            recordInDelta = delta
+          }
           false
         } else true
       }
       val entries = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      parse(readLines(fs, fullPath)).foreach { line =>
+      parse(readLines(fs, fullPath), delta = false).foreach { line =>
         line.split('\t') match {
           case Array(p, s) => entries(p) = s.toLong
           case _ => entries(line) = -1L
         }
       }
       ((fullGen + 1) to maxGen).foreach { g =>
-        parse(readLines(fs, deltaByGen(g))).foreach { line =>
+        parse(readLines(fs, deltaByGen(g)), delta = true).foreach { line =>
           line.split('\t') match {
             case Array("+", p, s) => entries(p) = s.toLong
             case Array("-", p) => entries.remove(p)
@@ -1013,7 +1065,8 @@ object ManifestedTree {
         }
       }
       Some(Chain(entries.toVector, schema, maxGen, fullGen,
-        (maxGen - fullGen).toInt, entries.keysIterator.toSet))
+        (maxGen - fullGen).toInt, entries.keysIterator.toSet,
+        fullRecord = schema.isDefined && !recordInDelta && entries.nonEmpty))
     }
     try attempt() catch {
       case _: java.io.FileNotFoundException =>

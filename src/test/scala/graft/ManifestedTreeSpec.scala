@@ -378,4 +378,64 @@ class ManifestedTreeSpec extends AnyFunSuite {
       fs.delete(new Path(root), true)
     } finally spark.conf.unset("spark.graft.noRenameCommit")
   }
+
+  test("an open planned from the schema record launches no Spark job and reads as the listing does") {
+    import org.apache.spark.sql.types.IntegerType
+    val root = Files.createTempDirectory("graft-mtree").toString
+    // an int partition column, so the listing read infers the declared type
+    val iSchema = StructType(Seq(StructField("bucket", IntegerType)))
+    val tree = new ManifestedTree(spark, root, iSchema)
+    // the array column's elements are required in the frame; a parquet
+    // read reports them nullable, and so must the record
+    def batch(ids: Range) =
+      ids.map(i => (i.toLong, s"doc-$i", Seq.fill(3)(i.toFloat), i % 4))
+        .toDF("id", "txt", "vec", "bucket")
+    tree.appendCommitted(batch(0 until 40), 1000000L)  // first commit: a full
+    tree.appendCommitted(batch(40 until 80), 1000000L) // then a delta
+    def open() = SparkJobs.count(spark)(new ManifestedTree(spark, root, iSchema).open())
+    val (df, jobs) = open()
+    assert(jobs == 0, s"opening a tree with a schema record launched $jobs Spark job(s)")
+    assert(df.schema == spark.read.parquet(root).schema,
+      s"record-planned schema ${df.schema.simpleString} differs from the listing " +
+      s"read's ${spark.read.parquet(root).schema.simpleString}")
+    assert(df.count() == 80)
+
+    // A replace-all commit (a rebuild) records the FRESH files' schema:
+    // carrying the previous record forward would misdescribe every
+    // later open of a rebuild that changed the schema.
+    val old = tree.listFiles().map(_._1).toSet
+    batch(0 until 20).withColumn("score", col("id") * 0.5)
+      .write.mode("append").partitionBy("bucket").parquet(root)
+    val fresh = tree.listFiles().filterNot(f => old(f._1))
+    tree.commitReplaceAll(fresh)
+    val (rebuilt, rebuiltJobs) = open()
+    assert(rebuiltJobs == 0, s"opening a rebuilt tree launched $rebuiltJobs Spark job(s)")
+    val expected = spark.read.option("basePath", root)
+      .parquet(fresh.map(f => s"$root/${f._1}"): _*).schema
+    assert(rebuilt.schema == expected,
+      s"rebuild recorded ${rebuilt.schema.simpleString}, its files read as " +
+      expected.simpleString)
+    assert(rebuilt.where(col("score").isNotNull).count() == 20)
+
+    // Older writers published that rebuild as a full snapshot carrying
+    // the previous record forward. A full snapshot's record is checked
+    // against its files, still without a job.
+    val gen = tree.chainInfo().get._1 + 1
+    tree.installManifest(f"_manifest.$gen%09d.full.txt", s"#schema\t${df.schema.json}\n" +
+      fresh.map { case (p, n) => s"$p\t$n" }.mkString("\n"))
+    def checkStale(what: String)(open: => (org.apache.spark.sql.DataFrame, Int)) = {
+      val (stale, jobs) = open
+      assert(jobs == 0, s"$what: checking the record launched $jobs Spark job(s)")
+      assert(stale.schema == expected,
+        s"$what: planned ${stale.schema.simpleString}, its files read as ${expected.simpleString}")
+    }
+    checkStale("stale full head")(open())
+    checkStale("pinned stale full")(
+      SparkJobs.count(spark)(new ManifestedTree(spark, root, iSchema).openAt(gen)))
+    // a delta without a record (a copy-on-write swap) leaves the full
+    // snapshot's record in force
+    new ManifestedTree(spark, root, iSchema).commitSwap(Seq(s"$root/${fresh.head._1}"), Seq.empty)
+    checkStale("swap delta over the stale full")(open())
+    fs.delete(new Path(root), true)
+  }
 }

@@ -677,6 +677,159 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.delete()
   }
 
+  test("a migration rebuild records its fresh files' schema in the head manifest") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+    val root = Files.createTempDirectory("graft-lib-ivfrec").toString
+    val lib = new VectorLibrary(spark, root, "ivfrec-lib")
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(80)
+    lib.addDocuments(docs.filter(col("doc_id") < 60))
+    lib.buildIvfIndex()
+
+    // a pre-metadata assigned layout that is MANIFESTED: its schema
+    // record describes the old rows
+    val aPath = s"$root/ivfrec-lib/ivf_index/assigned"
+    val oldSchema = spark.read.parquet(aPath)
+      .select(col("chunk_id"), col("embedding"), col("cluster"))
+    val oldRows = oldSchema.collect()
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(oldRows.toIndexedSeq), oldSchema.schema)
+      .write.mode("overwrite").partitionBy("cluster").parquet(aPath)
+    val legacy = new graft.plans.ManifestedTree(spark, aPath,
+      StructType(Seq(StructField("cluster", IntegerType))))
+    legacy.writeManifest(legacy.listFiles())
+    lib.invalidateIndexes()
+
+    // the append migrates by rebuilding; the rebuild's commit must
+    // record the schema of the files it installed, not carry the old
+    // record forward (opens plan from the record)
+    lib.addDocuments(docs.filter(col("doc_id") >= 60))
+    val fs = new Path(aPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val head = fs.globStatus(new Path(s"$aPath/_manifest.*.txt")).map(_.getPath)
+      .maxBy(_.getName)
+    assert(head.getName.endsWith(".full.txt"), s"migration did not rebuild: head $head")
+    val text = {
+      val in = fs.open(head)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    val record = text.split('\n').collectFirst {
+      case l if l.startsWith("#schema\t") => DataType.fromJson(l.stripPrefix("#schema\t"))
+    }
+    val live = graft.plans.ManifestedTree.liveManifestText(spark, aPath)
+      .split('\n').map(_.split('\t')(0))
+    val footer = spark.read.option("basePath", aPath).parquet(s"$aPath/${live.head}").schema
+    assert(footer.fieldNames.contains("doc_id"), "migration did not rebuild with metadata")
+    assert(record.contains(footer),
+      s"head record ${record.map(_.simpleString)} differs from its files' ${footer.simpleString}")
+    lib.delete()
+  }
+
+  /** A library holding all five persisted layouts over `docs`. */
+  private def fiveLayoutLibrary(tag: String,
+      docs: org.apache.spark.sql.DataFrame): (VectorLibrary, String) = {
+    val root = Files.createTempDirectory(s"graft-lib-$tag").toString
+    val lib = new VectorLibrary(spark, root, s"$tag-lib")
+    lib.addDocuments(docs)
+    lib.buildPartitionedIndex(); lib.buildIvfIndex(nCentroids = 4); lib.buildGridIndex()
+    lib.buildPqIndex(m = 2, kk = 8); lib.buildIvfPqIndex(nCentroids = 4, m = 2, kk = 8)
+    (lib, root)
+  }
+
+  test("addDocuments appends every layout once, leaves nothing to repair, and trees open without a job") {
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, root) = fiveLayoutLibrary("fanout", docs.filter(col("doc_id") < 40))
+    def generations() = lib.manifestInfo.collect()
+      .map(r => r.getAs[String]("tree") -> r.getAs[Long]("generation")).toMap
+    val before = generations()
+    assert(before.keySet == Set("store", "lsh", "ivf", "grid", "pq", "ivfpq"),
+      s"not every tree is manifested: $before")
+    lib.addDocuments(docs.filter(col("doc_id") >= 40))
+    val after = generations()
+    assert(after == before.map { case (t, g) => t -> (g + 1) },
+      s"each tree must commit exactly one generation per ingest: $before -> $after")
+    val healed = lib.repairIndexes()
+    assert(healed.values.forall(_ == ((0L, 0L))), s"the ingest left layouts short: $healed")
+
+    // every tree opens from its schema record: no Spark job, and the
+    // schema a listing read infers
+    val trees = Seq(
+      "chunks" -> Seq("source" -> StringType),
+      "lsh_index" -> Seq("tbl" -> IntegerType, "bucket" -> IntegerType),
+      "ivf_index/assigned" -> Seq("cluster" -> IntegerType),
+      "grid_index/cells" -> Seq("cell" -> StringType),
+      "pq_index/codes" -> Seq("source" -> StringType),
+      "ivfpq_index/encoded" -> Seq("cluster" -> IntegerType))
+    for ((rel, parts) <- trees) {
+      val dir = s"$root/fanout-lib/$rel"
+      val (df, jobs) = SparkJobs.count(spark)(manifestRead(dir, parts: _*))
+      assert(jobs == 0, s"opening $rel launched $jobs Spark job(s)")
+      assert(df.schema == spark.read.parquet(dir).schema,
+        s"$rel opened as ${df.schema.simpleString}, its listing reads as " +
+        spark.read.parquet(dir).schema.simpleString)
+    }
+    lib.delete()
+  }
+
+  test("a failed delete rethrows only after every concurrent resolution and rewrite finished") {
+    import org.apache.hadoop.fs.Path
+    import scala.jdk.CollectionConverters._
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, root) = fiveLayoutLibrary("cowfail", docs)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    // Flip one byte inside the embedding column of every live lsh file,
+    // behind the filesystem's back: its checksum no longer matches, so
+    // the lsh tree's part of the delete fails while the other five
+    // trees' resolutions and rewrites run on.
+    val lshRoot = s"$root/cowfail-lib/lsh_index"
+    graft.plans.ManifestedTree.liveManifestText(spark, lshRoot).split('\n')
+      .map(_.split('\t')(0)).foreach { rel =>
+        val p = new Path(s"$lshRoot/$rel")
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        val column = try reader.getFooter.getBlocks.get(0).getColumns.asScala
+          .find(_.getPath.toDotString.startsWith("embedding")).get
+          finally reader.close()
+        val at = column.getStartingPos + column.getTotalSize / 2
+        val raw = new java.io.RandomAccessFile(p.toUri.getPath, "rw")
+        try { raw.seek(at); val b = raw.read(); raw.seek(at); raw.write(b ^ 0xff) }
+        finally raw.close()
+      }
+    def cowState(): Map[String, Long] =
+      fs.globStatus(new Path(s"$root/cowfail-lib/.*_cow")).toSeq.flatMap { d =>
+        val it = fs.listFiles(d.getPath, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => f.getPath.toString -> f.getLen).toSeq
+      }.toMap
+
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!SparkJobs.isMarker(e)) starts.put(e.jobId, e.time)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ends.put(e.jobId, e.time)
+    }
+    SparkJobs.settle(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[Exception](lib.deleteDocuments(col("doc_id") < 30))
+      val returnedAt = System.currentTimeMillis()
+      val cow = cowState()
+      // a task still running would write or launch jobs meanwhile
+      Thread.sleep(3000)
+      assert(cowState() == cow, "a copy-on-write rewrite kept writing after the delete threw")
+      SparkJobs.settle(spark)
+      val late = starts.asScala.collect {
+        case (j, t) if t > returnedAt || !ends.containsKey(j) || ends.get(j) > returnedAt => j
+      }
+      assert(starts.size > 0 && late.isEmpty,
+        s"jobs ${late.mkString(",")} were still running when deleteDocuments threw")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    lib.delete()
+  }
+
   test("quantized index probe: fully index-resident, codes-only phase 1") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
