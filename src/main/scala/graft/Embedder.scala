@@ -80,8 +80,8 @@ object ServiceEmbedder {
  * coordinator. The transport itself is injected
  * ([[ServiceEmbedder.BatchCall]]): the zero-egress build exercises
  * the full plumbing against an in-JVM fake; a deployment passes the
- * real client call. The query path (1-row frames) uses the
- * single-text call, mirroring generate_query_embedding (:233).
+ * real client call. The query path (one query text per search) uses
+ * the single-text call, mirroring generate_query_embedding (:233).
  */
 final class ServiceEmbedder(
     val dim: Int,
@@ -134,8 +134,8 @@ final class ServiceEmbedder(
     throw new IllegalStateException("unreachable")
   }
 
-  /** Query path: single-text call per row (1-row query frames — the
-    * reference's generate_query_embedding shape). */
+  /** Query path: single-text call per row (one query text per search
+    * — the reference's generate_query_embedding shape). */
   def embed(text: Column, inputType: String): Column = {
     val one = org.apache.spark.sql.functions.udf(
       (t: String) => callValidated(Seq(t), inputType).head)

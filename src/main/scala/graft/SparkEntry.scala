@@ -56,10 +56,18 @@ object SparkEntry {
       .limit(10)
   }
 
-  private def embQuery(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val emb = t(spark, dir, "embeddings")
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-    (emb.filter(col("vec_id") =!= 0), q)
+  /** The corpus of the single-query entries: every embedding but
+    * vec_id 0's. */
+  private def embCorpus(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir, "embeddings").filter(col("vec_id") =!= 0)
+
+  /** [[embCorpus]] and the single query, vec_id 0's vector, collected
+    * once and scored as a literal. */
+  private def embQuery(spark: SparkSession, dir: String): (DataFrame, Array[Float]) = {
+    val q = t(spark, dir, "embeddings").filter(col("vec_id") === 0)
+      .select(col("embedding")).collect()
+    require(q.length == 1, s"embeddings must hold exactly one vec_id 0, found ${q.length}")
+    (embCorpus(spark, dir), q(0).getSeq[Float](0).toArray)
   }
 
   // Build-once on-disk IVF index per (session, dataset): the batch
@@ -243,8 +251,7 @@ object SparkEntry {
     * IVF-PQ cells all expose the same triad shape). One aggregate
     * over the encoded table's partition column. */
   private def ivfpqLibraryInfo(s: SparkSession, d: String): DataFrame = {
-    val (c, _) = embQuery(s, d)
-    val idx = ivfpqFor(s, d, c, "single")
+    val idx = ivfpqFor(s, d, embCorpus(s, d), "single")
     ivfpqOracle("single") = (idx.centers, idx.books)
     val occ = idx.encoded.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
     occ.agg(

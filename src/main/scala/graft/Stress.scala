@@ -39,7 +39,7 @@ object Stress {
     val n = corpus.count()
     println(s"[stress] corpus: $n vectors x 64 dims (stored lsh_buckets + int8 codes)")
 
-    val q = base.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = base.filter(col("vec_id") === 0).select(col("embedding")).head.getSeq[Float](0).toArray
     val queries16 = base.filter(col("vec_id") < 16)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
 

@@ -117,7 +117,7 @@ object StressLadder {
       s"$tmp/ivfpq")
     println(f"[ladder] fast encode + partitioned write: ${(System.nanoTime() - t1) / 1e9}%.1fs")
 
-    val q = base.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = base.filter(col("vec_id") === 0).select(col("embedding")).head.getSeq[Float](0).toArray
     val queries16 = base.filter(col("vec_id") < 16)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val idx = operators.IvfPq.Index(
@@ -412,8 +412,8 @@ object HighDimLadder {
       .toDF("query_id", "text")
       .select(col("query_id"), embedText(col("text"), dim).as("qvec")).persist()
     queries.count()
-    def q1(i: Int): DataFrame = queries.filter(col("query_id") === i)
-      .select(col("qvec"))
+    val qvs = queries.collect().map(r => r.getLong(0).toInt -> r.getSeq[Float](1).toArray).toMap
+    def q1(i: Int): Array[Float] = qvs(i)
 
     // ground truth from the exact scan (the planted set by design;
     // measured, not assumed)

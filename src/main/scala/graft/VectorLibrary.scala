@@ -522,10 +522,18 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * parquet scan (row-group stats skip it when no nulls exist). */
   private def searchable: DataFrame = chunks.where(col("embedding").isNotNull)
 
-  /** Embed query text with the library's doc/query-symmetric embedder. */
-  private[graft] def queryFrame(queryText: String): DataFrame =
-    spark.range(1).select(
-      embed.embed(lit(queryText), "search_query").as("qvec"))
+  /** The query text's vector under the library's doc/query-symmetric
+    * embedder, computed once, on the driver. The embedding is projected
+    * over a one-row local relation, which the optimizer evaluates
+    * itself (ConvertToLocalRelation): an expression-backed embedder
+    * launches no Spark job, and one the optimizer cannot evaluate pays
+    * one. Every single-query kernel then scores against the vector as
+    * a literal. */
+  private[graft] def queryVector(queryText: String): Array[Float] = {
+    import spark.implicits._
+    Seq(queryText).toDF("t").select(embed.embed(col("t"), "search_query"))
+      .collect()(0).getSeq[Float](0).toArray
+  }
 
   /**
    * k-NN search by query text (the reference's POST /search), routed
@@ -543,7 +551,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    */
   def search(queryText: String, k: Int = 10, metric: String = "cosine",
              filter: Option[Column] = None): DataFrame =
-    route(head, algo, filter, new Ask(queryFrame(queryText), batch = false, clampK(k), metric))
+    route(head, algo, filter, new Ask(Left(queryVector(queryText)), clampK(k), metric))
 
   /** True when `f` resolves against `df`'s schema — i.e. the predicate
     * can be applied to an index layout's own rows. Checked by ANALYZING
@@ -587,46 +595,49 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       l => info.get(l.name).map(g => (l.tree.openAt(g), g)))
   }
 
-  /** One search's query side and kernel choice: the query frame (one
-    * `qvec` row, or `query_id`-keyed rows when `batch`), clamped k and
-    * metric. Single and batch searches run different kernels — a
-    * batch of one is a different plan — so every store-side route
-    * below, and every [[Layout.probe]], picks its twin from here. */
-  private final class Ask(val q: DataFrame, val batch: Boolean, val kk: Int, val metric: String) {
+  /** One search's query side and kernel choice: a single search's
+    * query vector (`Left`, computed once on the driver and scored as a
+    * literal) or a batch's `query_id`-keyed `qvec` frame (`Right`),
+    * clamped k and metric. Single and batch searches run different
+    * kernels — a batch of one is a different plan — so every
+    * store-side route below, and every [[Layout.probe]], picks its
+    * twin by folding `q`. */
+  private final class Ask(val q: Either[Array[Float], DataFrame], val kk: Int,
+                          val metric: String) {
     private def vecs(store: DataFrame) = store.select(col("chunk_id"), col("embedding"))
     /** (chunk_id, score), or (query_id, chunk_id, score, rank) — no rows. */
-    def empty(store: DataFrame): DataFrame =
-      if (batch) q.limit(0).select(col("query_id"),
-        lit("").as("chunk_id"), lit(0.0).as("score"), lit(0).as("rank"))
-      else store.select(col("chunk_id"), lit(0.0).as("score")).limit(0)
-    def exact(store: DataFrame): DataFrame =
-      if (batch) VectorSearch.knnBatchGeneric(vecs(store), q, "chunk_id", "embedding", kk, metric)
-      else VectorSearch.knnFlat(vecs(store), q, "chunk_id", "embedding", kk, metric)
+    def empty(store: DataFrame): DataFrame = q.fold(
+      _ => store.select(col("chunk_id"), lit(0.0).as("score")).limit(0),
+      qs => qs.limit(0).select(col("query_id"),
+        lit("").as("chunk_id"), lit(0.0).as("score"), lit(0).as("rank")))
+    def exact(store: DataFrame): DataFrame = q.fold(
+      qv => VectorSearch.knnFlat(vecs(store), qv, "chunk_id", "embedding", kk, metric),
+      qs => VectorSearch.knnBatchGeneric(vecs(store), qs, "chunk_id", "embedding", kk, metric))
     /** Probe of the `lsh_buckets` column every store row carries. */
-    def lshColumn(store: DataFrame): DataFrame =
-      if (batch) VectorSearch.lshKnnBatchIndexed(store, q, "chunk_id", "embedding",
-        "lsh_buckets", kk, metric, numTables, bitsPerTable, seed)
-      else VectorSearch.lshKnnIndexed(store, q, "chunk_id", "embedding",
-        "lsh_buckets", kk, metric, numTables, bitsPerTable, seed)
+    def lshColumn(store: DataFrame): DataFrame = q.fold(
+      qv => VectorSearch.lshKnnIndexed(store, qv, "chunk_id", "embedding",
+        "lsh_buckets", kk, metric, numTables, bitsPerTable, seed),
+      qs => VectorSearch.lshKnnBatchIndexed(store, qs, "chunk_id", "embedding",
+        "lsh_buckets", kk, metric, numTables, bitsPerTable, seed))
     /** The reference's GridIndex.search semantics (widen until >= 2k
       * candidates), so sparse neighborhoods still fill k. */
-    def gridExpanding(store: DataFrame): DataFrame =
-      if (batch) VectorSearch.gridKnnExpandingBatch(vecs(store), q, "chunk_id", "embedding", kk, metric)
-      else VectorSearch.gridKnnExpanding(vecs(store), q, "chunk_id", "embedding", kk, metric)
-    def quantized(store: DataFrame): DataFrame =
-      if (batch) VectorSearch.knnQuantizedBatch(store, q, "chunk_id", "embedding", "quant", kk, metric)
-      else VectorSearch.knnQuantizedIndexed(store, q, "chunk_id", "embedding", "quant", kk, metric)
+    def gridExpanding(store: DataFrame): DataFrame = q.fold(
+      qv => VectorSearch.gridKnnExpanding(vecs(store), qv, "chunk_id", "embedding", kk, metric),
+      qs => VectorSearch.gridKnnExpandingBatch(vecs(store), qs, "chunk_id", "embedding", kk, metric))
+    def quantized(store: DataFrame): DataFrame = q.fold(
+      qv => VectorSearch.knnQuantizedIndexed(store, qv, "chunk_id", "embedding", "quant", kk, metric),
+      qs => VectorSearch.knnQuantizedBatch(store, qs, "chunk_id", "embedding", "quant", kk, metric))
     /** 1-bit rung: Hamming phase 1 over the stored packed-sign column
       * (8 bytes/row at 64 dims), exact re-rank. A store predating the
       * bits column (schema-evolution guard) packs on the fly. */
-    def binary(store: DataFrame): DataFrame =
-      if (store.columns.contains("bits"))
-        if (batch) VectorSearch.knnBinaryBatch(store, q, "chunk_id", "embedding", "bits", kk, metric)
-        else VectorSearch.knnBinaryIndexed(store, q, "chunk_id", "embedding", "bits", kk, metric)
-      else if (batch) VectorSearch.knnBinaryBatch(
-        vecs(store).withColumn("bits", bitPack(col("embedding"))),
-        q, "chunk_id", "embedding", "bits", kk, metric)
-      else VectorSearch.knnBinary(vecs(store), q, "chunk_id", "embedding", kk, metric)
+    def binary(store: DataFrame): DataFrame = {
+      val coded =
+        if (store.columns.contains("bits")) store
+        else vecs(store).withColumn("bits", bitPack(col("embedding")))
+      q.fold(
+        qv => VectorSearch.knnBinaryIndexed(coded, qv, "chunk_id", "embedding", "bits", kk, metric),
+        qs => VectorSearch.knnBinaryBatch(coded, qs, "chunk_id", "embedding", "bits", kk, metric))
+    }
   }
 
   /**
@@ -674,8 +685,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     if (qvec.length != dim)
       throw new IllegalArgumentException(
         s"query dimension ${qvec.length} does not match library dimension $dim")
-    route(head, algo, filter, new Ask(spark.range(1).select(
-      typedLit(qvec).cast("array<float>").as("qvec")), batch = false, clampK(k), metric))
+    route(head, algo, filter, new Ask(Left(qvec.toArray), clampK(k), metric))
   }
 
   /**
@@ -710,7 +720,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def searchApprox(queryText: String, k: Int = 10,
                    metric: String = "cosine",
                    filter: Option[Column] = None): DataFrame =
-    route(head, "lsh", filter, new Ask(queryFrame(queryText), batch = false, clampK(k), metric))
+    route(head, "lsh", filter, new Ask(Left(queryVector(queryText)), clampK(k), metric))
 
   /**
    * Two-phase approximate search served ENTIRELY from the partitioned
@@ -729,7 +739,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     if (hasPartitionedIndex && partitionedIndex.columns.contains("quant")
         && filter.forall(covers(partitionedIndex, _)))
       VectorSearch.lshKnnPartitionedQuantized(applyF(partitionedIndex, filter),
-        queryFrame(queryText),
+        queryVector(queryText),
         "chunk_id", "embedding", "quant", clampK(k), metric,
         numTables, bitsPerTable, seed, rerankFactor = rerankFactor)
     else searchApprox(queryText, k, metric, filter)
@@ -756,7 +766,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def searchBatch(queryTexts: Seq[String], k: Int = 10,
                   metric: String = "cosine",
                   filter: Option[Column] = None): DataFrame =
-    route(head, algo, filter, new Ask(queriesFrame(queryTexts), batch = true, clampK(k), metric))
+    route(head, algo, filter, new Ask(Right(queriesFrame(queryTexts)), clampK(k), metric))
 
   /** Batch approximate search: N query texts answered in ONE pass over
     * the LSH index. With the partitioned index present, the scan reads
@@ -767,7 +777,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def searchApproxBatch(queryTexts: Seq[String], k: Int = 10,
                         metric: String = "cosine",
                         filter: Option[Column] = None): DataFrame =
-    route(head, "lsh", filter, new Ask(queriesFrame(queryTexts), batch = true, clampK(k), metric))
+    route(head, "lsh", filter, new Ask(Right(queriesFrame(queryTexts)), clampK(k), metric))
 
   /**
    * Diversity-aware search (MMR, the RAG retrieval endpoint): the
@@ -782,7 +792,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
                     filter: Option[Column] = None): DataFrame =
     operators.VectorSearch.mmrRerank(
       applyF(searchable, filter).select(col("chunk_id"), col("embedding")),
-      queryFrame(queryText), "chunk_id", "embedding", clampK(k), lambda)
+      queryVector(queryText), "chunk_id", "embedding", clampK(k), lambda)
       .withColumnRenamed("rel", "score")
 
   /** Batch twin of [[searchDiverse]]: N query texts share ONE
@@ -924,46 +934,36 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     migrating.foreach(_.rebuild(readMeta()))
   }
 
-  /** The write path's fan-out pool: one thread per tree, six in all,
-    * so a delete's six resolutions never queue behind each other.
-    * Daemon threads that time out when idle: a library that is not
-    * writing holds none. */
-  private lazy val fanOutPool: java.util.concurrent.ExecutorService = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val pool = new java.util.concurrent.ThreadPoolExecutor(
-      TreeOrder.size, TreeOrder.size, 30L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, s"graft-$name-fanout-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      })
-    pool.allowCoreThreadTimeOut(true)
-    pool
-  }
-
-  /** Run `tasks` concurrently on [[fanOutPool]]; their results, in
-    * order. Waits for EVERY task before returning or throwing, then
-    * throws the first failure with the others attached as suppressed:
-    * a task still running after the caller's `finally` (an unpersisted
-    * input, a released lease) would race the next mutation. A task
-    * must not take the writer lease or a tree lease — those are JVM
-    * monitors the calling thread holds. A lone task runs on the
-    * calling thread. */
+  /** Run `tasks` concurrently, one thread each; their results, in
+    * order. The threads start from the calling thread and end with the
+    * call, so every task's jobs carry the caller's Spark local
+    * properties (job group, description, scheduler pool): those are an
+    * InheritableThreadLocal, copied when a thread is created, and a
+    * pooled thread would keep the properties of whichever call created
+    * it. Waits for EVERY task before returning or throwing, then throws
+    * the first failure with the others attached as suppressed: a task
+    * still running after the caller's `finally` (an unpersisted input,
+    * a released lease) would race the next mutation. A task must not
+    * take the writer lease or a tree lease — those are JVM monitors the
+    * calling thread holds. A lone task runs on the calling thread. */
   private def fanOut[A](tasks: Seq[() => A]): Seq[A] =
     if (tasks.size <= 1) tasks.map(_())
     else {
-      val running = tasks.map(t =>
-        fanOutPool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
-      val outcomes = running.map { f =>
-        try Right(f.get())
-        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
+      val outcomes = new Array[Either[Throwable, A]](tasks.size)
+      val threads = tasks.zipWithIndex.map { case (t, i) =>
+        val th = new Thread(() =>
+          outcomes(i) = try Right(t()) catch { case e: Throwable => Left(e) },
+          s"graft-$name-fanout-$i")
+        th.setDaemon(true)
+        th.start()
+        th
       }
-      outcomes.collect { case Left(e) => e } match {
+      threads.foreach(_.join())
+      outcomes.toSeq.collect { case Left(e) => e } match {
         case first +: rest =>
           rest.filterNot(_ eq first).foreach(first.addSuppressed)
           throw first
-        case _ => outcomes.collect { case Right(a) => a }
+        case _ => outcomes.toSeq.collect { case Right(a) => a }
       }
     }
 
@@ -999,10 +999,11 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         .distinct().collect()
         .map(r => s"$indexPath/tbl=${r.getInt(0)}/bucket=${r.getInt(1)}").toSeq
     def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame =
-      if (a.batch) VectorSearch.lshKnnPartitionedBatch(applyF(frame, filter), a.q,
-        "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed)
-      else VectorSearch.lshKnnPartitioned(applyF(frame, filter), a.q,
-        "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed)
+      a.q.fold(
+        qv => VectorSearch.lshKnnPartitioned(applyF(frame, filter), qv,
+          "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed),
+        qs => VectorSearch.lshKnnPartitionedBatch(applyF(frame, filter), qs,
+          "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed))
   }
 
   /** The bucket-partitioned index, memoized per manifest generation. */
@@ -1811,7 +1812,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
                algorithm: Option[String] = None,
                filter: Option[Column] = None): DataFrame =
     route(at(e), algorithm.getOrElse(algo), filter,
-      new Ask(queryFrame(queryText), batch = false, clampK(k), metric))
+      new Ask(Left(queryVector(queryText)), clampK(k), metric))
 
   /** Batch twin of [[searchAt]] — the epoch-pinned completion of the
     * "every search algorithm has a batch twin" matrix: N query texts
@@ -1828,7 +1829,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
                     algorithm: Option[String] = None,
                     filter: Option[Column] = None): DataFrame =
     route(at(e), algorithm.getOrElse(algo), filter,
-      new Ask(queriesFrame(queryTexts), batch = true, clampK(k), metric))
+      new Ask(Right(queriesFrame(queryTexts)), clampK(k), metric))
 
   /**
    * Copy-on-write removal of the victim chunks from the store AND
@@ -1849,9 +1850,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * concurrent reader mid-plan on the previous generation (or pinned
    * to an epoch) never sees a path vanish (see [[cowTree]]).
    *
-   * Phase 1 fans out twice through [[fanOut]], on the library's
-   * six-thread pool: the six victim-file resolutions (store + five
-   * layouts), then the survivor rewrites. Each fan-out waits for every
+   * Phase 1 fans out twice through [[fanOut]], one thread per tree:
+   * the six victim-file resolutions (store + five layouts), then the
+   * survivor rewrites. Each fan-out waits for every
    * task before it rethrows the first failure, so no rewrite is still
    * writing into a `.<tree>_cow` tmp tree when this returns or throws.
    * Every read plans from manifest entries and the tree's schema
@@ -2209,17 +2210,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     /** (lo, hi, gridDims, cellsPerDim) of the fitted grid. */
     type Geom = (Array[Double], Array[Double], Int, Int)
     override def geomBases = Seq(s"$gridPath/bounds")
-    // A legacy plain sidecar predates the cells_per_dim column and
-    // falls back to the meta file.
-    def geomAt(gen: Long): Geom =
-      geomLoad(s"$gridPath/bounds", gen) { path =>
-        val rows = spark.read.parquet(path).collect().sortBy(_.getInt(0))
-        val cpd =
-          if (rows.nonEmpty && rows.head.schema.fieldNames.contains("cells_per_dim"))
-            rows.head.getAs[Int]("cells_per_dim")
-          else readMeta().getOrElse("grid_cells_per_dim", "4").toInt
-        (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), rows.length, cpd)
-      }
+    def geomAt(gen: Long): Geom = geomLoad(s"$gridPath/bounds", gen)(gridBoundsAt)
+
     def rebuild(meta: Map[String, String]): Unit =
       buildGridIndex(meta.getOrElse("grid_dims", "4").toInt,
         meta.getOrElse("grid_cells_per_dim", "4").toInt)
@@ -2248,15 +2240,34 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       val cells = applyF(frame, filter)
       val occupancy = Some(
         if (filter.isEmpty) counts(frame, gen) else VectorSearch.gridCellCounts(cells))
-      if (a.batch) VectorSearch.gridKnnIndexedBatch(cells, lo, hi, a.q,
-        "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy)
-      else VectorSearch.gridKnnIndexed(cells, lo, hi, a.q,
-        "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy)
+      a.q.fold(
+        qv => VectorSearch.gridKnnIndexed(cells, lo, hi, qv,
+          "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy),
+        qs => VectorSearch.gridKnnIndexedBatch(cells, lo, hi, qs,
+          "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy))
     }
   }
 
   /** True when the persisted grid index has been built and holds data. */
   def hasGridIndex: Boolean = gridLayout.present
+
+  /** The (lo, hi, gridDims, cellsPerDim) a grid bounds sidecar holds,
+    * read in one job. The footer of its part file (read on the driver)
+    * gives the read schema, so no schema-inference job runs; a legacy
+    * sidecar predates the cells_per_dim column and falls back to the
+    * meta file. */
+  private[graft] def gridBoundsAt(path: String): (Array[Double], Array[Double], Int, Int) = {
+    val part = hadoopFs(path).listStatus(new org.apache.hadoop.fs.Path(path))
+      .map(_.getPath).find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .getOrElse(throw new IllegalStateException(s"grid bounds sidecar $path holds no data file"))
+    val schema = graft.plans.ManifestFileIndex.footerSchema(spark, part.toString)
+    val rows = spark.read.schema(schema).parquet(path).collect().sortBy(_.getInt(0))
+    val cpd =
+      if (rows.nonEmpty && schema.fieldNames.contains("cells_per_dim"))
+        rows.head.getAs[Int]("cells_per_dim")
+      else readMeta().getOrElse("grid_cells_per_dim", "4").toInt
+    (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), rows.length, cpd)
+  }
 
   /** Build (or rebuild) the persisted grid index: one bounds aggregate
     * over the store, one cell-clustered write. Search under algorithm
@@ -2346,10 +2357,11 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       IvfIndex.assignExact(victims.where(col("embedding").isNotNull), "embedding", headGeom))
     override def derivedDirs = true
     def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame =
-      if (a.batch) IvfIndex.searchAssignedBatch(applyF(frame, filter), geomAt(gen), a.q,
-        "chunk_id", "embedding", a.kk, metric = a.metric)
-      else IvfIndex.searchAssigned(applyF(frame, filter), geomAt(gen), a.q,
-        "chunk_id", "embedding", a.kk, metric = a.metric)
+      a.q.fold(
+        qv => IvfIndex.searchAssigned(applyF(frame, filter), geomAt(gen), qv,
+          "chunk_id", "embedding", a.kk, metric = a.metric),
+        qs => IvfIndex.searchAssignedBatch(applyF(frame, filter), geomAt(gen), qs,
+          "chunk_id", "embedding", a.kk, metric = a.metric))
   }
 
   /** True when the on-disk IVF index has been built. */
@@ -2428,10 +2440,11 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         .map(r => s"$pqPath/codes/source=${escape(r.getString(0))}").toSeq
     // codes-only ADC scan; exact re-rank on the survivors' float rows
     def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame =
-      if (a.batch) PqIndex.searchBatch(applyF(frame, filter), geomAt(gen), a.q,
-        "chunk_id", "embedding", a.kk, a.metric, normalized = true)
-      else PqIndex.search(applyF(frame, filter), geomAt(gen), a.q,
-        "chunk_id", "embedding", a.kk, a.metric, normalized = true)
+      a.q.fold(
+        qv => PqIndex.search(applyF(frame, filter), geomAt(gen), qv,
+          "chunk_id", "embedding", a.kk, a.metric, normalized = true),
+        qs => PqIndex.searchBatch(applyF(frame, filter), geomAt(gen), qs,
+          "chunk_id", "embedding", a.kk, a.metric, normalized = true))
   }
 
   /** True when the persisted PQ index has been built and holds data. */
@@ -2524,10 +2537,11 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame = {
       val (centers, books) = geomAt(gen)
       val idx = IvfPq.Index(centers, books, applyF(frame, filter))
-      if (a.batch) IvfPq.searchBatch(idx, a.q, "chunk_id", "embedding", a.kk,
-        metric = a.metric, normalized = true)
-      else IvfPq.search(idx, a.q, "chunk_id", "embedding", a.kk,
-        metric = a.metric, normalized = true)
+      a.q.fold(
+        qv => IvfPq.search(idx, qv, "chunk_id", "embedding", a.kk,
+          metric = a.metric, normalized = true),
+        qs => IvfPq.searchBatch(idx, qs, "chunk_id", "embedding", a.kk,
+          metric = a.metric, normalized = true))
     }
   }
 

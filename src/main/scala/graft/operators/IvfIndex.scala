@@ -49,25 +49,17 @@ object IvfIndex {
       (i, d)
     }.sortBy(_._2).take(nProbe).map(_._1)
 
-  private def rerank(candidates: DataFrame, query: DataFrame, idCol: String,
-                     vecCol: String, k: Int, metric: String): DataFrame =
-    candidates.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+  /** The rows of the nProbe cells nearest to the query vector `qv`. */
+  private def probed(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
+                     qv: Array[Float], nProbe: Int): DataFrame =
+    assigned.filter(col("cluster").isin(
+      nearestClusters(centers, qv.map(_.toDouble), nProbe): _*))
 
-  /** Exact re-rank within the nProbe nearest cells to the query. */
-  def search(assigned: DataFrame, model: KMeansModel, query: DataFrame,
+  /** Exact re-rank within the nProbe nearest cells to the query vector. */
+  def search(assigned: DataFrame, model: KMeansModel, qv: Array[Float],
              idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
-             metric: String = "cosine"): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(
-      model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq,
-      qv, nProbe)
-    rerank(assigned.filter(col("cluster").isin(probe: _*)),
-      query, idCol, vecCol, k, metric)
-  }
+             metric: String = "cosine"): DataFrame =
+    searchAssigned(assigned, centersOf(model), qv, idCol, vecCol, k, nProbe, metric)
 
   /**
    * Exact-arithmetic assignment to given centroids: argmin of the
@@ -97,13 +89,9 @@ object IvfIndex {
   /** Probe an exact-assigned corpus: nProbe nearest cells resolved
     * driver-side against the same centroid values, exact re-rank. */
   def searchAssigned(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
-                     query: DataFrame, idCol: String, vecCol: String, k: Int,
-                     nProbe: Int = 4, metric: String = "cosine"): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(centers, qv, nProbe)
-    rerank(assigned.filter(col("cluster").isin(probe: _*)),
-      query, idCol, vecCol, k, metric)
-  }
+                     qv: Array[Float], idCol: String, vecCol: String, k: Int,
+                     nProbe: Int = 4, metric: String = "cosine"): DataFrame =
+    VectorSearch.knnFlat(probed(assigned, centers, qv, nProbe), qv, idCol, vecCol, k, metric)
 
   /**
    * Persist the index in its on-disk serving layout: the assignment
@@ -230,19 +218,15 @@ object IvfIndex {
     * centroid table, then a partition-pruned scan of those cluster
     * directories + exact re-rank. */
   def searchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                    query: DataFrame, idCol: String, vecCol: String, k: Int,
+                    qv: Array[Float], idCol: String, vecCol: String, k: Int,
                     nProbe: Int = 4, metric: String = "cosine",
                     rowFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val centers = readCentroids(spark, s"$path/centroids")
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(centers, qv, nProbe)
     // rowFilter applies INSIDE the cluster-pruned scan (partition
     // pruning x pushed row-group predicate), never post-hoc on the
     // shortlist — k survivors all satisfy it.
-    val pruned = spark.read.parquet(s"$path/assigned")
-      .filter(col("cluster").isin(probe: _*))
-    rerank(rowFilter.fold(pruned)(pruned.where),
-      query, idCol, vecCol, k, metric)
+    val pruned = probed(spark.read.parquet(s"$path/assigned"), centers, qv, nProbe)
+    VectorSearch.knnFlat(rowFilter.fold(pruned)(pruned.where), qv, idCol, vecCol, k, metric)
   }
 
   /**
@@ -434,34 +418,29 @@ object IvfIndex {
     * row replicated into several probed cells must count once — scores
     * dedup on the occurrence-invariant (id, score) scalar pair before
     * the top-k, so no embedding array rides the aggregate. */
-  def searchSpill(assigned: DataFrame, model: KMeansModel, query: DataFrame,
+  def searchSpill(assigned: DataFrame, model: KMeansModel, qv: Array[Float],
                   idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
                   metric: String = "cosine"): DataFrame =
-    searchSpillAssigned(assigned, centersOf(model), query, idCol, vecCol,
+    searchSpillAssigned(assigned, centersOf(model), qv, idCol, vecCol,
       k, nProbe, metric)
 
   /** Centers-based twin of `searchSpill` (for exact-assignment paths
     * whose centroids ride outside a fitted model). */
   def searchSpillAssigned(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
-                          query: DataFrame, idCol: String, vecCol: String,
+                          qv: Array[Float], idCol: String, vecCol: String,
                           k: Int, nProbe: Int = 1,
-                          metric: String = "cosine"): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val probe = nearestClusters(centers, qv, nProbe)
-    assigned.filter(col("cluster").isin(probe: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+                          metric: String = "cosine"): DataFrame =
+    probed(assigned, centers, qv, nProbe)
+      .select(col(idCol), VectorSearch.scoreCol(metric, vecCol, qv).as("score"))
       .groupBy(col(idCol)).agg(max(col("score")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
-  }
 
-  /** One-call convenience: build + probe (the `ivf_knn` query). */
-  def ivfKnn(emb: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  /** One-call convenience: build + probe. */
+  def ivfKnn(emb: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
              k: Int, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     val (model, assigned) = build(emb, vecCol, nCentroids)
-    search(assigned, model, query, idCol, vecCol, k, nProbe)
+    search(assigned, model, qv, idCol, vecCol, k, nProbe)
   }
 
   // Build-once cache: an IVF index is a one-off batch build reused
@@ -478,7 +457,7 @@ object IvfIndex {
    * probe-many split the reference makes between POST /index and
    * POST /search.
    */
-  def ivfKnnCached(emb: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  def ivfKnnCached(emb: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
                    k: Int, cacheKey: String, nCentroids: Int = 16,
                    nProbe: Int = 4): DataFrame = {
     val key = s"${System.identityHashCode(emb.sparkSession)}|$cacheKey|$nCentroids"
@@ -486,6 +465,6 @@ object IvfIndex {
       val (m, a) = build(emb, vecCol, nCentroids)
       (m, a.persist())
     })
-    search(assigned, model, query, idCol, vecCol, k, nProbe)
+    search(assigned, model, qv, idCol, vecCol, k, nProbe)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -98,59 +98,46 @@ object IvfPq {
     * then normalizes through the SAME float-narrowing kernel before
     * the probe and the residual; the exact phase-2 re-rank always
     * runs on the raw vectors with the caller's metric. */
-  private def qvecCol(normalized: Boolean) =
-    if (normalized) graft.GraftFunctions.l2Normalize(col("qvec")) else col("qvec")
-
-  /** Per-cell ADC lookup tables for the probed cells: the query's
-    * residual against cell c feeds the same LUT build the flat PQ
-    * probe uses — one tiny frame (nProbe rows), broadcast. */
-  private def probeLuts(query: DataFrame, centers: Seq[(Int, Array[Double])],
-                        books: PqIndex.Codebooks, probe: Seq[Int],
-                        normalized: Boolean): DataFrame = {
-    val cents = centroidFrame(query.sparkSession,
-      centers.filter(c => probe.contains(c._1)))
-    cents.crossJoin(query.select(qvecCol(normalized).as("qvec")))
-      .withColumn("__qres",
-        zip_with(col("qvec").cast("array<double>"), col("centroid"), (x, y) => x - y))
-      .select(col("cluster"), PqIndex.lutCol(books, col("__qres")).as("__lut"))
-  }
+  private def qvecCol(normalized: Boolean, qvec: Column = col("qvec")): Column =
+    if (normalized) graft.GraftFunctions.l2Normalize(qvec) else qvec
 
   /**
    * Two-phase probe: prune to the nProbe nearest cells, ADC-rank their
    * rows codes-only against the cell's lookup table, exactly re-rank
    * the rerankFactor*k shortlist on the float vectors.
+   *
+   * `qv` is the query vector. Its probe cells and its per-cell lookup
+   * tables (the query's residual against cell c feeds the same LUT
+   * build the flat PQ probe uses) are evaluated on the driver without
+   * a job ([[VectorSearch.evalLocal]]); each row picks its cell's table
+   * from a literal map.
    */
-  def search(idx: Index, query: DataFrame, idCol: String, vecCol: String,
+  def search(idx: Index, qv: Array[Float], idCol: String, vecCol: String,
              k: Int, nProbe: Int = 4, metric: String = "euclidean",
              rerankFactor: Int = 5, normalized: Boolean = false): DataFrame = {
-    val qv = query.select(qvecCol(normalized).cast("array<double>").as("qvec"))
-      .head.getSeq[Double](0).toArray
-    val probe = IvfIndex.nearestClusters(idx.centers, qv, nProbe)
-    val luts = probeLuts(query, idx.centers, idx.books, probe, normalized)
+    val spark = idx.encoded.sparkSession
+    val qd = qvecCol(normalized, typedLit(qv)).cast("array<double>")
+    val probe = IvfIndex.nearestClusters(idx.centers,
+      VectorSearch.evalLocal(spark, qd).getSeq[Double](0).toArray, nProbe)
+    val cents = idx.centers.filter(c => probe.contains(c._1))
+    val tables = VectorSearch.evalLocal(spark, cents.map { case (_, c) =>
+      PqIndex.lutCol(idx.books, zip_with(qd, typedLit(c.toSeq), (x, y) => x - y))
+    }: _*)
+    val luts = typedLit(cents.indices.map(i =>
+      cents(i)._1 -> tables.getSeq[Seq[Double]](i)).toMap)
     // Phase 2 re-reads ONLY the probed cells (partition pruning —
     // previously the semi-join scanned every cell's float column) and
     // pushes the bounded shortlist in as an In-filter: on the
     // id-sorted cell files, row-group min/max stats turn the re-rank
     // fetch into point reads.
-    val ids = idx.encoded
-      .filter(col("cluster").isin(probe.map(Int.box): _*))
-      .select(col(idCol), col("cluster"), col("pq_codes"))
-      .join(broadcast(luts), "cluster")
-      .select(col(idCol), PqIndex.adcCol(idx.books.size).as("adc"))
+    val cells = idx.encoded.filter(col("cluster").isin(probe.map(Int.box): _*))
+    val ids = cells
+      .select(col(idCol),
+        PqIndex.adcCol(idx.books.size, element_at(luts, col("cluster"))).as("adc"))
       .orderBy(col("adc").asc, col(idCol).asc)
       .limit(k * rerankFactor)
       .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return idx.encoded.limit(0).crossJoin(broadcast(query.select(col("qvec"))))
-        .select(col(idCol), lit(0.0).as("score"))
-    idx.encoded
-      .filter(col("cluster").isin(probe.map(Int.box): _*) &&
-        col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query.select(col("qvec"))))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    VectorSearch.shortlistTopK(cells, ids, qv, idCol, vecCol, k, metric)
   }
 
   /**
@@ -318,13 +305,13 @@ object IvfPq {
 
   /** Load the side tables of a written index and probe it — the
     * partition-pruned, column-pruned two-phase scan. */
-  def searchIndexed(spark: SparkSession, path: String, query: DataFrame,
+  def searchIndexed(spark: SparkSession, path: String, qv: Array[Float],
                     idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
                     metric: String = "euclidean", rerankFactor: Int = 5,
                     normalized: Boolean = false): DataFrame =
     search(Index(readCenters(spark, path), readBooks(spark, path),
         spark.read.parquet(s"$path/encoded")),
-      query, idCol, vecCol, k, nProbe, metric, rerankFactor, normalized)
+      qv, idCol, vecCol, k, nProbe, metric, rerankFactor, normalized)
 
   /** The tiny side tables of a written index. */
   def readCenters(spark: SparkSession, path: String,

@@ -72,23 +72,22 @@ object Pca {
    * membership ties break on id, so the oracle reproduces the exact
    * candidate set.
    */
-  def knn(emb: DataFrame, comps: Seq[Array[Double]], query: DataFrame,
+  def knn(emb: DataFrame, comps: Seq[Array[Double]], qv: Array[Float],
           idCol: String = "vec_id", vecCol: String = "embedding",
           k: Int = 10, shortlist: Int = 50, metric: String = "cosine"): DataFrame = {
-    val q = query.select(col("qvec"), projCol(comps, col("qvec")).as("qproj"))
+    // the query's projection, evaluated once on the driver without a
+    // job and scored as a literal
+    val qproj = VectorSearch.evalLocal(emb.sparkSession, projCol(comps, typedLit(qv)))
+      .getSeq[Double](0)
     // scaleScan (r14): the k x dim projection fold is the dominant
     // per-row cost and must not serialize on a 1-split scan (§2.5)
-    graft.GraftFunctions.scaleScan(emb.select(col(idCol), col(vecCol)))
+    val short = graft.GraftFunctions.scaleScan(emb.select(col(idCol), col(vecCol)))
       .withColumn("proj", projCol(comps, col(vecCol)))
-      .crossJoin(broadcast(q))
-      .withColumn("pdist", aggregate(zip_with(col("proj"), col("qproj"),
+      .withColumn("pdist", aggregate(zip_with(col("proj"), typedLit(qproj),
         (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
       .orderBy(col("pdist").asc, col(idCol).asc)
       .limit(shortlist)
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    VectorSearch.knnFlat(short, qv, idCol, vecCol, k, metric)
   }
 
   /** Project each row onto the fitted components: one output row per

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructTyp
  *    [[IvfIndex.assignExact]] — replayable bit-identically by a SQL
  *    oracle, lowest-j tie-break via `array_min` struct ordering.
  *  - Search (ADC, asymmetric distance computation): the query builds
- *    an m x kk lookup table of subspace distances ONCE (on the 1-row
- *    query frame), then each corpus row's approximate distance is m
+ *    an m x kk lookup table of subspace distances ONCE (on the driver,
+ *    as a literal), then each corpus row's approximate distance is m
  *    array lookups summed in fixed subspace order — whole-stage
  *    codegen over builtins, no UDF. Phase 1 scans (id, pq_codes)
  *    ONLY; the float vectors join back for just the rerankFactor*k
@@ -95,20 +95,23 @@ object PqIndex {
         aggregate(zip_with(sub, c, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
     }: _*)
 
-  /** ADC distance: m table lookups added in fixed subspace order (a
-    * left-assoc chain — the oracle replays the identical sum). */
-  private[operators] def adcCol(m: Int): Column =
+  /** ADC distance: m lookups into the table `lut` added in fixed
+    * subspace order (a left-assoc chain — the oracle replays the
+    * identical sum). */
+  private[operators] def adcCol(m: Int, lut: Column = col("__lut")): Column =
     (0 until m).map(s =>
-      element_at(element_at(col("__lut"), s + 1),
+      element_at(element_at(lut, s + 1),
         element_at(col("pq_codes"), s + 1) + 1))
       .reduce(_ + _)
 
   /**
    * Two-phase PQ top-k against pre-encoded rows: ADC shortlist of
    * rerankFactor*k ids from the codes-only scan, exact re-rank on the
-   * fetched float survivors. `query` is a 1-row frame with `qvec`.
+   * fetched float survivors. `qv` is the query vector; its lookup
+   * table is built once, on the driver without a job
+   * ([[VectorSearch.evalLocal]]), and scored as a literal.
    */
-  def search(encoded: DataFrame, books: Codebooks, query: DataFrame,
+  def search(encoded: DataFrame, books: Codebooks, qv: Array[Float],
              idCol: String, vecCol: String, k: Int,
              metric: String = "euclidean", rerankFactor: Int = 5,
              normalized: Boolean = false): DataFrame = {
@@ -116,29 +119,20 @@ object PqIndex {
     // library layout, where ADC squared-L2 tracks cosine): the query
     // normalizes identically before the table build; the exact phase-2
     // re-rank always runs on the raw vectors with the caller's metric.
-    val qv = if (normalized) graft.GraftFunctions.l2Normalize(col("qvec")) else col("qvec")
-    val q2 = broadcast(query.select(lutCol(books, qv).as("__lut")))
+    val q = if (normalized) graft.GraftFunctions.l2Normalize(typedLit(qv)) else typedLit(qv)
+    val lut = typedLit(VectorSearch.evalLocal(encoded.sparkSession, lutCol(books, q))
+      .getSeq[Seq[Double]](0))
     // Phase 2 resolves the bounded (k*rerankFactor-row) ADC shortlist
     // driver-side and pushes it into the float scan as an In-filter:
     // on the id-clustered codes layout (files sorted by (source, id)
     // with row-group min/max stats) parquet skips every row group
     // holding no survivor — point reads, where a semi-join would
     // re-scan the full float column.
-    val ids = encoded.select(col(idCol), col("pq_codes"))
-      .crossJoin(q2)
-      .select(col(idCol), adcCol(books.size).as("adc"))
+    val ids = encoded.select(col(idCol), adcCol(books.size, lut).as("adc"))
       .orderBy(col("adc").asc, col(idCol).asc)
       .limit(k * rerankFactor)
       .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return encoded.limit(0).crossJoin(broadcast(query.select(col("qvec"))))
-        .select(col(idCol), lit(0.0).as("score"))
-    encoded.filter(col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query.select(col("qvec"))))
-      .select(col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    VectorSearch.shortlistTopK(encoded, ids, qv, idCol, vecCol, k, metric)
   }
 
   /**

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftFunctions._
@@ -15,8 +15,9 @@ import graft.functions.TopKBuffer
  *    scan; `orderBy(desc).limit(k)` plans as TakeOrderedAndProject =
  *    per-partition top-k heap + driver merge of k rows per partition.
  *    No global sort, no shuffle of the corpus.
- *  - The query side is always tiny (a handful of vectors) and is
- *    broadcast; the corpus is never moved.
+ *  - A single query is a vector on the driver, scored as a literal
+ *    (no query frame is joined in, collected or broadcast); a batch's
+ *    query side is tiny and is broadcast. The corpus is never moved.
  *  - LSH: bucket ids map-side, candidates via equi-join on
  *    (table, bucket) — shuffle carries only matching buckets; AQE
  *    handles skewed buckets.
@@ -34,18 +35,31 @@ object VectorSearch {
     case other         => throw new IllegalArgumentException(s"unknown metric: $other")
   }
 
+  /** A row's score against the single query vector `qv`, held as a
+    * literal: every single-query kernel scores with this column. */
+  private[operators] def scoreCol(metric: String, vecCol: String, qv: Array[Float]): Column =
+    round(similarity(metric, col(vecCol), typedLit(qv)), 6)
+
+  /** Evaluate `cols` — expressions over literals — on the driver
+    * without a Spark job: the optimizer evaluates a projection over a
+    * one-row local relation (ConvertToLocalRelation), and a collect of
+    * a local relation reads it in the driver. For the query-derived
+    * values that hold lambdas (PQ lookup tables, PCA projections),
+    * which constant folding leaves alone. */
+  private[operators] def evalLocal(spark: SparkSession, cols: Column*): Row =
+    spark.createDataFrame(java.util.List.of(Row(0)),
+        new org.apache.spark.sql.types.StructType().add("_", "int"))
+      .select(cols: _*).collect()(0)
+
   /**
-   * Exact (Flat) top-k against a single query row.
-   * `query` must be a 1-row frame with a `qvec` column.
+   * Exact (Flat) top-k against the single query vector `qv` — the
+   * exact re-rank every single-query kernel ends with.
    */
-  def knnFlat(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
-              k: Int, metric: String): DataFrame = {
-    corpus.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+  def knnFlat(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
+              k: Int, metric: String): DataFrame =
+    corpus.select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
-  }
 
   /**
    * Batched exact top-k: one result group per query row. Queries are
@@ -136,7 +150,7 @@ object VectorSearch {
    * (numTables x bitsPerTable), candidate = corpus row sharing any
    * table's bucket with the query, then exact re-rank of candidates.
    */
-  def lshKnn(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  def lshKnn(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
              k: Int, metric: String = "cosine",
              numTables: Int = 8, bitsPerTable: Int = 8, seed: Long = 42L,
              extraProbes: Int = 2): DataFrame = {
@@ -150,8 +164,8 @@ object VectorSearch {
       .select(col(idCol),
         posexplode(lshBuckets(col(vecCol), numTables, bitsPerTable, seed))
           .as(Seq("tbl", "bucket")))
-    val queryB = query.sparkSession.createDataFrame(
-      probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
+    val queryB = corpus.sparkSession.createDataFrame(
+      probeBuckets(qv, numTables, bitsPerTable, seed, extraProbes)
         .zipWithIndex.flatMap { case (bs, t) => bs.map(b => (t, b)) }.toSeq)
       .toDF("tbl", "bucket")
     // Distinct candidate IDS (hash-aggregable scalars), then semi-join
@@ -161,27 +175,35 @@ object VectorSearch {
     val candIds = corpusB
       .join(broadcast(queryB), Seq("tbl", "bucket"))
       .select(col(idCol)).distinct()
-    corpus.join(candIds, Seq(idCol), "left_semi")
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    knnFlat(corpus.join(candIds, Seq(idCol), "left_semi"), qv, idCol, vecCol, k, metric)
   }
 
-  /** Multi-probe buckets of the (single-row) query, resolved on the
-    * driver: per table, the main bucket plus the lowest-margin
-    * bit-flip variants, deduplicated. The driver-side resolve is the
-    * same escape hatch gridKnn uses for its literal cell probe — the
-    * query side is one row by contract. */
-  private[graft] def probeBuckets(query: DataFrame, numTables: Int, bitsPerTable: Int,
-                                  seed: Long, extraProbes: Int): Array[Array[Int]] = {
+  /** Multi-probe buckets of the query vector, resolved on the driver:
+    * per table, the main bucket plus the lowest-margin bit-flip
+    * variants, deduplicated. */
+  private def probeBuckets(qv: Array[Float], numTables: Int, bitsPerTable: Int,
+                           seed: Long, extraProbes: Int): Array[Array[Int]] = {
     import graft.functions.TextHash
-    val qv = query.select(col("qvec")).head.getSeq[Float](0).map(_.toDouble).toArray
-    val flat = TextHash.hyperplaneProbesArr(qv, numTables, bitsPerTable, extraProbes, seed)
+    val flat = TextHash.hyperplaneProbesArr(qv.map(_.toDouble), numTables, bitsPerTable,
+      extraProbes, seed)
     val perTable = 1 + extraProbes
     Array.tabulate(numTables)(t =>
       flat.slice(t * perTable, (t + 1) * perTable).distinct)
   }
+
+  /** The probe of the bucket-PARTITIONED index as a predicate over its
+    * partition columns: literal (tbl, bucket) pairs, pruned at
+    * planning time. */
+  private def probePartitions(qv: Array[Float], numTables: Int, bitsPerTable: Int,
+                              seed: Long, extraProbes: Int): Column =
+    probeBuckets(qv, numTables, bitsPerTable, seed, extraProbes)
+      .zipWithIndex.map { case (bs, t) =>
+        col("tbl") === t && col("bucket").isin(bs.map(Int.box).toSeq: _*)
+      }.reduce(_ || _)
+
+  /** The query vector's int8 codes: unary expressions over a literal,
+    * which constant folding evaluates once, at planning. */
+  private def queryCodes(qv: Array[Float]): Column = quantizeVec(l2Normalize(typedLit(qv)))
 
   /**
    * LSH probe against a PRE-BUILT index: `indexed` already carries the
@@ -199,19 +221,15 @@ object VectorSearch {
    * bucket (the IVF layout in Stress shows the partition-pruned
    * variant of this plan).
    */
-  def lshKnnIndexed(indexed: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  def lshKnnIndexed(indexed: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
                     bucketsCol: String, k: Int, metric: String = "cosine",
                     numTables: Int = 8, bitsPerTable: Int = 8, seed: Long = 42L,
                     extraProbes: Int = 2): DataFrame = {
-    val candidate = probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
+    val candidate = probeBuckets(qv, numTables, bitsPerTable, seed, extraProbes)
       .zipWithIndex.map { case (bs, t) =>
         element_at(col(bucketsCol), t + 1).isin(bs.map(Int.box).toSeq: _*)
       }.reduce(_ || _)
-    indexed.filter(candidate)
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    knnFlat(indexed.filter(candidate), qv, idCol, vecCol, k, metric)
   }
 
   /**
@@ -314,17 +332,12 @@ object VectorSearch {
    * so no embedding array ever rides a shuffle. The score is
    * occurrence-invariant, making max a pure dedup.
    */
-  def lshKnnPartitioned(index: DataFrame, query: DataFrame, idCol: String,
+  def lshKnnPartitioned(index: DataFrame, qv: Array[Float], idCol: String,
                         vecCol: String, k: Int, metric: String = "cosine",
                         numTables: Int = 8, bitsPerTable: Int = 8, seed: Long = 42L,
                         extraProbes: Int = 2): DataFrame = {
-    val pred = probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
-      .zipWithIndex.map { case (bs, t) =>
-        col("tbl") === t && col("bucket").isin(bs.map(Int.box).toSeq: _*)
-      }.reduce(_ || _)
-    index.filter(pred)
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+    index.filter(probePartitions(qv, numTables, bitsPerTable, seed, extraProbes))
+      .select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
       .groupBy(col(idCol)).agg(max(col("score")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
@@ -346,19 +359,13 @@ object VectorSearch {
    * the occurrence-invariant ascore), so the candidate budget is spent
    * on distinct vectors.
    */
-  def lshKnnPartitionedQuantized(index: DataFrame, query: DataFrame, idCol: String,
+  def lshKnnPartitionedQuantized(index: DataFrame, qv: Array[Float], idCol: String,
                                  vecCol: String, codesCol: String, k: Int,
                                  metric: String = "cosine",
                                  numTables: Int = 8, bitsPerTable: Int = 8,
                                  seed: Long = 42L, extraProbes: Int = 2,
                                  rerankFactor: Int = 4): DataFrame = {
-    val pred = probeBuckets(query, numTables, bitsPerTable, seed, extraProbes)
-      .zipWithIndex.map { case (bs, t) =>
-        col("tbl") === t && col("bucket").isin(bs.map(Int.box).toSeq: _*)
-      }.reduce(_ || _)
-    val pruned = index.filter(pred)
-    val queryQ = broadcast(query.select(
-      quantizeVec(l2Normalize(col("qvec"))).as("qqv")))
+    val pruned = index.filter(probePartitions(qv, numTables, bitsPerTable, seed, extraProbes))
     // Phase 2 stays a LAZY pruned semi-join here (unlike the
     // binary/PQ/IVF-PQ probes, which switched to driver-resolved
     // In-filter point reads): both phases already read only the
@@ -366,16 +373,14 @@ object VectorSearch {
     // bits-scaling ingest rule holds constant in corpus size — so the
     // semi-join's float I/O is already corpus-independent, and the
     // one-job plan skips a driver sync per query.
-    val candIds = pruned.select(col(idCol), col(codesCol).as("codes"))
-      .crossJoin(queryQ)
-      .select(col(idCol), quantizedDot(col("codes"), col("qqv")).as("ascore"))
+    val candIds = pruned
+      .select(col(idCol), quantizedDot(col(codesCol), queryCodes(qv)).as("ascore"))
       .groupBy(col(idCol)).agg(max(col("ascore")).as("ascore"))
       .orderBy(col("ascore").desc, col(idCol).asc)
       .limit(k * rerankFactor)
       .select(col(idCol))
     pruned.join(candIds, Seq(idCol), "left_semi")
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+      .select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
       .groupBy(col(idCol)).agg(max(col("score")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
@@ -446,24 +451,18 @@ object VectorSearch {
    * Cells are `cellsPerDim` quantiles of [min,max] per dimension;
    * probe = query cell + all +/-1 neighbor cells, exact re-rank.
    */
-  def gridKnn(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  def gridKnn(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
               k: Int, metric: String = "euclidean",
               gridDims: Int = 4, cellsPerDim: Int = 4): DataFrame = {
     val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
     val corpusC = corpus.withColumn("cell",
       cellKeyCol(col(vecCol), lo, hi, cellsPerDim))
 
-    // The query side is one row: resolve its cell on the driver and
-    // probe the corpus with literal neighbor-cell keys (a tiny IN
-    // filter pushed into the scan — no generated 81-way expression).
-    val qv = query.select(col("qvec")).head.getSeq[Float](0)
-    val probeKeys = queryProbeKeys(qv, lo, hi, gridDims, cellsPerDim)
-
-    corpusC.filter(col("cell").isin(probeKeys: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    // Resolve the query's cell on the driver and probe the corpus
+    // with literal neighbor-cell keys (a tiny IN filter pushed into
+    // the scan — no generated 81-way expression).
+    val probeKeys = queryProbeKeys(qv.toSeq, lo, hi, gridDims, cellsPerDim)
+    knnFlat(corpusC.filter(col("cell").isin(probeKeys: _*)), qv, idCol, vecCol, k, metric)
   }
 
   /** One partial-aggregated pass for per-dimension grid bounds. */
@@ -516,13 +515,12 @@ object VectorSearch {
    * restores the reference's guarantee of reaching k results on
    * sparsely-populated neighborhoods.
    */
-  def gridKnnExpanding(corpus: DataFrame, query: DataFrame, idCol: String,
+  def gridKnnExpanding(corpus: DataFrame, qv: Array[Float], idCol: String,
                        vecCol: String, k: Int, metric: String = "euclidean",
                        gridDims: Int = 4, cellsPerDim: Int = 4,
                        maxRadius: Int = 3): DataFrame = {
     require(gridDims >= 2, "gridKnnExpanding needs at least 2 grid dimensions")
     val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
-    val qv = query.select(col("qvec")).head.getSeq[Float](0)
     def qCell(d: Int): Int = {
       val range = math.max(hi(d) - lo(d), 1e-12)
       math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
@@ -541,11 +539,7 @@ object VectorSearch {
       .map(r => (r.getInt(0), r.getLong(1))).toMap
     val cum = (0 to maxRadius).map(r => (0 to r).map(hist.getOrElse(_, 0L)).sum)
     val radius = (0 to maxRadius).find(r => cum(r) >= 2L * k).getOrElse(maxRadius)
-    corpusC.filter(col("cheb") <= radius)
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    knnFlat(corpusC.filter(col("cheb") <= radius), qv, idCol, vecCol, k, metric)
   }
 
   /**
@@ -651,19 +645,14 @@ object VectorSearch {
       .map(r => (r.getString(0), r.getLong(1))).toSeq
 
   def gridKnnIndexed(index: DataFrame, lo: Array[Double], hi: Array[Double],
-                     query: DataFrame, idCol: String, vecCol: String, k: Int,
+                     qv: Array[Float], idCol: String, vecCol: String, k: Int,
                      metric: String = "euclidean", gridDims: Int = 4,
                      cellsPerDim: Int = 4, maxRadius: Int = 3,
                      countsOpt: Option[Seq[(String, Long)]] = None): DataFrame = {
-    val qv = query.select(col("qvec")).head.getSeq[Float](0)
-    val qCells = qCellsOf(qv, lo, hi, gridDims, cellsPerDim)
+    val qCells = qCellsOf(qv.toSeq, lo, hi, gridDims, cellsPerDim)
     val counts = countsOpt.getOrElse(gridCellCounts(index))
     val probe = radiusProbe(counts, qCells, k, maxRadius)
-    index.filter(col("cell").isin(probe: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    knnFlat(index.filter(col("cell").isin(probe: _*)), qv, idCol, vecCol, k, metric)
   }
 
   /** Batch twin of [[gridKnnIndexed]]: every query's radius resolves
@@ -730,23 +719,20 @@ object VectorSearch {
    * (partition/row-group pruning at 100 TB), similarity only runs on
    * survivors.
    */
-  def knnFiltered(corpus: DataFrame, query: DataFrame, predicate: Column,
+  def knnFiltered(corpus: DataFrame, qv: Array[Float], predicate: Column,
                   idCol: String, vecCol: String, k: Int, metric: String): DataFrame =
-    knnFlat(corpus.filter(predicate), query, idCol, vecCol, k, metric)
+    knnFlat(corpus.filter(predicate), qv, idCol, vecCol, k, metric)
 
   /**
    * Threshold (range) search: every vector with similarity >= minScore.
    * Unlike top-k there is no global ordering bottleneck — pure map-side
    * filter, arbitrarily parallel.
    */
-  def rangeSearch(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
-                  minScore: Double, metric: String): DataFrame = {
-    corpus.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+  def rangeSearch(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
+                  minScore: Double, metric: String): DataFrame =
+    corpus.select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
       .filter(col("score") >= minScore)
       .orderBy(col("score").desc, col(idCol).asc)
-  }
 
   /**
    * Quantized two-phase search: int8 approximate scan (4x less data,
@@ -755,14 +741,14 @@ object VectorSearch {
    * Vectors are L2-normalized before quantization so the approximate
    * dot tracks cosine.
    */
-  def knnQuantized(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  def knnQuantized(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
                    k: Int, metric: String = "cosine", rerankFactor: Int = 4): DataFrame = {
     // Ad-hoc path: codes derived on the fly (one quantize per row, same
     // scan that reads the floats), then the probe is identical to the
     // indexed path. With a store, use knnQuantizedIndexed on codes
     // materialized at ingest instead.
     val indexed = corpus.withColumn("__codes", quantizeVec(l2Normalize(col(vecCol))))
-    knnQuantizedIndexed(indexed, query, idCol, vecCol, "__codes", k, metric, rerankFactor)
+    knnQuantizedIndexed(indexed, qv, idCol, vecCol, "__codes", k, metric, rerankFactor)
   }
 
   /**
@@ -773,30 +759,29 @@ object VectorSearch {
    * the rerankFactor*k survivors (a semi-join, i.e. row-group-prunable
    * point reads at scale) and re-ranks exactly.
    */
-  def knnQuantizedIndexed(indexed: DataFrame, query: DataFrame, idCol: String,
+  def knnQuantizedIndexed(indexed: DataFrame, qv: Array[Float], idCol: String,
                           vecCol: String, codesCol: String, k: Int,
                           metric: String = "cosine", rerankFactor: Int = 4): DataFrame = {
-    val queryQ = broadcast(query.select(
-      quantizeVec(l2Normalize(col("qvec"))).as("qqv")))
     // Bounded shortlist resolved driver-side and pushed into the
     // float scan as an In-filter — row-group point reads on an
     // id-clustered store, instead of a full-float-column semi-join
     // (the binary/PQ/IVF-PQ phase-2 discipline).
-    val ids = indexed.select(col(idCol), col(codesCol).as("codes"))
-      .crossJoin(queryQ)
-      .select(col(idCol), quantizedDot(col("codes"), col("qqv")).as("ascore"))
+    val ids = indexed
+      .select(col(idCol), quantizedDot(col(codesCol), queryCodes(qv)).as("ascore"))
       .orderBy(col("ascore").desc, col(idCol).asc)
       .limit(k * rerankFactor)
       .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return indexed.limit(0).crossJoin(broadcast(query))
-        .select(col(idCol), lit(0.0).as("score"))
-    indexed.filter(col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    shortlistTopK(indexed, ids, qv, idCol, vecCol, k, metric)
   }
+
+  /** Phase 2 of a two-phase single-query kernel: the exact re-rank of
+    * the driver-resolved shortlist `ids`, pushed into the float scan
+    * as an In-filter; no rows for an empty shortlist. */
+  private[operators] def shortlistTopK(rows: DataFrame, ids: Array[Any], qv: Array[Float],
+                                       idCol: String, vecCol: String, k: Int,
+                                       metric: String): DataFrame =
+    if (ids.isEmpty) rows.limit(0).select(col(idCol), lit(0.0).as("score"))
+    else knnFlat(rows.filter(col(idCol).isin(ids: _*)), qv, idCol, vecCol, k, metric)
 
   /**
    * Batch two-phase quantized top-k: ONE int8 scan scores every query
@@ -838,45 +823,35 @@ object VectorSearch {
    * (vector_db/similarity.py scores full floats; this is the scale
    * path its in-memory design never needed).
    */
-  def knnBinary(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  def knnBinary(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
                 k: Int, metric: String = "cosine", rerankFactor: Int = 8): DataFrame = {
     val indexed = corpus.withColumn("__bits", bitPack(col(vecCol)))
-    knnBinaryIndexed(indexed, query, idCol, vecCol, "__bits", k, metric, rerankFactor)
+    knnBinaryIndexed(indexed, qv, idCol, vecCol, "__bits", k, metric, rerankFactor)
   }
 
   /** Binary search against PRE-BUILT packed codes: the phase-1 scan
     * reads the codes column only (8 bytes/row at 64 dims); floats are
-    * fetched for just the shortlist via a semi-join.
+    * fetched for just the shortlist via an In-filter.
     *
-    * `query` must be a SINGLE-ROW frame (the convention of every
-    * single-query operator in this file): with multiple rows the
-    * broadcast crossJoin would merge all queries' Hamming distances
-    * into one global shortlist. [[knnBinaryBatch]] is the documented
-    * multi-query path. */
-  def knnBinaryIndexed(indexed: DataFrame, query: DataFrame, idCol: String,
+    * `qv` is ONE query vector (the convention of every single-query
+    * operator in this file); [[knnBinaryBatch]] is the multi-query
+    * path. The query's sign bits are a unary expression over a
+    * literal, which constant folding evaluates once, at planning. */
+  def knnBinaryIndexed(indexed: DataFrame, qv: Array[Float], idCol: String,
                        vecCol: String, codesCol: String, k: Int,
                        metric: String = "cosine", rerankFactor: Int = 8): DataFrame = {
-    val queryB = broadcast(query.select(bitPack(col("qvec")).as("qbits")))
     // Phase 2 resolves the bounded (k*rerankFactor-row) shortlist
     // driver-side and pushes it into the float scan as an In-filter:
     // with the store clustered by id (the library layout keeps files
     // id-sorted with row-group min/max stats), parquet skips every
     // row group holding no survivor — point reads, where the earlier
     // semi-join re-scanned the full float column.
-    val ids = indexed.select(col(idCol), col(codesCol).as("bits"))
-      .crossJoin(queryB)
-      .select(col(idCol), bitHamming(col("bits"), col("qbits")).as("hdist"))
+    val ids = indexed
+      .select(col(idCol), bitHamming(col(codesCol), bitPack(typedLit(qv))).as("hdist"))
       .orderBy(col("hdist").asc, col(idCol).asc)
       .limit(k * rerankFactor)
       .collect().map(_.get(0))
-    if (ids.isEmpty)
-      return indexed.limit(0).crossJoin(broadcast(query))
-        .select(col(idCol), lit(0.0).as("score"))
-    indexed.filter(col(idCol).isin(ids: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    shortlistTopK(indexed, ids, qv, idCol, vecCol, k, metric)
   }
 
   /** Batch binary top-k: ONE codes scan serves every query (phase-1
@@ -1017,19 +992,19 @@ object VectorSearch {
    * matches bit-for-bit: objective compares RAW doubles, output rel
    * rounds to 6 dp, ties break by id ascending.
    */
-  def mmrRerank(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
+  def mmrRerank(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
                 k: Int = 10, lambda: Double = 0.7, shortlist: Int = 40): DataFrame = {
     val spark = corpus.sparkSession
     val oneMinus = 1.0 - lambda
     // the shortlist must cover k: a k wider than the default window
     // widens the window rather than silently truncating the result
     val window = math.max(shortlist, k)
-    val shortRows = corpus.crossJoin(broadcast(query))
+    val shortRows = corpus
       .select(col(idCol).as("id"),
         // double-aware extraction: float and double corpora both read
         // back as Seq[Double] (same widening every other scan op does)
         col(vecCol).cast("array<double>").as("__v"),
-        cosineSim(col(vecCol), col("qvec")).as("rel"))
+        cosineSim(col(vecCol), typedLit(qv)).as("rel"))
       .orderBy(col("rel").desc, col("id").asc)
       .limit(window)
       .collect()

@@ -199,7 +199,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("pca knn re-ranks exactly and returns k descending scores") {
     val comps = Pca.fit(emb, "embedding", 8)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val corpus = emb.filter(col("vec_id") =!= 0)
     val out = Pca.knn(corpus, comps, q, "vec_id", "embedding", 10).collect()
     assert(out.length == 10)

@@ -77,6 +77,13 @@ class EmbedderSpec extends AnyFunSuite {
       "flat search differs under the swapped embedder")
     assert(hits(libB, flat = false) == hits(libA, flat = false),
       "indexed search differs under the swapped embedder")
+    // a search embeds its query once, on the driver: the expression-
+    // backed embedder launches no job, the UDF-backed service at most one
+    val (qvA, jobsA) = SparkJobs.count(spark)(libA.queryVector(q))
+    val (qvB, jobsB) = SparkJobs.count(spark)(libB.queryVector(q))
+    assert(jobsA == 0, s"embedding the query launched $jobsA job(s)")
+    assert(jobsB <= 1, s"embedding the query through the service launched $jobsB jobs")
+    assert(qvB.toSeq == qvA.toSeq, "the service's query vector differs")
 
     // the reference's batching contract: every call within the batch
     // cap, and the corpus was actually SPLIT into batches (not one

@@ -15,7 +15,7 @@ class OperatorSpec extends AnyFunSuite {
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   test("knnFlat returns the query vector itself at score 1 when included") {
-    val q = emb.filter(col("vec_id") === 7).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 7)
     val top = VectorSearch.knnFlat(emb, q, "vec_id", "embedding", 3, "cosine").collect()
     assert(top.head.getLong(0) == 7L && top.head.getDouble(1) == 1.0)
     assert(top.map(_.getDouble(1)).sliding(2).forall(p => p(0) >= p(1)))
@@ -23,14 +23,14 @@ class OperatorSpec extends AnyFunSuite {
 
   test("all four metrics rank the self-match first") {
     for (m <- Seq("cosine", "dot_product", "euclidean", "manhattan")) {
-      val q = emb.filter(col("vec_id") === 3).select(col("embedding").as("qvec"))
+      val q = QueryVectors.of(emb, 3)
       val top = VectorSearch.knnFlat(emb, q, "vec_id", "embedding", 1, m).collect()
       assert(top.head.getLong(0) == 3L, s"metric $m")
     }
   }
 
   test("lsh candidates re-rank to exact scores; results are a subset of corpus") {
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val corpus = emb.filter(col("vec_id") =!= 0)
     val lsh = VectorSearch.lshKnn(corpus, q, "vec_id", "embedding", 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -42,7 +42,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("grid knn euclidean self-query returns neighbors sorted desc") {
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val corpus = emb.filter(col("vec_id") =!= 0)
     val got = VectorSearch.gridKnn(corpus, q, "vec_id", "embedding", 10)
     val rows = got.collect()
@@ -59,7 +59,7 @@ class OperatorSpec extends AnyFunSuite {
       .collect().groupBy(_.getLong(0))
     for (qid <- 0L until 3L) {
       val single = VectorSearch.lshKnn(corpus,
-        emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec")),
+        QueryVectors.of(emb, qid),
         "vec_id", "embedding", 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val fromBatch = batch(qid).sortBy(_.getInt(3))
@@ -83,7 +83,7 @@ class OperatorSpec extends AnyFunSuite {
     val grouped = batch.collect().groupBy(_.getLong(0))
     for (qid <- 0L until 3L) {
       val single = IvfIndex.searchIndexed(spark, idxPath,
-        emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec")),
+        QueryVectors.of(emb, qid),
         "vec_id", "embedding", 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val fromBatch = grouped(qid).sortBy(_.getInt(3))
@@ -114,7 +114,7 @@ class OperatorSpec extends AnyFunSuite {
       .collect().groupBy(_.getLong(0))
     for (qid <- 0L until 3L) {
       val single = VectorSearch.gridKnn(corpus,
-        emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec")),
+        QueryVectors.of(emb, qid),
         "vec_id", "embedding", 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val fromBatch = batch(qid).sortBy(_.getInt(3))
@@ -134,7 +134,7 @@ class OperatorSpec extends AnyFunSuite {
       .collect().groupBy(_.getLong(0))
     for (qid <- 0L until 3L) {
       val single = VectorSearch.knnQuantizedIndexed(store,
-        emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec")),
+        QueryVectors.of(emb, qid),
         "vec_id", "embedding", "codes", 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val fromBatch = batch(qid).sortBy(_.getInt(3))
@@ -165,7 +165,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("knnBinary ranks the self-match first and re-ranks exactly") {
-    val q = emb.filter(col("vec_id") === 7).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 7)
     val top = VectorSearch.knnBinary(emb, q, "vec_id", "embedding", 5).collect()
     assert(top.head.getLong(0) == 7L && top.head.getDouble(1) == 1.0)
     // phase-2 scores are exact cosine: every returned pair must agree
@@ -184,7 +184,7 @@ class OperatorSpec extends AnyFunSuite {
       .collect().groupBy(_.getLong(0))
     for (qid <- 0L until 3L) {
       val single = VectorSearch.knnBinaryIndexed(store,
-        emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec")),
+        QueryVectors.of(emb, qid),
         "vec_id", "embedding", "bits", 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val fromBatch = batch(qid).sortBy(_.getInt(3))
@@ -256,7 +256,7 @@ class OperatorSpec extends AnyFunSuite {
       (2L, Array(0.99f, 0.1f, 0.0f, 0.0f)),   // near-dup of 1
       (3L, Array(0.0f, 1.0f, 0.0f, 0.0f)),
       (4L, Array(0.0f, 0.0f, 1.0f, 0.0f))).toDF("vec_id", "embedding")
-    val q = Seq(Tuple1(Array(1.0f, 0.05f, 0.02f, 0.0f))).toDF("qvec")
+    val q = Array(1.0f, 0.05f, 0.02f, 0.0f)
     // diversity-weighted lambda: the near-duplicate's sim penalty must
     // outweigh its relevance edge
     val got = VectorSearch.mmrRerank(corpus, q, "vec_id", "embedding", k = 3,
@@ -269,7 +269,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(got.map(_._2).distinct.length == 3)
     // on the real corpus: rank 1 == flat top-1, ids distinct, k rows
     val (c, qq) = (emb.filter(col("vec_id") =!= 0),
-      emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec")))
+      QueryVectors.of(emb, 0))
     val mmr = VectorSearch.mmrRerank(c, qq, "vec_id", "embedding", 10).collect()
     val flat = VectorSearch.knnFlat(c, qq, "vec_id", "embedding", 1, "cosine").collect()
     assert(mmr.head.getLong(1) == flat.head.getLong(0))
@@ -900,7 +900,7 @@ class OperatorSpec extends AnyFunSuite {
       Array.tabulate(64)(i => if (i < 4) base + (id % 7) * 0.01f else 0.5f)
     val corpus = ((1 to 40).map(i => (i.toLong, vec(0.02f, i))) ++
       (41 to 43).map(i => (i.toLong, vec(0.90f, i)))).toDF("vec_id", "embedding")
-    val q = Seq(Tuple1(vec(0.95f, 0))).toDF("qvec")
+    val q = vec(0.95f, 0)
 
     val fixed = VectorSearch.gridKnn(corpus, q, "vec_id", "embedding", 10).count()
     val expanded = VectorSearch.gridKnnExpanding(corpus, q, "vec_id", "embedding", 10)
@@ -920,7 +920,7 @@ class OperatorSpec extends AnyFunSuite {
       "vec_id", "embedding", 5).collect()
     (0L until 3L).foreach { qid =>
       val single = VectorSearch.gridKnnExpanding(corpus,
-        qs.filter(col("query_id") === qid).select(col("qvec")),
+        QueryVectors.of(emb, qid),
         "vec_id", "embedding", 5).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val fromBatch = batch.filter(_.getLong(0) == qid).sortBy(_.getInt(3))
@@ -999,14 +999,15 @@ class OperatorSpec extends AnyFunSuite {
   test("top-k plans as TakeOrderedAndProject (no global sort)") {
     val p3 = plan(Relational.q3(Tables.load(spark, sfDir, "orders")))
     assert(p3.contains("TakeOrderedAndProject"), p3)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val pk = plan(VectorSearch.knnFlat(emb, q, "vec_id", "embedding", 10, "cosine"))
     assert(pk.contains("TakeOrderedAndProject"), pk)
-    assert(pk.contains("BroadcastNestedLoopJoin"), pk)
+    // the query vector is a literal: no join, no broadcast
+    assert(!pk.contains("Join") && !pk.contains("BroadcastExchange"), pk)
   }
 
   test("knn scan reads only the needed columns") {
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val pk = plan(VectorSearch.knnFlat(emb, q, "vec_id", "embedding", 10, "cosine"))
     assert(!pk.contains("label"), "knn should not read the label column")
   }

@@ -17,7 +17,7 @@ class ReferenceParitySpec extends AnyFunSuite {
   private def emb = Tables.load(spark, SparkTestSession.sfDir, "embeddings")
 
   private def query(qid: Long) =
-    emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec"))
+    QueryVectors.of(emb, qid)
   private def corpus(qid: Long) = emb.filter(col("vec_id") =!= qid)
 
   test("every algorithm x similarity function returns non-empty ranked results") {

@@ -84,7 +84,7 @@ class ScalePathSpec extends AnyFunSuite {
     val corpus = emb.filter(col("vec_id") =!= 0)
       .withColumn("codes", GraftFunctions.quantizeVec(GraftFunctions.l2Normalize(col("embedding"))))
     val codesStore = corpus.select(col("vec_id"), col("embedding"), col("codes"))
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val got = VectorSearch.knnQuantizedIndexed(codesStore, q, "vec_id", "embedding", "codes", 10)
       .collect().map(_.getLong(0))
     val exact = VectorSearch.knnFlat(emb.filter(col("vec_id") =!= 0), q,
@@ -101,7 +101,7 @@ class ScalePathSpec extends AnyFunSuite {
       .withColumn("bits", GraftFunctions.bitPack(col("embedding")))
       .write.mode("overwrite").parquet(dir)
     val store = spark.read.parquet(dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val got = VectorSearch.knnBinaryIndexed(store, q, "vec_id", "embedding", "bits", 10)
     val ids = got.collect().map(_.getLong(0))
     val exact = VectorSearch.knnFlat(emb.filter(col("vec_id") =!= 0), q,
@@ -123,7 +123,7 @@ class ScalePathSpec extends AnyFunSuite {
 
   test("IvfPq.encodeFast (native bulk encode) probes identically to the exact-fold encode") {
     val corpus = emb.filter(col("vec_id") =!= 0).select(col("vec_id"), col("embedding"))
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val (model, _) = IvfIndex.build(corpus, "embedding")
     val geo = IvfPq.trainFrom(model, corpus, "embedding")
     val slow = IvfPq.Index(geo.centers, geo.books,
@@ -200,7 +200,7 @@ class ScalePathSpec extends AnyFunSuite {
 
   test("spilled IVF: recall at nProbe=1 matches or beats the plain assignment") {
     val corpus = emb.filter(col("vec_id") =!= 0)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val exact = VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine")
       .collect().map(_.getLong(0))
 
@@ -318,7 +318,7 @@ class ScalePathSpec extends AnyFunSuite {
 
   test("ivf probe recall@10 against exact flat search") {
     val corpus = emb.filter(col("vec_id") =!= 0)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val exact = VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine")
       .collect().map(_.getLong(0)).toSet
     val ivf = IvfIndex.ivfKnn(corpus, q, "vec_id", "embedding", 10)
@@ -330,7 +330,7 @@ class ScalePathSpec extends AnyFunSuite {
   test("pq adc probe recall@10 against exact search") {
     import graft.operators.PqIndex
     val corpus = emb.filter(col("vec_id") =!= 0)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val books = PqIndex.train(corpus, "embedding")
     assert(books.size == 8 && books.forall(_._2.size == 16))
     val enc = PqIndex.encodeExact(corpus, "embedding", books)
@@ -356,8 +356,7 @@ class ScalePathSpec extends AnyFunSuite {
     val batch = PqIndex.searchBatch(enc, books, qs, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = qs.collect().flatMap { r =>
-      val q1 = qs.sparkSession.createDataFrame(
-        java.util.List.of(r), qs.schema).select(col("qvec"))
+      val q1 = r.getSeq[Float](1).toArray
       PqIndex.search(enc, books, q1, "vec_id", "embedding", 5)
         .collect().map(x => (r.getLong(0), x.getLong(0), x.getDouble(1)))
     }.toSet
@@ -368,7 +367,7 @@ class ScalePathSpec extends AnyFunSuite {
   test("ivfpq composed probe: recall, batch twin, and pruned indexed plan") {
     import graft.operators.{IvfPq, PqIndex}
     val corpus = emb.filter(col("vec_id") =!= 0)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val idx0 = IvfPq.train(corpus, "embedding")
     val idx = idx0.copy(encoded = idx0.encoded.persist())
     // residual codes address real codewords
@@ -391,8 +390,7 @@ class ScalePathSpec extends AnyFunSuite {
     val batch = IvfPq.searchBatch(idxB, qs, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = qs.collect().flatMap { r =>
-      val q1 = qs.sparkSession.createDataFrame(
-        java.util.List.of(r), qs.schema).select(col("qvec"))
+      val q1 = r.getSeq[Float](1).toArray
       IvfPq.search(idxB, q1, "vec_id", "embedding", 5)
         .collect().map(x => (r.getLong(0), x.getLong(0), x.getDouble(1)))
     }.toSet
@@ -732,7 +730,7 @@ class ScalePathSpec extends AnyFunSuite {
 
   test("ivfKnnCached: build once, probes reuse the pinned assignment") {
     val corpus = emb.filter(col("vec_id") =!= 0)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    val q = QueryVectors.of(emb, 0)
     val key = "spec-ivf-cache"
     val d1 = IvfIndex.ivfKnnCached(corpus, q, "vec_id", "embedding", 10, key)
     val d2 = IvfIndex.ivfKnnCached(corpus, q, "vec_id", "embedding", 10, key)

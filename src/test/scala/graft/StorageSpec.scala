@@ -34,7 +34,7 @@ class StorageSpec extends AnyFunSuite {
   test("quantized two-phase search recovers the exact top-10") {
     val emb = Tables.load(spark, SparkTestSession.sfDir, "embeddings")
     val overlaps = (0 until 5).map { qid =>
-      val q = emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec"))
+      val q = QueryVectors.of(emb, qid)
       val corpus = emb.filter(col("vec_id") =!= qid)
       val exact = VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine")
         .collect().map(_.getLong(0)).toSet
@@ -50,7 +50,7 @@ class StorageSpec extends AnyFunSuite {
   test("lsh recall@10 against exact search is measured and sane") {
     val emb = Tables.load(spark, SparkTestSession.sfDir, "embeddings")
     val recalls = (0 until 5).map { qid =>
-      val q = emb.filter(col("vec_id") === qid).select(col("embedding").as("qvec"))
+      val q = QueryVectors.of(emb, qid)
       val corpus = emb.filter(col("vec_id") =!= qid)
       val exact = VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine")
         .collect().map(_.getLong(0)).toSet

@@ -600,7 +600,7 @@ class VectorLibrarySpec extends AnyFunSuite {
       .select(col("chunk_id"), col("embedding"),
         operators.VectorSearch.cellKeyCol(col("embedding"), lo, hi, cpd).as("cell"))
     val expect = operators.VectorSearch.gridKnnIndexed(storeSide, lo, hi,
-      lib.queryFrame(qt), "chunk_id", "embedding", 10, "cosine", gd, cpd)
+      lib.queryVector(qt), "chunk_id", "embedding", 10, "cosine", gd, cpd)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(hitRows.map(r => (r.getString(0), r.getDouble(1))).toSeq == expect,
       "fitted filtered probe diverged from the store-derived expanding rule")
@@ -767,6 +767,109 @@ class VectorLibrarySpec extends AnyFunSuite {
       assert(df.schema == spark.read.parquet(dir).schema,
         s"$rel opened as ${df.schema.simpleString}, its listing reads as " +
         spark.read.parquet(dir).schema.simpleString)
+    }
+    lib.delete()
+  }
+
+  test("single searches: exact job counts per algorithm, and no plan broadcasts") {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, _) = fiveLayoutLibrary("jobs", docs)
+    val qt = "spark join stream table filter"
+    val src = lib.chunks.select("source").head.getString(0)
+    val e = lib.epochs.last
+    val calls = Seq[(String, () => Array[org.apache.spark.sql.Row])](
+      "head" -> (() => lib.search(qt, 10).collect()),
+      "filtered" -> (() => lib.search(qt, 10, filter = Some(col("source") === src)).collect()),
+      "pinned" -> (() => lib.searchAt(e, qt, 10).collect()))
+    // every physical plan a search executes, AQE re-plans included
+    val broadcasts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def names(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(names)
+    def record(p: SparkPlanInfo, desc: String): Unit =
+      if (names(p).exists(_.contains("BroadcastExchange"))) broadcasts.add(desc)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(ev: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        ev match {
+          case s: SparkListenerSQLExecutionStart => record(s.sparkPlanInfo, s.physicalPlanDescription)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+            record(u.sparkPlanInfo, u.physicalPlanDescription)
+          case _ =>
+        }
+    }
+    val counts = VectorLibrary.algorithms.flatMap { a =>
+      lib.setAlgorithm(a)
+      calls.foreach(_._2()) // warm: serving memos and geometry loads
+      SparkJobs.settle(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try calls.map { case (kind, call) =>
+        val (_, jobs) = SparkJobs.count(spark)(call())
+        assert(broadcasts.isEmpty,
+          s"$a $kind search broadcast:\n${broadcasts.peek}")
+        s"$a.$kind" -> jobs
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }.toMap
+    val expected = Map(
+      "flat" -> (1, 1, 1), "lsh" -> (2, 1, 2), "grid" -> (1, 3, 1), "ivf" -> (1, 1, 1),
+      "quantized" -> (2, 2, 2), "binary" -> (2, 2, 2), "pq" -> (2, 2, 2),
+      "ivfpq" -> (2, 2, 2)).flatMap { case (a, (h, f, p)) =>
+        Seq(s"$a.head" -> h, s"$a.filtered" -> f, s"$a.pinned" -> p) }
+    assert(counts == expected, s"jobs per warm single search: ${counts.toSeq.sorted}")
+    lib.delete()
+  }
+
+  test("grid bounds load in one job, with or without the cells_per_dim column") {
+    val root = Files.createTempDirectory("graft-lib-gridbounds").toString
+    val lib = new VectorLibrary(spark, root, "gb")
+    lib.addDocuments(Tables.load(spark, SparkTestSession.sfDir, "documents").limit(30))
+    lib.buildGridIndex(gridDims = 3, cellsPerDim = 5)
+    val sidecar = geomRead(s"$root/gb/grid_index/bounds").inputFiles.head
+      .replaceAll("/[^/]+$", "")
+    val (current, jobs) = SparkJobs.count(spark)(lib.gridBoundsAt(sidecar))
+    assert(jobs == 1, s"loading the bounds sidecar launched $jobs jobs")
+    assert(current._3 == 3 && current._4 == 5)
+    // the legacy variant: no cells_per_dim column, decoded through the
+    // meta file the build wrote
+    val legacy = Files.createTempDirectory("graft-gridbounds-legacy").toString + "/bounds"
+    spark.read.parquet(sidecar).select("d", "lo", "hi").coalesce(1).write.parquet(legacy)
+    val (old, legacyJobs) = SparkJobs.count(spark)(lib.gridBoundsAt(legacy))
+    assert(legacyJobs == 1, s"loading a legacy bounds sidecar launched $legacyJobs jobs")
+    assert(old._1.toSeq == current._1.toSeq && old._2.toSeq == current._2.toSeq &&
+      old._3 == 3 && old._4 == 5, s"legacy sidecar decoded as $old")
+    lib.delete()
+  }
+
+  test("fan-out jobs carry the calling thread's Spark local properties") {
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, _) = fiveLayoutLibrary("props", docs.filter(col("doc_id") < 40))
+    val sc = spark.sparkContext
+    val key = "graft.spec.caller"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!SparkJobs.isMarker(e))
+          seen.add(String.valueOf(Option(e.properties).map(_.getProperty(key)).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "A")
+      lib.addDocuments(docs.filter(col("doc_id") >= 40))
+      SparkJobs.settle(spark)
+      assert(seen.size > 0 && seen.toArray.forall(_ == "A"), s"add jobs carried $seen")
+      seen.clear()
+      // the delete's resolutions and rewrites fan out across its six
+      // trees right after the add's appends fanned out across five
+      sc.setLocalProperty(key, "B")
+      lib.deleteDocuments(col("doc_id") < 20)
+      SparkJobs.settle(spark)
+      import scala.jdk.CollectionConverters._
+      val props = seen.asScala.toSeq
+      assert(props.nonEmpty && props.forall(_ == "B"),
+        s"delete jobs carried ${props.groupBy(identity).map { case (p, n) => p -> n.size }}")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
     }
     lib.delete()
   }

@@ -4,15 +4,20 @@
 #
 #   tools/ab.sh <parent-rev> <workload> <N> [first-seed]
 #
-# Checks <parent-rev> out into a temporary git worktree, then for the N
-# seeds first-seed.. (default 1..N) runs
+# Extracts <parent-rev> into a temporary directory (`git archive`: the
+# checkout's .git is left untouched), then for the N seeds first-seed..
+# (default 1..N) runs
 #   python3 perfbench/run.py --workload <workload> --seed <s> --seconds <run_seconds> --trace 0
 # once in the parent and once here, alternating which side runs first
 # (odd seeds: parent first); run_seconds is BENCHMARK.json's. For each
 # end-to-end metric of BENCHMARK.json it prints both sides' median and
-# quartiles and in how many pairs the change was better. Each side
-# builds once, on its first run. The worktree is removed on exit; the
-# raw result lines stay in the printed results directory.
+# quartiles and in how many pairs the change was better; then, to show
+# where a change moved, each side's median per call kind: the library's
+# `kind_median_s` entries, or each suite query's median from `query_ms`
+# (both from the detail line a run prints before its result). Each side
+# builds once, on its first run. The parent copy is removed on exit;
+# each run's result line and detail line stay in the printed results
+# directory (<side>.jsonl and <side>.detail.jsonl, one line per run).
 set -euo pipefail
 
 if [ $# -lt 3 ] || [ $# -gt 4 ]; then
@@ -29,12 +34,9 @@ work=$(mktemp -d "${TMPDIR:-/tmp}/graft-ab.XXXXXX")
 wt="$work/parent"
 results="$work/results"
 mkdir -p "$results"
-cleanup() {
-  git -C "$here" worktree remove --force "$wt" 2>/dev/null || rm -rf "$wt"
-  git -C "$here" worktree prune
-}
-trap cleanup EXIT
-git -C "$here" worktree add --detach --quiet "$wt" "$parent_sha"
+trap 'rm -rf "$wt"' EXIT
+mkdir -p "$wt"
+git -C "$here" archive "$parent_sha" | tar -x -C "$wt"
 
 run() { # side dir seed
   local side=$1 dir=$2 seed=$3 out
@@ -45,6 +47,7 @@ run() { # side dir seed
     exit 1
   fi
   printf '%s\n' "$out" | tail -n 1 >>"$results/$side.jsonl"
+  printf '%s\n' "$out" | tail -n 2 | head -n 1 >>"$results/$side.detail.jsonl"
 }
 
 for seed in $(seq "$first" $((first + n - 1))); do
@@ -60,10 +63,11 @@ import json, os, statistics, sys
 
 bench, results, parent, workload = sys.argv[1:]
 spec = json.load(open(bench))["end_to_end"]
-def load(side):
-    with open(os.path.join(results, side + ".jsonl")) as fh:
+def load(name):
+    with open(os.path.join(results, name + ".jsonl")) as fh:
         return [json.loads(l) for l in fh if l.strip()]
 par, chg = load("parent"), load("change")
+detail = {side: [d["detail"] for d in load(side + ".detail")] for side in ("parent", "change")}
 
 def quart(xs):
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else (xs[0],) * 3
@@ -81,6 +85,24 @@ for m in spec:
     cm, cq1, cq3 = quart(c)
     print(f"{name:<12} {pm:>10.4g} [{pq1:.4g}, {pq3:.4g}]".ljust(41) +
           f" {cm:>10.4g} [{cq1:.4g}, {cq3:.4g}]".ljust(29) + f" {wins:>3}/{len(p)}")
+# where the change moved: each side's median, over its runs, of each
+# call kind's per-run median wall
+def kinds(d):
+    if "kind_median_s" in d:
+        return {k: v * 1e3 for k, v in d["kind_median_s"].items()}
+    return {q: v["quartiles"][1] for q, v in d.get("query_ms", {}).items()}
+pk = [kinds(d) for d in detail["parent"]]
+ck = [kinds(d) for d in detail["change"]]
+names = sorted(set().union(*pk, *ck))
+if names:
+    print(f"{'call kind (ms)':<28} {'parent median':>14} {'change median':>14} {'wins':>6}")
+    for n in names:
+        pairs = [(a[n], b[n]) for a, b in zip(pk, ck) if n in a and n in b]
+        if not pairs:
+            continue
+        wins = sum(1 for a, b in pairs if b < a)
+        print(f"{n:<28} {statistics.median(a for a, _ in pairs):>14.1f} "
+              f"{statistics.median(b for _, b in pairs):>14.1f} {wins:>3}/{len(pairs)}")
 for side, rs in (("parent", par), ("change", chg)):
     failed = sum(r["failed"] for r in rs)
     correct = all(r["correct"] for r in rs)
