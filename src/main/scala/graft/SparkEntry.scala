@@ -290,7 +290,7 @@ object SparkEntry {
       val emb = t(s, d, "embeddings")
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      VectorSearch.knnBatchFused(emb.filter(col("vec_id") >= 5), qs,
+      VectorSearch.knnBatch(emb.filter(col("vec_id") >= 5), qs,
         "vec_id", "embedding", 5, "cosine") }),
     "vector_stats" -> ((s, d) => VectorSearch.vectorStats(t(s, d, "embeddings"))),
     "vector_normalize" -> ((s, d) => VectorSearch.normalized(t(s, d, "embeddings"))),
@@ -352,14 +352,14 @@ object SparkEntry {
       // replay of the same fitted centroids.
       val (centers, assigned) = ivfExactFor(s, d, c)
       ivfOracleCenters("single") = centers
-      IvfIndex.searchAssigned(assigned, centers, q, "vec_id", "embedding", 10) }),
+      IvfIndex.search(assigned, centers, q, "vec_id", "embedding", 10) }),
     "ivf_knn_spill" -> ((s, d) => { val (c, q) = embQuery(s, d)
       // spilled (boundary-replicated) index probed at nProbe=1: the
       // index-side multi-probe trick — recall from replication, I/O
       // from a single Voronoi cell.
       val (centers, assigned) = ivfSpillExactFor(s, d, c)
       ivfOracleCenters("spill") = centers
-      IvfIndex.searchSpillAssigned(assigned, centers, q,
+      IvfIndex.searchSpill(assigned, centers, q,
         "vec_id", "embedding", 10, nProbe = 1) }),
     "ivf_knn_batch" -> ((s, d) => {
       // batch probe of the build-once ON-DISK index: one pruned scan
@@ -377,9 +377,8 @@ object SparkEntry {
       val emb = t(s, d, "embeddings")
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val centers = s.read.parquet(s"$path/centroids").orderBy(col("cluster"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-      IvfIndex.recallSweep(s.read.parquet(s"$path/assigned"), centers, qs,
+      IvfIndex.recallSweep(s.read.parquet(s"$path/assigned"),
+        IvfIndex.readCentroids(s, s"$path/centroids"), qs,
         "vec_id", "embedding", 10) }),
     "index_advisor" -> ((s, d) =>
       // ingest-time strategy advisory (the Spark reframing of the
@@ -3112,7 +3111,7 @@ object SparkEntry {
          |SELECT query_id, vec_id, score, rank FROM r WHERE rank <= 10""".stripMargin,
     // Binary recall sweep: one deepest-factor Hamming ranking fans to
     // every factor window (the single-scan shape of the IVF sweeps);
-    // the exact side ranks on rounded score, matching knnBatchGeneric.
+    // the exact side ranks on rounded score, matching knnBatch.
     "binary_recall_sweep" ->
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v
          |           FROM embeddings WHERE vec_id >= 5),

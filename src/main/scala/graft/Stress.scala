@@ -54,9 +54,7 @@ object Stress {
     time("knn_flat_cosine") {
       VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine").count() }
     time("knn_batch_16q") {
-      VectorSearch.knnBatchGeneric(corpus, queries16, "vec_id", "embedding", 10, "cosine").count() }
-    time("knn_batch_16q_fused") {
-      VectorSearch.knnBatchFused(corpus, queries16, "vec_id", "embedding", 10, "cosine").count() }
+      VectorSearch.knnBatch(corpus, queries16, "vec_id", "embedding", 10, "cosine").count() }
     time("lsh_knn(ad-hoc: signatures recomputed)") {
       VectorSearch.lshKnn(corpus, q, "vec_id", "embedding", 10).count() }
     time("lsh_knn_indexed(stored buckets)") {
@@ -118,8 +116,9 @@ object Stress {
     assigned.write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/ivf")
     val indexed = spark.read.parquet(s"$tmp/ivf")
     println(f"[stress] ivf_build(64 centroids + partitioned write): ${(System.nanoTime() - tb0) / 1e9}%.2fs")
+    val centers = operators.IvfIndex.centersOf(model)
     time("ivf_probe(nProbe=4)") {
-      operators.IvfIndex.search(indexed, model, q, "vec_id", "embedding", 10, 4).count() }
+      operators.IvfIndex.search(indexed, centers, q, "vec_id", "embedding", 10, 4).count() }
     operators.IvfIndex.writeIndex(assigned, model, s"$tmp/ivf_disk")
     time("ivf_batch_16q(one union-pruned scan)") {
       operators.IvfIndex.searchIndexedBatch(spark, s"$tmp/ivf_disk", queries16,
@@ -130,8 +129,6 @@ object Stress {
     // the replication premium and recall vs the exact scan alongside
     // the probe time.
     val ts0 = System.nanoTime()
-    val centers = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq
     operators.IvfIndex.spillAssign(corpus, "embedding", centers, 1.2, 2)
       .write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/ivf_spill")
     val spilled = spark.read.parquet(s"$tmp/ivf_spill")
@@ -140,14 +137,14 @@ object Stress {
       f"(${nSpill.toDouble / n}%.2fx rows)")
     val exactTop = VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine")
       .collect().map(_.getLong(0)).toSet
-    val plainTop = operators.IvfIndex.search(indexed, model, q,
+    val plainTop = operators.IvfIndex.search(indexed, centers, q,
       "vec_id", "embedding", 10, 1).collect().map(_.getLong(0))
-    val spillTop = operators.IvfIndex.searchSpill(spilled, model, q,
+    val spillTop = operators.IvfIndex.searchSpill(spilled, centers, q,
       "vec_id", "embedding", 10, 1).collect().map(_.getLong(0))
     println(f"[stress] ivf_recall@10 nProbe=1: plain ${plainTop.count(exactTop).toDouble / 10}%.2f " +
       f"spilled ${spillTop.count(exactTop).toDouble / 10}%.2f")
     time("ivf_spill_probe(nProbe=1)") {
-      operators.IvfIndex.searchSpill(spilled, model, q, "vec_id", "embedding", 10, 1).count() }
+      operators.IvfIndex.searchSpill(spilled, centers, q, "vec_id", "embedding", 10, 1).count() }
 
     // IVF-PQ: the composed two-phase index — cell pruning x codes-only
     // ADC. What to watch at 1M: probe time vs the flat scan (phase 1

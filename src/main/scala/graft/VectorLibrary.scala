@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import graft.GraftFunctions._
+import graft.functions.VectorOps
 import graft.operators.{IvfIndex, IvfPq, PqIndex, TextAnalysis, VectorSearch}
 
 /**
@@ -612,7 +613,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         lit("").as("chunk_id"), lit(0.0).as("score"), lit(0).as("rank")))
     def exact(store: DataFrame): DataFrame = q.fold(
       qv => VectorSearch.knnFlat(vecs(store), qv, "chunk_id", "embedding", kk, metric),
-      qs => VectorSearch.knnBatchGeneric(vecs(store), qs, "chunk_id", "embedding", kk, metric))
+      qs => VectorSearch.knnBatch(vecs(store), qs, "chunk_id", "embedding", kk, metric))
     /** Probe of the `lsh_buckets` column every store row carries. */
     def lshColumn(store: DataFrame): DataFrame = q.fold(
       qv => VectorSearch.lshKnnIndexed(store, qv, "chunk_id", "embedding",
@@ -874,8 +875,18 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       StructType(partCols.map(StructField(_, partType))))
     /** The fitted geometry the rows decode under. */
     type Geom
+    /** Build params as (`_library.json` key, default), in the order
+      * the public build method takes them. */
+    def params: Seq[(String, Int)] = Nil
+    /** Fit the geometry to the searchable store under build params
+      * `p` (in [[params]] order); the rows to write, clustered per
+      * partition directory. A fit over no rows throws. */
+    def fit(store: DataFrame, p: Seq[Int]): (Geom, DataFrame)
+    /** Geometry sidecars as (base, frame) pairs: each frame lands at
+      * `<dir>/<base>.g<gen>` beside the rows generation it serves. */
+    def sidecars: Seq[(String, (Geom, DataFrame) => DataFrame)] = Nil
     /** Generation-numbered geometry sidecar bases (`<base>.g<gen>`). */
-    def geomBases: Seq[String] = Nil
+    final def geomBases: Seq[String] = sidecars.map(sc => s"$dir/${sc._1}")
     /** Geometry serving tree generation `gen`, loaded once per resolved
       * sidecar ([[geomLoad]]). */
     def geomAt(gen: Long): Geom
@@ -885,7 +896,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     /** Ingest keeps it current. */
     def tracked: Boolean = present
     /** Rebuild from the store with the params `_library.json` records. */
-    def rebuild(meta: Map[String, String]): Unit
+    final def rebuild(meta: Map[String, String]): Unit =
+      buildLayout(this, params.map { case (k, d) => meta.get(k).fold(d)(_.toInt) })
     /** A batch's rows under the frozen head geometry. */
     protected def rows(batch: DataFrame): DataFrame
     /** Columns an append needs the stored rows to carry. */
@@ -904,7 +916,111 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     def derivedDirs: Boolean = false
     /** Single-query or batch probe over one resolved (frame, gen). */
     def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame
+
+    /** Centroid layouts (ivf, ivfpq): the vector the rows were
+      * assigned by (raw for ivf, L2-normalized for ivfpq) and a
+      * geometry's centroids. */
+    def cells: Option[(Column, Geom => Seq[(Int, Array[Double])])] = None
+    /** The `stats` sidecar: the build-time drift baseline. */
+    final def baseline(g: Geom, rows: DataFrame): DataFrame = {
+      val (vec, centers) = cells.get
+      IvfIndex.meanSqDist(rows, centers(g), vec)
+    }
+    /** Drift ratio of a centroid layout: the head rows' mean squared
+      * distance to the head centroids over the [[baseline]];
+      * 1.0 = as healthy as at build. */
+    final def drift: Double = {
+      val (vec, centers) = cells.get
+      val base = s"$dir/stats"
+      IvfIndex.driftRatio(tree.open(), centers(headGeom), vec,
+        base + geomSuffixAt(base, headGenOf(tree)))
+    }
+    /** What the index-health views call a cell: bucket, cell or
+      * cluster ("" for pq, which has no health view). */
+    def unit: String = if (cells.isEmpty) "" else "cluster"
+    /** [[allIndexInfo]] reports this layout's health now. */
+    def reported: Boolean = unit.nonEmpty && present
+    /** The head's occupancy; a centroid layout counts rows per cluster. */
+    def occupancy: Occupancy = {
+      val (_, centers) = cells.get
+      Occupancy(Int.box(centers(headGeom).size),
+        cellSizes(tree.open(), col("cluster")), Some(drift))
+    }
   }
+
+  /** One index's health: its cell count (the Int or Long its view's
+    * total column carries), the row count of each occupied cell, and a
+    * centroid layout's drift ratio. */
+  private case class Occupancy(total: Number, sizes: Seq[Long], drift: Option[Double]) {
+    def avg: Option[Double] =
+      if (sizes.isEmpty) None else Some(VectorOps.roundTo(sizes.sum.toDouble / sizes.size, 4))
+    def max: Option[Long] = sizes.maxOption
+  }
+
+  /** Rows per occupied cell of `frame`, cells keyed by `keys`. */
+  private def cellSizes(frame: DataFrame, keys: Column*): Seq[Long] =
+    frame.groupBy(keys: _*).count().collect().map(_.getLong(keys.size)).toSeq
+
+  /** An index-health view: the layout's [[Occupancy]] under its
+    * unit's column names, then `extras`, library and algorithm. */
+  private def occupancyView(l: Layout, extras: Column*): DataFrame = {
+    import spark.implicits._
+    val o = l.occupancy
+    val u = l.unit
+    Seq((o.sizes.size.toLong, o.avg, o.max))
+      .toDF(s"occupied_${u}s", s"avg_${u}_size", s"max_${u}_size")
+      .withColumn(s"total_${u}s", lit(o.total))
+      .withColumn(s"empty_${u}s", lit(o.total) - col(s"occupied_${u}s"))
+      .select(col("*") +: (o.drift.map(d => lit(VectorOps.roundTo(d, 6)).as("drift_ratio")) ++: extras): _*)
+      .withColumn("library", lit(name))
+      .withColumn("algorithm", lit(algo))
+  }
+
+  /** The one index build: fit `l` to the searchable store under
+    * `values` (its [[Layout.params]], in order), install its rows and
+    * geometry sidecars as the tree's next generation
+    * ([[installRebuild]]), then record the params. The store
+    * generation is captured before the fit plans (see
+    * [[installRebuild]]). */
+  private def buildLayout(l: Layout, values: Seq[Int]): Unit = withTreeLocks(Seq(l.name)) {
+    val storeSnapGen = storeTree.snapshotGen()
+    // a fit over a store with no searchable rows throws: only then is
+    // the store's emptiness checked (one job), to say why
+    val (geom, fitted) =
+      try l.fit(searchable, values)
+      catch { case scala.util.control.NonFatal(e) if storeIsEmpty =>
+        throw new IllegalArgumentException(
+          s"library $name is empty — nothing to fit the ${l.name} index to", e) }
+    installRebuild(l.tree, Some(l), storeSnapGen) { (tmp, gen) =>
+      // a sidecar derived from the rows (`stats`) reads them again:
+      // persisted across the row write and that pass
+      val rows = if (l.cells.isEmpty) fitted else fitted.persist()
+      try {
+        // ROWS FIRST: the Overwrite write nukes the whole tmp dir,
+        // including anything staged under it. Then the sidecars,
+        // STAGED under the tmp tree: installRebuild renames them
+        // beside the rows tree right before the manifest commit, so a
+        // crashed row job leaves no orphan sidecar for a later commit
+        // to adopt.
+        rows.write.mode(SaveMode.Overwrite)
+          .option("maxRecordsPerFile", l.maxRecords)
+          .partitionBy(l.partCols: _*).parquet(tmp)
+        l.sidecars.foreach { case (base, frame) =>
+          frame(geom, rows).coalesce(1).write.mode(SaveMode.Overwrite)
+            .parquet(s"$tmp/${VectorLibrary.GeomStageDir}/$base${geomSuffix(gen)}")
+        }
+      } finally if (rows ne fitted) rows.unpersist()
+    }
+    touchMeta(l.params.map(_._1).zip(values.map(_.toString)): _*)
+  }
+
+  /** Re-fit a centroid layout when its drift ratio exceeds
+    * `threshold`; true when a re-fit ran. */
+  private def refitIfDrifted(l: Layout, threshold: Double): Boolean =
+    withTreeLocks(Seq(l.name)) {
+      if (!l.present || l.drift <= threshold) false
+      else { l.rebuild(readMeta()); true }
+    }
 
   /** The five layouts, in epoch/maintenance order. */
   private lazy val layouts: Seq[Layout] =
@@ -992,7 +1108,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     override def tracked: Boolean =
       hadoopFs(indexPath).exists(new org.apache.hadoop.fs.Path(indexPath))
     override protected def appendCols = Seq("quant", "source")
-    def rebuild(meta: Map[String, String]): Unit = buildPartitionedIndex()
+    def fit(store: DataFrame, p: Seq[Int]): (Unit, DataFrame) = ((), indexRows(store))
     protected def rows(batch: DataFrame): DataFrame = indexRows(batch)
     def victimDirs(victims: DataFrame): Seq[String] =
       victims.select(posexplode(col("lsh_buckets")).as(Seq("tbl", "bucket")))
@@ -1004,6 +1120,15 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed),
         qs => VectorSearch.lshKnnPartitionedBatch(applyF(frame, filter), qs,
           "chunk_id", "embedding", a.kk, a.metric, numTables, bitsPerTable, seed))
+    // The health view reads the `lsh_buckets` column every store row
+    // carries (reference LSHIndex.get_stats, algorithms.py:420-441),
+    // so it reports whenever the store holds searchable rows.
+    override def unit = "bucket"
+    override def reported: Boolean = !storeIsEmpty
+    override def occupancy: Occupancy =
+      Occupancy(Int.box(numTables * (1 << bitsPerTable)),
+        cellSizes(chunks.select(posexplode(col("lsh_buckets")).as(Seq("tbl", "bucket"))),
+          col("tbl"), col("bucket")), None)
   }
 
   /** The bucket-partitioned index, memoized per manifest generation. */
@@ -1043,14 +1168,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * Later `addDocuments` / `ingestStreamIndexed` batches append only
     * their own rows to the affected partitions — incremental, never a
     * full rewrite. */
-  def buildPartitionedIndex(): Unit = withTreeLocks(Seq("lsh")) {
-    val storeSnapGen = storeTree.snapshotGen() // before the row frames plan
-    installRebuild(lshLayout.tree, Some(lshLayout), storeSnapGen) { (tmp, _) =>
-      indexRows(chunks).write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", indexMaxRecordsPerFile)
-        .partitionBy("tbl", "bucket").parquet(tmp)
-    }
-  }
+  def buildPartitionedIndex(): Unit = buildLayout(lshLayout, Nil)
 
   /** Install a rebuild history-preservingly: the fresh tree writes to
     * a tmp sibling, its files rename INTO the live root beside the
@@ -2030,8 +2148,11 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       def rewrite(tree: graft.plans.ManifestedTree, files: Seq[(String, Long)], tmp: String,
                   partCols: Seq[String], sorted: Boolean = false): Unit = {
         hadoopFs(tmp).delete(new org.apache.hadoop.fs.Path(tmp), true)
-        val survivors = tree.openEntries(files)
-          .join(victimIds, Seq("chunk_id"), "left_anti")
+        val live = tree.openEntries(files)
+        // the USING join moves chunk_id first: keep the tree's own
+        // column order, so every file of a tree has one layout
+        val survivors = live.join(victimIds, Seq("chunk_id"), "left_anti")
+          .select(live.columns.map(col).toSeq: _*)
         // Preserve each tree's clustering invariant on the survivors
         // (store: (source, doc_id); indexes: partition cols +
         // chunk_id) and the bounded file sizes — later deletes rely
@@ -2209,12 +2330,23 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       Seq("cell"), StringType, indexMaxRecordsPerFile) {
     /** (lo, hi, gridDims, cellsPerDim) of the fitted grid. */
     type Geom = (Array[Double], Array[Double], Int, Int)
-    override def geomBases = Seq(s"$gridPath/bounds")
+    override def params = Seq("grid_dims" -> 4, "grid_cells_per_dim" -> 4)
+    // one bounds aggregate over the store, one cell-clustered write
+    def fit(store: DataFrame, p: Seq[Int]): (Geom, DataFrame) = {
+      val Seq(gridDims, cellsPerDim) = p
+      val (lo, hi) = VectorSearch.gridBounds(store, "embedding", gridDims)
+      require(lo.nonEmpty, "no rows to fit grid bounds to")
+      ((lo, hi, gridDims, cellsPerDim), gridRows(store, lo, hi, cellsPerDim))
+    }
+    // cells_per_dim rides IN the bounds sidecar, so an epoch-pinned
+    // read decodes under its own geometry without consulting the
+    // unversioned meta file
+    override def sidecars = Seq("bounds" -> { (g: Geom, _: DataFrame) =>
+      import spark.implicits._
+      val (lo, hi, _, cpd) = g
+      lo.indices.map(d => (d, lo(d), hi(d), cpd)).toDF("d", "lo", "hi", "cells_per_dim")
+    })
     def geomAt(gen: Long): Geom = geomLoad(s"$gridPath/bounds", gen)(gridBoundsAt)
-
-    def rebuild(meta: Map[String, String]): Unit =
-      buildGridIndex(meta.getOrElse("grid_dims", "4").toInt,
-        meta.getOrElse("grid_cells_per_dim", "4").toInt)
     protected def rows(batch: DataFrame): DataFrame = {
       val (lo, hi, _, cpd) = headGeom
       gridRows(batch, lo, hi, cpd)
@@ -2246,6 +2378,16 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         qs => VectorSearch.gridKnnIndexedBatch(cells, lo, hi, qs,
           "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy))
     }
+    // total_cells is the full lattice (cellsPerDim^gridDims); vectors
+    // outside the fitted bounds clamp into edge cells, so occupancy is
+    // always within it. No drift ratio: the bounds are frozen by
+    // design and a re-fit is a rebuild decision, not a distance signal.
+    override def unit = "cell"
+    override def occupancy: Occupancy = {
+      val (_, _, gd, cpd) = headGeom
+      Occupancy(Long.box(math.pow(cpd.toDouble, gd.toDouble).toLong),
+        counts(tree.open(), headGenOf(tree)).map(_._2), None)
+    }
   }
 
   /** True when the persisted grid index has been built and holds data. */
@@ -2273,32 +2415,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * over the store, one cell-clustered write. Search under algorithm
     * "grid" then probes the cell directories instead of scanning the
     * store and re-deriving bounds per query. */
-  def buildGridIndex(gridDims: Int = 4, cellsPerDim: Int = 4): Unit = withTreeLocks(Seq("grid")) {
-    require(!storeIsEmpty, s"library $name is empty — nothing to fit a grid to")
-    import spark.implicits._
-    val storeSnapGen = storeTree.snapshotGen() // before the bounds fit plans
-    val (lo, hi) = VectorSearch.gridBounds(searchable, "embedding", gridDims)
-    installRebuild(gridLayout.tree, Some(gridLayout), storeSnapGen) { (tmp, gen) =>
-      // ROWS FIRST: the Overwrite write nukes the whole tmp dir,
-      // including anything staged under it. Then the geometry sidecar
-      // (cells_per_dim rides IN it so an epoch-pinned read decodes
-      // under its own geometry without consulting the unversioned
-      // meta file), STAGED under the tmp tree: installRebuild renames
-      // it beside gridPath right before the manifest commit, so a
-      // crashed row job leaves no orphan sidecar for a later commit
-      // to adopt.
-      gridRows(searchable, lo, hi, cellsPerDim)
-        .write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", indexMaxRecordsPerFile)
-        .partitionBy("cell").parquet(tmp)
-      lo.indices.map(d => (d, lo(d), hi(d), cellsPerDim))
-        .toDF("d", "lo", "hi", "cells_per_dim")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$tmp/${VectorLibrary.GeomStageDir}/bounds${geomSuffix(gen)}")
-    }
-    touchMeta("grid_dims" -> gridDims.toString,
-      "grid_cells_per_dim" -> cellsPerDim.toString)
-  }
+  def buildGridIndex(gridDims: Int = 4, cellsPerDim: Int = 4): Unit =
+    buildLayout(gridLayout, Seq(gridDims, cellsPerDim))
 
   /** Drop the persisted grid index (search falls back to the ad-hoc
     * expanding probe over the store). */
@@ -2331,7 +2449,22 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private object ivfLayout extends Layout("ivf", ivfPath, s"$ivfPath/assigned",
       Seq("cluster"), IntegerType, IvfIndex.maxRecordsPerFile) {
     type Geom = Seq[(Int, Array[Double])]
-    override def geomBases = Seq(s"$ivfPath/centroids", s"$ivfPath/stats")
+    override def params = Seq("ivf_centroids" -> 16)
+    // One distributed k-means fit; rows keep MLlib's placement.
+    // Metadata columns ride in the assigned rows so a filtered search
+    // can apply its predicate inside the cluster-pruned scan. Sorting
+    // each cell by id + bounded file sizes keeps one document's rows in
+    // few files of even a dense cell (cheap copy-on-write deletes).
+    def fit(store: DataFrame, p: Seq[Int]): (Geom, DataFrame) = {
+      val (model, assigned) = IvfIndex.build(store.select(col("chunk_id"), col("embedding"),
+        col("doc_id"), col("source"), col("n_tokens")), "embedding", p.head)
+      (IvfIndex.centersOf(model), assigned.repartition(col("cluster"))
+        .sortWithinPartitions(col("cluster"), col("chunk_id")))
+    }
+    override def sidecars = Seq(
+      "centroids" -> ((g: Geom, _: DataFrame) => IvfIndex.centroidFrame(spark, g)),
+      "stats" -> baseline _)
+    override def cells = Some((col("embedding"), (g: Geom) => g))
     // Sorted by cluster id — assignExact's lowest-cluster tie-break
     // must see a deterministic order regardless of parquet row order.
     def geomAt(gen: Long): Geom =
@@ -2345,8 +2478,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         hadoopFs(base).exists(new org.apache.hadoop.fs.Path(base))
     }
     override protected def appendCols = Seq("doc_id", "source", "n_tokens")
-    def rebuild(meta: Map[String, String]): Unit =
-      buildIvfIndex(meta.get("ivf_centroids").map(_.toInt).getOrElse(16))
     protected def rows(batch: DataFrame): DataFrame =
       IvfIndex.assignExact(batch.select(col("chunk_id"), col("embedding"),
         col("doc_id"), col("source"), col("n_tokens")), "embedding", headGeom)
@@ -2358,9 +2489,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     override def derivedDirs = true
     def probe(frame: DataFrame, gen: Long, filter: Option[Column], a: Ask): DataFrame =
       a.q.fold(
-        qv => IvfIndex.searchAssigned(applyF(frame, filter), geomAt(gen), qv,
+        qv => IvfIndex.search(applyF(frame, filter), geomAt(gen), qv,
           "chunk_id", "embedding", a.kk, metric = a.metric),
-        qs => IvfIndex.searchAssignedBatch(applyF(frame, filter), geomAt(gen), qs,
+        qs => IvfIndex.searchBatch(applyF(frame, filter), geomAt(gen), qs,
           "chunk_id", "embedding", a.kk, metric = a.metric))
   }
 
@@ -2369,36 +2500,17 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** Build (or rebuild) the on-disk IVF index: one distributed k-means
     * fit + a cluster-partitioned write. `search` under algorithm "ivf"
-    * then probes nProbe directories instead of scanning the store. */
-  def buildIvfIndex(nCentroids: Int = 16): Unit = withTreeLocks(Seq("ivf")) {
-    // Metadata columns ride in the assigned rows so a filtered search
-    // can apply its predicate inside the cluster-pruned scan.
-    val storeSnapGen = storeTree.snapshotGen() // before the k-means fit plans
-    val (model, assigned) = IvfIndex.build(
-      searchable.select(col("chunk_id"), col("embedding"),
-        col("doc_id"), col("source"), col("n_tokens")), "embedding", nCentroids)
-    installRebuild(ivfLayout.tree, Some(ivfLayout), storeSnapGen) { (tmp, gen) =>
-      IvfIndex.writeIndex(assigned, model, ivfPath, assignedPath = Some(tmp),
-        sidecarSuffix = geomSuffix(gen),
-        sidecarDir = Some(s"$tmp/${VectorLibrary.GeomStageDir}"))
-    }
-    // Persist the centroid count: store rewrites and drift refits must
-    // rebuild at the SAME granularity, not a hardcoded default.
-    touchMeta("ivf_centroids" -> nCentroids.toString)
-  }
-
-  /** The centroid count this library's IVF index was built with. */
-  private def ivfCentroids: Int =
-    readMeta().get("ivf_centroids").map(_.toInt).getOrElse(16)
+    * then probes nProbe directories instead of scanning the store. The
+    * centroid count is recorded, so store rewrites and drift refits
+    * rebuild at the SAME granularity. */
+  def buildIvfIndex(nCentroids: Int = 16): Unit = buildLayout(ivfLayout, Seq(nCentroids))
 
   /** Drop the on-disk IVF index (search then answers ivf with an exact
     * scan of the store). */
   def dropIvfIndex(): Unit = dropLayout(ivfLayout)
 
   /** Current IVF drift ratio (1.0 = as healthy as at build). */
-  def ivfDrift: Double =
-    IvfIndex.assignmentDrift(spark, ivfPath, assignedOpt = Some(ivfLayout.tree.open()),
-      sidecarSuffix = geomSuffixAt(s"$ivfPath/centroids", headGenOf(ivfLayout.tree)))
+  def ivfDrift: Double = ivfLayout.drift
 
   /**
    * Re-fit the IVF centroids when appended data has drifted away from
@@ -2408,12 +2520,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * mean, one distributed re-fit restores probe selectivity). Returns
    * true when a re-fit ran.
    */
-  def refitIvfIfDrifted(threshold: Double = 1.5): Boolean = withTreeLocks(Seq("ivf")) {
-    if (!hasIvfIndex) return false
-    if (ivfDrift <= threshold) return false
-    ivfLayout.rebuild(readMeta())
-    true
-  }
+  def refitIvfIfDrifted(threshold: Double = 1.5): Boolean = refitIfDrifted(ivfLayout, threshold)
 
   // --- persisted PQ index ---------------------------------------------
   // Product-quantization serving layout: tiny codebook parquet + codes
@@ -2429,11 +2536,19 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private object pqLayout extends Layout("pq", pqPath, s"$pqPath/codes",
       Seq("source"), StringType, indexMaxRecordsPerFile) {
     type Geom = PqIndex.Codebooks
-    override def geomBases = Seq(s"$pqPath/books")
+    override def params = Seq("pq_m" -> 8, "pq_k" -> 16)
+    // m tiny subspace k-means fits + one encoded write
+    def fit(store: DataFrame, p: Seq[Int]): (Geom, DataFrame) = {
+      val base = pqBase(store)
+      val books = PqIndex.train(base, "__nvec", p(0), p(1))
+      (books, pqCodeRows(base, books))
+    }
+    /** The codebook sidecar's word column. */
+    private val word = "c"
+    override def sidecars = Seq(
+      "books" -> ((g: Geom, _: DataFrame) => PqIndex.booksFrame(spark, g, word)))
     def geomAt(gen: Long): Geom =
-      geomLoad(s"$pqPath/books", gen)(PqIndex.readBooks(spark, _, "c"))
-    def rebuild(meta: Map[String, String]): Unit =
-      buildPqIndex(meta.getOrElse("pq_m", "8").toInt, meta.getOrElse("pq_k", "16").toInt)
+      geomLoad(s"$pqPath/books", gen)(PqIndex.readBooks(spark, _, word))
     protected def rows(batch: DataFrame): DataFrame = pqCodeRows(pqBase(batch), headGeom)
     def victimDirs(victims: DataFrame): Seq[String] =
       victims.select(col("source")).distinct().collect()
@@ -2466,26 +2581,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** Build (or rebuild) the persisted PQ index: m tiny subspace
     * k-means fits + one encoded write. Search under algorithm "pq"
     * then scans 8-byte codes instead of float vectors for phase 1. */
-  def buildPqIndex(m: Int = 8, kk: Int = 16): Unit = withTreeLocks(Seq("pq")) {
-    require(!storeIsEmpty, s"library $name is empty — nothing to fit codebooks to")
-    val storeSnapGen = storeTree.snapshotGen() // before the codebook fit plans
-    val base = pqBase(searchable)
-    val books = PqIndex.train(base, "__nvec", m, kk)
-    import spark.implicits._
-    installRebuild(pqLayout.tree, Some(pqLayout), storeSnapGen) { (tmp, gen) =>
-      // rows FIRST (the Overwrite write nukes tmp, including staged
-      // sidecars), then the codebooks into the staging dir
-      pqCodeRows(base, books)
-        .write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", indexMaxRecordsPerFile)
-        .partitionBy("source").parquet(tmp)
-      books.flatMap { case (s, ws) => ws.map { case (j, c) => (s, j, c.toSeq) } }
-        .toDF("s", "j", "c")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$tmp/${VectorLibrary.GeomStageDir}/books${geomSuffix(gen)}")
-    }
-    touchMeta("pq_m" -> m.toString, "pq_k" -> kk.toString)
-  }
+  def buildPqIndex(m: Int = 8, kk: Int = 16): Unit = buildLayout(pqLayout, Seq(m, kk))
 
   /** Drop the persisted PQ index (search then answers pq with an
     * exact scan of the store). */
@@ -2507,18 +2603,23 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     /** (coarse centroids, residual codebooks), each side loaded once
       * per resolved sidecar. */
     type Geom = (Seq[(Int, Array[Double])], PqIndex.Codebooks)
-    override def geomBases =
-      Seq(s"$ivfpqPath/centroids", s"$ivfpqPath/books", s"$ivfpqPath/stats")
+    override def params = Seq("ivfpq_ncentroids" -> 16, "ivfpq_m" -> 8, "ivfpq_k" -> 16)
+    // one coarse k-means + m residual-subspace fits
+    def fit(store: DataFrame, p: Seq[Int]): (Geom, DataFrame) = {
+      val idx = IvfPq.train(pqBase(store), "__nvec", p(0), p(1), p(2))
+      ((idx.centers, idx.books), ivfpqRowsClustered(idx.encoded.drop("__nvec")))
+    }
+    override def sidecars = Seq(
+      "centroids" -> ((g: Geom, _: DataFrame) => IvfIndex.centroidFrame(spark, g._1)),
+      "books" -> ((g: Geom, _: DataFrame) => PqIndex.booksFrame(spark, g._2, IvfPq.BookWord)),
+      "stats" -> baseline _)
+    // coarse assignment quality: when rows drift from the cells,
+    // residuals grow and ADC fidelity decays, so coarse drift is the
+    // refit signal for BOTH quantizers
+    override def cells = Some((l2Normalize(col("embedding")), (g: Geom) => g._1))
     def geomAt(gen: Long): Geom =
-      (geomLoad(s"$ivfpqPath/centroids", gen) { path =>
-         IvfPq.readCenters(spark, ivfpqPath,
-           path.stripPrefix(s"$ivfpqPath/centroids")) },
-       geomLoad(s"$ivfpqPath/books", gen) { path =>
-         IvfPq.readBooks(spark, ivfpqPath,
-           path.stripPrefix(s"$ivfpqPath/books")) })
-    def rebuild(meta: Map[String, String]): Unit =
-      buildIvfPqIndex(meta.getOrElse("ivfpq_ncentroids", "16").toInt,
-        meta.getOrElse("ivfpq_m", "8").toInt, meta.getOrElse("ivfpq_k", "16").toInt)
+      (geomLoad(s"$ivfpqPath/centroids", gen)(IvfIndex.readCentroids(spark, _)),
+       geomLoad(s"$ivfpqPath/books", gen)(PqIndex.readBooks(spark, _, IvfPq.BookWord)))
     protected def rows(batch: DataFrame): DataFrame = {
       val (centers, books) = headGeom
       ivfpqRowsClustered(
@@ -2556,107 +2657,32 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * k-means + m residual-subspace fits + one partitioned write.
     * Search under algorithm "ivfpq" then opens nProbe cluster
     * directories and reads codes-only in phase 1. */
-  def buildIvfPqIndex(nCentroids: Int = 16, m: Int = 8, kk: Int = 16): Unit = withTreeLocks(Seq("ivfpq")) {
-    require(!storeIsEmpty, s"library $name is empty — nothing to fit IVF-PQ to")
-    val storeSnapGen = storeTree.snapshotGen() // before the coarse fit plans
-    val idx = IvfPq.train(pqBase(searchable), "__nvec", nCentroids, m, kk)
-    import spark.implicits._
-    installRebuild(ivfpqLayout.tree, Some(ivfpqLayout), storeSnapGen) { (tmp, gen) =>
-      // rows FIRST (the Overwrite write nukes tmp, including staged
-      // sidecars), then the geometry set into the staging dir
-      ivfpqRowsClustered(idx.encoded.drop("__nvec"))
-        .write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", indexMaxRecordsPerFile)
-        .partitionBy("cluster").parquet(tmp)
-      val stage = s"$tmp/${VectorLibrary.GeomStageDir}"
-      idx.centers.map { case (i, c) => (i, c.toSeq) }.toDF("cluster", "centroid")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$stage/centroids${geomSuffix(gen)}")
-      idx.books.flatMap { case (s, ws) => ws.map { case (j, c) => (s, j, c.toSeq) } }
-        .toDF("s", "j", "codeword")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$stage/books${geomSuffix(gen)}")
-      // Build-time coarse-assignment quality: the drift baseline
-      // (appends assign to the FROZEN geometry; this number rising is
-      // the refit signal). Computed from the in-hand encoded frame —
-      // pre-commit, so the whole sidecar set lands atomically with
-      // the row-tree flip.
-      ivfpqMeanSqDistOf(idx.encoded, idx.centers)
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$stage/stats${geomSuffix(gen)}")
-    }
-    touchMeta("ivfpq_ncentroids" -> nCentroids.toString,
-      "ivfpq_m" -> m.toString, "ivfpq_k" -> kk.toString)
-  }
+  def buildIvfPqIndex(nCentroids: Int = 16, m: Int = 8, kk: Int = 16): Unit =
+    buildLayout(ivfpqLayout, Seq(nCentroids, m, kk))
 
   /** Drop the persisted IVF-PQ index (search then answers ivfpq with
     * an exact scan of the store). */
   def dropIvfPqIndex(): Unit = dropLayout(ivfpqLayout)
-
-  /** (n, mean_sq_dist) of the encoded rows' NORMALIZED vectors against
-    * their assigned coarse centroid — the coarse-assignment quality of
-    * the composed index (the PQ codes quantize residuals; when rows
-    * drift from the cells, residuals grow and ADC fidelity decays, so
-    * coarse drift is the refit signal for BOTH quantizers). */
-  private def ivfpqMeanSqDist(): DataFrame =
-    ivfpqMeanSqDistOf(ivfpqLayout.tree.open(), ivfpqLayout.headGeom._1)
-
-  /** [[ivfpqMeanSqDist]] over an explicit (encoded, centers) pair —
-    * the build path computes the baseline from its in-hand frames
-    * before the tree commits. */
-  private def ivfpqMeanSqDistOf(encoded: DataFrame,
-                                centers: Seq[(Int, Array[Double])]): DataFrame = {
-    import spark.implicits._
-    val cents = centers
-      .map { case (i, c) => (i, c.toSeq) }.toDF("cluster", "centroid")
-    encoded
-      .join(broadcast(cents), "cluster")
-      .select(aggregate(
-        zip_with(l2Normalize(col("embedding")).cast("array<double>"), col("centroid"),
-          (x, y) => (x - y) * (x - y)),
-        lit(0.0), _ + _).as("sqd"))
-      .agg(count(lit(1)).as("n"), avg(col("sqd")).as("mean_sq_dist"))
-  }
 
   /** Drift ratio of the IVF-PQ index: current mean squared coarse-
     * assignment distance over the build-time baseline; ~1.0 healthy,
     * rising = appended data no longer matches the frozen geometry. */
   def ivfpqDrift: Double = {
     require(hasIvfPqIndex, s"library $name has no IVF-PQ index (buildIvfPqIndex first)")
-    val statsBase = s"$ivfpqPath/stats"
-    val base = spark.read
-      .parquet(statsBase + geomSuffixAt(statsBase, headGenOf(ivfpqLayout.tree)))
-      .head.getAs[Double]("mean_sq_dist")
-    val cur = ivfpqMeanSqDist().head.getAs[Double]("mean_sq_dist")
-    if (base > 0.0) cur / base else 1.0
+    ivfpqLayout.drift
   }
 
   /** Re-fit the full IVF-PQ geometry (coarse centroids AND residual
     * codebooks) when drift exceeds `threshold` — the composed analog
     * of refitIvfIfDrifted. Returns true when a re-fit ran. */
-  def refitIvfPqIfDrifted(threshold: Double = 1.5): Boolean = withTreeLocks(Seq("ivfpq")) {
-    if (!hasIvfPqIndex) return false
-    if (ivfpqDrift <= threshold) return false
-    ivfpqLayout.rebuild(readMeta())
-    true
-  }
+  def refitIvfPqIfDrifted(threshold: Double = 1.5): Boolean =
+    refitIfDrifted(ivfpqLayout, threshold)
 
   /** IVF-PQ index health: cell occupancy + drift, the composed-index
     * member of the LSH/grid/IVF observability family. */
   def ivfpqIndexInfo: DataFrame = {
     require(hasIvfPqIndex, s"library $name has no IVF-PQ index (buildIvfPqIndex first)")
-    val total = ivfpqLayout.headGeom._1.size
-    ivfpqLayout.tree.open()
-      .groupBy(col("cluster")).agg(count(lit(1)).as("cluster_size"))
-      .agg(
-        count(lit(1)).as("occupied_clusters"),
-        round(avg(col("cluster_size")), 4).as("avg_cluster_size"),
-        max(col("cluster_size")).as("max_cluster_size"))
-      .withColumn("total_clusters", lit(total))
-      .withColumn("empty_clusters", lit(total) - col("occupied_clusters"))
-      .withColumn("drift_ratio", round(lit(ivfpqDrift), 6))
-      .withColumn("library", lit(name))
-      .withColumn("algorithm", lit(algo))
+    occupancyView(ivfpqLayout)
   }
 
   /** Library stats (reference GET /libraries/{id}/index-info, incl.
@@ -2683,23 +2709,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * materialized `lsh_buckets` column: one explode + one aggregate,
    * no vector math.
    */
-  def indexInfo: DataFrame = {
-    val perBucket = chunks
-      .select(posexplode(col("lsh_buckets")).as(Seq("tbl", "bucket")))
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_size"))
-    val totalBuckets = numTables * (1 << bitsPerTable)
-    perBucket.agg(
-      count(lit(1)).as("occupied_buckets"),
-      round(avg(col("bucket_size")), 4).as("avg_bucket_size"),
-      max(col("bucket_size")).as("max_bucket_size"))
-      .withColumn("total_buckets", lit(totalBuckets))
-      .withColumn("empty_buckets", lit(totalBuckets) - col("occupied_buckets"))
-      .withColumn("num_tables", lit(numTables))
-      .withColumn("bits_per_table", lit(bitsPerTable))
-      .withColumn("library", lit(name))
-      .withColumn("algorithm", lit(algo))
-  }
+  def indexInfo: DataFrame = occupancyView(lshLayout,
+    lit(numTables).as("num_tables"), lit(bitsPerTable).as("bits_per_table"))
 
   /**
    * IVF index health (the cluster-occupancy analog of the LSH bucket
@@ -2712,42 +2723,16 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    */
   def ivfIndexInfo: DataFrame = {
     require(hasIvfIndex, s"library $name has no IVF index (buildIvfIndex first)")
-    val perCluster = ivfLayout.tree.open()
-      .groupBy(col("cluster")).agg(count(lit(1)).as("cluster_size"))
-    val total = ivfCentroids
-    perCluster.agg(
-      count(lit(1)).as("occupied_clusters"),
-      round(avg(col("cluster_size")), 4).as("avg_cluster_size"),
-      max(col("cluster_size")).as("max_cluster_size"))
-      .withColumn("total_clusters", lit(total))
-      .withColumn("empty_clusters", lit(total) - col("occupied_clusters"))
-      .withColumn("drift_ratio", round(lit(ivfDrift), 6))
-      .withColumn("library", lit(name))
-      .withColumn("algorithm", lit(algo))
+    occupancyView(ivfLayout)
   }
 
   /**
    * Grid index health: cell occupancy under the frozen fitted bounds —
    * the grid member of the LSH/IVF/IVF-PQ observability family.
-   * total_cells is the full lattice (cellsPerDim^gridDims); vectors
-   * outside the fitted bounds clamp into edge cells, so occupancy is
-   * always within it. No drift ratio: the bounds are frozen by design
-   * and a re-fit is a rebuild decision, not a distance signal.
    */
   def gridIndexInfo: DataFrame = {
     require(hasGridIndex, s"library $name has no grid index (buildGridIndex first)")
-    val (_, _, gd, cpd) = gridLayout.headGeom
-    val counts = gridLayout.counts(gridLayout.tree.open(), headGenOf(gridLayout.tree))
-    val total = math.pow(cpd.toDouble, gd.toDouble).toLong
-    import spark.implicits._
-    Seq((counts.size.toLong,
-      math.rint(counts.map(_._2).sum.toDouble / counts.size * 1e4) / 1e4,
-      counts.map(_._2).max,
-      total, total - counts.size))
-      .toDF("occupied_cells", "avg_cell_size", "max_cell_size",
-        "total_cells", "empty_cells")
-      .withColumn("library", lit(name))
-      .withColumn("algorithm", lit(algo))
+    occupancyView(gridLayout)
   }
 
   /** Chunks whose embedding is missing (reference get_unindexed_chunks). */
@@ -3238,47 +3223,15 @@ object VectorLibrary {
   def allIndexInfo(spark: SparkSession, root: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val names = list(spark, root).select("library").collect().map(_.getString(0))
-    def num(r: org.apache.spark.sql.Row, field: String): Long =
-      r.getAs[Number](field).longValue
     val rows = names.toSeq.flatMap { n =>
       val lib = new VectorLibrary(spark, root, n)
-      val lsh =
-        if (lib.storeIsEmpty) Seq.empty
-        else {
-          val r = lib.indexInfo.head
-          Seq((n, r.getAs[String]("algorithm"), "lsh",
-            num(r, "total_buckets"), num(r, "occupied_buckets"),
-            num(r, "empty_buckets"), r.getAs[Double]("avg_bucket_size"),
-            num(r, "max_bucket_size"), Option.empty[Double]))
-        }
-      val grid =
-        if (!lib.hasGridIndex) Seq.empty
-        else {
-          val r = lib.gridIndexInfo.head
-          Seq((n, r.getAs[String]("algorithm"), "grid",
-            num(r, "total_cells"), num(r, "occupied_cells"),
-            num(r, "empty_cells"), r.getAs[Double]("avg_cell_size"),
-            num(r, "max_cell_size"), Option.empty[Double]))
-        }
-      val ivf =
-        if (!lib.hasIvfIndex) Seq.empty
-        else {
-          val r = lib.ivfIndexInfo.head
-          Seq((n, r.getAs[String]("algorithm"), "ivf",
-            num(r, "total_clusters"), num(r, "occupied_clusters"),
-            num(r, "empty_clusters"), r.getAs[Double]("avg_cluster_size"),
-            num(r, "max_cluster_size"), Some(r.getAs[Double]("drift_ratio"))))
-        }
-      val ivfpq =
-        if (!lib.hasIvfPqIndex) Seq.empty
-        else {
-          val r = lib.ivfpqIndexInfo.head
-          Seq((n, r.getAs[String]("algorithm"), "ivfpq",
-            num(r, "total_clusters"), num(r, "occupied_clusters"),
-            num(r, "empty_clusters"), r.getAs[Double]("avg_cluster_size"),
-            num(r, "max_cluster_size"), Some(r.getAs[Double]("drift_ratio"))))
-        }
-      lsh ++ grid ++ ivf ++ ivfpq
+      lib.layouts.filter(_.reported).map { l =>
+        val o = l.occupancy
+        val total = o.total.longValue
+        (n, lib.algorithm, l.name, total, o.sizes.size.toLong,
+          total - o.sizes.size, o.avg.getOrElse(0.0), o.max.getOrElse(0L),
+          o.drift.map(VectorOps.roundTo(_, 6)))
+      }
     }
     rows.toDF("library", "algorithm", "index_type", "total_cells",
       "occupied_cells", "empty_cells", "avg_cell_size", "max_cell_size",

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructType}
 import graft.GraftFunctions._
 
 /**
@@ -55,12 +55,6 @@ object IvfIndex {
     assigned.filter(col("cluster").isin(
       nearestClusters(centers, qv.map(_.toDouble), nProbe): _*))
 
-  /** Exact re-rank within the nProbe nearest cells to the query vector. */
-  def search(assigned: DataFrame, model: KMeansModel, qv: Array[Float],
-             idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
-             metric: String = "cosine"): DataFrame =
-    searchAssigned(assigned, centersOf(model), qv, idCol, vecCol, k, nProbe, metric)
-
   /**
    * Exact-arithmetic assignment to given centroids: argmin of the
    * sequential-fold squared distance with lowest-cluster-id tie-break.
@@ -86,11 +80,12 @@ object IvfIndex {
   def centersOf(model: KMeansModel): Seq[(Int, Array[Double])] =
     model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq
 
-  /** Probe an exact-assigned corpus: nProbe nearest cells resolved
-    * driver-side against the same centroid values, exact re-rank. */
-  def searchAssigned(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
-                     qv: Array[Float], idCol: String, vecCol: String, k: Int,
-                     nProbe: Int = 4, metric: String = "cosine"): DataFrame =
+  /** Probe an assigned corpus: the nProbe cells nearest to `qv`,
+    * resolved driver-side against the centroids, then an exact
+    * re-rank within them. */
+  def search(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
+             qv: Array[Float], idCol: String, vecCol: String, k: Int,
+             nProbe: Int = 4, metric: String = "cosine"): DataFrame =
     VectorSearch.knnFlat(probed(assigned, centers, qv, nProbe), qv, idCol, vecCol, k, metric)
 
   /**
@@ -102,71 +97,34 @@ object IvfIndex {
    * time); the non-probed corpus is never opened.
    */
   def writeIndex(assigned: DataFrame, model: KMeansModel, path: String,
-                 vecCol: String = "embedding",
-                 assignedPath: Option[String] = None,
-                 sidecarSuffix: String = "",
-                 sidecarDir: Option[String] = None): Unit = {
+                 vecCol: String = "embedding"): Unit = {
     val spark = assigned.sparkSession
-    import spark.implicits._
-    // Sorting each cell by id + bounding file sizes keeps one
-    // document's rows in few files of even a dense cell, so a
-    // copy-on-write delete rewrites files, not whole cells.
-    // `assignedPath` lets the caller redirect the row tree to a tmp
-    // sibling for a history-preserving manifest install (the sidecars
-    // below always land at `path` — geometry replaces on rebuild).
-    val rowsDir = assignedPath.getOrElse(s"$path/assigned")
+    val centers = centersOf(model)
     val idCol = assigned.columns.find(c => c != "cluster" && c != vecCol).get
     // persisted across the TWO actions below (row write + stats
-    // baseline aggregate) — without it the stats pass re-executes the
-    // whole upstream (store scan + assignment) a second time per
-    // build. Reading the just-written rowsDir back is not an option:
-    // a dot-prefixed staging rowsDir is hidden from Spark's DataSource
-    // and would aggregate zero rows (a null baseline that pins the
-    // drift ratio at 1.0).
+    // baseline aggregate): without it the stats pass re-executes the
+    // whole upstream (scan + assignment) a second time per build
     val a = assigned.persist()
     try {
+      // Sorting each cell by id + bounding file sizes keeps one
+      // document's rows in few files of even a dense cell, so a
+      // copy-on-write delete rewrites files, not whole cells.
       a.repartition(col("cluster"))
         .sortWithinPartitions(col("cluster"), col(idCol))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy("cluster").parquet(rowsDir)
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq
-      .toDF("cluster", "centroid")
-    // `sidecarSuffix` generation-numbers the geometry (centroids +
-    // stats baseline) so a caller installing the row tree through a
-    // manifest can pin epoch readers to the geometry their codes were
-    // written under (VectorLibrary's `.g<gen>` scheme); "" keeps the
-    // plain standalone-operator layout. `sidecarDir` redirects the
-    // sidecars to a STAGING directory (the caller renames them into
-    // place atomically with its commit) instead of the live `path`.
-    val scDir = sidecarDir.getOrElse(path)
-    centroids.coalesce(1).write.mode("overwrite")
-      .parquet(s"$scDir/centroids$sidecarSuffix")
-    // Build-time assignment quality: the drift baseline. Appends
-    // assign to FROZEN centroids, so the current mean distance rising
-    // against this number is the re-fit signal (the reference's
-    // background reindex trigger, lake-style).
-    meanSqDist(a, centroids, vecCol)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$scDir/stats$sidecarSuffix")
+        .partitionBy("cluster").parquet(s"$path/assigned")
+      centroidFrame(spark, centers).coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/centroids")
+      meanSqDist(a, centers, col(vecCol)).coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/stats")
     } finally a.unpersist()
   }
-
-  /** (n, mean_sq_dist) of rows against their assigned centroid. */
-  private def meanSqDist(assigned: DataFrame, centroids: DataFrame,
-                         vecCol: String): DataFrame =
-    assigned.join(broadcast(centroids), "cluster")
-      .select(aggregate(
-        zip_with(col(vecCol).cast("array<double>"), col("centroid"),
-          (x, y) => (x - y) * (x - y)),
-        lit(0.0), _ + _).as("sqd"))
-      .agg(count(lit(1)).as("n"), avg(col("sqd")).as("mean_sq_dist"))
 
   /** Assign rows to the EXISTING centroids and append them to the
     * on-disk index (the standard add path of an inverted file — no
     * refit; `assignmentDrift` tells you when a refit is due). */
-  def appendAssign(spark: org.apache.spark.sql.SparkSession, path: String,
+  def appendAssign(spark: SparkSession, path: String,
                    rows: DataFrame, idCol: String, vecCol: String): Unit = {
     // assignExact against the collected (tiny) centroid table: same
     // fold arithmetic and lowest-cluster tie-break as the old
@@ -184,43 +142,64 @@ object IvfIndex {
   private val centroidSchema = new StructType()
     .add("cluster", IntegerType).add("centroid", ArrayType(DoubleType))
 
+  /** The centroid sidecar's rows: (cluster, centroid). */
+  def centroidFrame(spark: SparkSession, centers: Seq[(Int, Array[Double])]): DataFrame = {
+    import spark.implicits._
+    centers.map { case (i, c) => (i, c.toSeq) }.toDF("cluster", "centroid")
+  }
+
   /** The centroid sidecar at `dir`, sorted by cluster id (the
     * lowest-cluster tie-break of [[assignExact]] must see one order
     * whatever the parquet row order). Read with its schema given: one
     * job, no schema-inference job. */
-  def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): Seq[(Int, Array[Double])] =
+  def readCentroids(spark: SparkSession, dir: String): Seq[(Int, Array[Double])] =
     spark.read.schema(centroidSchema).parquet(dir).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
       .sortBy(_._1)
 
+  /** The stats sidecar's one row: (n, mean_sq_dist) of rows' `vec`
+    * against their assigned centroid — the assignment quality a drift
+    * ratio compares against its build-time value. */
+  def meanSqDist(rows: DataFrame, centers: Seq[(Int, Array[Double])],
+                 vec: Column): DataFrame =
+    rows.join(broadcast(centroidFrame(rows.sparkSession, centers)), "cluster")
+      .select(aggregate(
+        zip_with(vec.cast("array<double>"), col("centroid"),
+          (x, y) => (x - y) * (x - y)),
+        lit(0.0), _ + _).as("sqd"))
+      .agg(count(lit(1)).as("n"), avg(col("sqd")).as("mean_sq_dist"))
+
+  private val statsSchema = new StructType()
+    .add("n", LongType).add("mean_sq_dist", DoubleType)
+
   /**
-   * Drift ratio of the index: current mean squared assignment
-   * distance (over the original build PLUS every frozen-centroid
-   * append) divided by the build-time mean. ~1.0 = healthy; rising
-   * means appended data no longer matches the fitted centroids and a
-   * re-fit (rebuild) is due. One pruned scan + two tiny aggregates.
+   * Drift ratio: the current mean squared assignment distance of
+   * `rows` (the original build PLUS every frozen-centroid append)
+   * over the build-time mean recorded in the stats sidecar at
+   * `statsDir`. ~1.0 = healthy; rising means appended data no longer
+   * matches the fitted centroids and a re-fit (rebuild) is due.
    */
-  def assignmentDrift(spark: org.apache.spark.sql.SparkSession, path: String,
-                      vecCol: String = "embedding",
-                      assignedOpt: Option[DataFrame] = None,
-                      sidecarSuffix: String = ""): Double = {
-    val base = spark.read.parquet(s"$path/stats$sidecarSuffix")
+  def driftRatio(rows: DataFrame, centers: Seq[(Int, Array[Double])], vec: Column,
+                 statsDir: String): Double = {
+    val base = rows.sparkSession.read.schema(statsSchema).parquet(statsDir)
       .head.getAs[Double]("mean_sq_dist")
-    val cur = meanSqDist(
-      assignedOpt.getOrElse(spark.read.parquet(s"$path/assigned")),
-      spark.read.parquet(s"$path/centroids$sidecarSuffix"), vecCol)
-      .head.getAs[Double]("mean_sq_dist")
+    val cur = meanSqDist(rows, centers, vec).head.getAs[Double]("mean_sq_dist")
     if (base > 0.0) cur / base else 1.0
   }
+
+  /** [[driftRatio]] of an index written by [[writeIndex]]. */
+  def assignmentDrift(spark: SparkSession, path: String,
+                      vecCol: String = "embedding"): Double =
+    driftRatio(spark.read.parquet(s"$path/assigned"),
+      readCentroids(spark, s"$path/centroids"), col(vecCol), s"$path/stats")
 
   /** Probe a written index: nProbe cells resolved driver-side from the
     * centroid table, then a partition-pruned scan of those cluster
     * directories + exact re-rank. */
-  def searchIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def searchIndexed(spark: SparkSession, path: String,
                     qv: Array[Float], idCol: String, vecCol: String, k: Int,
                     nProbe: Int = 4, metric: String = "cosine",
-                    rowFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+                    rowFilter: Option[Column] = None): DataFrame = {
     val centers = readCentroids(spark, s"$path/centroids")
     // rowFilter applies INSIDE the cluster-pruned scan (partition
     // pruning x pushed row-group predicate), never post-hoc on the
@@ -240,38 +219,21 @@ object IvfIndex {
    * finisher ranks. Q queries cost one pruned scan of their combined
    * cells, not Q scans.
    */
-  def searchIndexedBatch(spark: org.apache.spark.sql.SparkSession, path: String,
+  def searchIndexedBatch(spark: SparkSession, path: String,
                          queries: DataFrame, idCol: String, vecCol: String, k: Int,
                          nProbe: Int = 4, metric: String = "cosine",
-                         rowFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val centers = readCentroids(spark, s"$path/centroids")
+                         rowFilter: Option[Column] = None): DataFrame = {
     val assigned = spark.read.parquet(s"$path/assigned")
-    batchProbe(rowFilter.fold(assigned)(assigned.where), centers, queries,
-      idCol, vecCol, k, nProbe, metric)
+    searchBatch(rowFilter.fold(assigned)(assigned.where),
+      readCentroids(spark, s"$path/centroids"), queries, idCol, vecCol, k, nProbe, metric)
   }
 
-  /** Batch twin of [[searchAssigned]]: probe an already-opened
-    * assigned frame against given centers. This is the
-    * manifest-planned serving path — the path-based form above
-    * re-lists the partition tree on every call. */
-  def searchAssignedBatch(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
-                          queries: DataFrame, idCol: String, vecCol: String,
-                          k: Int, nProbe: Int = 4,
-                          metric: String = "cosine"): DataFrame =
-    batchProbe(assigned, centers, queries, idCol, vecCol, k, nProbe, metric)
-
-  /** Batch probe of an in-memory (model, assigned) index — the batch
-    * twin of `search`, same union-pruned shape as the on-disk path. */
-  def searchBatch(assigned: DataFrame, model: KMeansModel, queries: DataFrame,
-                  idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
-                  metric: String = "cosine"): DataFrame =
-    batchProbe(assigned, model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq, queries,
-      idCol, vecCol, k, nProbe, metric)
-
-  private def batchProbe(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
-                         queries: DataFrame, idCol: String, vecCol: String,
-                         k: Int, nProbe: Int, metric: String): DataFrame = {
+  /** Batch twin of [[search]]: probe an already-opened assigned frame
+    * against given centers — the manifest-planned serving path (the
+    * path-based form above re-lists the partition tree on every call). */
+  def searchBatch(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
+                  queries: DataFrame, idCol: String, vecCol: String,
+                  k: Int, nProbe: Int = 4, metric: String = "cosine"): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val qRows = queries.select(col("query_id"), col("qvec")).collect()
@@ -345,7 +307,7 @@ object IvfIndex {
       .select(expr("query_id DIV 1000").as("query_id"),
         pmod(col("query_id"), lit(1000L)).cast("int").as("n_probe"), col(idCol))
     val exact = VectorSearch
-      .knnBatchGeneric(assigned.select(col(idCol), col(vecCol)),
+      .knnBatch(assigned.select(col(idCol), col(vecCol)),
         queries, idCol, vecCol, k, metric)
       .select(col("query_id"), col(idCol))
     val hits = approx.join(exact, Seq("query_id", idCol))
@@ -372,25 +334,10 @@ object IvfIndex {
    * row, no shuffle before the write's own clustering), so the build
    * stays one pass at 100 TB.
    */
-  def buildSpill(emb: DataFrame, vecCol: String, nCentroids: Int = 16,
-                 seed: Long = 42L, maxIter: Int = 5, spillFactor: Double = 1.2,
-                 maxAssign: Int = 2): (KMeansModel, DataFrame) = {
+  def spillAssign(rows: DataFrame, vecCol: String, centers: Seq[(Int, Array[Double])],
+                  spillFactor: Double = 1.2, maxAssign: Int = 2): DataFrame = {
     require(spillFactor >= 1.0, "spillFactor must be >= 1.0")
     require(maxAssign >= 1, "maxAssign must be >= 1")
-    val featured = emb.withColumn("features", array_to_vector(col(vecCol)))
-    val model = new KMeans()
-      .setK(nCentroids).setSeed(seed).setMaxIter(maxIter)
-      .fit(featured)
-    (model, spillAssign(emb, vecCol,
-      model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }.toSeq,
-      spillFactor, maxAssign))
-  }
-
-  /** Rows exploded to their spill cells: nearest always, further cells
-    * while d <= d_nearest * spillFactor, at most maxAssign total. */
-  private[graft] def spillAssign(rows: DataFrame, vecCol: String,
-                                 centers: Seq[(Int, Array[Double])],
-                                 spillFactor: Double, maxAssign: Int): DataFrame = {
     val centLit = typedLit(centers.map { case (i, c) => (i, c.toSeq) })
     // struct(d, cluster): array_sort's default struct order (field by
     // field) ranks by distance with the cluster id as the tie-break.
@@ -418,53 +365,12 @@ object IvfIndex {
     * row replicated into several probed cells must count once — scores
     * dedup on the occurrence-invariant (id, score) scalar pair before
     * the top-k, so no embedding array rides the aggregate. */
-  def searchSpill(assigned: DataFrame, model: KMeansModel, qv: Array[Float],
-                  idCol: String, vecCol: String, k: Int, nProbe: Int = 1,
-                  metric: String = "cosine"): DataFrame =
-    searchSpillAssigned(assigned, centersOf(model), qv, idCol, vecCol,
-      k, nProbe, metric)
-
-  /** Centers-based twin of `searchSpill` (for exact-assignment paths
-    * whose centroids ride outside a fitted model). */
-  def searchSpillAssigned(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
-                          qv: Array[Float], idCol: String, vecCol: String,
-                          k: Int, nProbe: Int = 1,
-                          metric: String = "cosine"): DataFrame =
+  def searchSpill(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
+                  qv: Array[Float], idCol: String, vecCol: String,
+                  k: Int, nProbe: Int = 1, metric: String = "cosine"): DataFrame =
     probed(assigned, centers, qv, nProbe)
       .select(col(idCol), VectorSearch.scoreCol(metric, vecCol, qv).as("score"))
       .groupBy(col(idCol)).agg(max(col("score")).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
-
-  /** One-call convenience: build + probe. */
-  def ivfKnn(emb: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
-             k: Int, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val (model, assigned) = build(emb, vecCol, nCentroids)
-    search(assigned, model, qv, idCol, vecCol, k, nProbe)
-  }
-
-  // Build-once cache: an IVF index is a one-off batch build reused
-  // across queries (at 100 TB: centroids in the metastore, assignment
-  // written partitionBy(cluster) — see Stress). Keyed by (session,
-  // dataset key) so a stopped session's cached plans are never reused.
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, (KMeansModel, DataFrame)]()
-
-  /**
-   * Probe through the per-dataset cached index: the first call pays
-   * the k-means build and pins the assigned table; every subsequent
-   * call is the partition-pruned probe only — the same build-once/
-   * probe-many split the reference makes between POST /index and
-   * POST /search.
-   */
-  def ivfKnnCached(emb: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
-                   k: Int, cacheKey: String, nCentroids: Int = 16,
-                   nProbe: Int = 4): DataFrame = {
-    val key = s"${System.identityHashCode(emb.sparkSession)}|$cacheKey|$nCentroids"
-    val (model, assigned) = built.computeIfAbsent(key, _ => {
-      val (m, a) = build(emb, vecCol, nCentroids)
-      (m, a.persist())
-    })
-    search(assigned, model, qv, idCol, vecCol, k, nProbe)
-  }
 }

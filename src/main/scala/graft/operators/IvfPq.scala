@@ -41,17 +41,11 @@ object IvfPq {
                    books: PqIndex.Codebooks,
                    encoded: DataFrame)
 
-  private def centroidFrame(spark: SparkSession,
-                            centers: Seq[(Int, Array[Double])]): DataFrame = {
-    import spark.implicits._
-    centers.map { case (i, c) => (i, c.toSeq) }.toDF("cluster", "centroid")
-  }
-
   /** residual = v - centroid(cluster), elementwise in double — the
     * same two-step (cast, then subtract) the oracle replays. */
   private def withResidual(assigned: DataFrame, vecCol: String,
                            centers: Seq[(Int, Array[Double])]): DataFrame =
-    assigned.join(broadcast(centroidFrame(assigned.sparkSession, centers)), "cluster")
+    assigned.join(broadcast(IvfIndex.centroidFrame(assigned.sparkSession, centers)), "cluster")
       .withColumn("residual",
         zip_with(col(vecCol).cast("array<double>"), col("centroid"), (x, y) => x - y))
       .drop("centroid")
@@ -161,7 +155,7 @@ object IvfPq {
     }.toSeq
     val union = pairs.map(_._2).distinct
     val luts = pairs.toDF("query_id", "cluster")
-      .join(centroidFrame(spark, idx.centers), "cluster")
+      .join(IvfIndex.centroidFrame(spark, idx.centers), "cluster")
       .join(queries.select(col("query_id"), qvecCol(normalized).as("qvec")), "query_id")
       .withColumn("__qres",
         zip_with(col("qvec").cast("array<double>"), col("centroid"), (x, y) => x - y))
@@ -230,7 +224,7 @@ object IvfPq {
     }.toSeq
     val union = pairs.map(_._2).distinct
     val luts = pairs.toDF("query_id", "cluster", "probe_rank")
-      .join(centroidFrame(spark, idx.centers), "cluster")
+      .join(IvfIndex.centroidFrame(spark, idx.centers), "cluster")
       .join(queries.select(col("query_id"), qvecCol(normalized).as("qvec")), "query_id")
       .withColumn("__qres",
         zip_with(col("qvec").cast("array<double>"), col("centroid"), (x, y) => x - y))
@@ -261,7 +255,7 @@ object IvfPq {
       .select(expr("query_id DIV 1000").as("query_id"),
         pmod(col("query_id"), lit(1000L)).cast("int").as("n_probe"), col(idCol))
     val exact = VectorSearch
-      .knnBatchGeneric(idx.encoded.select(col(idCol), col(vecCol)),
+      .knnBatch(idx.encoded.select(col(idCol), col(vecCol)),
         queries, idCol, vecCol, k, metric)
       .select(col("query_id"), col(idCol))
     val hits = approx.join(exact, Seq("query_id", idCol))
@@ -286,7 +280,6 @@ object IvfPq {
    */
   def writeIndex(idx: Index, path: String): Unit = {
     val spark = idx.encoded.sparkSession
-    import spark.implicits._
     // Sort cells by the id column too (first column by construction):
     // row-group min/max stats then make the phase-2 In-filter fetch a
     // point read instead of a cell scan.
@@ -295,11 +288,9 @@ object IvfPq {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("cluster").parquet(s"$path/encoded")
-    centroidFrame(spark, idx.centers)
+    IvfIndex.centroidFrame(spark, idx.centers)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    idx.books.flatMap { case (s, words) =>
-      words.map { case (j, c) => (s, j, c.toSeq) }
-    }.toDF("s", "j", "codeword")
+    PqIndex.booksFrame(spark, idx.books, BookWord)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
   }
 
@@ -313,13 +304,14 @@ object IvfPq {
         spark.read.parquet(s"$path/encoded")),
       qv, idCol, vecCol, k, nProbe, metric, rerankFactor, normalized)
 
+  /** The word column of an IVF-PQ codebook sidecar. */
+  val BookWord = "codeword"
+
   /** The tiny side tables of a written index. */
-  def readCenters(spark: SparkSession, path: String,
-                  sidecarSuffix: String = ""): Seq[(Int, Array[Double])] =
-    IvfIndex.readCentroids(spark, s"$path/centroids$sidecarSuffix")
-  def readBooks(spark: SparkSession, path: String,
-                sidecarSuffix: String = ""): PqIndex.Codebooks =
-    PqIndex.readBooks(spark, s"$path/books$sidecarSuffix", "codeword")
+  def readCenters(spark: SparkSession, path: String): Seq[(Int, Array[Double])] =
+    IvfIndex.readCentroids(spark, s"$path/centroids")
+  def readBooks(spark: SparkSession, path: String): PqIndex.Codebooks =
+    PqIndex.readBooks(spark, s"$path/books", BookWord)
 
   /** Assign rows to EXISTING centroids and encode under EXISTING
     * codebooks — the frozen-geometry append path of an inverted file

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
 
@@ -39,10 +39,18 @@ object PqIndex {
     * ordered by j. */
   type Codebooks = Seq[(Int, Seq[(Int, Array[Double])])]
 
+  /** The codebook sidecar's rows: (s, j, `wordCol`) — subspace,
+    * codeword index, codeword. */
+  def booksFrame(spark: SparkSession, books: Codebooks, wordCol: String): DataFrame = {
+    import spark.implicits._
+    books.flatMap { case (s, ws) => ws.map { case (j, c) => (s, j, c.toSeq) } }
+      .toDF("s", "j", wordCol)
+  }
+
   /** The codebook sidecar at `dir` — rows (s, j, `wordCol`): subspace,
     * codeword index, codeword — grouped per subspace in index order.
     * Read with its schema given: one job, no schema-inference job. */
-  def readBooks(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def readBooks(spark: SparkSession, dir: String,
                 wordCol: String): Codebooks =
     spark.read.schema(new StructType().add("s", IntegerType)
         .add("j", IntegerType).add(wordCol, ArrayType(DoubleType)))

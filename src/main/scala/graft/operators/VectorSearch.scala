@@ -1,10 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftFunctions._
-import graft.functions.TopKBuffer
 
 /**
  * k-NN search operators — the Spark re-expression of the reference's
@@ -61,88 +59,15 @@ object VectorSearch {
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
 
-  /**
-   * Batched exact top-k: one result group per query row. Queries are
-   * broadcast; ranking via window at test scale (scale path: partial
-   * top-k aggregate, SURVEY.md paragraph 4).
-   */
-  def knnBatch(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-               k: Int, metric: String): DataFrame = {
-    val scored = corpus.join(broadcast(queries))
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id").asc, col("rank").asc)
-  }
-
   /** Batch exact k-NN for arbitrary id types: broadcast queries over
     * one corpus scan, per-query bounded top-k (native heap aggregate
     * for long ids, a rank window over the scored rows otherwise). */
-  def knnBatchGeneric(corpus: DataFrame, queries: DataFrame, idCol: String,
-                      vecCol: String, k: Int, metric: String = "cosine"): DataFrame = {
+  def knnBatch(corpus: DataFrame, queries: DataFrame, idCol: String,
+               vecCol: String, k: Int, metric: String = "cosine"): DataFrame = {
     val scored = corpus.join(broadcast(queries))
       .select(col("query_id"), col(idCol),
         round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
     finishPerQueryTopK(scored, idCol, k)
-  }
-
-  /**
-   * Fused batched top-k: one corpus pass with |queries| bounded heaps
-   * per partition (mapPartitions — justified as the last-resort tier
-   * of SURVEY.md's preference order because the per-row fan-out to
-   * every query cannot be expressed without materializing the
-   * |corpus| x |queries| cross product). Partials are k rows per
-   * (query x partition); the global merge is a tiny native top-k
-   * aggregate. Output contract identical to knnBatch/knnBatchGeneric.
-   */
-  def knnBatchFused(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-                    k: Int, metric: String): DataFrame = {
-    import graft.functions.VectorOps
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    val kernel: (Array[Double], Array[Double]) => Double = metric match {
-      case "cosine"      => VectorOps.cosineArr
-      case "dot_product" => VectorOps.dotArr
-      case "euclidean"   => (a, b) => 1.0 / (1.0 + VectorOps.l2Arr(a, b))
-      case "manhattan"   => (a, b) => 1.0 / (1.0 + VectorOps.l1Arr(a, b))
-      case other         => throw new IllegalArgumentException(s"unknown metric: $other")
-    }
-    val bc = spark.sparkContext.broadcast((qIds, qVecs))
-
-    val partials = corpus
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val (ids, vecs) = bc.value
-        val heaps = Array.fill(ids.length)(new TopKBuffer(k))
-        it.foreach { case (rowId, fv) =>
-          val dv = new Array[Double](fv.length)
-          var j = 0
-          while (j < fv.length) { dv(j) = fv(j); j += 1 }
-          var q = 0
-          while (q < ids.length) {
-            heaps(q).insert(rowId, VectorOps.roundTo(kernel(dv, vecs(q)), 6))
-            q += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          h.sortedDesc.map { case (id, s) => (ids(q), id, s) }
-        }
-      }
-      .toDF("query_id", "id", "score")
-
-    partials.groupBy(col("query_id"))
-      .agg(graft.GraftFunctions.topKAgg(col("id"), col("score"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("r0", "pair")))
-      .select(col("query_id"), col("pair.id").as(idCol), col("pair.score").as("score"),
-        (col("r0") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id").asc, col("rank").asc)
   }
 
   /**
@@ -942,7 +867,7 @@ object VectorSearch {
     val approx = finishPerQueryTopK(atFactor, idCol, k, ordered = false)
       .select(expr("query_id DIV 1000").as("query_id"),
         pmod(col("query_id"), lit(1000L)).cast("int").as("factor"), col(idCol))
-    val exact = knnBatchGeneric(indexed.select(col(idCol), col(vecCol)),
+    val exact = knnBatch(indexed.select(col(idCol), col(vecCol)),
       queries, idCol, vecCol, k, metric)
       .select(col("query_id"), col(idCol))
     val hits = approx.join(exact, Seq("query_id", idCol))

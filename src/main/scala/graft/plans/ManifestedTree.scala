@@ -59,7 +59,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
  * commit time back to the oldest of the newest
  * [[ManifestedTree.KeepFulls]] full snapshots — the previous full is
  * the in-flight readers' grace chain, the deeper ones are the
- * restore/epoch horizon (`spark.graft.manifestKeepFulls` overrides).
+ * restore/epoch horizon.
  *
  * Lifecycle contract (single mutating writer, many readers — the COW
  * discipline the library already assumes; see [[graft.WriterLock]]):
@@ -384,9 +384,8 @@ final class ManifestedTree(
 
   /** Remove manifest generations older than the oldest RETAINED full
     * snapshot. Retention is structural and bounded: the newest
-    * [[ManifestedTree.KeepFulls]] fulls (configurable via
-    * `spark.graft.manifestKeepFulls`, floor 2 — the previous full is
-    * always the in-flight readers' grace chain) plus every delta
+    * [[ManifestedTree.KeepFulls]] fulls (the previous full is always
+    * the in-flight readers' grace chain) plus every delta
     * after the oldest kept full stay on disk; anything older is
     * unreachable by any live resolve. This window IS the
     * restore/epoch horizon: KeepFulls×[[ManifestedTree.RebaseEvery]]
@@ -406,17 +405,7 @@ final class ManifestedTree(
     gensCache = None
     val fulls = files.collect { case (g, true, _) => g }.sorted
     if (fulls.isEmpty) return
-    // defensive parse: a malformed conf value must degrade to the
-    // default (loudly), not turn every subsequent commit on every tree
-    // into a NumberFormatException write outage
-    val keepFulls = math.max(2,
-      scala.util.Try(spark.conf.get("spark.graft.manifestKeepFulls",
-        ManifestedTree.KeepFulls.toString).toInt).getOrElse {
-        System.err.println("[manifest] spark.graft.manifestKeepFulls is " +
-          "not an int — using default " + ManifestedTree.KeepFulls)
-        ManifestedTree.KeepFulls
-      })
-    val keepFrom = fulls.takeRight(keepFulls).head
+    val keepFrom = fulls.takeRight(ManifestedTree.KeepFulls).head
     files.foreach { case (g, _, p) => if (g < keepFrom) fs.delete(p, false) }
     // A cached openAt frame for a pruned generation would keep serving
     // (then fail at SCAN time with missing files once vacuum collects
@@ -944,9 +933,9 @@ object ManifestedTree {
     * rewriting an O(tree) manifest every batch. */
   val RebaseEvery = 16
 
-  /** Full snapshots retained at prune time (override with
-    * `spark.graft.manifestKeepFulls`, floor 2): the structural
-    * restore/epoch horizon. 4 fulls ≈ 48–64 steady-state commits
+  /** Full snapshots retained at prune time (at least 2: the previous
+    * full is the readers' grace chain): the structural restore/epoch
+    * horizon. 4 fulls ≈ 48–64 steady-state commits
     * deep, and survives the routine maintenance mix (compact +
     * restore are full commits that each consume a slot) with room
     * for a reader pinned before all of it. The cost is a handful of

@@ -222,7 +222,7 @@ class CurationSpec extends AnyFunSuite {
     // depth-4 recall must equal the recall of the actual depth-4 probe
     val probed = IvfPq.searchBatch(idx, qs, "vec_id", "embedding", 10, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = VectorSearch.knnBatchGeneric(corpus, qs, "vec_id", "embedding",
+    val exact = VectorSearch.knnBatch(corpus, qs, "vec_id", "embedding",
       10, "euclidean").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantAt4 = qs.collect().map(_.getLong(0)).map { qid =>
       qid -> (probed.filter(_._1 == qid).map(_._2)

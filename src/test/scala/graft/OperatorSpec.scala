@@ -1094,7 +1094,7 @@ class OperatorSpec extends AnyFunSuite {
         s"recall not monotone for query $q")
     }
     // the deepest depth's recall equals a direct probe-vs-exact count
-    val probed = IvfIndex.searchBatch(assigned, model, qs, "vec_id", "embedding",
+    val probed = IvfIndex.searchBatch(assigned, centers, qs, "vec_id", "embedding",
       10, nProbe = 4).collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     val exact = VectorSearch.knnBatch(corpus, qs, "vec_id", "embedding", 10,
       "cosine").collect().map(x => (x.getLong(0), x.getLong(1))).toSet

@@ -55,7 +55,17 @@ class ScalePathSpec extends AnyFunSuite {
     val qs = e2.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val corpus = e2.filter(col("vec_id") >= 3)
-    def run() = VectorSearch.knnBatch(corpus, qs, "vec_id", "embedding", 5, "cosine")
+    // the rank-window top-k: per query, the 5 best by score, id tie-break
+    def run() = {
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+        .orderBy(col("score").desc, col("vec_id").asc)
+      corpus.join(broadcast(qs))
+        .select(col("query_id"), col("vec_id"),
+          round(VectorSearch.similarity("cosine", col("embedding"), col("qvec")), 6).as("score"))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= 5)
+        .orderBy(col("query_id").asc, col("rank").asc)
+    }
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
 
@@ -68,7 +78,7 @@ class ScalePathSpec extends AnyFunSuite {
 
     s2.conf.set("spark.graft.topk.rewrite", "off")
     val exp = rows(run())
-    assert(got.sameElements(exp), "rewrite changed knnBatch results")
+    assert(got.sameElements(exp), "rewrite changed the window top-k results")
   }
 
   test("topk rewrite leaves non-matching window queries untouched") {
@@ -204,13 +214,14 @@ class ScalePathSpec extends AnyFunSuite {
     val exact = VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine")
       .collect().map(_.getLong(0))
 
-    // Same seed → same centroids: the only difference is the boundary
+    // Same centroids: the only difference is the boundary
     // replication, so any recall delta is attributable to the spill.
-    val (m0, a0) = IvfIndex.build(corpus, "embedding", 16)
-    val plain = IvfIndex.search(a0, m0, q, "vec_id", "embedding", 10, nProbe = 1)
+    val (model, a0) = IvfIndex.build(corpus, "embedding", 16)
+    val centers = IvfIndex.centersOf(model)
+    val plain = IvfIndex.search(a0, centers, q, "vec_id", "embedding", 10, nProbe = 1)
       .collect().map(_.getLong(0))
-    val (m1, a1) = IvfIndex.buildSpill(corpus, "embedding", 16, spillFactor = 1.3)
-    val spill = IvfIndex.searchSpill(a1, m1, q, "vec_id", "embedding", 10, nProbe = 1)
+    val a1 = IvfIndex.spillAssign(corpus, "embedding", centers, 1.3, 2)
+    val spill = IvfIndex.searchSpill(a1, centers, q, "vec_id", "embedding", 10, nProbe = 1)
       .collect().map(_.getLong(0))
 
     assert(spill.distinct.length == spill.length, "replicated rows not deduplicated")
@@ -321,8 +332,9 @@ class ScalePathSpec extends AnyFunSuite {
     val q = QueryVectors.of(emb, 0)
     val exact = VectorSearch.knnFlat(corpus, q, "vec_id", "embedding", 10, "cosine")
       .collect().map(_.getLong(0)).toSet
-    val ivf = IvfIndex.ivfKnn(corpus, q, "vec_id", "embedding", 10)
-      .collect().map(_.getLong(0))
+    val (model, assigned) = IvfIndex.build(corpus, "embedding")
+    val ivf = IvfIndex.search(assigned, IvfIndex.centersOf(model), q,
+      "vec_id", "embedding", 10).collect().map(_.getLong(0))
     val recall = ivf.count(exact).toDouble / exact.size
     assert(recall >= 0.5, s"ivf recall@10=$recall")
   }
@@ -726,24 +738,5 @@ class ScalePathSpec extends AnyFunSuite {
       "SELECT id FROM scale_scan_narrow WHERE id > (SELECT avg(id) FROM range(10))")
     assert(scaleScan(subq) eq subq,
       "plans with a subquery expression must pass through un-probed")
-  }
-
-  test("ivfKnnCached: build once, probes reuse the pinned assignment") {
-    val corpus = emb.filter(col("vec_id") =!= 0)
-    val q = QueryVectors.of(emb, 0)
-    val key = "spec-ivf-cache"
-    val d1 = IvfIndex.ivfKnnCached(corpus, q, "vec_id", "embedding", 10, key)
-    val d2 = IvfIndex.ivfKnnCached(corpus, q, "vec_id", "embedding", 10, key)
-    assert(d1.collect().map(_.getLong(0)).sameElements(d2.collect().map(_.getLong(0))))
-    // the second call plans over the SAME persisted assignment the
-    // first call pinned: a rebuild would persist a fresh frame and
-    // plan over a different cache entry
-    def cached(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.withCachedData.collect {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m.cacheBuilder
-      }
-    assert(cached(d2).nonEmpty, "cached probe does not read the pinned assignment")
-    assert(cached(d2).forall(b => cached(d1).exists(_ eq b)),
-      "second ivfKnnCached call rebuilt the assignment instead of reusing it")
   }
 }

@@ -771,6 +771,82 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.delete()
   }
 
+  test("index builds write each layout's sidecars at its head generation, with exact schemas, and record every param") {
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("graft-lib-buildout").toString
+    val lib = new VectorLibrary(spark, root, "buildout-lib")
+    // a fitted layout has nothing to fit on an empty library
+    Seq[() => Unit](() => lib.buildIvfIndex(), () => lib.buildGridIndex(),
+      () => lib.buildPqIndex(), () => lib.buildIvfPqIndex())
+      .foreach(build => intercept[IllegalArgumentException](build()))
+    lib.addDocuments(Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60))
+    lib.buildPartitionedIndex(); lib.buildIvfIndex(nCentroids = 4)
+    lib.buildGridIndex(gridDims = 3, cellsPerDim = 5)
+    lib.buildPqIndex(m = 2, kk = 8); lib.buildIvfPqIndex(nCentroids = 5, m = 4, kk = 6)
+    val dir = s"$root/buildout-lib"
+    val heads = lib.manifestInfo.collect()
+      .map(r => r.getAs[String]("tree") -> r.getAs[Long]("generation")).toMap
+    def schema(fields: (String, DataType)*) =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    val centroids = schema("cluster" -> IntegerType, "centroid" -> ArrayType(DoubleType))
+    val stats = schema("n" -> LongType, "mean_sq_dist" -> DoubleType)
+    def books(word: String) =
+      schema("s" -> IntegerType, "j" -> IntegerType, word -> ArrayType(DoubleType))
+    val sidecars = Map(
+      "grid" -> Map("bounds" -> schema("d" -> IntegerType, "lo" -> DoubleType,
+        "hi" -> DoubleType, "cells_per_dim" -> IntegerType)),
+      "ivf" -> Map("centroids" -> centroids, "stats" -> stats),
+      "pq" -> Map("books" -> books("c")),
+      "ivfpq" -> Map("centroids" -> centroids, "books" -> books("codeword"), "stats" -> stats))
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("lsh", "ivf", "grid", "pq", "ivfpq").foreach { l =>
+      val layoutDir = s"$dir/${l}_index"
+      val written = fs.listStatus(new org.apache.hadoop.fs.Path(layoutDir))
+        .map(_.getPath.getName).filter(_.contains(".g")).toSet
+      val want = sidecars.getOrElse(l, Map.empty[String, StructType])
+      assert(written == want.keySet.map(b => f"$b.g${heads(l)}%09d"),
+        s"$l sidecars $written, expected ${want.keySet} at generation ${heads(l)}")
+      want.foreach { case (base, expected) =>
+        val got = spark.read.parquet(f"$layoutDir/$base.g${heads(l)}%09d").schema
+        assert(got == expected, s"$l $base schema $got")
+      }
+    }
+    val params = Map("ivf_centroids" -> "4", "grid_dims" -> "3", "grid_cells_per_dim" -> "5",
+      "pq_m" -> "2", "pq_k" -> "8", "ivfpq_ncentroids" -> "5", "ivfpq_m" -> "4", "ivfpq_k" -> "6")
+    assert(lib.metadata.filter { case (k, _) => params.contains(k) } == params, lib.metadata.toString)
+    lib.delete()
+  }
+
+  test("a copy-on-write delete keeps the column order of every tree's files") {
+    import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, root) = fiveLayoutLibrary("colorder", docs)
+    val dir = s"$root/colorder-lib"
+    val trees = Seq[(String, Seq[(String, DataType)])](
+      "chunks" -> Seq("source" -> StringType),
+      "lsh_index" -> Seq("tbl" -> IntegerType, "bucket" -> IntegerType),
+      "ivf_index/assigned" -> Seq("cluster" -> IntegerType),
+      "grid_index/cells" -> Seq("cell" -> StringType),
+      "pq_index/codes" -> Seq("source" -> StringType),
+      "ivfpq_index/encoded" -> Seq("cluster" -> IntegerType))
+    /** Per tree: its live files, and the column orders their footers hold. */
+    def layout(): Map[String, (Set[String], Set[Seq[String]])] = trees.map { case (t, parts) =>
+      val files = new graft.plans.ManifestedTree(spark, s"$dir/$t",
+        StructType(parts.map { case (n, d) => StructField(n, d) })).readManifest().get.map(_._1)
+      t -> ((files.toSet, files.map(f => graft.plans.ManifestFileIndex
+        .footerSchema(spark, s"$dir/$t/$f").fieldNames.toSeq).toSet))
+    }.toMap
+    val before = layout()
+    assert(before.values.forall(_._2.size == 1), s"mixed column orders before the delete: $before")
+    lib.deleteDocuments(col("doc_id") === docs.select(min(col("doc_id"))).head.getLong(0))
+    val after = layout()
+    trees.foreach { case (t, _) =>
+      assert(after(t)._1 != before(t)._1, s"$t rewrote no file")
+      assert(after(t)._2 == before(t)._2, s"$t column orders ${before(t)._2} -> ${after(t)._2}")
+    }
+    lib.delete()
+  }
+
   test("single searches: exact job counts per algorithm, and no plan broadcasts") {
     import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
