@@ -83,9 +83,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // the next epoch with no manual [[repairIndexes]] call.
   private val TreeOrder = Seq("store", "grid", "ivf", "ivfpq", "lsh", "pq")
   // Lease files live under `_locks/<tree>/`, NOT inside the tree
-  // roots: WriterLock's acquire mkdirs its root, and a bare-existence
-  // probe like appendBatch's indexDirExists would read a lock-created
-  // lsh_index/ as "the user built an index here".
+  // roots: WriterLock's acquire mkdirs its root, and a dropped
+  // layout's directory delete must not take a held lease with it.
   private lazy val treeLocks: Map[String, WriterLock] =
     epochTrees.map { case (n, _) =>
       n -> new WriterLock(hadoopFs(root), s"$root/$name/_locks/$n", leaseMsConf)
@@ -186,30 +185,14 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private def withTreeLocks[T](footprint: Seq[String])(body: => T): T =
     withLeases(footprint)(enterFrame(body))
 
-  /** True when `p` exists AND holds at least one visible (non-hidden,
-    * non-marker) entry. A directory can exist yet be dataless — e.g.
-    * after a copy-on-write delete removed every partition — and such a
-    * directory must never reach schema inference.
-    *
-    * Memoized ONE-DIRECTIONALLY: only `true` is cached (dropped with
-    * the other serving caches — [[invalidateIndexes]]). A `false` is
-    * never cached, so an empty→nonempty transition inside a single
-    * mutation (first ingest writes the store, then reads [[chunks]]
-    * before the end-of-mutation invalidate) can never be masked; the
-    * penalty is that only EMPTY trees keep paying the listing, and a
-    * library is empty only until its first commit. true→false happens
-    * only via drops/COW-delete-everything, which clear the cache. */
-  private def hasVisibleData(p: String): Boolean =
-    visibleCache.contains(p) || {
-      val fs = hadoopFs(p)
-      val hp = new org.apache.hadoop.fs.Path(p)
-      resolveListCount += 1
-      val vis = fs.exists(hp) && fs.listStatus(hp).exists { st =>
-        val n = st.getPath.getName; !n.startsWith("_") && !n.startsWith(".")
-      }
-      if (vis) visibleCache.put(p, ())
-      vis
-    }
+  /** True when `tree` has a committed manifest generation — the one
+    * presence rule of the store and every layout. A tree without one is
+    * empty, whatever files sit under its root (a crashed first write's
+    * orphans). The resolved chain is memoized by the tree until its
+    * next commit or [[invalidateIndexes]]; an empty tree is never
+    * memoized, so its first commit shows at once. */
+  private def committed(tree: graft.plans.ManifestedTree): Boolean =
+    tree.readManifest().isDefined
 
   // --- persisted library metadata ------------------------------------
   // The reference keeps LibraryMetadata (description/created_at/
@@ -321,20 +304,22 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   // --- serving-resolution memo ---------------------------------------
   // Every filesystem fact a SEARCH resolves per call — the sidecar
-  // generation listing under each geometry base, the loaded geometry
-  // itself (keyed by the RESOLVED sidecar suffix, so an epoch-pinned
-  // searchAt and a head search that land on the same sidecar share
-  // one load), tree non-emptiness, and the per-generation facts of
-  // [[memoAt]] — cached between mutations. On an object store each
-  // uncached search otherwise pays 1-2 LISTs + 1-2 GETs of pure
-  // latency (r11 verdict "What's wrong #3"). Dropped together by
-  // [[invalidateIndexes]] from every path that changes what
-  // resolution would answer: every ingest/delete/restore/repair,
-  // sweepOrphanGeom + vacuumGeometry (sidecar deletes),
-  // installRebuild (new sidecar generation), and the index drops.
+  // generation listing under each geometry base and each tree's
+  // generation chain — is cached between mutations and dropped by
+  // [[invalidateIndexes]] from every path that changes what resolution
+  // would answer: every ingest/delete/restore/repair, sweepOrphanGeom
+  // + vacuumGeometry (sidecar deletes), installRebuild (new sidecar
+  // generation), and the index drops. On an object store each uncached
+  // search otherwise pays 1-2 LISTs + 1-2 GETs of pure latency.
   // Cross-instance staleness: another writer's commit is seen at this
   // instance's next own mutation, the documented multi-writer read
   // contract.
+  // Facts keyed by something immutable survive mutations: the loaded
+  // geometry (keyed by the RESOLVED sidecar, so an epoch-pinned
+  // searchAt and a head search that land on the same sidecar share one
+  // load) and the per-generation facts of [[memoAt]]. Only a drop
+  // ([[dropLayout]], [[delete]]) forgets them: a rebuilt tree restarts
+  // at generation 1 and its sidecars reuse the dropped ones' names.
   // TrieMaps, not mutable.HashMap: a reader thread may be serving
   // search() while a writer thread's mutation clears these (the
   // streaming foreachBatch + concurrent-reader shape) — concurrent
@@ -342,43 +327,41 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // TrieMap makes every race benign (worst case: one duplicated load).
   private val geomGensCache = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
   private val geomLoadCache = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-  private val visibleCache = scala.collection.concurrent.TrieMap.empty[String, Unit]
-  private val genMemo = scala.collection.concurrent.TrieMap.empty[(String, Long), Any]
+  private val genMemo = scala.collection.concurrent.TrieMap.empty[String, (Long, Any)]
   /** Load-once fact about generation `gen` of tree `tree` — store
     * emptiness, grid cell occupancy. Head and epoch-pinned searches
-    * resolving the same generation share one entry. */
+    * resolving the same generation share one entry. One entry per
+    * tree, for the newest generation asked: a pinned search of an
+    * older generation loads its fact without evicting the head's. */
   private def memoAt[T](tree: String, gen: Long)(load: => T): T =
-    genMemo.getOrElseUpdate((tree, gen), load).asInstanceOf[T]
+    genMemo.get(tree) match {
+      case Some((g, v)) if g == gen => v.asInstanceOf[T]
+      case held =>
+        val v = load
+        if (held.forall(_._1 < gen)) genMemo.put(tree, (gen, v))
+        v
+    }
   /** Test probe: filesystem LISTs issued by serving resolution (cache
-    * misses in [[geomGens]]/[[hasVisibleData]]). A repeated search
-    * must not advance it. Plain var: the specs that read it are
-    * single-threaded; a torn count under races costs nothing. */
+    * misses in [[geomGens]]). A repeated search must not advance it.
+    * Plain var: the specs that read it are single-threaded; a torn
+    * count under races costs nothing. */
   private[graft] var resolveListCount: Long = 0L
   /** Test probe: TOTAL filesystem LISTs serving resolution has issued
-    * for this library — sidecar-generation listings, tree-emptiness
-    * probes, and each tree's manifest-generation listings. A repeated
-    * search()/searchAt() must leave it unchanged. */
+    * for this library — sidecar-generation listings and each tree's
+    * manifest-generation listings. A repeated search()/searchAt() must
+    * leave it unchanged. */
   private[graft] def servingListCount: Long =
     resolveListCount + epochTrees.map(_._2.genListCount).sum
 
-  /** Drop every serving memo. Tree-level memos (generation listings,
-    * head + pinned frames) drop for ALL trees, not just the
-    * mutation's footprint: a footprint-scoped maintenance loop (only
-    * ever rebuilding pq) must still adopt another instance's commits
-    * to the OTHER trees at its next own mutation — the documented
-    * multi-writer read contract ("stale until this instance next
-    * mutates"). */
+  /** Drop the memos of what the filesystem LISTS — generation
+    * listings, sidecar listings, tree chains and frames — for ALL
+    * trees, not just the mutation's footprint: a footprint-scoped
+    * maintenance loop (only ever rebuilding pq) must still adopt
+    * another instance's commits to the OTHER trees at its next own
+    * mutation — the documented multi-writer read contract ("stale
+    * until this instance next mutates"). */
   private[graft] def invalidateIndexes(): Unit = {
-    relist()
-    geomLoadCache.clear(); genMemo.clear(); epochInfoCache.clear()
-  }
-
-  /** Drop only the memos of what the filesystem LISTS — generation
-    * listings, sidecar listings, tree non-emptiness, tree frames.
-    * Loaded geometry stays: it is keyed by the resolved sidecar, whose
-    * content never changes. */
-  private def relist(): Unit = {
-    geomGensCache.clear(); visibleCache.clear()
+    geomGensCache.clear(); epochInfoCache.clear()
     epochTrees.foreach(_._2.invalidate())
   }
 
@@ -400,10 +383,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** Append an embedded+indexed batch to the store and, for each
     * on-disk index present, its derived rows to that index — ingest
-    * stays incremental, indexes never rebuild on append (short of the
-    * schema migrations in [[appendLayouts]]). The store commits first;
-    * the layouts then append concurrently, each to its own tree
-    * ([[appendLayouts]], [[fanOut]]). */
+    * stays incremental, indexes never rebuild on append. The store
+    * commits first; the layouts then append concurrently, each to its
+    * own tree ([[appendLayouts]], [[fanOut]]). */
   private def appendBatch(batch0: DataFrame): Unit = withWriterLock {
     // Cluster store files by doc_id: parquet keeps per-row-group
     // min/max stats, so a doc_id predicate (documentChunks, targeted
@@ -413,7 +395,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // (the store manifest commit's touched-dir resolution counts as one)
     val b = batch0.sortWithinPartitions(col("source"), col("doc_id")).persist()
     storeTree.appendCommitted(b, 0L)
-    appendLayouts(b, layouts.filter(_.tracked))
+    appendLayouts(b, layouts.filter(_.present))
     b.unpersist()
     invalidateIndexes()
     touchMeta()
@@ -496,11 +478,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * returns no results, not an error), so every read path works
     * before the first write. */
   def chunks: DataFrame = {
-    // The directory can exist yet hold no data files (every source
-    // partition deleted copy-on-write): that must read as empty too,
-    // not fail schema inference. One listStatus — same FS round-trip
-    // cost as the plain exists check it replaces.
-    if (hasVisibleData(path))
+    if (committed(storeTree))
       storeTree.open()
     else {
       import org.apache.spark.sql.types._
@@ -556,10 +534,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** True when `f` resolves against `df`'s schema — i.e. the predicate
     * can be applied to an index layout's own rows. Checked by ANALYZING
-    * the filter over a zero-row projection (no data is read). Old
-    * layouts written before metadata rode in index rows fail this and
-    * route like an absent layout (correct, just less pruned;
-    * rebuilding the index upgrades them). */
+    * the filter over a zero-row projection (no data is read). Layout
+    * rows carry doc_id, source and n_tokens but not chunk_idx or
+    * chunk_text: a filter on those fails this and routes like an
+    * absent layout (correct, just less pruned). */
   private def covers(df: DataFrame, f: Column): Boolean =
     try { df.limit(0).where(f).queryExecution.analyzed; true }
     catch { case _: org.apache.spark.sql.AnalysisException => false }
@@ -629,16 +607,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       qv => VectorSearch.knnQuantizedIndexed(store, qv, "chunk_id", "embedding", "quant", kk, metric),
       qs => VectorSearch.knnQuantizedBatch(store, qs, "chunk_id", "embedding", "quant", kk, metric))
     /** 1-bit rung: Hamming phase 1 over the stored packed-sign column
-      * (8 bytes/row at 64 dims), exact re-rank. A store predating the
-      * bits column (schema-evolution guard) packs on the fly. */
-    def binary(store: DataFrame): DataFrame = {
-      val coded =
-        if (store.columns.contains("bits")) store
-        else vecs(store).withColumn("bits", bitPack(col("embedding")))
-      q.fold(
-        qv => VectorSearch.knnBinaryIndexed(coded, qv, "chunk_id", "embedding", "bits", kk, metric),
-        qs => VectorSearch.knnBinaryBatch(coded, qs, "chunk_id", "embedding", "bits", kk, metric))
-    }
+      * (8 bytes/row at 64 dims), exact re-rank. */
+    def binary(store: DataFrame): DataFrame = q.fold(
+      qv => VectorSearch.knnBinaryIndexed(store, qv, "chunk_id", "embedding", "bits", kk, metric),
+      qs => VectorSearch.knnBinaryBatch(store, qs, "chunk_id", "embedding", "bits", kk, metric))
   }
 
   /**
@@ -646,8 +618,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * An algorithm backed by a persisted layout probes it when the
    * resolution holds one whose rows carry `filter`'s columns (the
    * predicate then applies inside the pruned scan). Otherwise — no
-   * layout, or a layout written before the metadata columns rode in
-   * its rows — it routes as a store-only library: lsh probes the
+   * layout, or a filter on columns layout rows do not carry
+   * ([[covers]]) — it routes as a store-only library: lsh probes the
    * store's bucket column, grid runs the expanding probe, and
    * ivf/pq/ivfpq answer with an exact scan, like flat. The fitted
    * algorithms (grid/ivf/pq/ivfpq) answer [] on a store with no
@@ -729,16 +701,16 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * once reading only the int8 `quant` codes (phase-1 ranking, ~1/4
    * the bytes of the float probe) and once reading floats for just the
    * rerankFactor*k phase-1 survivors (exact re-rank). Falls back to
-   * `searchApprox` when the partitioned index is absent or predates
-   * the codes column. Recall matches `searchApprox` whenever the int8
-   * ranking preserves the true top-k inside its rerank window.
+   * `searchApprox` when the partitioned index is absent or its rows do
+   * not carry the filter's columns. Recall matches `searchApprox`
+   * whenever the int8 ranking preserves the true top-k inside its
+   * rerank window.
    */
   def searchApproxQuantized(queryText: String, k: Int = 10,
                             rerankFactor: Int = 4,
                             metric: String = "cosine",
                             filter: Option[Column] = None): DataFrame = {
-    if (hasPartitionedIndex && partitionedIndex.columns.contains("quant")
-        && filter.forall(covers(partitionedIndex, _)))
+    if (hasPartitionedIndex && filter.forall(covers(partitionedIndex, _)))
       VectorSearch.lshKnnPartitionedQuantized(applyF(partitionedIndex, filter),
         queryVector(queryText),
         "chunk_id", "embedding", "quant", clampK(k), metric,
@@ -832,10 +804,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // (the classic LSH space/time trade); the chunk store remains the
   // source of truth and the index is derived, rebuildable data.
 
-  /** True when the partitioned index has been built AND holds data
-    * (a dataless directory cannot be probed — schema inference has
-    * nothing to read; the fallback column probe serves instead). */
-  def hasPartitionedIndex: Boolean = hasVisibleData(indexPath)
+  /** True when the partitioned index has been built. */
+  def hasPartitionedIndex: Boolean = lshLayout.present
 
   // --- derived-layout file manifests ----------------------------------
   // Every persisted index layout publishes its LIVE file set through
@@ -846,11 +816,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // and every install is a rename to a fresh generation file (atomic
   // commits with a reader grace chain — a crashed writer's orphans
   // are invisible by construction). The same commit discipline a lake
-  // table format applies, scoped to the derived layouts.
-  // Pre-manifest layouts read via listing (unchanged behavior) and are
-  // upgraded by the next mutation. Maintenance resolution scans
-  // (victim files, compaction occupancy) stay listing-based: they run
-  // under the single-writer discipline the COW design already assumes.
+  // table format applies, scoped to the derived layouts. A tree with
+  // no committed generation is empty: nothing reads its directory.
 
   // The STORE itself carries the same discipline — it is the biggest
   // tree of all, and the one a recovery re-derives everything from.
@@ -891,20 +858,14 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       * sidecar ([[geomLoad]]). */
     def geomAt(gen: Long): Geom
     final def headGeom: Geom = geomAt(headGenOf(tree))
-    /** Built and holding data: searches probe it. */
-    def present: Boolean = hasVisibleData(root)
-    /** Ingest keeps it current. */
-    def tracked: Boolean = present
+    /** Built (its tree has a committed generation): searches probe it
+      * and ingest keeps it current. */
+    final def present: Boolean = committed(tree)
     /** Rebuild from the store with the params `_library.json` records. */
     final def rebuild(meta: Map[String, String]): Unit =
       buildLayout(this, params.map { case (k, d) => meta.get(k).fold(d)(_.toInt) })
     /** A batch's rows under the frozen head geometry. */
     protected def rows(batch: DataFrame): DataFrame
-    /** Columns an append needs the stored rows to carry. */
-    protected def appendCols: Seq[String] = Nil
-    /** False when the stored rows predate [[appendCols]]. */
-    final def current: Boolean = appendCols.isEmpty || present &&
-      scala.util.Try(tree.open().columns).toOption.exists(cs => appendCols.forall(cs.contains))
     /** Append a batch's rows under the FROZEN head geometry, as one
       * manifest delta ([[appendLayouts]] swept orphan sidecars first). */
     final def appendFrozen(batch: DataFrame): Unit =
@@ -1029,25 +990,16 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** Append a batch to the layouts `ls` — the index half of every
     * ingest ([[appendBatch]], [[ingestStreamIndexed]]) and of the
     * repair and rebuild-skew heals. Each layout appends under its
-    * FROZEN geometry, unless its stored rows predate a column the
-    * batch carries ([[Layout.current]]): then it rebuilds from the
-    * (already appended) store instead, because a mixed-generation
-    * append would read old rows' codes/metadata as null, silently
-    * dropping them from a quantized phase 1 or a filtered search.
+    * FROZEN geometry.
     *
     * The orphan-sidecar sweeps (which must precede each tree's
-    * commit) and the `current` decisions run on the calling thread.
-    * The frozen appends then run concurrently ([[fanOut]]): one row
-    * job and one manifest delta per layout, each on its own tree, so
-    * an ingest pays the slowest layout's append instead of the sum.
-    * Rebuilds run last, on the calling thread: a rebuild re-enters
-    * the writer lease and its tree's lease, JVM monitors this thread
-    * holds, so on a pool thread it would block forever. */
+    * commit) run on the calling thread. The appends then run
+    * concurrently ([[fanOut]]): one row job and one manifest delta per
+    * layout, each on its own tree, so an ingest pays the slowest
+    * layout's append instead of the sum. */
   private def appendLayouts(batch: DataFrame, ls: Seq[Layout]): Unit = {
     ls.foreach(sweepOrphanGeom)
-    val (frozen, migrating) = ls.partition(_.current)
-    fanOut(frozen.map(l => () => l.appendFrozen(batch)))
-    migrating.foreach(_.rebuild(readMeta()))
+    fanOut(ls.map(l => () => l.appendFrozen(batch)))
   }
 
   /** Run `tasks` concurrently, one thread each; their results, in
@@ -1093,9 +1045,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       .map(r => s"${l.tree.root}/cluster=${r.getInt(0)}").toSeq
 
   /** Drop a layout's directory (search then routes as if it was never
-    * built — see [[route]]). */
+    * built — see [[route]]). Its generation facts and loaded geometry
+    * go too: a rebuild restarts at generation 1. */
   private def dropLayout(l: Layout): Unit = withTreeLocks(Seq(l.name)) {
     hadoopFs(l.dir).delete(new org.apache.hadoop.fs.Path(l.dir), true)
+    genMemo.remove(l.name)
+    geomLoadCache.keys.filter(_.startsWith(l.dir + "/")).foreach(geomLoadCache.remove)
     invalidateIndexes()
   }
 
@@ -1103,11 +1058,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       Seq("tbl", "bucket"), IntegerType, indexMaxRecordsPerFile) {
     type Geom = Unit
     def geomAt(gen: Long): Unit = ()
-    // a dataless directory (everything deleted copy-on-write) is
-    // still maintained: its append rebuilds
-    override def tracked: Boolean =
-      hadoopFs(indexPath).exists(new org.apache.hadoop.fs.Path(indexPath))
-    override protected def appendCols = Seq("quant", "source")
     def fit(store: DataFrame, p: Seq[Int]): (Unit, DataFrame) = ((), indexRows(store))
     protected def rows(batch: DataFrame): DataFrame = indexRows(batch)
     def victimDirs(victims: DataFrame): Seq[String] =
@@ -1225,9 +1175,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     val tmp = new Path(rootP.getParent, s".${rootP.getName}.rebuild_tmp").toString
     val fs = hadoopFs(treeRoot)
     fs.delete(new Path(tmp), true)
-    // pre-r11 rebuilds used a non-dotted sibling; clear a crash
-    // leftover from that era too
-    fs.delete(new Path(treeRoot + ".rebuild_tmp"), true)
     // FRESH head, not the memoized listing: the predicted generation
     // names the sidecar files, and a stale cache over another
     // instance's commit would number them onto an EXISTING generation
@@ -1238,6 +1185,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     val gen = math.max(tree.freshHeadGen(), 0L) + 1
     write(tmp, gen)
     val fresh = graft.plans.ManifestedTree.listTree(spark, tmp, None)
+    // rebuilding an empty tree from no rows leaves it empty: a commit
+    // of nothing would carry no schema record to open it by
+    if (fresh.isEmpty && !committed(tree)) { fs.delete(new Path(tmp), true); return }
     fresh.foreach { case (rel, _) =>
       val dst = new Path(s"$treeRoot/$rel")
       fs.mkdirs(dst.getParent)
@@ -1272,7 +1222,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // edge), and the staged sidecar would be renamed to the FOREIGN
     // generation: the rebuild's rows would silently decode under an
     // older geometry.
-    val committed = tree.commitReplaceAll(fresh)
+    val committedGen = tree.commitReplaceAll(fresh)
     // new sidecar generation + new tree head: resolution answers change
     invalidateIndexes()
     // If an interleaved commit advanced THIS tree between the gen
@@ -1282,13 +1232,13 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // actually committed at, so (a) the head decodes its fresh rows
     // under the fresh geometry and (b) the interleaved generation
     // keeps resolving the geometry ITS rows were encoded under.
-    if (committed != gen) {
+    if (committedGen != gen) {
       layout.toSeq.flatMap(_.geomBases).foreach { base =>
           val src = new Path(base + geomSuffix(gen))
           val gfs = hadoopFs(base)
-          if (!gfs.exists(src) || !gfs.rename(src, new Path(base + geomSuffix(committed))))
+          if (!gfs.exists(src) || !gfs.rename(src, new Path(base + geomSuffix(committedGen))))
             throw new IllegalStateException(s"rebuild of $treeRoot " +
-              s"committed at generation $committed (predicted $gen) and " +
+              s"committed at generation $committedGen (predicted $gen) and " +
               s"its staged geometry at $src is gone — an interleaved " +
               "writer swept it; re-run this index build")
       }
@@ -1354,10 +1304,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // generation listing (r12 memo), which may predate another
     // instance's rebuild; a stale head here would sweep that
     // rebuild's LIVE sidecar as an "orphan"
-    relist()
-    // headGenOf: a legacy data-bearing manifest-less tree reads as
-    // MaxValue (sweep nothing); a never-committed empty tree as -1
-    // (every suffixed sidecar is an orphan)
+    invalidateIndexes()
+    // a never-committed tree reads as -1: every suffixed sidecar is
+    // an orphan
     val head = headGenOf(l.tree)
     l.geomBases.foreach { base =>
       geomGens(base).filter(g => head < 0 || g > head).foreach { g =>
@@ -1374,11 +1323,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // correctly under the geometry they were written with. Each rebuild
   // writes its sidecars at `<base>.g<gen>` where `gen` is the row
   // tree's committed manifest generation; a reader of tree generation g
-  // resolves the NEWEST sidecar generation <= g (falling back to the
-  // plain pre-versioning path). Head reads resolve at the head
-  // generation; consistentAt/searchAt resolve at the epoch's recorded
-  // generation — so a pinned reader straddling a rebuild decodes old
-  // codes under old geometry. Sidecar reads COLLECT at call time
+  // resolves the NEWEST sidecar generation <= g. Head reads resolve
+  // at the head generation; consistentAt/searchAt resolve at the
+  // epoch's recorded generation — so a pinned reader straddling a
+  // rebuild decodes old codes under old geometry. Sidecar reads COLLECT at call time
   // (never lazily planned), so vacuum's structural rule — keep exactly
   // the resolvers of retained generations — needs no time window.
 
@@ -1414,22 +1362,15 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   }
 
   /** Suffix of the sidecar serving tree generation `gen`: the newest
-    * recorded geometry <= gen, or "" (the plain pre-versioning path)
-    * when none is recorded. */
+    * recorded geometry <= gen. A committed layout always has one (its
+    * build staged it before the commit), so none is a loud error. */
   private def geomSuffixAt(base: String, gen: Long): String =
-    geomGens(base).filter(_ <= gen).lastOption.map(geomSuffix).getOrElse("")
+    geomGens(base).filter(_ <= gen).lastOption.map(geomSuffix).getOrElse(
+      throw new IllegalStateException(s"no geometry sidecar $base.g* serves generation $gen"))
 
-  /** The tree's head generation for geometry resolution. Two
-    * manifest-less cases must read differently: a LEGACY pre-manifest
-    * tree (visible data, geometry wherever its era wrote it) resolves
-    * the newest geometry (MaxValue — the listing IS its head), while
-    * a never-committed EMPTY tree resolves nothing (-1): a
-    * first-build crash orphan sidecar must not read as a live index —
-    * it would route search to a zero-row tree. */
+  /** The tree's head generation; -1 when it has none (an empty tree). */
   private def headGenOf(tree: graft.plans.ManifestedTree): Long =
-    tree.generations().lastOption.map(_._1).getOrElse {
-      if (hasVisibleData(tree.root.stripSuffix("/"))) Long.MaxValue else -1L
-    }
+    tree.generations().lastOption.fold(-1L)(_._1)
 
   /** Drop the partitioned index (search falls back to the column probe). */
   def dropPartitionedIndex(): Unit = dropLayout(lshLayout)
@@ -1474,7 +1415,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // the store compacts to training-shard-sized files (1M chunk rows),
     // not the index trees' delete-granularity bound
     val store =
-      if (!hasVisibleData(path)) None
+      if (!committed(storeTree)) None
       else Some("store" -> storeTree.compact(maxFilesPerPartition, 1L << 20,
         Seq("doc_id"), vacuumAfter = vacuumAfter))
     val out = (store ++ layouts.collect { case l if l.present =>
@@ -1522,25 +1463,21 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     removed
   }
 
-  /** Delete crash-stranded `.{tree}.rebuild_tmp` siblings (and the
-    * pre-r11 non-dotted form) of every manifested tree. Runs under the
-    * writer lock, so no in-flight rebuild's tmp can be swept. */
+  /** Delete crash-stranded `.{tree}.rebuild_tmp` siblings of every
+    * manifested tree. Runs under the writer lock, so no in-flight
+    * rebuild's tmp can be swept. */
   private def sweepRebuildTmp(): Unit = {
     import org.apache.hadoop.fs.Path
     epochTrees.foreach { case (_, t) =>
       val rootP = new Path(t.root.stripSuffix("/"))
-      val fs = hadoopFs(t.root)
-      fs.delete(new Path(rootP.getParent, s".${rootP.getName}.rebuild_tmp"), true)
-      fs.delete(new Path(rootP.getParent, s"${rootP.getName}.rebuild_tmp"), true)
+      hadoopFs(t.root).delete(new Path(rootP.getParent, s".${rootP.getName}.rebuild_tmp"), true)
     }
   }
 
   /** Remove geometry sidecar generations no retained row-tree
     * generation resolves to — including crash orphans numbered above
-    * the head (a prediction whose commit never happened). The plain
-    * pre-versioning path is never removed: it is the fallback resolver
-    * for generations older than the first versioned sidecar. Returns
-    * the number of sidecar directories removed. */
+    * the head (a prediction whose commit never happened). Returns the
+    * number of sidecar directories removed. */
   private def vacuumGeometry(): Int = {
     var removed = 0
     layouts.foreach { l =>
@@ -1624,24 +1561,18 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       val storeIds = store.select(col("chunk_id"))
       val m = readMeta()
       val out = layouts.collect { case l if l.present =>
-        val tf = l.tree.open()
-        if (!tf.columns.contains("chunk_id")) {
-          // pre-chunk_id schema generation: migration = rebuild
-          l.rebuild(m); l.name -> (0L, -1L)
-        } else {
-          val ids = tf.select(col("chunk_id")).distinct()
-          val ghosts = ids.join(storeIds, Seq("chunk_id"), "left_anti").count()
-          val missing = store.join(ids, Seq("chunk_id"), "left_anti").persist()
-          try {
-            val nMissing = missing.count()
-            if (ghosts > 0) l.rebuild(m)
-            else if (nMissing > 0) appendLayouts(missing, Seq(l))
-            l.name -> (nMissing, ghosts)
-          } finally missing.unpersist()
-        }
+        val ids = l.tree.open().select(col("chunk_id")).distinct()
+        val ghosts = ids.join(storeIds, Seq("chunk_id"), "left_anti").count()
+        val missing = store.join(ids, Seq("chunk_id"), "left_anti").persist()
+        try {
+          val nMissing = missing.count()
+          if (ghosts > 0) l.rebuild(m)
+          else if (nMissing > 0) appendLayouts(missing, Seq(l))
+          l.name -> (nMissing, ghosts)
+        } finally missing.unpersist()
       }.toMap
       invalidateIndexes()
-      if (out.exists { case (_, (miss, gh)) => miss > 0 || gh != 0 }) touchMeta()
+      if (out.exists { case (_, (miss, gh)) => miss > 0 || gh > 0 }) touchMeta()
       out
     } finally store.unpersist()
   }
@@ -2018,34 +1949,25 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
         * rebuild-replaced generations, crash orphans), and a listing
         * scan would find victim ids in those dead files too — the
         * rewrite would then resurrect previously deleted rows and
-        * duplicate survivors into the fresh commit. A pre-manifest
-        * tree has no dead-byte concept; its listing IS the live set. */
+        * duplicate survivors into the fresh commit. The manifest answers
+        * both questions — no per-directory fs.exists round-trips
+        * (hundreds of HEADs on an object store for a delete fanning out
+        * over LSH buckets). */
       def liveUnder(tree: graft.plans.ManifestedTree,
                     dirs: Seq[String]): (Seq[(String, Long)], Seq[String]) = {
         val treeRoot = tree.root.stripSuffix("/")
-        tree.readManifest() match {
-          case Some(entries) =>
-            // the manifest answers BOTH questions — no per-directory
-            // fs.exists round-trips (hundreds of HEADs on an object
-            // store for a delete fanning out over LSH buckets)
-            val prefixed = dirs.map(d =>
-              (d, d.stripSuffix("/").stripPrefix(treeRoot + "/") + "/"))
-            // one pass over the entries yields both the matched files
-            // and which candidate dirs hold any
-            val matched = scala.collection.mutable.LinkedHashSet.empty[String]
-            val files = entries.filter { case (rel, _) =>
-              prefixed.find(t => rel.startsWith(t._2)).exists { case (d, _) =>
-                matched += d
-                true
-              }
-            }
-            (files, dirs.filter(matched))
-          case None =>
-            val fs = hadoopFs(treeRoot)
-            val present = dirs.filter(d =>
-              fs.exists(new org.apache.hadoop.fs.Path(d)))
-            (tree.listFiles(Some(present.map(_.stripPrefix(treeRoot + "/")))), present)
+        val prefixed = dirs.map(d =>
+          (d, d.stripSuffix("/").stripPrefix(treeRoot + "/") + "/"))
+        // one pass over the entries yields both the matched files and
+        // which candidate dirs hold any
+        val matched = scala.collection.mutable.LinkedHashSet.empty[String]
+        val files = tree.readManifest().getOrElse(Nil).filter { case (rel, _) =>
+          prefixed.find(t => rel.startsWith(t._2)).exists { case (d, _) =>
+            matched += d
+            true
+          }
         }
+        (files, dirs.filter(matched))
       }
 
       /** The files holding victim rows under the given partition
@@ -2108,8 +2030,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
           audit.put(label, Seq(treeRoot))
           // full-tree fallback stays manifest-planned for the same
           // dead-byte reason as the pruned path
-          entriesOf(victimFilesOf(tree.open()),
-            tree.readManifest().getOrElse(tree.listFiles(None)))
+          entriesOf(victimFilesOf(tree.open()), tree.readManifest().getOrElse(Nil))
         }
       }
 
@@ -2192,22 +2113,18 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       // replacement files are captured from the tmp tree BEFORE
       // cowTree consumes it, so the commit references exactly those
       // plus the untouched survivors — neither a crashed writer's
-      // orphans nor the victims can be adopted. A two-level layout
-      // (lsh's tbl=/bucket=) can be left with empty parents.
+      // orphans nor the victims can be adopted.
       def swapCommitted(tree: graft.plans.ManifestedTree, tmp: String,
-                        victimFiles: Seq[(String, Long)], nested: Boolean): Unit = {
+                        victimFiles: Seq[(String, Long)]): Unit = {
         val treeRoot = tree.root.stripSuffix("/")
         val victimPaths = victimFiles.map(e => s"$treeRoot/${e._1}")
         val freshRel = graft.plans.ManifestedTree.listTree(spark, tmp, None)
-        cowTree(tree.root, tmp, victimPaths, retainVictims =
-          graft.plans.ManifestedTree.manifestExists(spark, tree.root))
-        if (nested) pruneEmptyParents(tree.root)
+        cowTree(tree.root, tmp, victimPaths)
         tree.commitSwap(victimPaths, freshRel)
       }
-      swapCommitted(storeTree, cowTmp("chunks"), storeFiles, nested = false)
+      swapCommitted(storeTree, cowTmp("chunks"), storeFiles)
       victimFiles.foreach { case (l, files) =>
-        swapCommitted(l.tree, cowTmp(s"${l.name}_index"), files,
-          nested = l.partCols.size > 1)
+        swapCommitted(l.tree, cowTmp(s"${l.name}_index"), files)
       }
       lastDeleteAudit = audit.toMap
       nVictims
@@ -2220,13 +2137,13 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** File-level install of a delete's rewrite output.
     *
-    * With `retainVictims` (every MANIFESTED tree) NOTHING in the live
-    * directory moves: the rewritten survivors rename in from the
-    * mirrored tmp tree under their fresh UUID part-names (no clashes),
-    * while victims AND untouched survivors stay at their original
-    * paths — the commitSwap that follows drops the victims from the
-    * manifest, so they are invisible to every new reader, but their
-    * bytes remain until [[graft.plans.ManifestedTree.vacuum]]. This is
+    * NOTHING in the live directory moves: the rewritten survivors
+    * rename in from the mirrored tmp tree under their fresh UUID
+    * part-names (no clashes), while victims AND untouched survivors
+    * stay at their original paths — the commitSwap that follows drops
+    * the victims from the manifest, so they are invisible to every new
+    * reader, but their bytes remain until
+    * [[graft.plans.ManifestedTree.vacuum]]. This is
     * the Delta/Iceberg DELETE shape, and it is what makes CONCURRENT
     * readers safe with zero coordination: a head reader that already
     * planned the pre-delete generation, or an epoch-pinned reader, is
@@ -2235,19 +2152,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * back one by one, and EpochLadder's pinned reader caught the
     * transient FILE_NOT_EXIST window that opens. A crash before the
     * commit leaves only invisible fresh-file orphans (vacuum food),
-    * never a half-moved directory.
-    *
-    * A PRE-MANIFEST tree must NOT retain victims (its commit path
-    * re-lists the directory as the source of truth and would re-adopt
-    * the deleted rows), so there the directory moves aside, survivors
-    * rename back, and the aside drops — the crash-recoverable form for
-    * a tree that has no manifest to make orphans invisible. Such trees
-    * have no manifest readers, so no pinned-read guarantee is broken.
-    * A directory left with no visible files is deleted — its partition
-    * is now empty. */
-  private def cowTree(treeRoot: String, tmpRoot: String,
-                      victimFiles: Seq[String],
-                      retainVictims: Boolean): Unit = {
+    * never a half-moved directory. */
+  private def cowTree(treeRoot: String, tmpRoot: String, victimFiles: Seq[String]): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = hadoopFs(treeRoot)
     val rootStr = {
@@ -2255,64 +2161,21 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       if (s.endsWith("/")) s else s + "/"
     }
     def visible(n: String) = !n.startsWith(".") && !n.startsWith("_")
-    victimFiles.map(new Path(_)).groupBy(_.getParent).foreach {
-      case (liveDir, files) =>
-        val victimNames = files.map(_.getName).toSet
-        val dirStr = fs.makeQualified(liveDir).toUri.getPath
-        require(dirStr.startsWith(rootStr),
-          s"victim file directory $dirStr outside $rootStr")
-        val fresh = new Path(s"$tmpRoot/${dirStr.stripPrefix(rootStr)}")
-        if (retainVictims) {
-          // manifested tree: additive install only — no live path ever
-          // vanishes, so concurrent readers never race a rename
-          if (fs.exists(fresh))
-            fs.listStatus(fresh).foreach { st =>
-              val n = st.getPath.getName
-              if (visible(n) && !fs.rename(st.getPath, new Path(liveDir, n)))
-                throw new java.io.IOException(s"cow: cannot install $liveDir/$n")
-            }
-        } else {
-          val aside = new Path(liveDir.getParent, s".${liveDir.getName}.cowold")
-          fs.delete(aside, true)
-          if (!fs.rename(liveDir, aside))
-            throw new java.io.IOException(s"cow: cannot move $liveDir aside")
-          fs.mkdirs(liveDir)
-          fs.listStatus(aside).foreach { st =>
-            val n = st.getPath.getName
-            if (visible(n) && !victimNames.contains(n))
-              fs.rename(st.getPath, new Path(liveDir, n))
-          }
-          if (fs.exists(fresh))
-            fs.listStatus(fresh).foreach { st =>
-              val n = st.getPath.getName
-              if (visible(n)) fs.rename(st.getPath, new Path(liveDir, n))
-            }
-          fs.delete(aside, true)
-          if (!fs.listStatus(liveDir).exists(st => visible(st.getPath.getName)))
-            fs.delete(liveDir, true)
+    victimFiles.map(new Path(_).getParent).distinct.foreach { liveDir =>
+      val dirStr = fs.makeQualified(liveDir).toUri.getPath
+      require(dirStr.startsWith(rootStr),
+        s"victim file directory $dirStr outside $rootStr")
+      val fresh = new Path(s"$tmpRoot/${dirStr.stripPrefix(rootStr)}")
+      // additive install only — no live path ever vanishes, so
+      // concurrent readers never race a rename
+      if (fs.exists(fresh))
+        fs.listStatus(fresh).foreach { st =>
+          val n = st.getPath.getName
+          if (visible(n) && !fs.rename(st.getPath, new Path(liveDir, n)))
+            throw new java.io.IOException(s"cow: cannot install $liveDir/$n")
         }
     }
     fs.delete(new Path(tmpRoot), true)
-  }
-
-  /** Remove depth-1 subdirectories left with no visible children (the
-    * tbl= parents of a fully-emptied LSH table — an empty subtree
-    * would read as "index present" with nothing to infer a schema
-    * from). */
-  private def pruneEmptyParents(treeRoot: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = hadoopFs(treeRoot)
-    val rp = new Path(treeRoot)
-    if (!fs.exists(rp)) return
-    fs.listStatus(rp).foreach { st =>
-      if (st.isDirectory) {
-        val n = st.getPath.getName
-        if (!n.startsWith(".") && !n.startsWith("_") &&
-          !fs.listStatus(st.getPath).exists { c =>
-            val cn = c.getPath.getName; !cn.startsWith(".") && !cn.startsWith("_") })
-          fs.delete(st.getPath, true)
-      }
-    }
   }
 
   // --- persisted grid index -------------------------------------------
@@ -2394,21 +2257,13 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   def hasGridIndex: Boolean = gridLayout.present
 
   /** The (lo, hi, gridDims, cellsPerDim) a grid bounds sidecar holds,
-    * read in one job. The footer of its part file (read on the driver)
-    * gives the read schema, so no schema-inference job runs; a legacy
-    * sidecar predates the cells_per_dim column and falls back to the
-    * meta file. */
+    * read in one job under the schema the build writes, so no
+    * schema-inference job runs. */
   private[graft] def gridBoundsAt(path: String): (Array[Double], Array[Double], Int, Int) = {
-    val part = hadoopFs(path).listStatus(new org.apache.hadoop.fs.Path(path))
-      .map(_.getPath).find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .getOrElse(throw new IllegalStateException(s"grid bounds sidecar $path holds no data file"))
-    val schema = graft.plans.ManifestFileIndex.footerSchema(spark, part.toString)
-    val rows = spark.read.schema(schema).parquet(path).collect().sortBy(_.getInt(0))
-    val cpd =
-      if (rows.nonEmpty && schema.fieldNames.contains("cells_per_dim"))
-        rows.head.getAs[Int]("cells_per_dim")
-      else readMeta().getOrElse("grid_cells_per_dim", "4").toInt
-    (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), rows.length, cpd)
+    val rows = spark.read.schema("d INT, lo DOUBLE, hi DOUBLE, cells_per_dim INT")
+      .parquet(path).collect().sortBy(_.getInt(0))
+    require(rows.nonEmpty, s"grid bounds sidecar $path holds no rows")
+    (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)), rows.length, rows.head.getInt(3))
   }
 
   /** Build (or rebuild) the persisted grid index: one bounds aggregate
@@ -2469,15 +2324,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     // must see a deterministic order regardless of parquet row order.
     def geomAt(gen: Long): Geom =
       geomLoad(s"$ivfPath/centroids", gen)(IvfIndex.readCentroids(spark, _))
-    // Built = centroids RESOLVABLE AT THE TREE HEAD: a suffixed sidecar
-    // the head resolves, or the plain pre-versioning path. A crash
-    // orphan beside a never-committed empty tree does not count.
-    override def present: Boolean = {
-      val base = s"$ivfPath/centroids"
-      geomGens(base).exists(_ <= headGenOf(tree)) ||
-        hadoopFs(base).exists(new org.apache.hadoop.fs.Path(base))
-    }
-    override protected def appendCols = Seq("doc_id", "source", "n_tokens")
     protected def rows(batch: DataFrame): DataFrame =
       IvfIndex.assignExact(batch.select(col("chunk_id"), col("embedding"),
         col("doc_id"), col("source"), col("n_tokens")), "embedding", headGeom)
@@ -2855,7 +2701,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * batch-side anti join: no shuffle of the store at any size. */
   private def dropReplayedChunks(batch: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    if (!hasVisibleData(path)) return batch
+    if (!committed(storeTree)) return batch
     val ids = batch.select("chunk_id").distinct()
     val existing = chunks
       .join(broadcast(ids), Seq("chunk_id"), "left_semi")
@@ -2891,15 +2737,9 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
                           maxFilesPerPartition: Int = 4): org.apache.spark.sql.streaming.StreamingQuery = {
     // A pre-existing store WITHOUT the partitioned index would
     // otherwise end up with a PARTIAL index holding only streamed
-    // rows (the first append creates the directory, flipping
-    // hasPartitionedIndex while every earlier chunk is missing). An
-    // index that exists but PREDATES the quant codes column has the
-    // same hazard in schema form: streamed appends would mix
-    // generations and the quantized probe would read null codes for
-    // old rows, silently dropping them from phase 1 — the exact guard
-    // appendBatch applies, applied once at stream start.
-    if (hadoopFs(path).exists(new org.apache.hadoop.fs.Path(path)) && !lshLayout.current)
-      buildPartitionedIndex()
+    // rows (the first append commits the index, flipping
+    // hasPartitionedIndex while every earlier chunk is missing).
+    if (committed(storeTree) && !hasPartitionedIndex) buildPartitionedIndex()
     // replay idempotence mirrors plain ingestStream: only the first
     // batch after a (re)start can be a replay — anti-join it against
     // the store. A crash BETWEEN this batch's store commit and one of
@@ -2938,7 +2778,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
               storeTree.appendCommitted(b, 0L)
               // mirror appendBatch: every derived index stays current and
               // session caches drop, so ivf/grid/flat search sees the arrivals
-              appendLayouts(b, layouts.filter(l => (l eq lshLayout) || l.tracked))
+              appendLayouts(b, layouts.filter(l => (l eq lshLayout) || l.present))
               invalidateIndexes()
             } finally b.unpersist()
           }
@@ -3041,46 +2881,25 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * says WHEN to run [[compact]] (streaming ingest appends one file
    * per micro-batch per source; reading a source fragmented into many
    * KB-scale files costs an open/footer-parse per file, the classic
-   * small-files tax). Driver-side directory listing only — the same
-   * FS metadata every planner `listFiles` pass already reads — so the
-   * audit is corpus-size-independent.
+   * small-files tax). Read from the store's manifest alone — no
+   * listing, no job — so the audit is corpus-size-independent.
    */
   def storeFileStats(smallFileBytes: Long = 4L * 1024 * 1024): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val rootP = new Path(path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Layout health is a property of what readers PLAN — the
     // manifest-LIVE set. The directories also hold history-retained
     // bytes (COW victims, displaced compaction/rebuild generations)
     // that no read plans and vacuum reclaims on schedule; counting
     // those would re-flag a directory that just compacted, and the
     // maintenance loop this report drives would rewrite the same rows
-    // forever. A pre-manifest tree's listing IS its live set.
-    val liveFiles: Seq[(String, Long)] = storeTree.readManifest() match {
-      case Some(entries) => entries.map { case (rel, sz) =>
-        (rel, if (sz >= 0) sz
-              else fs.getFileStatus(new Path(s"$path/$rel")).getLen)
-      }
-      case None =>
-        if (!fs.exists(rootP)) Seq.empty
-        else fs.listStatus(rootP).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
-          .flatMap { dir =>
-            fs.listStatus(dir.getPath).toSeq
-              .filter(f => f.isFile && !f.getPath.getName.startsWith(".")
-                && !f.getPath.getName.startsWith("_"))
-              .map(f => (s"${dir.getPath.getName}/${f.getPath.getName}", f.getLen))
-          }
-    }
-    val rows = liveFiles
+    // forever.
+    val rows = storeTree.readManifest().getOrElse(Nil)
       .filter(_._1.startsWith("source="))
       .groupBy(_._1.takeWhile(_ != '/'))
       .map { case (dirName, entries) =>
         val sizes = entries.map(_._2)
         (dirName.stripPrefix("source="),
-          entries.size.toLong, sizes.sum,
-          if (sizes.isEmpty) 0L else sizes.max,
+          entries.size.toLong, sizes.sum, sizes.max,
           sizes.count(_ < smallFileBytes).toLong)
       }.toSeq
     rows.toDF("source", "n_files", "total_bytes", "max_file_bytes", "small_files")
@@ -3090,25 +2909,19 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /**
    * Per-tree manifest census — the observability face of the
-   * maintenance loop: for the store and each derived layout, whether
-   * it is manifest-committed, and the LIVE file count / bytes read
-   * straight from the manifest (zero filesystem listing — at 100 TB
-   * this is six small file reads). `live_files = -1` marks a
-   * pre-manifest tree (reads fall back to listing until its next
-   * mutation upgrades it); absent trees are omitted.
+   * maintenance loop: for the store and each derived layout with a
+   * committed generation, the LIVE file count / bytes read straight
+   * from the manifest (zero filesystem listing — at 100 TB this is six
+   * small file reads), its generation and its delta-chain length.
+   * Empty trees (no committed generation) are omitted; `manifested` is
+   * true on every row.
    */
   def manifestInfo: DataFrame = {
     import spark.implicits._
     epochTrees
-      .filter { case (_, t) => hadoopFs(t.root)
-        .exists(new org.apache.hadoop.fs.Path(t.root)) }
-      .map { case (n, t) =>
-        (t.readManifest(), t.chainInfo()) match {
-          case (Some(entries), Some((gen, deltas))) =>
-            (n, true, entries.size.toLong, entries.map(_._2).filter(_ > 0).sum,
-              gen, deltas)
-          case _ => (n, false, -1L, -1L, -1L, -1)
-        }
+      .flatMap { case (n, t) =>
+        for (entries <- t.readManifest(); (gen, deltas) <- t.chainInfo())
+          yield (n, true, entries.size.toLong, entries.map(_._2).sum, gen, deltas)
       }
       .toDF("tree", "manifested", "live_files", "live_bytes",
         "generation", "chain_deltas")
@@ -3170,6 +2983,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** Drop the library store (reference DELETE /libraries/{id}). */
   def delete(): Unit = withWriterLock {
     invalidateIndexes()
+    genMemo.clear(); geomLoadCache.clear()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/$name"), true)

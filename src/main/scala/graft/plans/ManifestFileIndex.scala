@@ -14,10 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * A Catalyst [[FileIndex]] planned entirely from a manifest — the
  * zero-listing open for a partitioned derived layout.
  *
- * The library's `_manifest.txt` names every LIVE data file (relative
- * path + size) under the index root; this class turns those entries
- * directly into the `PartitionDirectory` batches Spark's V1 parquet
- * scan plans from. Consequences, all load-bearing at 100 TB:
+ * A [[ManifestedTree]]'s resolved manifest generation names every LIVE
+ * data file (relative path + size) under the tree root; this class
+ * turns those entries directly into the `PartitionDirectory` batches
+ * Spark's V1 parquet scan plans from. Consequences, all load-bearing at 100 TB:
  *
  *  - OPEN COST: constructing the scan performs ZERO filesystem
  *    list/stat calls — no recursive tree listing (the
@@ -126,24 +126,20 @@ object ManifestFileIndex {
    * partition values all come from the manifest. The data schema comes
    * from `schema`, the generation's `#schema` record (read schema:
    * data columns, then partition columns), so an open performs no
-   * filesystem I/O and launches no Spark job. Only a legacy generation
-   * without a record reads ONE footer ([[footerSchema]], no job).
-   * Rebuild the frame per manifest generation (callers memoize per
-   * generation already); `refresh()` is deliberately a no-op.
+   * filesystem I/O and launches no Spark job. Rebuild the frame per
+   * manifest generation (callers memoize per generation already);
+   * `refresh()` is deliberately a no-op.
    */
   def read(spark: SparkSession, root: String, entries: Seq[(String, Long)],
-           partitionSchema: StructType,
-           schema: Option[StructType]): DataFrame = {
+           partitionSchema: StructType, schema: StructType): DataFrame = {
     require(entries.nonEmpty, "empty manifest: nothing to plan")
     val rootPath = new Path(root)
     val qualified = rootPath.getFileSystem(
       spark.sparkContext.hadoopConfiguration).makeQualified(rootPath)
     // One generation writes one schema (schema evolution rebuilds the
-    // layout wholesale), so the record — or any single footer — is
-    // authoritative.
+    // layout wholesale), so the record is authoritative.
     val dataSchema = StructType(
-      nullable(schema.getOrElse(footerSchema(spark, s"$root/${entries.head._1}")))
-        .filterNot(f => partitionSchema.fieldNames.contains(f.name)))
+      nullable(schema).filterNot(f => partitionSchema.fieldNames.contains(f.name)))
     val index = new ManifestFileIndex(spark, qualified, entries, partitionSchema)
     spark.baseRelationToDataFrame(HadoopFsRelation(
       index, partitionSchema, dataSchema, None, new ParquetFileFormat,

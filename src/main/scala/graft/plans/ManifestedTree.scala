@@ -37,23 +37,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *
  * On-disk protocol (all root-level, invisible to data listings):
  *  - `_manifest.<gen>.full.txt`  — complete live set at generation
- *    <gen> (zero-padded), one `path<TAB>size` line per file, optional
+ *    <gen> (zero-padded), one `path<TAB>size` line per file, and a
  *    leading `#schema<TAB><json>` directive recording the read schema
  *    (data columns as a parquet read reports them, then the partition
  *    columns). Every commit keeps it describing the live files: a
- *    rebuild records its fresh files' schema. Older writers carried
- *    the previous record into a rebuild's snapshot, so a resolve
- *    checks a full snapshot's record against one footer.
+ *    rebuild records its fresh files' schema.
  *  - `_manifest.<gen>.delta.txt` — changes vs generation <gen>-1:
- *    `+<TAB>path<TAB>size` adds, `-<TAB>path` removes (same optional
- *    `#schema` directive).
- *  - `_manifest.txt`             — the legacy single-file manifest
- *    (generation 0); read-compatible, upgraded on the next commit.
+ *    `+<TAB>path<TAB>size` adds, `-<TAB>path` removes (a `#schema`
+ *    directive when the batch's schema differs from the record).
  *  - `_manifest.seal`            — permanent marker that this tree has
  *    published manifests: if it exists but no generation is readable,
- *    `open()` retries briefly then FAILS LOUDLY — it never silently
- *    demotes to the listing read (which would adopt crash orphans and
- *    double-count mid-compaction trees).
+ *    `open()` FAILS LOUDLY instead of opening the tree as empty.
+ * The manifest chain is the tree's only source of truth: a tree with
+ * no committed generation is EMPTY, whatever files sit under its root
+ * (a crashed first write's orphans), and its first commit is a full
+ * snapshot of exactly that commit's own files.
  * A reader resolves max(gen), loads the greatest full <= it and
  * applies the deltas after it, in order. Old generations are pruned at
  * commit time back to the oldest of the newest
@@ -73,8 +71,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
  *    listing diff around the write;
  *  - a copy-on-write file swap commits via [[commitSwap]];
  *  - a compaction's directory republish via [[commitDirReplacement]].
- * Trees written before the manifest existed read via listing
- * (unchanged behavior) and upgrade to a snapshot at their next commit.
  *
  * Reference behavior served: sternbergm/vector-db-service keeps its
  * vectors and indexes IN MEMORY per process (vector_db/storage.py:11
@@ -122,38 +118,21 @@ final class ManifestedTree(
   }
 
   private def resolveState(): Option[Chain] = stateCache.orElse {
-    val c = resolve(None)
+    val c = resolveChain(fs, root)
     stateCache = c
     c
   }
 
-  /** The chain on disk up to `upTo`, its `#schema` record checked
-    * against the files when only the full snapshot carries it. Older
-    * writers carried the previous record forward into a rebuild's
-    * full snapshot, so such a record can predate a layout migration;
-    * a delta's record comes from the rows it appended. The check is
-    * one driver-side footer read of the first entry and no Spark job;
-    * when the column names disagree, the footer's record wins. */
-  private def resolve(upTo: Option[Long]): Option[Chain] =
-    resolveChain(fs, root, upTo).map { c =>
-      if (!c.fullRecord) c
-      else recordOf(c.entries.head._1) match {
-        case Some(r) if !c.schema.exists(_.fieldNames.sameElements(r.fieldNames)) =>
-          c.copy(schema = Some(r))
-        case _ => c
-      }
-    }
-
   /** Live `(relativePath, sizeBytes)` entries of the current manifest
-    * generation, or None on a pre-manifest tree. Sizes ride in the
-    * manifest so split planning needs ZERO stat calls; a legacy
-    * size-less line parses with size -1 and demotes that generation's
-    * read to the per-file-stat path until the next commit rewrites it. */
+    * generation, or None when the tree has no committed generation
+    * (an empty tree). Sizes ride in the manifest so split planning
+    * needs ZERO stat calls. */
   def readManifest(): Option[Seq[(String, Long)]] =
     resolveState().map(_.entries)
 
   /** (current generation, deltas since the last full snapshot) — the
-    * chain-health census `manifestInfo` surfaces. None pre-manifest. */
+    * chain-health census `manifestInfo` surfaces. None on an empty
+    * tree. */
   def chainInfo(): Option[(Long, Int)] =
     resolveState().map(c => (c.gen, c.deltas))
 
@@ -325,62 +304,58 @@ final class ManifestedTree(
 
   private def commitDeltaOnce(removals: Seq[String],
                               additions: Seq[(String, Long)],
-                              schemaHint: Option[StructType]): Unit =
-    resolveState() match {
-      case None =>
-        // pre-manifest tree: upgrade to a snapshot (its listing is the
-        // source of truth, already including this batch). commitFullOnce,
-        // not commitFull: a stale head must re-derive THIS merge.
-        commitFullOnce(listFiles(None), schemaHint)
-      case Some(st) =>
-        // keyed dedup with resolveChain's MEMBERSHIP semantics: an
-        // addition whose path is already live REPLACES the old entry
-        // instead of duplicating it, so the writer's cached state can
-        // never double-plan a file a fresh reader sees once. The
-        // collision probe is O(batch) against the chain's maintained
-        // path set — probing (or re-keying) all entries per commit is
-        // O(tree) and ManifestLadder rejects it (x8-17 at 1M files).
-        // The pure-append fast path (no removals, no re-adds — every
-        // ingest commit) never touches the existing entries at all.
-        // Entry ORDER may differ from disk resolve for a re-added path
-        // (end vs original position) — order is not semantic: rebases
-        // sort on write and the driver's compare canon-sorts.
-        val rm = removals.toSet
-        // last-wins WITHIN the batch too (resolveChain's keyed apply
-        // collapses an intra-batch duplicate; the cache must match) —
-        // O(batch), and a no-dup batch passes through untouched
-        val additions0 =
-          if (additions.iterator.map(_._1).toSet.size == additions.size) additions
-          else additions.foldLeft(
-            scala.collection.mutable.LinkedHashMap.empty[String, Long]) {
-              (m, a) => m += a }.toVector
-        val readded = additions0.iterator.map(_._1).filter(st.paths).toSet
-        val drop = rm | readded
-        val entries =
-          if (drop.isEmpty) st.entries ++ additions0
-          else st.entries.filterNot(e => drop(e._1)) ++ additions0
-        if (st.deltas + 1 >= RebaseEvery) {
-          // periodic rebase bounds the reader's chain length; its
-          // O(tree) write amortizes over RebaseEvery O(batch) commits.
-          // commitFullOnce: `entries` is a stale-state merge, so a
-          // stale head must propagate to commitDelta's re-derive.
-          commitFullOnce(entries, schemaHint.orElse(st.schema))
-        } else {
-          val gen = st.gen + 1
-          val disk = assertHeadFresh(gen)
-          val schema = schemaHint.filterNot(h => st.schema.contains(h))
-          val header = schema.map(s => s"#schema\t${s.json}\n").getOrElse("")
-          val body = (removals.map(p => s"-\t$p") ++
-            additions0.map { case (p, s) => s"+\t$p\t$s" }).mkString("\n")
-          val name = f"${ManifestPrefix}$gen%09d.delta.txt"
-          installManifest(name, header + body)
-          stateCache = Some(Chain(entries, schema.orElse(st.schema),
-            gen, st.fullGen, st.deltas + 1,
-            (st.paths diff drop) ++ additions0.iterator.map(_._1)))
-          openCache = None
-          pruneOldGenerations(disk :+ ((gen, false, new Path(s"$root/$name"))))
-        }
+                              schemaHint: Option[StructType]): Unit = {
+    // an empty tree (no committed generation) merges onto no entries
+    val st = resolveState().getOrElse(Chain(Vector.empty, None, 0L, 0L, 0, Set.empty))
+    // keyed dedup with resolveChain's MEMBERSHIP semantics: an
+    // addition whose path is already live REPLACES the old entry
+    // instead of duplicating it, so the writer's cached state can
+    // never double-plan a file a fresh reader sees once. The
+    // collision probe is O(batch) against the chain's maintained
+    // path set — probing (or re-keying) all entries per commit is
+    // O(tree) and ManifestLadder rejects it (x8-17 at 1M files).
+    // The pure-append fast path (no removals, no re-adds — every
+    // ingest commit) never touches the existing entries at all.
+    // Entry ORDER may differ from disk resolve for a re-added path
+    // (end vs original position) — order is not semantic: rebases
+    // sort on write and the driver's compare canon-sorts.
+    val rm = removals.toSet
+    // last-wins WITHIN the batch too (resolveChain's keyed apply
+    // collapses an intra-batch duplicate; the cache must match) —
+    // O(batch), and a no-dup batch passes through untouched
+    val additions0 =
+      if (additions.iterator.map(_._1).toSet.size == additions.size) additions
+      else additions.foldLeft(
+        scala.collection.mutable.LinkedHashMap.empty[String, Long]) {
+          (m, a) => m += a }.toVector
+    val readded = additions0.iterator.map(_._1).filter(st.paths).toSet
+    val drop = rm | readded
+    val entries =
+      if (drop.isEmpty) st.entries ++ additions0
+      else st.entries.filterNot(e => drop(e._1)) ++ additions0
+    if (st.gen == 0L || st.deltas + 1 >= RebaseEvery) {
+      // a tree's first commit is a full snapshot; after that, a
+      // periodic rebase bounds the reader's chain length, its
+      // O(tree) write amortized over RebaseEvery O(batch) commits.
+      // commitFullOnce: `entries` is a stale-state merge, so a
+      // stale head must propagate to commitDelta's re-derive.
+      commitFullOnce(entries, schemaHint.orElse(st.schema))
+    } else {
+      val gen = st.gen + 1
+      val disk = assertHeadFresh(gen)
+      val schema = schemaHint.filterNot(h => st.schema.contains(h))
+      val header = schema.map(s => s"#schema\t${s.json}\n").getOrElse("")
+      val body = (removals.map(p => s"-\t$p") ++
+        additions0.map { case (p, s) => s"+\t$p\t$s" }).mkString("\n")
+      val name = f"${ManifestPrefix}$gen%09d.delta.txt"
+      installManifest(name, header + body)
+      stateCache = Some(Chain(entries, schema.orElse(st.schema),
+        gen, st.fullGen, st.deltas + 1,
+        (st.paths diff drop) ++ additions0.iterator.map(_._1)))
+      openCache = None
+      pruneOldGenerations(disk :+ ((gen, false, new Path(s"$root/$name"))))
     }
+  }
 
   /** Remove manifest generations older than the oldest RETAINED full
     * snapshot. Retention is structural and bounded: the newest
@@ -426,9 +401,8 @@ final class ManifestedTree(
     * directories are never adopted (they stay invisible until a
     * maintenance vacuum). Commit cost tracks the batch's directories,
     * never the tree (one delta manifest per batch; a full rebase every
-    * [[ManifestedTree.RebaseEvery]] commits). A pre-manifest tree
-    * upgrades to a full snapshot instead — its listing is already the
-    * source of truth. */
+    * [[ManifestedTree.RebaseEvery]] commits; an empty tree's first
+    * commit is a full snapshot of the batch's files). */
   def appendCommitted(rows: DataFrame, maxRecordsPerFile: Long): Unit = {
     val partCols = partitionSchema.fieldNames.toSeq
     val touched = rows.selectExpr(partCols: _*).distinct().collect()
@@ -446,17 +420,12 @@ final class ManifestedTree(
     val schemaHint = StructType(ManifestFileIndex.nullable(
       StructType(rows.schema.filterNot(f => partCols.contains(f.name))))
       ++ partitionSchema.fields)
-    val manifested = resolveState().isDefined
-    val pre =
-      if (manifested) listFiles(Some(touched)).map(_._1).toSet
-      else Set.empty[String]
+    val pre = listFiles(Some(touched)).map(_._1).toSet
     rows.write.mode(SaveMode.Append)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partCols: _*).parquet(root)
-    if (manifested)
-      commitDelta(Nil,
-        listFiles(Some(touched)).filterNot(f => pre(f._1)), Some(schemaHint))
-    else commitFull(listFiles(None), Some(schemaHint))
+    commitDelta(Nil,
+      listFiles(Some(touched)).filterNot(f => pre(f._1)), Some(schemaHint))
   }
 
   /** Commit a copy-on-write file swap as a delta: the victim files
@@ -482,15 +451,11 @@ final class ManifestedTree(
     * `moved` files. */
   def commitDirReplacement(dirPrefixes: Seq[String],
                            moved: Seq[(String, Long)]): Unit =
-    resolveState() match {
-      case Some(st) =>
-        val removals = st.entries.map(_._1)
-          .filter(p => dirPrefixes.exists(p.startsWith))
-        commitDelta(removals, moved, None)
-      case None =>
-        commitFull(listFiles(None)
-          .filterNot(f => dirPrefixes.exists(f._1.startsWith)) ++ moved, None)
-    }
+    commitDelta(liveEntries.map(_._1).filter(p => dirPrefixes.exists(p.startsWith)),
+      moved, None)
+
+  /** The current generation's entries; none on an empty tree. */
+  private def liveEntries: Seq[(String, Long)] = readManifest().getOrElse(Nil)
 
   /** Leaf partition directories (relative, e.g. "cell=3_1") holding
     * more than `maxFiles` visible files smaller than `smallBytes` —
@@ -498,48 +463,19 @@ final class ManifestedTree(
     * count: a hot partition legitimately holds several files at the
     * rolling bound and must not be re-compacted forever (merging
     * full-size files would undo the bounded-rewrite-unit property
-    * copy-on-write deletes rely on). Listing-based by design: like
-    * victim resolution, maintenance runs under the single-writer
-    * discipline, and the on-disk state (orphans included) is exactly
-    * what it must measure. */
+    * copy-on-write deletes rely on).
+    *
+    * Fragmentation is a property of what readers PLAN, so the census
+    * counts the manifest-LIVE small files per directory — never the
+    * listing. Files on disk outside the live set (history-retained
+    * fragments and COW victims, crash orphans) must not re-qualify a
+    * directory that already compacted, or the maintenance pass would
+    * rewrite the same rows on every invocation until a
+    * history-truncating vacuum ran. */
   private def fragmentedDirs(maxFiles: Int, smallBytes: Long): Seq[String] =
-    readManifest() match {
-      case Some(entries) =>
-        // Fragmentation is a property of what readers PLAN, so the
-        // census counts the manifest-LIVE small files per directory —
-        // never the listing. Files on disk outside the live set
-        // (history-retained fragments and COW victims, crash orphans)
-        // must not re-qualify a directory that already compacted, or
-        // the maintenance pass would rewrite the same rows on every
-        // invocation until a history-truncating vacuum ran.
-        val counts = scala.collection.mutable.HashMap.empty[String, Int]
-        entries.foreach { case (rel, sz) =>
-          val size = if (sz >= 0) sz // legacy size-less entry: one stat
-            else fs.getFileStatus(new Path(s"$root/$rel")).getLen
-          if (size < smallBytes) {
-            val cut = rel.lastIndexOf('/')
-            val d = if (cut < 0) "" else rel.substring(0, cut)
-            counts(d) = counts.getOrElse(d, 0) + 1
-          }
-        }
-        counts.collect { case (d, c) if c > maxFiles => d }.toSeq
-      case None =>
-        // pre-manifest tree: the listing IS the live set
-        def visible(n: String) = !n.startsWith(".") && !n.startsWith("_")
-        def leaves(d: Path, rel: String, depth: Int): Seq[(String, Path)] =
-          if (!fs.exists(d)) Seq.empty
-          else if (depth == 0) Seq((rel.stripSuffix("/"), d))
-          else fs.listStatus(d).toSeq.flatMap { st =>
-            val n = st.getPath.getName
-            if (st.isDirectory && visible(n)) leaves(st.getPath, s"$rel$n/", depth - 1)
-            else Seq.empty
-          }
-        leaves(new Path(root), "", partitionSchema.length).collect {
-          case (rel, p) if fs.listStatus(p).count(f =>
-              visible(f.getPath.getName) && !f.isDirectory &&
-                f.getLen < smallBytes) > maxFiles => rel
-        }
-    }
+    liveEntries.collect { case (rel, size) if size < smallBytes =>
+      rel.substring(0, math.max(rel.lastIndexOf('/'), 0))
+    }.groupBy(identity).collect { case (d, files) if files.size > maxFiles => d }.toSeq
 
   /**
    * Selective compaction — the OPTIMIZE half of the maintenance loop,
@@ -567,14 +503,9 @@ final class ManifestedTree(
     fs.delete(new Path(tmpPath), true)
     // The rewrite reads the manifest-LIVE files of the fragmented
     // dirs, never their listing: a listing read would adopt a crashed
-    // writer's orphan rows into the compacted output. Pre-manifest
-    // trees have no orphan concept — their listing is the live set.
-    val liveFiles = readManifest() match {
-      case Some(entries) => entries.map(_._1)
-        .filter(rel => oversized.exists(d => rel.startsWith(d + "/")))
-      case None => oversized.flatMap(d =>
-        ManifestedTree.listTree(spark, root, Some(Seq(d))).map(_._1))
-    }
+    // writer's orphan rows into the compacted output.
+    val liveFiles = liveEntries.map(_._1)
+      .filter(rel => oversized.exists(d => rel.startsWith(d + "/")))
     if (liveFiles.isEmpty) return 0
     spark.read.option("basePath", root)
       .parquet(liveFiles.map(rel => s"$root/$rel"): _*)
@@ -603,7 +534,7 @@ final class ManifestedTree(
     }
     fs.delete(new Path(tmpPath), true)
     // COMMIT: manifest entries for the compacted dirs become exactly
-    // the moved files (a pre-manifest layout upgrades via full list)
+    // the moved files
     commitDirReplacement(compacted.map(_ + "/"), moved)
     // CLEANUP: on-disk files in the compacted dirs no RESOLVABLE read
     // can reach — crashed-writer orphans and fragments whose
@@ -636,10 +567,10 @@ final class ManifestedTree(
 
   /** Delete visible on-disk files no RESOLVABLE read can reach — the
     * standalone VACUUM for crash orphans and for fragments a
-    * `vacuumAfter = false` compaction left behind. No-op on a
-    * pre-manifest tree (its listing IS the live set). Returns the
-    * number of files removed. Safe under the single-writer
-    * discipline: a removed file is unreachable by every manifest
+    * `vacuumAfter = false` compaction left behind. No-op on an empty
+    * tree: its first commit takes only its own files, and the vacuums
+    * after it collect the rest. Returns the number of files removed.
+    * Safe under the single-writer discipline: a removed file is unreachable by every manifest
     * reader; `olderThanMs` adds the reader grace period on top.
     *
     * TWO protections, deliberately layered (Delta's RESTORE-vs-
@@ -758,12 +689,8 @@ final class ManifestedTree(
       lazy val installedAt = fs.getFileStatus(p).getModificationTime
       if (isFull) {
         val next = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        parse(ManifestedTree.readLines(fs, p)).foreach { line =>
-          line.split('\t') match {
-            case Array(f, s) => next(f) = s.toLong
-            case _ => next(line) = -1L
-          }
-        }
+        parse(ManifestedTree.readLines(fs, p))
+          .foreach(line => next += ManifestedTree.fullEntry(line, p))
         cur.keysIterator.filterNot(next.contains)
           .foreach(f => deadSince(f) = installedAt)
         next.keysIterator.foreach(deadSince.remove)
@@ -782,53 +709,43 @@ final class ManifestedTree(
   /** The tree as a DataFrame, memoized per manifest generation:
     * manifest-planned ([[ManifestFileIndex]] — zero list/stat calls,
     * partition pruning kept, the read schema from the generation's
-    * `#schema` record, so no job) when sizes are present; a legacy
-    * size-less manifest demotes to the per-file read (one stat per
-    * entry); an EMPTY generation (delete-everything) opens as a typed
-    * empty frame from the manifest's schema record. Only a tree that
-    * never published a manifest falls back to the recursive listing —
-    * a sealed tree with no readable generation FAILS LOUDLY instead
-    * (a listing there would adopt crash orphans and double-count a
-    * mid-compaction tree). */
+    * `#schema` record, so no job); an EMPTY generation
+    * (delete-everything) opens as a typed empty frame from the
+    * manifest's schema record. A tree with no committed generation is
+    * empty and opens as a zero-row frame of its partition columns — no
+    * listing ever adopts the files under it — unless it is sealed: a
+    * sealed tree with no readable generation lost its manifests and
+    * FAILS LOUDLY. */
   def open(): DataFrame = openCache.getOrElse {
     val df = resolveState() match {
-      case Some(c) if c.entries.nonEmpty => plan(c.entries, c.schema)
-      case Some(c) => c.schema match {
-        case Some(s) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-        case None => throw new IllegalStateException(
-          s"manifested tree $root: current generation is empty and " +
-          "carries no schema record — cannot open (rebuild or append " +
-          "to re-establish one)")
-      }
+      case Some(c) => plan(c.entries, c.schema)
       case None if fs.exists(new Path(s"$root/$SealName")) =>
         throw new IllegalStateException(
           s"manifested tree $root: seal present but no manifest " +
-          "generation is readable — refusing the listing fallback " +
-          "(it would adopt uncommitted files); restore a manifest or " +
-          "rebuild the layout")
-      case None => spark.read.parquet(root)
+          "generation is readable — refusing to open it as empty; " +
+          "restore a manifest or rebuild the layout")
+      case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], partitionSchema)
     }
     openCache = Some(df)
     df
   }
 
   /** The frame over `entries`, a subset of the current generation's
-    * live files (or of a pre-manifest tree's listing), planned like
-    * [[open]]: no listing, no inference job. */
+    * live files, planned like [[open]]: no listing, no inference job. */
   def openEntries(entries: Seq[(String, Long)]): DataFrame = {
     require(entries.nonEmpty, s"manifested tree $root: no files to open")
     plan(entries, resolveState().flatMap(_.schema))
   }
 
-  /** A frame over one generation's non-empty `entries` read with its
-    * `#schema` record; a legacy size-less entry demotes the read to
-    * `spark.read` (one stat per file). */
-  private def plan(entries: Seq[(String, Long)], schema: Option[StructType]): DataFrame =
-    if (entries.forall(_._2 >= 0))
-      ManifestFileIndex.read(spark, root, entries, partitionSchema, schema)
-    else spark.read.option("basePath", root)
-      .parquet(entries.map(f => s"$root/${f._1}"): _*)
+  /** A frame over one generation's `entries` read with its `#schema`
+    * record; no entries open as a typed empty frame. */
+  private def plan(entries: Seq[(String, Long)], schema: Option[StructType]): DataFrame = {
+    val s = schema.getOrElse(throw new IllegalStateException(
+      s"manifested tree $root: the generation carries no schema record — " +
+      "cannot open it (rebuild or append to re-establish one)"))
+    if (entries.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+    else ManifestFileIndex.read(spark, root, entries, partitionSchema, s)
+  }
 
   // --- snapshot reads + rollback (the lake RESTORE shape) -------------
 
@@ -887,15 +804,8 @@ final class ManifestedTree(
 
   private def openAtUncached(gen: Long): DataFrame = {
     genListCount += 1 // resolveChain lists the manifest directory
-    resolve(Some(gen)) match {
-      case Some(c) if c.entries.nonEmpty => plan(c.entries, c.schema)
-      case Some(c) => c.schema match {
-        case Some(s) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-        case None => throw new IllegalStateException(
-          s"manifested tree $root: generation $gen is empty with no " +
-          "schema record")
-      }
+    resolveChain(fs, root, Some(gen)) match {
+      case Some(c) => plan(c.entries, c.schema)
       case None => throw new IllegalArgumentException(
         s"manifested tree $root: no generation <= $gen is retained " +
         s"(available: ${generations().map(_._1).mkString(",")})")
@@ -909,7 +819,7 @@ final class ManifestedTree(
     * generation keep their grace copy. Same on-disk-files caveat as
     * [[openAt]]. */
   def rollbackTo(gen: Long): Unit =
-    resolve(Some(gen)) match {
+    resolveChain(fs, root, Some(gen)) match {
       case Some(c) => commitFull(c.entries, c.schema)
       case None => throw new IllegalArgumentException(
         s"manifested tree $root: no generation <= $gen is retained " +
@@ -925,7 +835,6 @@ object ManifestedTree {
     extends java.io.IOException(msg)
 
   private val ManifestPrefix = "_manifest."
-  private val LegacyName = "_manifest.txt"
   private[plans] val SealName = "_manifest.seal"
   /** Delta commits between full-snapshot rebases: bounds the reader's
     * chain length (resolve reads at most 1 full + 15 deltas) while a
@@ -959,14 +868,10 @@ object ManifestedTree {
       // commits: the writer's O(batch) collision probe (does an
       // addition re-add a live path?) must not hash the whole tree per
       // commit — ManifestLadder holds the delta commit to O(batch)
-      paths: Set[String],
-      // the record came from the full snapshot, not from a delta, over
-      // a non-empty live set (see the class's resolve)
-      fullRecord: Boolean = false)
+      paths: Set[String])
 
   /** All manifest generation files under `root`:
-    * (generation, isFull, path). The legacy `_manifest.txt` reports as
-    * generation 0 full. */
+    * (generation, isFull, path). */
   private def globManifests(fs: FileSystem,
                             root: String): Seq[(Long, Boolean, Path)] = {
     val st = fs.globStatus(new Path(s"$root/${ManifestPrefix}*"))
@@ -974,7 +879,6 @@ object ManifestedTree {
     else st.toSeq.flatMap { s =>
       val n = s.getPath.getName
       n match {
-        case LegacyName => Seq((0L, true, s.getPath))
         case _ if n.endsWith(".full.txt") =>
           n.stripPrefix(ManifestPrefix).stripSuffix(".full.txt").toLongOption
             .map(g => (g, true, s.getPath)).toSeq
@@ -993,12 +897,19 @@ object ManifestedTree {
     raw.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
   }
 
+  /** One `path<TAB>size` line of the full snapshot at `p`. */
+  private def fullEntry(line: String, p: Path): (String, Long) =
+    line.split('\t') match {
+      case Array(f, s) if s.toLongOption.isDefined => (f, s.toLong)
+      case _ => throw new IllegalStateException(s"manifest $p: bad line '$line'")
+    }
+
   /** Resolve the live chain: newest generation = greatest numbered
-    * full <= max(gen) (or the legacy file) plus the deltas after it,
-    * applied in order. Retries once on a vanished file (a reader
-    * racing two full commits past its glob — the pruner keeps one
-    * full chain of grace, so this needs back-to-back rebases to ever
-    * trigger); a sealed tree that still fails to resolve throws. */
+    * full <= max(gen) plus the deltas after it, applied in order.
+    * Retries once on a vanished file (a reader racing two full
+    * commits past its glob — the pruner keeps one full chain of
+    * grace, so this needs back-to-back rebases to ever trigger); a
+    * sealed tree that still fails to resolve throws. */
   private[plans] def resolveChain(fs: FileSystem, root: String,
                                   upTo: Option[Long] = None): Option[Chain] = {
     def attempt(): Option[Chain] = {
@@ -1025,26 +936,15 @@ object ManifestedTree {
           s"manifest chain at $root is torn: missing generation(s) " +
           missing.mkString(","))
       var schema: Option[StructType] = None
-      var recordInDelta = false
-      def parse(lines: Seq[String], delta: Boolean): Seq[String] = lines.filter { l =>
-        if (l.startsWith("#")) {
-          if (l.startsWith("#schema\t")) {
-            schema = Some(DataType.fromJson(l.stripPrefix("#schema\t"))
-              .asInstanceOf[StructType])
-            recordInDelta = delta
-          }
-          false
-        } else true
+      def parse(lines: Seq[String]): Seq[String] = lines.filter { l =>
+        if (l.startsWith("#schema\t"))
+          schema = Some(DataType.fromJson(l.stripPrefix("#schema\t")).asInstanceOf[StructType])
+        !l.startsWith("#")
       }
       val entries = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      parse(readLines(fs, fullPath), delta = false).foreach { line =>
-        line.split('\t') match {
-          case Array(p, s) => entries(p) = s.toLong
-          case _ => entries(line) = -1L
-        }
-      }
+      parse(readLines(fs, fullPath)).foreach(line => entries += fullEntry(line, fullPath))
       ((fullGen + 1) to maxGen).foreach { g =>
-        parse(readLines(fs, deltaByGen(g)), delta = true).foreach { line =>
+        parse(readLines(fs, deltaByGen(g))).foreach { line =>
           line.split('\t') match {
             case Array("+", p, s) => entries(p) = s.toLong
             case Array("-", p) => entries.remove(p)
@@ -1054,8 +954,7 @@ object ManifestedTree {
         }
       }
       Some(Chain(entries.toVector, schema, maxGen, fullGen,
-        (maxGen - fullGen).toInt, entries.keysIterator.toSet,
-        fullRecord = schema.isDefined && !recordInDelta && entries.nonEmpty))
+        (maxGen - fullGen).toInt, entries.keysIterator.toSet))
     }
     try attempt() catch {
       case _: java.io.FileNotFoundException =>
@@ -1080,20 +979,12 @@ object ManifestedTree {
     globManifests(fs, root).nonEmpty
   }
 
-  /** The resolved LIVE entries as `path<TAB>size` text (one line per
-    * file) — what the v1 single-file manifest contained. */
+  /** The resolved LIVE entries as `path<TAB>size` text, one line per
+    * file. */
   def liveManifestText(spark: SparkSession, root: String): String = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     resolveChain(fs, root).map(_.entries.sortBy(_._1)
       .map { case (p, s) => s"$p\t$s" }.mkString("\n")).getOrElse("")
-  }
-
-  /** Remove every manifest control file (generations, legacy, seal) —
-    * the test helper that turns a tree back into a pre-manifest one. */
-  def clearManifests(spark: SparkSession, root: String): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    globManifests(fs, root).foreach { case (_, _, p) => fs.delete(p, false) }
-    fs.delete(new Path(s"$root/$SealName"), false)
   }
 
   /** (relative path, size) of the visible files under `treeRoot` — the

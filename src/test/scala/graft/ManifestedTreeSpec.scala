@@ -125,33 +125,6 @@ class ManifestedTreeSpec extends AnyFunSuite {
     fs.delete(new Path(root), true)
   }
 
-  test("legacy single-file manifest reads as generation 0 and upgrades via delta commits") {
-    val (tree, root) = freshTree()
-    tree.appendCommitted(rows(0 until 16), 1000000L)
-    val legacyText = ManifestedTree.liveManifestText(spark, root)
-    // rewind to the v1 layout: one _manifest.txt, no generations/seal
-    ManifestedTree.clearManifests(spark, root)
-    val out = fs.create(new Path(s"$root/_manifest.txt"), true)
-    out.write(legacyText.getBytes("UTF-8")); out.close()
-    val v1 = new ManifestedTree(spark, root, pSchema)
-    assert(v1.open().count() == 16, "legacy manifest not readable")
-    // next commits ride deltas on the legacy base
-    v1.appendCommitted(rows(100 until 110), 1000000L)
-    assert(v1.open().count() == 26)
-    assert(fs.exists(new Path(s"$root/_manifest.txt")),
-      "legacy base deleted while still the chain's only full snapshot")
-    // enough rebases to roll the legacy base out of the KeepFulls
-    // retention window: the legacy file is pruned
-    val nCommits = ManifestedTree.RebaseEvery * ManifestedTree.KeepFulls
-    (0 until nCommits).foreach { b =>
-      v1.appendCommitted(rows(200 + b * 2 until 202 + b * 2), 1000000L)
-    }
-    assert(!fs.exists(new Path(s"$root/_manifest.txt")),
-      s"legacy manifest survived ${ManifestedTree.KeepFulls} rebases")
-    assert(v1.open().count() == 26 + nCommits * 2)
-    fs.delete(new Path(root), true)
-  }
-
   test("snapshot reads and rollback: openAt replays a retained generation; rollbackTo restores it forward") {
     val (tree, root) = freshTree()
     tree.appendCommitted(rows(0 until 20), 1000000L)
@@ -416,26 +389,6 @@ class ManifestedTreeSpec extends AnyFunSuite {
       s"rebuild recorded ${rebuilt.schema.simpleString}, its files read as " +
       expected.simpleString)
     assert(rebuilt.where(col("score").isNotNull).count() == 20)
-
-    // Older writers published that rebuild as a full snapshot carrying
-    // the previous record forward. A full snapshot's record is checked
-    // against its files, still without a job.
-    val gen = tree.chainInfo().get._1 + 1
-    tree.installManifest(f"_manifest.$gen%09d.full.txt", s"#schema\t${df.schema.json}\n" +
-      fresh.map { case (p, n) => s"$p\t$n" }.mkString("\n"))
-    def checkStale(what: String)(open: => (org.apache.spark.sql.DataFrame, Int)) = {
-      val (stale, jobs) = open
-      assert(jobs == 0, s"$what: checking the record launched $jobs Spark job(s)")
-      assert(stale.schema == expected,
-        s"$what: planned ${stale.schema.simpleString}, its files read as ${expected.simpleString}")
-    }
-    checkStale("stale full head")(open())
-    checkStale("pinned stale full")(
-      SparkJobs.count(spark)(new ManifestedTree(spark, root, iSchema).openAt(gen)))
-    // a delta without a record (a copy-on-write swap) leaves the full
-    // snapshot's record in force
-    new ManifestedTree(spark, root, iSchema).commitSwap(Seq(s"$root/${fresh.head._1}"), Seq.empty)
-    checkStale("swap delta over the stale full")(open())
     fs.delete(new Path(root), true)
   }
 }

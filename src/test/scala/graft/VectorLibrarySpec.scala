@@ -35,16 +35,13 @@ class VectorLibrarySpec extends AnyFunSuite {
   }
 
   /** Read a geometry sidecar the way the library does: the NEWEST
-    * generation-numbered `<base>.g<gen>` directory, falling back to
-    * the plain pre-versioning path (rebuilds write geometry
-    * generation-numbered since r11, so a raw plain-path read no
-    * longer exists after a build). */
+    * generation-numbered `<base>.g<gen>` directory. */
   private def geomRead(base: String): org.apache.spark.sql.DataFrame = {
     val p = new org.apache.hadoop.fs.Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val newest = fs.listStatus(p.getParent).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(p.getName + ".g")).sorted.lastOption
-    spark.read.parquet(newest.fold(base)(n => s"${p.getParent}/$n"))
+      .filter(_.startsWith(p.getName + ".g")).max
+    spark.read.parquet(s"${p.getParent}/$newest")
   }
 
   test("library lifecycle: ingest, search, stats, delete") {
@@ -546,7 +543,7 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.delete()
   }
 
-  test("filtered grid search keeps the fitted index: pruned probe, filtered radius, schema-evolution fallback") {
+  test("filtered grid search probes the fitted index with a filtered radius") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val root = Files.createTempDirectory("graft-lib-gridf").toString
@@ -615,112 +612,6 @@ class VectorLibrarySpec extends AnyFunSuite {
         s"filtered grid batch diverged for query $i")
     }
 
-    // schema-evolution: a pre-metadata cell layout cannot resolve the
-    // predicate -> store-backed fallback, never an error or a silent
-    // wrong answer
-    val cellsPath = s"$root/gridf-lib/grid_index/cells"
-    val old = spark.read.parquet(cellsPath)
-      .select(col("chunk_id"), col("embedding"), col("cell")).collect()
-    val oldDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(old.toIndexedSeq),
-      spark.read.parquet(cellsPath)
-        .select(col("chunk_id"), col("embedding"), col("cell")).schema)
-    oldDf.write.mode("overwrite").partitionBy("cell").parquet(cellsPath)
-    lib.invalidateIndexes()
-    val fb = lib.search(qt, 5, filter = Some(pred))
-    assert(fb.count() == 5, "pre-metadata grid layout broke the filtered fallback")
-    val fbSrcs = lib.chunks.join(fb, "chunk_id")
-      .select(col("source")).collect().map(_.getString(0))
-    assert(fbSrcs.forall(allowed), "fallback hit outside the predicate")
-    lib.delete()
-  }
-
-  test("IVF append onto a pre-metadata assigned layout rebuilds instead of mixing schemas") {
-    val root = Files.createTempDirectory("graft-lib-ivfmig").toString
-    val lib = new VectorLibrary(spark, root, "ivfmig-lib")
-    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(80)
-    lib.addDocuments(docs.filter(col("doc_id") < 60))
-    lib.setAlgorithm("ivf")
-    lib.buildIvfIndex()
-
-    // simulate an index written before metadata rode in assigned rows
-    val aPath = s"$root/ivfmig-lib/ivf_index/assigned"
-    val oldSchema = spark.read.parquet(aPath)
-      .select(col("chunk_id"), col("embedding"), col("cluster"))
-    val oldRows = oldSchema.collect()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(oldRows.toIndexedSeq), oldSchema.schema)
-      .write.mode("overwrite").partitionBy("cluster").parquet(aPath)
-    lib.invalidateIndexes()
-
-    // append: the guard must REBUILD (with metadata) rather than mix.
-    // Read the result through the manifest: the rebuild installs
-    // beside the displaced files (history-preserving), so a raw
-    // listing read would count dead bytes too.
-    lib.addDocuments(docs.filter(col("doc_id") >= 60))
-    val assigned = manifestRead(aPath,
-      "cluster" -> org.apache.spark.sql.types.IntegerType)
-    assert(Seq("doc_id", "source", "n_tokens").forall(assigned.columns.contains),
-      "IVF append onto a pre-metadata layout did not rebuild")
-    assert(assigned.count() == lib.chunks.count(),
-      "rebuilt IVF index lost rows")
-    assert(assigned.filter(col("source").isNull).count() == 0,
-      "rebuilt IVF index carries null metadata")
-
-    // a filtered search now sees pre-upgrade documents too
-    val pred = col("doc_id") < 10
-    val hits = lib.search("spark join stream table filter", 10, filter = Some(pred))
-    val ids = lib.chunks.join(hits, "chunk_id")
-      .select(col("doc_id")).collect().map(_.getLong(0))
-    assert(ids.nonEmpty && ids.forall(_ < 10),
-      "filtered IVF search dropped pre-upgrade rows after migration")
-    lib.delete()
-  }
-
-  test("a migration rebuild records its fresh files' schema in the head manifest") {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
-    val root = Files.createTempDirectory("graft-lib-ivfrec").toString
-    val lib = new VectorLibrary(spark, root, "ivfrec-lib")
-    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(80)
-    lib.addDocuments(docs.filter(col("doc_id") < 60))
-    lib.buildIvfIndex()
-
-    // a pre-metadata assigned layout that is MANIFESTED: its schema
-    // record describes the old rows
-    val aPath = s"$root/ivfrec-lib/ivf_index/assigned"
-    val oldSchema = spark.read.parquet(aPath)
-      .select(col("chunk_id"), col("embedding"), col("cluster"))
-    val oldRows = oldSchema.collect()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(oldRows.toIndexedSeq), oldSchema.schema)
-      .write.mode("overwrite").partitionBy("cluster").parquet(aPath)
-    val legacy = new graft.plans.ManifestedTree(spark, aPath,
-      StructType(Seq(StructField("cluster", IntegerType))))
-    legacy.writeManifest(legacy.listFiles())
-    lib.invalidateIndexes()
-
-    // the append migrates by rebuilding; the rebuild's commit must
-    // record the schema of the files it installed, not carry the old
-    // record forward (opens plan from the record)
-    lib.addDocuments(docs.filter(col("doc_id") >= 60))
-    val fs = new Path(aPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val head = fs.globStatus(new Path(s"$aPath/_manifest.*.txt")).map(_.getPath)
-      .maxBy(_.getName)
-    assert(head.getName.endsWith(".full.txt"), s"migration did not rebuild: head $head")
-    val text = {
-      val in = fs.open(head)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    val record = text.split('\n').collectFirst {
-      case l if l.startsWith("#schema\t") => DataType.fromJson(l.stripPrefix("#schema\t"))
-    }
-    val live = graft.plans.ManifestedTree.liveManifestText(spark, aPath)
-      .split('\n').map(_.split('\t')(0))
-    val footer = spark.read.option("basePath", aPath).parquet(s"$aPath/${live.head}").schema
-    assert(footer.fieldNames.contains("doc_id"), "migration did not rebuild with metadata")
-    assert(record.contains(footer),
-      s"head record ${record.map(_.simpleString)} differs from its files' ${footer.simpleString}")
     lib.delete()
   }
 
@@ -895,7 +786,7 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.delete()
   }
 
-  test("grid bounds load in one job, with or without the cells_per_dim column") {
+  test("grid bounds load in one job") {
     val root = Files.createTempDirectory("graft-lib-gridbounds").toString
     val lib = new VectorLibrary(spark, root, "gb")
     lib.addDocuments(Tables.load(spark, SparkTestSession.sfDir, "documents").limit(30))
@@ -905,14 +796,24 @@ class VectorLibrarySpec extends AnyFunSuite {
     val (current, jobs) = SparkJobs.count(spark)(lib.gridBoundsAt(sidecar))
     assert(jobs == 1, s"loading the bounds sidecar launched $jobs jobs")
     assert(current._3 == 3 && current._4 == 5)
-    // the legacy variant: no cells_per_dim column, decoded through the
-    // meta file the build wrote
-    val legacy = Files.createTempDirectory("graft-gridbounds-legacy").toString + "/bounds"
-    spark.read.parquet(sidecar).select("d", "lo", "hi").coalesce(1).write.parquet(legacy)
-    val (old, legacyJobs) = SparkJobs.count(spark)(lib.gridBoundsAt(legacy))
-    assert(legacyJobs == 1, s"loading a legacy bounds sidecar launched $legacyJobs jobs")
-    assert(old._1.toSeq == current._1.toSeq && old._2.toSeq == current._2.toSeq &&
-      old._3 == 3 && old._4 == 5, s"legacy sidecar decoded as $old")
+    lib.delete()
+  }
+
+  test("an index build keeps the other layouts' generation facts: the next grid search pays no extra job") {
+    val root = Files.createTempDirectory("graft-lib-genmemo").toString
+    val lib = new VectorLibrary(spark, root, "genmemo")
+    lib.addDocuments(Tables.load(spark, SparkTestSession.sfDir, "documents").limit(40))
+    lib.buildGridIndex()
+    lib.setAlgorithm("grid")
+    val qt = "spark join stream table filter"
+    lib.search(qt, 5).collect()
+    val (warmHits, warm) = SparkJobs.count(spark)(lib.search(qt, 5).collect())
+    // a build of another layout commits only its own tree: the store's
+    // emptiness, the grid occupancy and the bounds it loaded still hold
+    lib.buildPqIndex(m = 4, kk = 8)
+    val (hits, next) = SparkJobs.count(spark)(lib.search(qt, 5).collect())
+    assert(next <= warm, s"grid search after a pq build launched $next jobs, warm $warm")
+    assert(hits.toSeq == warmHits.toSeq)
     lib.delete()
   }
 
@@ -1389,19 +1290,26 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(!fs.exists(orphan),
       "vacuum left an unreferenced file in a compacted directory")
 
-    // Pre-manifest layout: clearing ALL manifest control files (the
-    // seal included — a sealed tree with no generations fails loudly
-    // instead, ManifestedTreeSpec) falls back to the listing reader
-    // (which DOES see the orphan if still present) and the next
-    // mutation upgrades the layout with a fresh manifest.
-    graft.plans.ManifestedTree.clearManifests(spark, idxRoot)
-    lib.invalidateIndexes()
-    assert(lib.searchApprox(q, k = 10).collect().nonEmpty,
-      "legacy listing fallback broken")
-    lib.addDocuments(docs.filter(col("doc_id") < 5)
-      .withColumn("doc_id", col("doc_id") + 5000))
-    assert(graft.plans.ManifestedTree.manifestExists(spark, idxRoot),
-      "mutation on a legacy layout must publish a manifest")
+    lib.delete()
+  }
+
+  test("a crash before the store's first manifest commit leaves orphans no read or append adopts") {
+    val root = Files.createTempDirectory("graft-lib-firstcrash").toString
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(20)
+    val src = new VectorLibrary(spark, Files.createTempDirectory("graft-lib-firstcrash-src").toString, "src")
+    src.addDocuments(docs)
+    val n = src.chunks.count()
+    // the batch's rows reached the store directory; its commit never did
+    src.chunks.write.partitionBy("source").parquet(s"$root/crash-lib/chunks")
+    val lib = new VectorLibrary(spark, root, "crash-lib")
+    assert(lib.chunks.count() == 0, "a store with no committed generation read its orphans")
+    assert(manifestRead(s"$root/crash-lib/chunks",
+      "source" -> org.apache.spark.sql.types.StringType).count() == 0,
+      "a tree with no committed generation opened its orphans")
+    lib.addDocuments(docs)
+    assert(lib.chunks.count() == n, s"the first commit adopted orphans: ${lib.chunks.count()} != $n")
+    assert(lib.chunks.select("chunk_id").distinct().count() == n)
+    src.delete()
     lib.delete()
   }
 
