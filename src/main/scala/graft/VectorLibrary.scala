@@ -1049,7 +1049,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * go too: a rebuild restarts at generation 1. */
   private def dropLayout(l: Layout): Unit = withTreeLocks(Seq(l.name)) {
     hadoopFs(l.dir).delete(new org.apache.hadoop.fs.Path(l.dir), true)
-    genMemo.remove(l.name)
+    genMemo.keys.filter(t => t == l.name || t.startsWith(l.name + "/")).foreach(genMemo.remove)
     geomLoadCache.keys.filter(_.startsWith(l.dir + "/")).foreach(geomLoadCache.remove)
     invalidateIndexes()
   }
@@ -2223,6 +2223,28 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     /** Per-cell occupancy of generation `gen`, counted once. */
     def counts(frame: DataFrame, gen: Long): Seq[(String, Long)] =
       memoAt(this.name, gen)(VectorSearch.gridCellCounts(frame))
+    /** Per-cell occupancy of the rows of generation `gen` that `cells`
+      * (the layout frame under a filter) keeps, counted once per
+      * filter. The key is the filter's canonical resolved form, so two
+      * spellings of one predicate share an entry and two literals do
+      * not. Newest generation only, as [[memoAt]]; a nondeterministic
+      * filter, or a new one past [[VectorLibrary.FilteredOccupancyCap]]
+      * filters, counts per call. */
+    def filteredCounts(cells: DataFrame, gen: Long): Seq[(String, Long)] = {
+      import org.apache.spark.sql.catalyst.expressions.Expression
+      import org.apache.spark.sql.catalyst.plans.QueryPlan
+      import org.apache.spark.sql.catalyst.plans.logical.Filter
+      val memo = memoAt(s"${this.name}/filtered", gen)(
+        scala.collection.concurrent.TrieMap.empty[Expression, Seq[(String, Long)]])
+      val Filter(cond, child) = cells.queryExecution.analyzed
+      val key = QueryPlan.normalizeExpressions(cond, child.output).canonicalized
+      memo.getOrElse(key, {
+        val v = VectorSearch.gridCellCounts(cells)
+        if (cond.deterministic && memo.size < VectorLibrary.FilteredOccupancyCap)
+          memo.putIfAbsent(key, v)
+        v
+      })
+    }
     // A filtered probe resolves its expanding-rule radius from the
     // per-cell occupancy of the FILTERED rows — one narrow (cell,
     // predicate-cols) aggregate over the cell-partitioned layout, not
@@ -2234,7 +2256,7 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
       val (lo, hi, gd, cpd) = geomAt(gen)
       val cells = applyF(frame, filter)
       val occupancy = Some(
-        if (filter.isEmpty) counts(frame, gen) else VectorSearch.gridCellCounts(cells))
+        if (filter.isEmpty) counts(frame, gen) else filteredCounts(cells, gen))
       a.q.fold(
         qv => VectorSearch.gridKnnIndexed(cells, lo, hi, qv,
           "chunk_id", "embedding", a.kk, a.metric, gd, cpd, countsOpt = occupancy),
@@ -2996,6 +3018,9 @@ object VectorLibrary {
     * them beside the tree root immediately before the manifest commit.
     * Underscore-prefixed: invisible to listTree's fresh-file census. */
   val GeomStageDir = "_geom"
+
+  /** Distinct filters whose grid occupancy one generation memoizes. */
+  private val FilteredOccupancyCap = 64
 
   /** Index algorithms a library can route search through (reference
     * IndexAlgorithm enum + the quantized two-phase extension). */

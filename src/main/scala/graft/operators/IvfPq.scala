@@ -97,8 +97,8 @@ object IvfPq {
 
   /**
    * Two-phase probe: prune to the nProbe nearest cells, ADC-rank their
-   * rows codes-only against the cell's lookup table, exactly re-rank
-   * the rerankFactor*k shortlist on the float vectors.
+   * rows against the cell's lookup table, exactly re-rank the
+   * rerankFactor*k shortlist on the float vectors.
    *
    * `qv` is the query vector. Its probe cells and its per-cell lookup
    * tables (the query's residual against cell c feeds the same LUT
@@ -119,19 +119,13 @@ object IvfPq {
     }: _*)
     val luts = typedLit(cents.indices.map(i =>
       cents(i)._1 -> tables.getSeq[Seq[Double]](i)).toMap)
-    // Phase 2 re-reads ONLY the probed cells (partition pruning —
-    // previously the semi-join scanned every cell's float column) and
-    // pushes the bounded shortlist in as an In-filter: on the
-    // id-sorted cell files, row-group min/max stats turn the re-rank
-    // fetch into point reads.
-    val cells = idx.encoded.filter(col("cluster").isin(probe.map(Int.box): _*))
-    val ids = cells
-      .select(col(idCol),
-        PqIndex.adcCol(idx.books.size, element_at(luts, col("cluster"))).as("adc"))
-      .orderBy(col("adc").asc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    VectorSearch.shortlistTopK(cells, ids, qv, idCol, vecCol, k, metric)
+    // Both phases read ONLY the probed cells (partition pruning); the
+    // size rule of VectorSearch.twoPhaseTopK picks one job, or two with
+    // the shortlist pushed into the float re-read as an id In-filter
+    // (row-group point reads on the id-sorted cell files).
+    VectorSearch.twoPhaseTopK(idx.encoded.filter(col("cluster").isin(probe.map(Int.box): _*)),
+      PqIndex.adcCol(idx.books.size, element_at(luts, col("cluster"))), ascending = true,
+      k * rerankFactor, qv, idCol, vecCol, k, metric)
   }
 
   /**
@@ -273,10 +267,11 @@ object IvfPq {
 
   /**
    * Persist in the serving layout: ONE parquet table partitioned by
-   * cluster holding (id, vec, pq_codes) — phase 1 column-prunes to
-   * (id, pq_codes) inside the partition-pruned cells, phase 2 reads
-   * the float column for survivors only — plus tiny centroid and
-   * codebook side tables (driver/metastore-resident at any scale).
+   * cluster holding (id, vec, pq_codes) — above the small-relation
+   * threshold, phase 1 column-prunes to (id, pq_codes) inside the
+   * partition-pruned cells and phase 2 reads the float column for
+   * survivors only — plus tiny centroid and codebook side tables
+   * (driver/metastore-resident at any scale).
    */
   def writeIndex(idx: Index, path: String): Unit = {
     val spark = idx.encoded.sparkSession

@@ -28,10 +28,13 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructTyp
  *    an m x kk lookup table of subspace distances ONCE (on the driver,
  *    as a literal), then each corpus row's approximate distance is m
  *    array lookups summed in fixed subspace order — whole-stage
- *    codegen over builtins, no UDF. Phase 1 scans (id, pq_codes)
- *    ONLY; the float vectors join back for just the rerankFactor*k
- *    survivors (row-group-prunable point reads at 100 TB), phase 2
- *    re-ranks exactly.
+ *    codegen over builtins, no UDF. Phase 1 ranks by ADC and keeps
+ *    rerankFactor*k survivors, the exact re-rank scores them on the
+ *    floats. A single search carries the floats through phase 1 and
+ *    re-ranks on the driver when the codes frame is under Spark's
+ *    small-relation threshold (one job); above it, phase 1 scans
+ *    (id, pq_codes) ONLY and the floats are re-read for just the
+ *    survivors (row-group-prunable point reads at 100 TB).
  */
 object PqIndex {
 
@@ -114,10 +117,14 @@ object PqIndex {
 
   /**
    * Two-phase PQ top-k against pre-encoded rows: ADC shortlist of
-   * rerankFactor*k ids from the codes-only scan, exact re-rank on the
-   * fetched float survivors. `qv` is the query vector; its lookup
-   * table is built once, on the driver without a job
-   * ([[VectorSearch.evalLocal]]), and scored as a literal.
+   * rerankFactor*k ids, exact re-rank of the survivors on the floats —
+   * one job or two, by the size rule of
+   * [[VectorSearch.twoPhaseTopK]] (above it, phase 1 reads the codes
+   * only and phase 2 re-reads the survivors through a pushed id
+   * In-filter: row-group point reads on the id-clustered codes
+   * layout). `qv` is the query vector; its lookup table is built once,
+   * on the driver without a job ([[VectorSearch.evalLocal]]), and
+   * scored as a literal.
    */
   def search(encoded: DataFrame, books: Codebooks, qv: Array[Float],
              idCol: String, vecCol: String, k: Int,
@@ -125,22 +132,13 @@ object PqIndex {
              normalized: Boolean = false): DataFrame = {
     // normalized = codes were built over L2-normalized vectors (the
     // library layout, where ADC squared-L2 tracks cosine): the query
-    // normalizes identically before the table build; the exact phase-2
+    // normalizes identically before the table build; the exact
     // re-rank always runs on the raw vectors with the caller's metric.
     val q = if (normalized) graft.GraftFunctions.l2Normalize(typedLit(qv)) else typedLit(qv)
     val lut = typedLit(VectorSearch.evalLocal(encoded.sparkSession, lutCol(books, q))
       .getSeq[Seq[Double]](0))
-    // Phase 2 resolves the bounded (k*rerankFactor-row) ADC shortlist
-    // driver-side and pushes it into the float scan as an In-filter:
-    // on the id-clustered codes layout (files sorted by (source, id)
-    // with row-group min/max stats) parquet skips every row group
-    // holding no survivor — point reads, where a semi-join would
-    // re-scan the full float column.
-    val ids = encoded.select(col(idCol), adcCol(books.size, lut).as("adc"))
-      .orderBy(col("adc").asc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    VectorSearch.shortlistTopK(encoded, ids, qv, idCol, vecCol, k, metric)
+    VectorSearch.twoPhaseTopK(encoded, adcCol(books.size, lut), ascending = true,
+      k * rerankFactor, qv, idCol, vecCol, k, metric)
   }
 
   /**

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.GraftFunctions._
 
@@ -39,15 +41,25 @@ object VectorSearch {
     round(similarity(metric, col(vecCol), typedLit(qv)), 6)
 
   /** Evaluate `cols` — expressions over literals — on the driver
-    * without a Spark job: the optimizer evaluates a projection over a
-    * one-row local relation (ConvertToLocalRelation), and a collect of
-    * a local relation reads it in the driver. For the query-derived
-    * values that hold lambdas (PQ lookup tables, PCA projections),
-    * which constant folding leaves alone. */
-  private[operators] def evalLocal(spark: SparkSession, cols: Column*): Row =
-    spark.createDataFrame(java.util.List.of(Row(0)),
+    * without a Spark job ([[localRows]] over a one-row local relation).
+    * For the query-derived values that hold lambdas (PQ lookup tables,
+    * PCA projections), which constant folding leaves alone. */
+  private[operators] def evalLocal(spark: SparkSession, cols: Column*): Row = {
+    val df = spark.createDataFrame(java.util.List.of(Row(0)),
         new org.apache.spark.sql.types.StructType().add("_", "int"))
-      .select(cols: _*).collect()(0)
+      .select(cols: _*)
+    CatalystTypeConverters.createToScalaConverter(df.schema)(localRows(df).head).asInstanceOf[Row]
+  }
+
+  /** The rows of `df`, a projection over a local relation, as the
+    * optimizer computes them: ConvertToLocalRelation evaluates the
+    * projection into a local relation, so reading its rows needs no
+    * physical plan, no SQL execution and no job. A plan the rule left
+    * alone is collected instead. */
+  private def localRows(df: DataFrame): Seq[InternalRow] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation => l.data
+    case _ => df.queryExecution.executedPlan.executeCollect().toSeq
+  }
 
   /**
    * Exact (Flat) top-k against the single query vector `qv` — the
@@ -251,65 +263,42 @@ object VectorSearch {
    * shape: `lshKnnIndexed`'s column probe still reads every row's
    * bucket array once; here the non-probed data is never opened.
    *
-   * A candidate caught by several probed tables appears once per hit;
-   * occurrences are deduplicated AFTER scoring via a max aggregate on
-   * scalar (id, score) pairs — hash-aggregable, map-side-combinable,
-   * so no embedding array ever rides a shuffle. The score is
-   * occurrence-invariant, making max a pure dedup.
+   * A candidate caught by several probed tables appears once per hit,
+   * each time with the same score: ONE job keeps the first k·numTables
+   * scored rows (a TakeOrderedAndProject), which hold the first k
+   * distinct ids, and the driver drops the repeats. The result is a
+   * local frame.
    */
   def lshKnnPartitioned(index: DataFrame, qv: Array[Float], idCol: String,
                         vecCol: String, k: Int, metric: String = "cosine",
                         numTables: Int = 8, bitsPerTable: Int = 8, seed: Long = 42L,
                         extraProbes: Int = 2): DataFrame = {
-    index.filter(probePartitions(qv, numTables, bitsPerTable, seed, extraProbes))
-      .select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
-      .groupBy(col(idCol)).agg(max(col("score")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+    val ranked = knnFlat(index.filter(probePartitions(qv, numTables, bitsPerTable, seed,
+      extraProbes)), qv, idCol, vecCol, k * numTables, metric)
+    localFrame(firstDistinct(ranked.collect(), k, numTables), ranked)
   }
 
   /**
    * Fully index-resident two-phase probe of the bucket-PARTITIONED
    * index: phase 1 ranks the pruned directories' rows by integer dot
-   * over the stored int8 `codes` column ONLY (column pruning keeps the
-   * float vectors on disk — the phase-1 I/O is ~1/4 of the float
-   * probe's), phase 2 re-reads the SAME pruned directories for just
-   * the rerankFactor*k survivors' floats and ranks exactly. The store
-   * is never touched: both phases live entirely inside the index
-   * partitions, so at 100 TB a probe costs two pruned scans of
-   * ~numTables*(1+extraProbes) directories — the second one
-   * semi-joined down to the candidate ids.
-   *
-   * Multi-table duplicate hits dedup BEFORE the phase-1 top-k (max on
-   * the occurrence-invariant ascore), so the candidate budget is spent
-   * on distinct vectors.
+   * over the stored int8 `codes` column, the exact re-rank scores the
+   * rerankFactor*k distinct survivors on the floats. The store is
+   * never touched: both phases live inside the probed
+   * ~numTables*(1+extraProbes) directories. One job or two, by the
+   * size rule of [[twoPhaseTopK]]; a vector's per-table copies share
+   * one approximate and one exact score, so each phase dedups its
+   * ordered rows on the driver and the candidate budget is spent on
+   * distinct vectors.
    */
   def lshKnnPartitionedQuantized(index: DataFrame, qv: Array[Float], idCol: String,
                                  vecCol: String, codesCol: String, k: Int,
                                  metric: String = "cosine",
                                  numTables: Int = 8, bitsPerTable: Int = 8,
                                  seed: Long = 42L, extraProbes: Int = 2,
-                                 rerankFactor: Int = 4): DataFrame = {
-    val pruned = index.filter(probePartitions(qv, numTables, bitsPerTable, seed, extraProbes))
-    // Phase 2 stays a LAZY pruned semi-join here (unlike the
-    // binary/PQ/IVF-PQ probes, which switched to driver-resolved
-    // In-filter point reads): both phases already read only the
-    // probed (tbl, bucket) directories, whose occupancy the
-    // bits-scaling ingest rule holds constant in corpus size — so the
-    // semi-join's float I/O is already corpus-independent, and the
-    // one-job plan skips a driver sync per query.
-    val candIds = pruned
-      .select(col(idCol), quantizedDot(col(codesCol), queryCodes(qv)).as("ascore"))
-      .groupBy(col(idCol)).agg(max(col("ascore")).as("ascore"))
-      .orderBy(col("ascore").desc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .select(col(idCol))
-    pruned.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
-      .groupBy(col(idCol)).agg(max(col("score")).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
-  }
+                                 rerankFactor: Int = 4): DataFrame =
+    twoPhaseTopK(index.filter(probePartitions(qv, numTables, bitsPerTable, seed, extraProbes)),
+      quantizedDot(col(codesCol), queryCodes(qv)), ascending = false, k * rerankFactor,
+      qv, idCol, vecCol, k, metric, copies = numTables)
 
   /**
    * Batch probe of the bucket-PARTITIONED index: the UNION of all
@@ -678,35 +667,103 @@ object VectorSearch {
 
   /**
    * Quantized two-phase search against PRE-BUILT codes: phase 1 ranks
-   * by integer dot over the stored (scale, int8 bytes) column ONLY —
-   * a 4x narrower scan than the float column, and the float vectors
-   * never ride through the top-k sort. Phase 2 fetches floats for just
-   * the rerankFactor*k survivors (a semi-join, i.e. row-group-prunable
-   * point reads at scale) and re-ranks exactly.
+   * by integer dot over the stored (scale, int8 bytes) column, the
+   * exact re-rank scores the rerankFactor*k survivors on the floats.
+   * The size rule of [[twoPhaseTopK]] picks one job (a small frame:
+   * the shortlist carries its floats, the re-rank runs on the driver)
+   * or two (phase 1 reads the codes only, phase 2 re-reads the
+   * survivors through a pushed id In-filter).
    */
   def knnQuantizedIndexed(indexed: DataFrame, qv: Array[Float], idCol: String,
                           vecCol: String, codesCol: String, k: Int,
-                          metric: String = "cosine", rerankFactor: Int = 4): DataFrame = {
-    // Bounded shortlist resolved driver-side and pushed into the
-    // float scan as an In-filter — row-group point reads on an
-    // id-clustered store, instead of a full-float-column semi-join
-    // (the binary/PQ/IVF-PQ phase-2 discipline).
-    val ids = indexed
-      .select(col(idCol), quantizedDot(col(codesCol), queryCodes(qv)).as("ascore"))
-      .orderBy(col("ascore").desc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    shortlistTopK(indexed, ids, qv, idCol, vecCol, k, metric)
+                          metric: String = "cosine", rerankFactor: Int = 4): DataFrame =
+    twoPhaseTopK(indexed, quantizedDot(col(codesCol), queryCodes(qv)), ascending = false,
+      k * rerankFactor, qv, idCol, vecCol, k, metric)
+
+  /** Whether `phase1` (planned with the float vectors) should run as
+    * planned: Catalyst's size estimate of the relations it scans (for
+    * graft's trees the manifest's byte count, read without I/O) is at
+    * most Spark's small-relation threshold,
+    * `spark.sql.autoBroadcastJoinThreshold` (negative: never). A
+    * relation with no estimate (`defaultSizeInBytes`) is not small. */
+  private def scansSmall(phase1: DataFrame): Boolean = {
+    val conf = phase1.sparkSession.sessionState.conf
+    val size = phase1.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+    size <= conf.autoBroadcastJoinThreshold && size < conf.defaultSizeInBytes
   }
 
-  /** Phase 2 of a two-phase single-query kernel: the exact re-rank of
-    * the driver-resolved shortlist `ids`, pushed into the float scan
-    * as an In-filter; no rows for an empty shortlist. */
-  private[operators] def shortlistTopK(rows: DataFrame, ids: Array[Any], qv: Array[Float],
-                                       idCol: String, vecCol: String, k: Int,
-                                       metric: String): DataFrame =
-    if (ids.isEmpty) rows.limit(0).select(col(idCol), lit(0.0).as("score"))
-    else knnFlat(rows.filter(col(idCol).isin(ids: _*)), qv, idCol, vecCol, k, metric)
+  /**
+   * A two-phase single-query top-k. Phase 1 ranks `rows` by the
+   * approximate score `approx` (ties by id ascending) and keeps the
+   * first `shortlist` distinct ids; the exact re-rank scores them with
+   * [[scoreCol]] and keeps k. An id occurs in `rows` at most `copies`
+   * times, all with one score (the partitioned lsh index holds a row
+   * per table), so the first shortlist·copies rows hold the first
+   * `shortlist` ids.
+   *
+   * The form follows [[scansSmall]]:
+   *  - small frame, ONE job: phase 1 is a TakeOrderedAndProject that
+   *    carries id and vector; the re-rank runs on the driver
+   *    ([[rerankLocal]]) and the result is a local frame.
+   *  - otherwise, TWO jobs: phase 1 collects the ids only; phase 2
+   *    re-reads them through a pushed In-filter (row-group point reads
+   *    on an id-clustered store).
+   * Both forms return the same rows, scores and schema.
+   */
+  private[operators] def twoPhaseTopK(rows: DataFrame, approx: Column, ascending: Boolean,
+                                      shortlist: Int, qv: Array[Float], idCol: String,
+                                      vecCol: String, k: Int, metric: String,
+                                      copies: Int = 1): DataFrame = {
+    val a = col("__approx")
+    def phase1(carried: Column*): DataFrame =
+      rows.select(carried :+ approx.as("__approx"): _*)
+        .orderBy(if (ascending) a.asc else a.desc, col(idCol).asc)
+        .limit(shortlist * copies)
+        .select(carried: _*)
+    def firstIds(ranked: DataFrame): Array[Row] =
+      firstDistinct(ranked.collect(), shortlist, copies)
+    val withVectors = phase1(col(idCol), col(vecCol))
+    if (scansSmall(withVectors))
+      rerankLocal(withVectors, firstIds(withVectors), qv, idCol, vecCol, k, metric)
+    else {
+      val ids = firstIds(phase1(col(idCol))).map(_.get(0))
+      val survivors = if (ids.isEmpty) rows.limit(0) else rows.filter(col(idCol).isin(ids: _*))
+      val ranked = knnFlat(survivors, qv, idCol, vecCol, k * copies, metric)
+      if (copies == 1) ranked else localFrame(firstDistinct(ranked.collect(), k, copies), ranked)
+    }
+  }
+
+  /** The first `n` rows of `ranked` with distinct ids (column 0): with
+    * `copies` > 1, an id's occurrences share one score, so they sit
+    * next to each other in the order. */
+  private def firstDistinct(ranked: Array[Row], n: Int, copies: Int): Array[Row] =
+    if (copies == 1) ranked else ranked.distinctBy(_.get(0)).take(n)
+
+  /** `rows` as a local frame with `like`'s schema: a collect of it
+    * reads it in the driver, with no job. */
+  private def localFrame(rows: Array[Row], like: DataFrame): DataFrame =
+    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
+
+  /** The exact re-rank of collected `hits`, rows of `like`'s (id,
+    * vector) schema, on the driver with no job: [[scoreCol]] evaluates
+    * over a local relation ([[localRows]]), and the top k follow
+    * Spark's own ORDER BY score DESC, id ASC (NaN above every number,
+    * -0.0 equal to 0.0) through its interpreted ordering. */
+  private def rerankLocal(like: DataFrame, hits: Array[Row],
+                          qv: Array[Float], idCol: String, vecCol: String, k: Int,
+                          metric: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+      InterpretedOrdering, SortOrder}
+    val scored = localFrame(hits, like)
+      .select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
+    val schema = scored.schema
+    val order = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(1, schema(1).dataType, schema(1).nullable), Descending),
+      SortOrder(BoundReference(0, schema(0).dataType, schema(0).nullable), Ascending)))
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    localFrame(localRows(scored).sorted(order).take(k)
+      .map(r => toScala(r).asInstanceOf[Row]).toArray, scored)
+  }
 
   /**
    * Batch two-phase quantized top-k: ONE int8 scan scores every query
@@ -754,9 +811,10 @@ object VectorSearch {
     knnBinaryIndexed(indexed, qv, idCol, vecCol, "__bits", k, metric, rerankFactor)
   }
 
-  /** Binary search against PRE-BUILT packed codes: the phase-1 scan
-    * reads the codes column only (8 bytes/row at 64 dims); floats are
-    * fetched for just the shortlist via an In-filter.
+  /** Binary search against PRE-BUILT packed codes: phase 1 ranks by
+    * Hamming distance over the codes column (8 bytes/row at 64 dims),
+    * the exact re-rank scores the shortlist on the floats — in one job
+    * or two, by the size rule of [[twoPhaseTopK]].
     *
     * `qv` is ONE query vector (the convention of every single-query
     * operator in this file); [[knnBinaryBatch]] is the multi-query
@@ -764,20 +822,9 @@ object VectorSearch {
     * literal, which constant folding evaluates once, at planning. */
   def knnBinaryIndexed(indexed: DataFrame, qv: Array[Float], idCol: String,
                        vecCol: String, codesCol: String, k: Int,
-                       metric: String = "cosine", rerankFactor: Int = 8): DataFrame = {
-    // Phase 2 resolves the bounded (k*rerankFactor-row) shortlist
-    // driver-side and pushes it into the float scan as an In-filter:
-    // with the store clustered by id (the library layout keeps files
-    // id-sorted with row-group min/max stats), parquet skips every
-    // row group holding no survivor — point reads, where the earlier
-    // semi-join re-scanned the full float column.
-    val ids = indexed
-      .select(col(idCol), bitHamming(col(codesCol), bitPack(typedLit(qv))).as("hdist"))
-      .orderBy(col("hdist").asc, col(idCol).asc)
-      .limit(k * rerankFactor)
-      .collect().map(_.get(0))
-    shortlistTopK(indexed, ids, qv, idCol, vecCol, k, metric)
-  }
+                       metric: String = "cosine", rerankFactor: Int = 8): DataFrame =
+    twoPhaseTopK(indexed, bitHamming(col(codesCol), bitPack(typedLit(qv))), ascending = true,
+      k * rerankFactor, qv, idCol, vecCol, k, metric)
 
   /** Batch binary top-k: ONE codes scan serves every query (phase-1
     * shuffle carries k*rerankFactor bounded-heap partials per query

@@ -104,6 +104,73 @@ class ScalePathSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"recall@10=$recall")
   }
 
+  test("two-phase single searches: one job under the small-relation threshold, two above it, one answer") {
+    import graft.operators.PqIndex
+    import org.apache.spark.sql.{Column, DataFrame}
+    val corpus = emb.filter(col("vec_id") >= 3)
+    def written(df: DataFrame, parts: String*): DataFrame = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-two-phase").toString
+      df.write.mode("overwrite").partitionBy(parts: _*).parquet(dir)
+      spark.read.parquet(dir)
+    }
+    val codes = written(corpus.select(col("vec_id"), col("embedding"),
+      GraftFunctions.quantizeVec(GraftFunctions.l2Normalize(col("embedding"))).as("codes"),
+      GraftFunctions.bitPack(col("embedding")).as("bits")))
+    val books = PqIndex.train(corpus, "embedding", m = 4, kk = 8)
+    val pq = written(PqIndex.encodeExact(corpus.select(col("vec_id"), col("embedding")),
+      "embedding", books))
+    val ivfPath = java.nio.file.Files.createTempDirectory("graft-two-phase-ivfpq").toString
+    IvfPq.writeIndex(IvfPq.train(corpus.select(col("vec_id"), col("embedding")), "embedding"),
+      ivfPath)
+    val ivfpq = IvfPq.Index(IvfPq.readCenters(spark, ivfPath), IvfPq.readBooks(spark, ivfPath),
+      spark.read.parquet(s"$ivfPath/encoded"))
+    val root = java.nio.file.Files.createTempDirectory("graft-two-phase-lib").toString
+    val lib = new VectorLibrary(spark, root, "two-phase")
+    lib.addDocuments(Tables.load(spark, SparkTestSession.sfDir, "documents").limit(40))
+    lib.buildPartitionedIndex()
+    val queries = Seq(0L, 1L, 2L).map(QueryVectors.of(emb, _))
+    val texts = Seq("spark join stream table filter", "tokenize documents fast", "hash scan")
+    // 64-bit sign codes tie often: the binary shortlist's boundary is
+    // decided by the id tie-break in both forms
+    val hamming = codes.select(GraftFunctions.bitHamming(col("bits"),
+      GraftFunctions.bitPack(typedLit(queries.head))).as("h"))
+    assert(hamming.groupBy("h").count().filter(col("count") > 1).count() > 0)
+    // each kernel over query i, with `rows` narrowing its frame
+    val kernels = Seq[(String, (Int, Column) => DataFrame)](
+      "quantized" -> ((i: Int, rows: Column) => VectorSearch.knnQuantizedIndexed(codes.filter(rows),
+        queries(i), "vec_id", "embedding", "codes", 10)),
+      "binary" -> ((i: Int, rows: Column) => VectorSearch.knnBinaryIndexed(codes.filter(rows), queries(i),
+        "vec_id", "embedding", "bits", 10)),
+      "pq" -> ((i: Int, rows: Column) => PqIndex.search(pq.filter(rows), books, queries(i), "vec_id",
+        "embedding", 10)),
+      "ivfpq" -> ((i: Int, rows: Column) => IvfPq.search(ivfpq.copy(encoded = ivfpq.encoded.filter(rows)),
+        queries(i), "vec_id", "embedding", 10)),
+      "lsh quantized" -> ((i: Int, rows: Column) => lib.searchApproxQuantized(texts(i), 10,
+        filter = Some(rows))))
+    def run(search: => DataFrame) = SparkJobs.count(spark) {
+      val f = search
+      (f.schema, f.collect().toSeq)
+    }
+    for ((name, kernel) <- kernels; i <- queries.indices) {
+      run(kernel(i, lit(true))) // warm
+      val ((schema1, rows1), jobs1) = run(kernel(i, lit(true)))
+      val ((schema2, rows2), jobs2) = SparkTestSession.twoJobForm(run(kernel(i, lit(true))))
+      assert(rows1.nonEmpty && rows1 == rows2, s"$name: one-job $rows1, two-job $rows2")
+      assert(schema1 == schema2, s"$name: one-job $schema1, two-job $schema2")
+      assert((jobs1, jobs2) == (1, 2), s"$name: $jobs1 jobs in one-job form, $jobs2 in two-job")
+    }
+    // an empty shortlist: both forms answer no rows, under one schema
+    for ((name, kernel) <- kernels) {
+      val none = if (name == "lsh quantized") col("source") === "no such source"
+        else col("vec_id") < 0
+      val ((schema1, rows1), _) = run(kernel(0, none))
+      val ((schema2, rows2), _) = SparkTestSession.twoJobForm(run(kernel(0, none)))
+      assert(rows1.isEmpty && rows2.isEmpty, s"$name: $rows1 / $rows2")
+      assert(schema1 == schema2, s"$name (empty): one-job $schema1, two-job $schema2")
+    }
+    lib.delete()
+  }
+
   test("binary probe: recall against exact, and phase 1 reads bits not floats") {
     // write a store so the scan's ReadSchema is observable
     val dir = java.nio.file.Files.createTempDirectory("graft-bits").toString
@@ -112,8 +179,12 @@ class ScalePathSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(dir)
     val store = spark.read.parquet(dir)
     val q = QueryVectors.of(emb, 0)
-    val got = VectorSearch.knnBinaryIndexed(store, q, "vec_id", "embedding", "bits", 10)
-    val ids = got.collect().map(_.getLong(0))
+    def search() = VectorSearch.knnBinaryIndexed(store, q, "vec_id", "embedding", "bits", 10)
+    // above the small-relation threshold (here: none), the two-job form
+    val (got, ids) = SparkTestSession.twoJobForm {
+      val got = search()
+      (got, got.collect().map(_.getLong(0)))
+    }
     val exact = VectorSearch.knnFlat(emb.filter(col("vec_id") =!= 0), q,
       "vec_id", "embedding", 10, "cosine").collect().map(_.getLong(0))
     val recall = ids.count(exact.contains).toDouble / exact.length
@@ -129,6 +200,9 @@ class ScalePathSpec extends AnyFunSuite {
     val p2 = plan.split("\n").filter(_.contains("PushedFilters"))
     assert(p2.exists(l => l.contains("In(vec_id") || l.contains("vec_id IN")),
       s"phase-2 scan lost the pushed id shortlist filter:\n$plan")
+    // the store is under the default threshold: the one-job form
+    val one = SparkJobs.assertOneJobSearch(spark)(search(), "vec_id", "embedding")
+    assert(one.map(_.getLong(0)).toSeq == ids.toSeq)
   }
 
   test("IvfPq.encodeFast (native bulk encode) probes identically to the exact-fold encode") {
@@ -412,20 +486,32 @@ class ScalePathSpec extends AnyFunSuite {
     // the float column's pages stay closed until the re-rank fetch.
     val path = java.nio.file.Files.createTempDirectory("ivfpq-spec").toString
     IvfPq.writeIndex(idx, path)
-    val served = IvfPq.searchIndexed(spark, path, q, "vec_id", "embedding", 10)
+    def serve() = IvfPq.searchIndexed(spark, path, q, "vec_id", "embedding", 10)
     val direct = IvfPq.search(idx, q, "vec_id", "embedding", 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(served.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == direct)
-    // phase 1 is a cluster-pruned codes-only scan BY CONSTRUCTION
-    // (it projects (id, cluster, pq_codes) inside the probed cells
-    // before the eager shortlist resolve); the RETURNED plan is phase
-    // 2, whose scan must stay cluster-pruned AND carry the shortlist
-    // as a pushed In-filter on the id (row-group point reads).
-    val scans = served.queryExecution.executedPlan.toString
-      .linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.exists(s => s.contains("cluster") &&
-        (s.contains("In(vec_id") || s.contains("vec_id IN"))),
-      s"phase-2 scan lost cluster pruning or the id shortlist filter:\n${scans.mkString("\n")}")
+    // above the small-relation threshold (here: none), the two-job form
+    SparkTestSession.twoJobForm {
+      val served = serve()
+      assert(served.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == direct)
+      // phase 1 is a cluster-pruned codes-only scan BY CONSTRUCTION
+      // (it projects (id, cluster, pq_codes) inside the probed cells
+      // before the eager shortlist resolve); the RETURNED plan is phase
+      // 2, whose scan must stay cluster-pruned AND carry the shortlist
+      // as a pushed In-filter on the id (row-group point reads).
+      val scans = served.queryExecution.executedPlan.toString
+        .linesIterator.filter(_.contains("FileScan")).toSeq
+      assert(scans.exists(s => s.contains("cluster") &&
+          (s.contains("In(vec_id") || s.contains("vec_id IN"))),
+        s"phase-2 scan lost cluster pruning or the id shortlist filter:\n${scans.mkString("\n")}")
+    }
+    // the written index is under the default threshold: the one-job
+    // form, still cluster-pruned, with the same answer (side tables
+    // read first, as searchIndexed does)
+    val disk = IvfPq.Index(IvfPq.readCenters(spark, path), IvfPq.readBooks(spark, path),
+      spark.read.parquet(s"$path/encoded"))
+    val one = SparkJobs.assertOneJobSearch(spark)(
+      IvfPq.search(disk, q, "vec_id", "embedding", 10), "vec_id", "embedding", Some("cluster"))
+    assert(one.map(r => (r.getLong(0), r.getDouble(1))).toSeq == direct)
     idx.encoded.unpersist(); idxB.encoded.unpersist()
   }
 

@@ -18,6 +18,18 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body` with SQL conf `key` set to `value`; the previous value (or
+    * none) is restored afterwards. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body` with the two-phase single searches in their two-job form:
+    * no frame is under a small-relation threshold of -1. */
+  def twoJobForm[A](body: => A): A = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
 }
 
 class VectorFunctionsSpec extends AnyFunSuite {

@@ -290,8 +290,10 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.buildPartitionedIndex()
     assert(lib.hasPartitionedIndex)
 
-    val part = lib.searchApprox("spark join stream table filter", k = 10)
-    val partRows = part.collect()
+    // the probe collects its scored rows inside (one job) and returns a
+    // local frame: its scan is in the executions it ran
+    val (partRows, partRuns) = SparkJobs.executions(spark)(
+      lib.searchApprox("spark join stream table filter", k = 10).collect())
     assert(partRows.map(r => (r.getString(0), r.getDouble(1))).toSeq ==
       colProbe.map(r => (r.getString(0), r.getDouble(1))).toSeq,
       "partitioned probe diverged from the column probe")
@@ -309,7 +311,7 @@ class VectorLibrarySpec extends AnyFunSuite {
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scans)
     }
-    val scan = scans(part.queryExecution.executedPlan)
+    val scan = partRuns.flatMap(r => scans(r.executedPlan))
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("lsh_index")))
     assert(scan.nonEmpty, "no file scan over lsh_index in the plan")
     assert(scan.head.partitionFilters.nonEmpty, "probe not pushed as partition filters")
@@ -362,11 +364,14 @@ class VectorLibrarySpec extends AnyFunSuite {
     // partitioned probe: same results, and the predicate rides INSIDE
     // the pruned (tbl, bucket) scan as a pushed data filter
     lib.buildPartitionedIndex()
-    val part = lib.searchApprox(qt, 10, filter = Some(pred))
-    assert(part.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq ==
+    val ((part, partRows), partRuns) = SparkJobs.executions(spark) {
+      val part = lib.searchApprox(qt, 10, filter = Some(pred))
+      (part, part.collect())
+    }
+    assert(partRows.map(r => (r.getString(0), r.getDouble(1))).toSeq ==
       colProbe.map(r => (r.getString(0), r.getDouble(1))).toSeq,
       "filtered partitioned probe diverged from the filtered column probe")
-    val idxScans = scans(part.queryExecution.executedPlan)
+    val idxScans = partRuns.flatMap(r => scans(r.executedPlan))
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("lsh_index")))
     assert(idxScans.nonEmpty, "no lsh_index scan in the filtered probe plan")
     assert(idxScans.head.partitionFilters.nonEmpty,
@@ -401,9 +406,11 @@ class VectorLibrarySpec extends AnyFunSuite {
     // codes-only phase-1 column pruning
     lib.setAlgorithm("ivfpq")
     lib.buildIvfPqIndex()
-    val pqHits = lib.search(qt, 10, filter = Some(pred))
+    // (the probe collects inside and returns a local frame: its scans
+    // are in the executions it ran)
+    val (pqHits, pqRuns) = SparkJobs.executions(spark)(lib.search(qt, 10, filter = Some(pred)))
     assert(sourcesOf(pqHits).forall(allowed), "ivfpq hit outside the predicate")
-    val encScans = scans(pqHits.queryExecution.executedPlan)
+    val encScans = pqRuns.flatMap(r => scans(r.executedPlan))
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("ivfpq_index")))
     assert(encScans.exists(s => s.partitionFilters.nonEmpty &&
         s.dataFilters.exists(_.references.exists(_.name == "source"))),
@@ -615,6 +622,61 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.delete()
   }
 
+  test("filtered grid occupancy is memoized per filter: each source filter keeps its own radius") {
+    val root = Files.createTempDirectory("graft-lib-gridmemo").toString
+    val lib = new VectorLibrary(spark, root, "gridmemo-lib")
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents")
+    lib.addDocuments(docs.limit(120))
+    lib.setAlgorithm("grid")
+    lib.buildGridIndex()
+    val qt = "spark join stream table filter"
+    val q = lib.queryVector(qt)
+    val sources = lib.chunks.groupBy("source").count()
+      .orderBy(col("count").desc, col("source").asc).collect().map(_.getString(0))
+    val preds = Seq(col("source") =!= sources.last, col("source") === sources.last)
+    /** The filtered subset of the store, keyed by its cell under the
+      * fitted bounds. */
+    def subset(pred: org.apache.spark.sql.Column) = {
+      val m = geomRead(s"$root/gridmemo-lib/grid_index/bounds").collect().sortBy(_.getInt(0))
+      (lib.chunks.where(pred).select(col("chunk_id"), col("embedding"),
+        operators.VectorSearch.cellKeyCol(col("embedding"), m.map(_.getDouble(1)),
+          m.map(_.getDouble(2)), 4).as("cell")), m)
+    }
+    /** The expanding rule over the filtered subset, with `counts` as
+      * its occupancy (default: the subset's own). */
+    def expected(pred: org.apache.spark.sql.Column,
+                 counts: Option[Seq[(String, Long)]] = None): Seq[(String, Double)] = {
+      val (rows, m) = subset(pred)
+      operators.VectorSearch.gridKnnIndexed(rows, m.map(_.getDouble(1)), m.map(_.getDouble(2)),
+        q, "chunk_id", "embedding", 10, "cosine", m.length, 4, countsOpt = counts)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    }
+    def search(pred: org.apache.spark.sql.Column) = SparkJobs.count(spark)(
+      lib.search(qt, 10, filter = Some(pred)).collect().map(r => (r.getString(0), r.getDouble(1)))
+        .toSeq)
+    val expect = preds.map(expected(_))
+    // the spec can tell the filters apart: the small subset under the
+    // large one's occupancy gets another answer
+    val largeCounts = operators.VectorSearch.gridCellCounts(subset(preds(0))._1)
+    assert(expected(preds(1), Some(largeCounts)) != expect(1),
+      "both filters give one answer: the spec cannot see a shared memo")
+    for (round <- 1 to 2; (pred, e) <- preds.zip(expect)) {
+      val (hits, jobs) = search(pred)
+      assert(hits == e, s"round $round, filter $pred")
+      if (round == 2) assert(jobs == 1, s"warm filtered grid search launched $jobs jobs")
+    }
+    // another spelling of a memoized predicate resolves to its entry
+    val (hits, jobs) = search(lit(sources.last) === col("source"))
+    assert(hits == expect(1) && jobs == 1, s"$jobs jobs")
+    // a drop forgets the memo: the rebuilt layout restarts at generation
+    // 1 over more rows
+    lib.dropGridIndex()
+    lib.addDocuments(docs.filter(col("doc_id") >= 120).limit(60))
+    lib.buildGridIndex()
+    preds.foreach(pred => assert(search(pred)._1 == expected(pred), s"after rebuild, $pred"))
+    lib.delete()
+  }
+
   /** A library holding all five persisted layouts over `docs`. */
   private def fiveLayoutLibrary(tag: String,
       docs: org.apache.spark.sql.DataFrame): (VectorLibrary, String) = {
@@ -777,10 +839,14 @@ class VectorLibrarySpec extends AnyFunSuite {
         s"$a.$kind" -> jobs
       } finally spark.sparkContext.removeSparkListener(listener)
     }.toMap
+    // one job each: the two-phase kernels and lsh collect one ordered
+    // shortlist that carries its vectors and re-rank on the driver (the
+    // library's trees are under the small-relation threshold), and the
+    // filtered grid occupancy is memoized per (generation, filter)
     val expected = Map(
-      "flat" -> (1, 1, 1), "lsh" -> (2, 1, 2), "grid" -> (1, 3, 1), "ivf" -> (1, 1, 1),
-      "quantized" -> (2, 2, 2), "binary" -> (2, 2, 2), "pq" -> (2, 2, 2),
-      "ivfpq" -> (2, 2, 2)).flatMap { case (a, (h, f, p)) =>
+      "flat" -> (1, 1, 1), "lsh" -> (1, 1, 1), "grid" -> (1, 1, 1), "ivf" -> (1, 1, 1),
+      "quantized" -> (1, 1, 1), "binary" -> (1, 1, 1), "pq" -> (1, 1, 1),
+      "ivfpq" -> (1, 1, 1)).flatMap { case (a, (h, f, p)) =>
         Seq(s"$a.head" -> h, s"$a.filtered" -> f, s"$a.pinned" -> p) }
     assert(counts == expected, s"jobs per warm single search: ${counts.toSeq.sorted}")
     lib.delete()
@@ -927,27 +993,41 @@ class VectorLibrarySpec extends AnyFunSuite {
       exact.map(r => (r.getString(0), r.getDouble(1))).toSeq,
       "wide-window quantized probe diverged from the float probe")
 
-    val res = lib.searchApproxQuantized("spark join stream table filter", k = 10)
-    assert(res.count() == 10)
-
-    // Both phases scan the index, never the store; phase 1 reads the
-    // codes column only (the float embeddings stay on disk).
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
       case q: QueryStageExec => scans(q.plan)
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scans)
     }
-    val idxScans = scans(res.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("lsh_index")))
+    def probe() = SparkJobs.executions(spark)(
+      lib.searchApproxQuantized("spark join stream table filter", k = 10).collect())
+    def scansUnder(runs: Seq[org.apache.spark.sql.execution.QueryExecution], tree: String => Boolean) =
+      runs.flatMap(r => scans(r.executedPlan))
+        .filter(_.relation.location.rootPaths.exists(p => tree(p.toString)))
+
+    // Above the small-relation threshold (here: none), two jobs. Both
+    // phases scan the index, never the store; phase 1 reads the codes
+    // column only (the float embeddings stay on disk).
+    val (res, runs) = SparkTestSession.twoJobForm(probe())
+    assert(res.length == 10)
+    val idxScans = scansUnder(runs, _.contains("lsh_index"))
     assert(idxScans.size >= 2, "expected phase-1 and phase-2 scans over lsh_index")
     assert(idxScans.forall(_.partitionFilters.nonEmpty), "probe not partition-pruned")
     assert(idxScans.exists(s => s.schema.fieldNames.contains("quant") &&
       !s.schema.fieldNames.contains("embedding")),
       "no codes-only phase-1 scan — embedding column read in phase 1")
-    val storeScans = scans(res.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("chunks")))
+    val storeScans = scansUnder(runs, _.endsWith("chunks"))
     assert(storeScans.isEmpty, "quantized probe touched the chunk store")
+    // Under it, one pruned index scan that carries the floats, and the
+    // same answer.
+    val (one, oneRuns) = probe()
+    assert(one.toSeq == res.toSeq)
+    val oneScans = scansUnder(oneRuns, _.contains("lsh_index"))
+    assert(oneScans.size == 1 && oneScans.head.partitionFilters.nonEmpty &&
+      oneScans.head.schema.fieldNames.contains("embedding"),
+      s"the one-job probe is not one pruned scan carrying the floats: $oneScans")
+    assert(scansUnder(oneRuns, _.endsWith("chunks")).isEmpty,
+      "quantized probe touched the chunk store")
     lib.delete()
   }
 
@@ -2131,8 +2211,7 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(lib.hasIvfPqIndex)
     lib.setAlgorithm("ivfpq")
 
-    val res = lib.search("spark join stream table filter", k = 5)
-    val rows = res.collect()
+    val rows = lib.search("spark join stream table filter", k = 5).collect()
     assert(rows.length == 5)
     assert(rows.map(_.getDouble(1)).sliding(2).forall(p => p(0) >= p(1)))
     // cell-pruned ADC shortlist + exact re-rank: top hit agrees with flat
@@ -2141,14 +2220,25 @@ class VectorLibrarySpec extends AnyFunSuite {
       .collect()(0).getString(0)
     lib.setAlgorithm("ivfpq")
     assert(rows(0).getString(0) == exactTop, "ivfpq top-1 diverged from flat")
-    // phase 1 (codes-only, cluster-pruned) runs eagerly inside the
-    // probe; the returned plan is phase 2 — its scan must stay
-    // cluster-pruned and carry the pushed id-shortlist In-filter
-    val scans = res.queryExecution.executedPlan.toString
-      .linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.exists(s => s.contains("cluster") &&
-        (s.contains("In(chunk_id") || s.contains("chunk_id IN"))),
-      s"phase-2 scan lost pruning or the id shortlist filter:\n${scans.mkString("\n")}")
+    // warm, the library's trees under the small-relation threshold:
+    // one job, a cluster-pruned phase 1 carrying the floats
+    val one = SparkJobs.assertOneJobSearch(spark)(
+      lib.search("spark join stream table filter", k = 5), "chunk_id", "embedding",
+      Some("cluster"))
+    assert(one.toSeq == rows.toSeq)
+    // above the threshold (here: none), the two-job form: phase 1
+    // (codes-only, cluster-pruned) runs eagerly inside the probe; the
+    // returned plan is phase 2 — its scan must stay cluster-pruned and
+    // carry the pushed id-shortlist In-filter
+    SparkTestSession.twoJobForm {
+      val res = lib.search("spark join stream table filter", k = 5)
+      assert(res.collect().toSeq == rows.toSeq)
+      val scans = res.queryExecution.executedPlan.toString
+        .linesIterator.filter(_.contains("FileScan")).toSeq
+      assert(scans.exists(s => s.contains("cluster") &&
+          (s.contains("In(chunk_id") || s.contains("chunk_id IN"))),
+        s"phase-2 scan lost pruning or the id shortlist filter:\n${scans.mkString("\n")}")
+    }
 
     // batch matches per-query
     val qs = Seq("spark join stream table filter", "tokenize documents fast")

@@ -11,7 +11,8 @@
 # once in the parent and once here, alternating which side runs first
 # (odd seeds: parent first); run_seconds is BENCHMARK.json's. For each
 # end-to-end metric of BENCHMARK.json it prints both sides' median and
-# quartiles and in how many pairs the change was better; then, to show
+# quartiles, in how many pairs the change was better and a verdict
+# (`gain`, `within bound` or `worse than bound`); then, to show
 # where a change moved, each side's median per call kind: the library's
 # `kind_median_s` entries, or each suite query's median from `query_ms`
 # (both from the detail line a run prints before its result). Each side
@@ -74,7 +75,21 @@ def quart(xs):
     return med, q1, q3
 
 print(f"workload {workload}: {len(par)} pairs, parent {parent[:12]} vs working tree")
-print(f"{'metric':<12} {'parent median [q1, q3]':>28} {'change median [q1, q3]':>28} {'wins':>6}")
+# verdict: "gain" when the change wins >= 9 of 10 pairs and its median
+# beats the parent's by more than the parent's interquartile range;
+# "worse than bound" when its median is worse than the parent's by more
+# than the metric's relative `bound`; "within bound" otherwise
+def verdict(p, c, wins, lower, bound):
+    pm, pq1, pq3 = quart(p)
+    cm = quart(c)[0]
+    gap = pm - cm if lower else cm - pm
+    if wins * 10 >= 9 * len(p) and gap > pq3 - pq1:
+        return "gain"
+    if -gap > bound * abs(pm):
+        return "worse than bound"
+    return "within bound"
+
+print(f"{'metric':<12} {'parent median [q1, q3]':>28} {'change median [q1, q3]':>28} {'wins':>6}  verdict")
 for m in spec:
     name = m["name"]
     p = [r["metrics"][name]["value"] for r in par]
@@ -84,7 +99,8 @@ for m in spec:
     pm, pq1, pq3 = quart(p)
     cm, cq1, cq3 = quart(c)
     print(f"{name:<12} {pm:>10.4g} [{pq1:.4g}, {pq3:.4g}]".ljust(41) +
-          f" {cm:>10.4g} [{cq1:.4g}, {cq3:.4g}]".ljust(29) + f" {wins:>3}/{len(p)}")
+          f" {cm:>10.4g} [{cq1:.4g}, {cq3:.4g}]".ljust(29) + f" {wins:>3}/{len(p)}" +
+          f"  {verdict(p, c, wins, lower, m['bound'])}")
 # where the change moved: each side's median, over its runs, of each
 # call kind's per-run median wall
 def kinds(d):
