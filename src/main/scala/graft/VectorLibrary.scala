@@ -504,15 +504,13 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** The query text's vector under the library's doc/query-symmetric
     * embedder, computed once, on the driver. The embedding is projected
     * over a one-row local relation, which the optimizer evaluates
-    * itself (ConvertToLocalRelation): an expression-backed embedder
-    * launches no Spark job, and one the optimizer cannot evaluate pays
-    * one. Every single-query kernel then scores against the vector as
-    * a literal. */
-  private[graft] def queryVector(queryText: String): Array[Float] = {
-    import spark.implicits._
-    Seq(queryText).toDF("t").select(embed.embed(col("t"), "search_query"))
-      .collect()(0).getSeq[Float](0).toArray
-  }
+    * itself ([[VectorSearch.evalLocal]]): an expression-backed embedder
+    * launches no Spark job and no SQL execution, and one the optimizer
+    * cannot evaluate pays one job. Every single-query kernel then
+    * scores against the vector as a literal. */
+  private[graft] def queryVector(queryText: String): Array[Float] =
+    VectorSearch.evalLocal(spark, embed.embed(lit(queryText), "search_query"))
+      .getSeq[Float](0).toArray
 
   /**
    * k-NN search by query text (the reference's POST /search), routed
@@ -548,7 +546,10 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   /** Where a search reads: the store frame at generation `storeGen`,
     * and per persisted layout its (frame, generation) when it serves
     * — [[head]] or an epoch ([[at]]). Layouts resolve on demand: a
-    * search opens only the layout its algorithm routes through. */
+    * search opens only the layout its algorithm routes through. A
+    * small tree's frame is its generation held in driver memory
+    * ([[resident]]): the kernels then score and rank it on the driver
+    * with no job and no file I/O. */
   private final class Resolution(storeAt: => DataFrame, storeGenAt: => Long,
                                  val layout: Layout => Option[(DataFrame, Long)]) {
     lazy val store: DataFrame = storeAt
@@ -563,16 +564,45 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** The library as its heads stand now. */
   private def head: Resolution =
-    new Resolution(chunks, headGenOf(storeTree),
-      l => if (l.present) Some((l.tree.open(), headGenOf(l.tree))) else None)
+    new Resolution(resident("store", storeTree, headGenOf(storeTree), chunks),
+      headGenOf(storeTree), l =>
+        if (!l.present) None
+        else {
+          val g = headGenOf(l.tree)
+          Some((resident(l.name, l.tree, g, l.tree.open()), g))
+        })
 
   /** The library as of epoch `e`: every tree at the generation the
     * epoch recorded; a layout the epoch predates is absent. */
   private def at(e: Long): Resolution = {
     val info = epochInfo(e)
-    new Resolution(storeTree.openAt(info("store")), info("store"),
-      l => info.get(l.name).map(g => (l.tree.openAt(g), g)))
+    new Resolution(resident("store", storeTree, info("store"), storeTree.openAt(info("store"))),
+      info("store"), l => info.get(l.name).map(g => (resident(l.name, l.tree, g, l.tree.openAt(g)), g)))
   }
+
+  /** `frame`, the rows of generation `gen` of `tree` (named `name`),
+    * held in driver memory when `gen` is the tree's head, the frame is
+    * at most `spark.sql.autoBroadcastJoinThreshold` by Catalyst's size
+    * estimate (the manifest's byte count, [[VectorSearch.scansSmall]])
+    * and the generation is searched again: its first search scans the
+    * files (a generation a commit replaces after one search, as in a
+    * churning library, pays no load), the second collects them in one
+    * job, and every search after that reads a local relation of those
+    * rows. One generation per tree ([[memoAt]], keys `<name>/searches`
+    * and `<name>/rows`), so a search pinned to an older generation
+    * reads its files and never evicts the head's rows; a larger tree
+    * always reads its files. */
+  private def resident(name: String, tree: graft.plans.ManifestedTree, gen: Long,
+                       frame: DataFrame): DataFrame =
+    if (gen != headGenOf(tree) || !VectorSearch.scansSmall(frame) ||
+        memoAt(s"$name/searches", gen)(new java.util.concurrent.atomic.AtomicLong)
+          .incrementAndGet() < 2) frame
+    else memoAt(s"$name/rows", gen)(spark.createDataFrame(
+      java.util.Arrays.asList(frame.collect(): _*), frame.schema))
+
+  /** Test probe: the generation of each tree held in driver memory. */
+  private[graft] def residentGenerations: Map[String, Long] =
+    genMemo.collect { case (k, (g, _)) if k.endsWith("/rows") => k.stripSuffix("/rows") -> g }.toMap
 
   /** One search's query side and kernel choice: a single search's
     * query vector (`Left`, computed once on the driver and scored as a

@@ -18,6 +18,12 @@ import graft.GraftFunctions._
  *  - A single query is a vector on the driver, scored as a literal
  *    (no query frame is joined in, collected or broadcast); a batch's
  *    query side is tiny and is broadcast. The corpus is never moved.
+ *  - A corpus held in driver memory (a local relation: a library tree
+ *    at or under `spark.sql.autoBroadcastJoinThreshold`, or a
+ *    collected shortlist) is scored by the optimizer itself
+ *    (ConvertToLocalRelation folds the score projection and the
+ *    filters) and its top k is taken on the driver with Spark's own
+ *    ordering ([[localTop]]): no job, no file I/O, a local result.
  *  - LSH: bucket ids map-side, candidates via equi-join on
  *    (table, bucket) — shuffle carries only matching buckets; AQE
  *    handles skewed buckets.
@@ -44,7 +50,7 @@ object VectorSearch {
     * without a Spark job ([[localRows]] over a one-row local relation).
     * For the query-derived values that hold lambdas (PQ lookup tables,
     * PCA projections), which constant folding leaves alone. */
-  private[operators] def evalLocal(spark: SparkSession, cols: Column*): Row = {
+  private[graft] def evalLocal(spark: SparkSession, cols: Column*): Row = {
     val df = spark.createDataFrame(java.util.List.of(Row(0)),
         new org.apache.spark.sql.types.StructType().add("_", "int"))
       .select(cols: _*)
@@ -61,15 +67,43 @@ object VectorSearch {
     case _ => df.queryExecution.executedPlan.executeCollect().toSeq
   }
 
+  /** The first `n` rows of `df` in the order `order`, when `df`
+    * optimizes to a local relation (its leaves are local relations,
+    * and ConvertToLocalRelation folded its projections and filters):
+    * ordered on the driver by Spark's own interpreted ordering, so
+    * NaN, -0.0 and nulls sort as ORDER BY sorts them. No job, and no
+    * reliance on a Limit surviving the optimizer (EliminateLimits
+    * drops one at least as large as the relation, which would leave a
+    * global sort to plan). None when `df` reads anything else. */
+  private def localTop(df: DataFrame, n: Int, order: Column*): Option[Array[Row]] =
+    if (!df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else df.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering}
+        import org.apache.spark.sql.catalyst.plans.logical.Sort
+        val analyzed = df.queryExecution.analyzed
+        val sort = df.orderBy(order: _*).queryExecution.analyzed.asInstanceOf[Sort]
+        val ordering = new InterpretedOrdering(sort.order.map(BindReferences.bindReference(_,
+          analyzed.output)))
+        val toScala = CatalystTypeConverters.createToScalaConverter(df.schema)
+        Some(l.data.sorted(ordering).take(n).map(r => toScala(r).asInstanceOf[Row]).toArray)
+      case _ => None
+    }
+
   /**
    * Exact (Flat) top-k against the single query vector `qv` — the
-   * exact re-rank every single-query kernel ends with.
+   * exact re-rank every single-query kernel ends with. Over a corpus
+   * held in driver memory (a resident library tree, a collected
+   * shortlist) the top k is taken on the driver ([[localTop]]) and the
+   * result is a local frame; otherwise it plans as
+   * `orderBy(score desc, id).limit(k)`, a TakeOrderedAndProject.
    */
   def knnFlat(corpus: DataFrame, qv: Array[Float], idCol: String, vecCol: String,
-              k: Int, metric: String): DataFrame =
-    corpus.select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(k)
+              k: Int, metric: String): DataFrame = {
+    val scored = corpus.select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
+    val order = Seq(col("score").desc, col(idCol).asc)
+    localTop(scored, k, order: _*).fold(scored.orderBy(order: _*).limit(k))(localFrame(_, scored))
+  }
 
   /** Batch exact k-NN for arbitrary id types: broadcast queries over
     * one corpus scan, per-query bounded top-k (native heap aggregate
@@ -685,8 +719,9 @@ object VectorSearch {
     * graft's trees the manifest's byte count, read without I/O) is at
     * most Spark's small-relation threshold,
     * `spark.sql.autoBroadcastJoinThreshold` (negative: never). A
-    * relation with no estimate (`defaultSizeInBytes`) is not small. */
-  private def scansSmall(phase1: DataFrame): Boolean = {
+    * relation with no estimate (`defaultSizeInBytes`) is not small.
+    * The library holds a tree in driver memory by the same rule. */
+  private[graft] def scansSmall(phase1: DataFrame): Boolean = {
     val conf = phase1.sparkSession.sessionState.conf
     val size = phase1.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
     size <= conf.autoBroadcastJoinThreshold && size < conf.defaultSizeInBytes
@@ -701,35 +736,40 @@ object VectorSearch {
    * per table), so the first shortlist·copies rows hold the first
    * `shortlist` ids.
    *
-   * The form follows [[scansSmall]]:
-   *  - small frame, ONE job: phase 1 is a TakeOrderedAndProject that
-   *    carries id and vector; the re-rank runs on the driver
-   *    ([[rerankLocal]]) and the result is a local frame.
+   * The form follows where `rows` live:
+   *  - in driver memory (a resident library tree: a local relation),
+   *    NO job: phase 1 is ordered on the driver ([[localTop]]), so is
+   *    the re-rank, and the result is a local frame.
+   *  - a small frame ([[scansSmall]]), ONE job: phase 1 is a
+   *    TakeOrderedAndProject that carries id and vector; the re-rank
+   *    runs on the driver and the result is a local frame.
    *  - otherwise, TWO jobs: phase 1 collects the ids only; phase 2
    *    re-reads them through a pushed In-filter (row-group point reads
    *    on an id-clustered store).
-   * Both forms return the same rows, scores and schema.
+   * All forms return the same rows, scores and schema.
    */
   private[operators] def twoPhaseTopK(rows: DataFrame, approx: Column, ascending: Boolean,
                                       shortlist: Int, qv: Array[Float], idCol: String,
                                       vecCol: String, k: Int, metric: String,
                                       copies: Int = 1): DataFrame = {
     val a = col("__approx")
-    def phase1(carried: Column*): DataFrame =
-      rows.select(carried :+ approx.as("__approx"): _*)
-        .orderBy(if (ascending) a.asc else a.desc, col(idCol).asc)
-        .limit(shortlist * copies)
-        .select(carried: _*)
-    def firstIds(ranked: DataFrame): Array[Row] =
-      firstDistinct(ranked.collect(), shortlist, copies)
+    val order = Seq(if (ascending) a.asc else a.desc, col(idCol).asc)
+    def phase1(carried: Column*): DataFrame = rows.select(carried :+ approx.as("__approx"): _*)
+    def ranked(scored: DataFrame): DataFrame = scored.orderBy(order: _*).limit(shortlist * copies)
     val withVectors = phase1(col(idCol), col(vecCol))
-    if (scansSmall(withVectors))
-      rerankLocal(withVectors, firstIds(withVectors), qv, idCol, vecCol, k, metric)
-    else {
-      val ids = firstIds(phase1(col(idCol))).map(_.get(0))
-      val survivors = if (ids.isEmpty) rows.limit(0) else rows.filter(col(idCol).isin(ids: _*))
-      val ranked = knnFlat(survivors, qv, idCol, vecCol, k * copies, metric)
-      if (copies == 1) ranked else localFrame(firstDistinct(ranked.collect(), k, copies), ranked)
+    // the exact re-rank of a shortlist held on the driver
+    def rerank(top: Array[Row]): DataFrame =
+      knnFlat(localFrame(firstDistinct(top, shortlist, copies), withVectors),
+        qv, idCol, vecCol, k, metric)
+    localTop(withVectors, shortlist * copies, order: _*).map(rerank).getOrElse {
+      if (scansSmall(withVectors)) rerank(ranked(withVectors).collect())
+      else {
+        val ids = firstDistinct(ranked(phase1(col(idCol))).collect(), shortlist, copies)
+          .map(_.get(0))
+        val survivors = if (ids.isEmpty) rows.limit(0) else rows.filter(col(idCol).isin(ids: _*))
+        val exact = knnFlat(survivors, qv, idCol, vecCol, k * copies, metric)
+        if (copies == 1) exact else localFrame(firstDistinct(exact.collect(), k, copies), exact)
+      }
     }
   }
 
@@ -743,27 +783,6 @@ object VectorSearch {
     * reads it in the driver, with no job. */
   private def localFrame(rows: Array[Row], like: DataFrame): DataFrame =
     like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
-
-  /** The exact re-rank of collected `hits`, rows of `like`'s (id,
-    * vector) schema, on the driver with no job: [[scoreCol]] evaluates
-    * over a local relation ([[localRows]]), and the top k follow
-    * Spark's own ORDER BY score DESC, id ASC (NaN above every number,
-    * -0.0 equal to 0.0) through its interpreted ordering. */
-  private def rerankLocal(like: DataFrame, hits: Array[Row],
-                          qv: Array[Float], idCol: String, vecCol: String, k: Int,
-                          metric: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
-      InterpretedOrdering, SortOrder}
-    val scored = localFrame(hits, like)
-      .select(col(idCol), scoreCol(metric, vecCol, qv).as("score"))
-    val schema = scored.schema
-    val order = new InterpretedOrdering(Seq(
-      SortOrder(BoundReference(1, schema(1).dataType, schema(1).nullable), Descending),
-      SortOrder(BoundReference(0, schema(0).dataType, schema(0).nullable), Ascending)))
-    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
-    localFrame(localRows(scored).sorted(order).take(k)
-      .map(r => toScala(r).asInstanceOf[Row]).toArray, scored)
-  }
 
   /**
    * Batch two-phase quantized top-k: ONE int8 scan scores every query

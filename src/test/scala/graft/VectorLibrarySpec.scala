@@ -161,15 +161,18 @@ class VectorLibrarySpec extends AnyFunSuite {
 
     // searchApprox serves from the persisted lsh_buckets column: the
     // only signature work in the plan is the query-side probe — no
-    // graft_lsh_buckets recompute over the corpus.
-    val approx = lib.searchApprox("spark join stream table filter", k = 5)
-    val phys = approx.queryExecution.executedPlan.toString
-    assert(!phys.contains("graft_lsh_buckets"),
-      s"corpus-side signature recompute in:\n$phys")
-    // (the query-side graft_lsh_probes call constant-folds into a
-    // literal bucket array at plan time — even better than runtime)
-    assert(phys.contains("lsh_buckets"), "stored index column not scanned")
-    assert(approx.collect().nonEmpty)
+    // graft_lsh_buckets recompute over the corpus. (File-backed: the
+    // store's files, not its rows held in memory.)
+    SparkTestSession.twoJobForm {
+      val approx = lib.searchApprox("spark join stream table filter", k = 5)
+      val phys = approx.queryExecution.executedPlan.toString
+      assert(!phys.contains("graft_lsh_buckets"),
+        s"corpus-side signature recompute in:\n$phys")
+      // (the query-side graft_lsh_probes call constant-folds into a
+      // literal bucket array at plan time — even better than runtime)
+      assert(phys.contains("lsh_buckets"), "stored index column not scanned")
+      assert(approx.collect().nonEmpty)
+    }
 
     // live per-library algorithm switching (reference
     // set_library_algorithm, tests/test_integration_algorithms.py)
@@ -291,9 +294,10 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(lib.hasPartitionedIndex)
 
     // the probe collects its scored rows inside (one job) and returns a
-    // local frame: its scan is in the executions it ran
-    val (partRows, partRuns) = SparkJobs.executions(spark)(
-      lib.searchApprox("spark join stream table filter", k = 10).collect())
+    // local frame: its scan is in the executions it ran (file-backed:
+    // the index's files, not its rows held in memory)
+    val (partRows, partRuns) = SparkTestSession.twoJobForm(SparkJobs.executions(spark)(
+      lib.searchApprox("spark join stream table filter", k = 10).collect()))
     assert(partRows.map(r => (r.getString(0), r.getDouble(1))).toSeq ==
       colProbe.map(r => (r.getString(0), r.getDouble(1))).toSeq,
       "partitioned probe diverged from the column probe")
@@ -362,12 +366,13 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(colProbe.nonEmpty)
 
     // partitioned probe: same results, and the predicate rides INSIDE
-    // the pruned (tbl, bucket) scan as a pushed data filter
+    // the pruned (tbl, bucket) scan as a pushed data filter (the scan
+    // shapes below are file-backed: no tree is held in memory)
     lib.buildPartitionedIndex()
-    val ((part, partRows), partRuns) = SparkJobs.executions(spark) {
+    val ((part, partRows), partRuns) = SparkTestSession.twoJobForm(SparkJobs.executions(spark) {
       val part = lib.searchApprox(qt, 10, filter = Some(pred))
       (part, part.collect())
-    }
+    })
     assert(partRows.map(r => (r.getString(0), r.getDouble(1))).toSeq ==
       colProbe.map(r => (r.getString(0), r.getDouble(1))).toSeq,
       "filtered partitioned probe diverged from the filtered column probe")
@@ -392,10 +397,12 @@ class VectorLibrarySpec extends AnyFunSuite {
     // persisted IVF: predicate inside the cluster-pruned assigned scan
     lib.setAlgorithm("ivf")
     lib.buildIvfIndex()
-    val ivfHits = lib.search(qt, 10, filter = Some(pred))
+    val (ivfHits, ivfScans) = SparkTestSession.twoJobForm {
+      val hits = lib.search(qt, 10, filter = Some(pred))
+      (hits, scans(hits.queryExecution.executedPlan)
+        .filter(_.relation.location.rootPaths.exists(_.toString.contains("ivf_index"))))
+    }
     assert(sourcesOf(ivfHits).forall(allowed), "ivf hit outside the predicate")
-    val ivfScans = scans(ivfHits.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("ivf_index")))
     assert(ivfScans.nonEmpty && ivfScans.head.partitionFilters.nonEmpty,
       "ivf probe lost its cluster pruning under a filter")
     assert(ivfScans.head.dataFilters.exists(
@@ -408,8 +415,11 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.buildIvfPqIndex()
     // (the probe collects inside and returns a local frame: its scans
     // are in the executions it ran)
-    val (pqHits, pqRuns) = SparkJobs.executions(spark)(lib.search(qt, 10, filter = Some(pred)))
-    assert(sourcesOf(pqHits).forall(allowed), "ivfpq hit outside the predicate")
+    val (pqHits, pqRuns) = SparkTestSession.twoJobForm(
+      SparkJobs.executions(spark)(lib.search(qt, 10, filter = Some(pred)).collect()))
+    assert(sourcesOf(lib.search(qt, 10, filter = Some(pred))).forall(allowed),
+      "ivfpq hit outside the predicate")
+    assert(pqHits.toSeq == lib.search(qt, 10, filter = Some(pred)).collect().toSeq)
     val encScans = pqRuns.flatMap(r => scans(r.executedPlan))
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("ivfpq_index")))
     assert(encScans.exists(s => s.partitionFilters.nonEmpty &&
@@ -446,8 +456,10 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(lib.hasGridIndex)
 
     // same corpus, same bounds -> identical results through the index
-    val indexed = lib.search(q, k = 10)
+    // (file-backed: the plan below scans the index's files)
+    val indexed = SparkTestSession.twoJobForm(lib.search(q, k = 10))
     val indexedRows = indexed.collect()
+    assert(lib.search(q, k = 10).collect().toSeq == indexedRows.toSeq)
     assert(indexedRows.map(r => (r.getString(0), r.getDouble(1))).toSeq ==
       adhoc.map(r => (r.getString(0), r.getDouble(1))).toSeq,
       "indexed grid probe diverged from the ad-hoc expanding probe")
@@ -521,7 +533,8 @@ class VectorLibrarySpec extends AnyFunSuite {
     for ((algo, tree) <- Seq(("ivf", "ivf_index"), ("pq", "pq_index"),
         ("ivfpq", "ivfpq_index"))) {
       lib.setAlgorithm(algo)
-      val batch = lib.searchBatch(qs, 5, filter = Some(pred))
+      // file-backed: the plan below scans the index's files
+      val batch = SparkTestSession.twoJobForm(lib.searchBatch(qs, 5, filter = Some(pred)))
       assert(batch.count() > 0, s"$algo filtered batch returned nothing")
       assert(sourcesOf(batch).forall(allowed), s"$algo batch hit outside the predicate")
       val idxScans = scans(batch.queryExecution.executedPlan)
@@ -563,9 +576,11 @@ class VectorLibrarySpec extends AnyFunSuite {
     val qt = "spark join stream table filter"
     val allowed = Set("src1", "src4", "src7")
     val pred = col("source").isin(allowed.toSeq: _*)
-    val hits = lib.search(qt, 10, filter = Some(pred))
+    // file-backed: the plan below scans the index's files
+    val hits = SparkTestSession.twoJobForm(lib.search(qt, 10, filter = Some(pred)))
     val hitRows = hits.collect()
     assert(hitRows.nonEmpty, "filtered fitted-grid search returned nothing")
+    assert(lib.search(qt, 10, filter = Some(pred)).collect().toSeq == hitRows.toSeq)
 
     // every hit satisfies the predicate
     val srcs = lib.chunks.join(hits, "chunk_id")
@@ -660,13 +675,16 @@ class VectorLibrarySpec extends AnyFunSuite {
     val largeCounts = operators.VectorSearch.gridCellCounts(subset(preds(0))._1)
     assert(expected(preds(1), Some(largeCounts)) != expect(1),
       "both filters give one answer: the spec cannot see a shared memo")
-    for (round <- 1 to 2; (pred, e) <- preds.zip(expect)) {
-      val (hits, jobs) = search(pred)
+    // warm, a search runs its probe alone: one job over the index's
+    // files, none over its rows held in memory
+    for (fileBacked <- Seq(true, false); round <- 1 to 2; (pred, e) <- preds.zip(expect)) {
+      val (hits, jobs) = if (fileBacked) SparkTestSession.twoJobForm(search(pred)) else search(pred)
       assert(hits == e, s"round $round, filter $pred")
-      if (round == 2) assert(jobs == 1, s"warm filtered grid search launched $jobs jobs")
+      if (round == 2) assert(jobs == (if (fileBacked) 1 else 0),
+        s"warm filtered grid search launched $jobs jobs (file-backed: $fileBacked)")
     }
     // another spelling of a memoized predicate resolves to its entry
-    val (hits, jobs) = search(lit(sources.last) === col("source"))
+    val (hits, jobs) = SparkTestSession.twoJobForm(search(lit(sources.last) === col("source")))
     assert(hits == expect(1) && jobs == 1, s"$jobs jobs")
     // a drop forgets the memo: the rebuilt layout restarts at generation
     // 1 over more rows
@@ -827,9 +845,9 @@ class VectorLibrarySpec extends AnyFunSuite {
           case _ =>
         }
     }
-    val counts = VectorLibrary.algorithms.flatMap { a =>
+    def counts() = VectorLibrary.algorithms.flatMap { a =>
       lib.setAlgorithm(a)
-      calls.foreach(_._2()) // warm: serving memos and geometry loads
+      calls.foreach(_._2()) // warm: serving memos, geometry loads, resident rows
       SparkJobs.settle(spark)
       spark.sparkContext.addSparkListener(listener)
       try calls.map { case (kind, call) =>
@@ -839,16 +857,160 @@ class VectorLibrarySpec extends AnyFunSuite {
         s"$a.$kind" -> jobs
       } finally spark.sparkContext.removeSparkListener(listener)
     }.toMap
-    // one job each: the two-phase kernels and lsh collect one ordered
-    // shortlist that carries its vectors and re-rank on the driver (the
-    // library's trees are under the small-relation threshold), and the
-    // filtered grid occupancy is memoized per (generation, filter)
-    val expected = Map(
+    def map(m: Map[String, (Int, Int, Int)]) = m.flatMap { case (a, (h, f, p)) =>
+      Seq(s"$a.head" -> h, s"$a.filtered" -> f, s"$a.pinned" -> p) }
+    // no job: every tree of the library is under the small-relation
+    // threshold, so each search reads its generation from driver memory
+    // and ranks it on the driver (the pinned epoch is the head's)
+    val resident = counts()
+    assert(resident == map(VectorLibrary.algorithms.map(_ -> ((0, 0, 0))).toMap),
+      s"jobs per warm single search: ${resident.toSeq.sorted}")
+    // file-backed (no tree is small): one job each, two for the
+    // two-phase kernels, whose shortlist is re-read by an id In-filter;
+    // the partitioned lsh probe and the filtered grid occupancy
+    // (memoized per generation and filter) keep one
+    val fileBacked = SparkTestSession.twoJobForm(counts())
+    val expected = map(Map(
       "flat" -> (1, 1, 1), "lsh" -> (1, 1, 1), "grid" -> (1, 1, 1), "ivf" -> (1, 1, 1),
-      "quantized" -> (1, 1, 1), "binary" -> (1, 1, 1), "pq" -> (1, 1, 1),
-      "ivfpq" -> (1, 1, 1)).flatMap { case (a, (h, f, p)) =>
-        Seq(s"$a.head" -> h, s"$a.filtered" -> f, s"$a.pinned" -> p) }
-    assert(counts == expected, s"jobs per warm single search: ${counts.toSeq.sorted}")
+      "quantized" -> (2, 2, 2), "binary" -> (2, 2, 2), "pq" -> (2, 2, 2),
+      "ivfpq" -> (2, 2, 2)))
+    assert(fileBacked == expected, s"jobs per warm file-backed search: ${fileBacked.toSeq.sorted}")
+    lib.delete()
+  }
+
+  test("resident and file-backed single searches give the same answers") {
+    import org.apache.spark.sql.Row
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, _) = fiveLayoutLibrary("same", docs)
+    val texts = Seq("spark join stream table filter", "tokenize documents fast")
+    val src = lib.chunks.select("source").head.getString(0)
+    // one document's chunks: fewer rows than k and than any shortlist,
+    // so over a resident frame the optimizer drops the ordered limit
+    val smallest = lib.chunks.groupBy("doc_id").count()
+      .orderBy(col("count").asc, col("doc_id").asc).head
+    assert(smallest.getLong(1) < 10, s"no document has fewer than 10 chunks: $smallest")
+    val filters = Seq("none" -> None, "source" -> Some(col("source") === src),
+      "one document" -> Some(col("doc_id") === smallest.getLong(0)),
+      "no rows" -> Some(col("source") === "no such source"))
+    // 64-bit sign codes tie: the binary shortlist's boundary is decided
+    // by the id tie-break
+    val hamming = lib.chunks.select(GraftFunctions.bitHamming(col("bits"),
+      GraftFunctions.bitPack(typedLit(lib.queryVector(texts.head)))).as("h"))
+    assert(hamming.groupBy("h").count().filter(col("count") > 1).count() > 0)
+    val e = lib.epochs.last
+    for (a <- VectorLibrary.algorithms; t <- texts; (fname, f) <- filters;
+         pinned <- Seq(false, true)) {
+      lib.setAlgorithm(a)
+      def run(): (org.apache.spark.sql.types.StructType, Seq[Row]) = {
+        val r = if (pinned) lib.searchAt(e, t, 10, filter = f) else lib.search(t, 10, filter = f)
+        (r.schema, r.collect().toSeq)
+      }
+      val what = s"$a '$t' filter $fname${if (pinned) " pinned" else ""}"
+      val (schema1, rows1) = run()
+      val (schema2, rows2) = SparkTestSession.twoJobForm(run())
+      assert(rows1 == rows2, s"$what: resident $rows1, file-backed $rows2")
+      assert(schema1 == schema2, s"$what: resident $schema1, file-backed $schema2")
+      assert(fname != "no rows" || rows1.isEmpty, s"$what: $rows1")
+      assert(a != "flat" || fname == "no rows" || rows1.nonEmpty, s"$what: no rows")
+    }
+    assert(lib.residentGenerations.keySet == Set("store", "lsh", "ivf", "grid", "pq", "ivfpq"),
+      s"resident trees: ${lib.residentGenerations}")
+    lib.delete()
+  }
+
+  test("each new generation is held in memory from its second search: one job each, then none") {
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val root = Files.createTempDirectory("graft-lib-fresh").toString
+    val lib = new VectorLibrary(spark, root, "fresh")
+    lib.addDocuments(docs.filter(col("doc_id") < 30))
+    lib.buildPartitionedIndex()
+    val qt = "spark join stream table filter"
+    def generation(tree: String) = lib.manifestInfo.collect()
+      .find(_.getAs[String]("tree") == tree).get.getAs[Long]("generation")
+    // the first search of `tree`'s new generation reads its files, the
+    // second loads them in one job, and every later one reads them from
+    // memory; all equal the file-backed answer
+    def served(a: String, tree: String, filter: Option[org.apache.spark.sql.Column] = None) = {
+      lib.setAlgorithm(a)
+      def search() = SparkJobs.count(spark)(lib.search(qt, 10, filter = filter).collect().toSeq)
+      val (first, jobs1) = search()
+      assert(!lib.residentGenerations.get(tree).contains(generation(tree)))
+      val (second, jobs2) = search()
+      val (warm, jobs3) = search()
+      val files = SparkTestSession.twoJobForm(lib.search(qt, 10, filter = filter).collect().toSeq)
+      assert((jobs1, jobs2, jobs3) == (1, 1, 0), s"$a after a commit: $jobs1, $jobs2, $jobs3 jobs")
+      assert(Seq(second, warm, files).forall(_ == first),
+        s"$a: first $first, second $second, warm $warm, file-backed $files")
+      assert(lib.residentGenerations(tree) == generation(tree))
+      first.map(_.getString(0))
+    }
+    served("flat", "store"); served("lsh", "lsh")
+    val added = docs.filter(col("doc_id") >= 30 && col("doc_id") < 40)
+    val addedDoc = added.select("doc_id").head.getLong(0)
+    val byDoc = Some(col("doc_id") === addedDoc)
+    lib.addDocuments(added)
+    assert(served("flat", "store", byDoc).nonEmpty, s"added document $addedDoc not found")
+    lib.deleteDocuments(col("doc_id") === addedDoc)
+    assert(served("flat", "store", byDoc).isEmpty, s"deleted document $addedDoc still found")
+    assert(!lib.search(qt, 100).collect().exists(_.getString(0).contains(s"#$addedDoc#")))
+    val before = generation("store")
+    lib.compactIndexes(maxFilesPerPartition = 1)
+    assert(generation("store") > before, "compaction committed no store generation")
+    assert(!served("flat", "store").exists(_.contains(s"#$addedDoc#")))
+    lib.dropPartitionedIndex()
+    lib.addDocuments(docs.filter(col("doc_id") >= 40))
+    lib.buildPartitionedIndex()
+    served("lsh", "lsh")
+    lib.delete()
+  }
+
+  test("a tree over the small-relation threshold holds nothing in memory and keeps its plan") {
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(40)
+    val root = Files.createTempDirectory("graft-lib-threshold").toString
+    val lib = new VectorLibrary(spark, root, "threshold")
+    lib.addDocuments(docs)
+    lib.buildPartitionedIndex()
+    val bytes = lib.manifestInfo.collect()
+      .map(r => r.getAs[String]("tree") -> r.getAs[Long]("live_bytes")).toMap
+    // the lsh index holds a row per table, so it is the larger tree: a
+    // threshold between the two keeps the store resident and the index
+    // on its files
+    assert(bytes("lsh") > bytes("store"), s"tree bytes: $bytes")
+    val qt = "spark join stream table filter"
+    def search(a: String) = {
+      lib.setAlgorithm(a)
+      SparkJobs.plans(spark)(SparkJobs.count(spark)(lib.search(qt, 10).collect()))
+    }
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold",
+        ((bytes("store") + bytes("lsh")) / 2).toString) {
+      for (a <- Seq("flat", "lsh"); _ <- 1 to 2) search(a)
+      assert(lib.residentGenerations.keySet == Set("store"), s"resident: ${lib.residentGenerations}")
+      assert(search("flat")._1._2 == 0, "a warm flat search of the resident store ran a job")
+      // the index's probe as before: one job, one ordered scan of its
+      // pruned directories
+      val ((_, jobs), plans) = search("lsh")
+      assert(jobs == 1, s"an lsh search over the index's files ran $jobs jobs")
+      val scans = plans.filter(_.contains("ReadSchema"))
+      assert(scans.size == 1 && scans.head.contains("TakeOrderedAndProject") &&
+        scans.head.linesIterator.exists(l => l.contains("PartitionFilters") && l.contains("bucket")),
+        s"lsh search plans:\n${plans.mkString("\n---\n")}")
+    }
+    lib.delete()
+  }
+
+  test("queryVector launches no job and no SQL execution, and returns the embedder's floats") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-lib-qvec").toString
+    val lib = new VectorLibrary(spark, root, "qvec")
+    val embedder = new DeterministicEmbedder(64, 42L)
+    for (t <- Seq("spark join stream table filter", "", "tokenize documents fast")) {
+      lib.queryVector(t) // warm
+      val ((qv, jobs), runs) = SparkJobs.executions(spark)(SparkJobs.count(spark)(lib.queryVector(t)))
+      assert(jobs == 0 && runs.isEmpty, s"'$t': $jobs jobs, ${runs.size} SQL executions")
+      val collected = Seq(t).toDF("t").select(embedder.embed(col("t"), "search_query"))
+        .collect()(0).getSeq[Float](0)
+      assert(qv.toSeq == collected, s"'$t': $qv differs from ${collected}")
+    }
     lib.delete()
   }
 
@@ -2066,9 +2228,11 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(viaBatch() == perQuery(), "column-probe batch diverged from per-query")
 
     // Partitioned path: same results, and ONE pruned scan serves all
-    // three queries (union of probe partitions, still planning-time).
+    // three queries (union of probe partitions, still planning-time;
+    // file-backed: the plan below scans the index's files).
     lib.buildPartitionedIndex()
-    val batch = lib.searchApproxBatch(qs, k = 5)
+    assert(viaBatch() == perQuery(), "resident partitioned batch diverged from per-query")
+    val batch = SparkTestSession.twoJobForm(lib.searchApproxBatch(qs, k = 5))
     val batchRows = qs.indices.map(i => batch.collect().filter(_.getLong(0) == i.toLong)
       .sortBy(_.getInt(3)).map(r => (r.getString(1), r.getDouble(2))).toSeq)
     assert(batchRows == perQuery(), "partitioned batch diverged from per-query")
@@ -2100,9 +2264,11 @@ class VectorLibrarySpec extends AnyFunSuite {
     assert(lib.hasIvfIndex)
     lib.setAlgorithm("ivf")
 
-    val res = lib.search("spark join stream table filter", k = 5)
+    // file-backed: the plan below scans the index's files
+    val res = SparkTestSession.twoJobForm(lib.search("spark join stream table filter", k = 5))
     val rows = res.collect()
     assert(rows.length == 5)
+    assert(lib.search("spark join stream table filter", k = 5).collect().toSeq == rows.toSeq)
     assert(rows.map(_.getDouble(1)).sliding(2).forall(p => p(0) >= p(1)))
 
     // fresh index is healthy; the drift-gated refit declines to run
@@ -2220,11 +2386,20 @@ class VectorLibrarySpec extends AnyFunSuite {
       .collect()(0).getString(0)
     lib.setAlgorithm("ivfpq")
     assert(rows(0).getString(0) == exactTop, "ivfpq top-1 diverged from flat")
-    // warm, the library's trees under the small-relation threshold:
-    // one job, a cluster-pruned phase 1 carrying the floats
+    // the layout read from its files (as a search pinned to an older
+    // generation reads it: the head's rows are held in memory), under
+    // the small-relation threshold, takes the library probe's one-job
+    // form: a cluster-pruned phase 1 carrying the floats
+    def sidecar(base: String) = geomRead(s"$root/ivfpq-lib/ivfpq_index/$base").inputFiles.head
+      .replaceAll("/[^/]+$", "")
+    val onDisk = operators.IvfPq.Index(operators.IvfIndex.readCentroids(spark, sidecar("centroids")),
+      operators.PqIndex.readBooks(spark, sidecar("books"), operators.IvfPq.BookWord),
+      manifestRead(s"$root/ivfpq-lib/ivfpq_index/encoded",
+        "cluster" -> org.apache.spark.sql.types.IntegerType))
     val one = SparkJobs.assertOneJobSearch(spark)(
-      lib.search("spark join stream table filter", k = 5), "chunk_id", "embedding",
-      Some("cluster"))
+      operators.IvfPq.search(onDisk, lib.queryVector("spark join stream table filter"),
+        "chunk_id", "embedding", 5, metric = "cosine", normalized = true),
+      "chunk_id", "embedding", Some("cluster"))
     assert(one.toSeq == rows.toSeq)
     // above the threshold (here: none), the two-job form: phase 1
     // (codes-only, cluster-pruned) runs eagerly inside the probe; the
