@@ -320,6 +320,8 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   // load) and the per-generation facts of [[memoAt]]. Only a drop
   // ([[dropLayout]], [[delete]]) forgets them: a rebuilt tree restarts
   // at generation 1 and its sidecars reuse the dropped ones' names.
+  // A generation's held rows ([[resident]]) are not such a fact: every
+  // mutation drops them with the chains.
   // TrieMaps, not mutable.HashMap: a reader thread may be serving
   // search() while a writer thread's mutation clears these (the
   // streaming foreachBatch + concurrent-reader shape) — concurrent
@@ -363,6 +365,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
   private[graft] def invalidateIndexes(): Unit = {
     geomGensCache.clear(); epochInfoCache.clear()
     epochTrees.foreach(_._2.invalidate())
+    // held rows go with the chains they were read through: generation
+    // numbers repeat (another instance's drop + rebuild, or delete +
+    // re-create), and rows, unlike a derived fact, would then serve
+    // another generation's chunks, deleted ones included
+    genMemo.keys.filter(k => k.endsWith("/rows") || k.endsWith("/searches"))
+      .foreach(genMemo.remove)
   }
 
   /** True when the store holds no SEARCHABLE rows (see
@@ -582,23 +590,28 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
 
   /** `frame`, the rows of generation `gen` of `tree` (named `name`),
     * held in driver memory when `gen` is the tree's head, the frame is
-    * at most `spark.sql.autoBroadcastJoinThreshold` by Catalyst's size
-    * estimate (the manifest's byte count, [[VectorSearch.scansSmall]])
-    * and the generation is searched again: its first search scans the
+    * at most `spark.sql.autoBroadcastJoinThreshold` and at most
+    * [[VectorLibrary.ResidentMaxBytes]] by Catalyst's size estimate
+    * (the manifest's byte count, [[VectorSearch.scansSmall]]) and the
+    * generation is searched again: its first search scans the
     * files (a generation a commit replaces after one search, as in a
     * churning library, pays no load), the second collects them in one
     * job, and every search after that reads a local relation of those
     * rows. One generation per tree ([[memoAt]], keys `<name>/searches`
     * and `<name>/rows`), so a search pinned to an older generation
     * reads its files and never evicts the head's rows; a larger tree
-    * always reads its files. */
+    * always reads its files. Every mutation of this instance drops the
+    * held rows ([[invalidateIndexes]]). The rows are held in Spark's
+    * binary row format (the row encoder's UnsafeRows: a vector is its
+    * packed floats, a string its UTF-8 bytes), so the heap they take
+    * stays close to the generation's data bytes. */
   private def resident(name: String, tree: graft.plans.ManifestedTree, gen: Long,
                        frame: DataFrame): DataFrame =
-    if (gen != headGenOf(tree) || !VectorSearch.scansSmall(frame) ||
+    if (gen != headGenOf(tree) || !VectorSearch.scansSmall(frame, VectorLibrary.ResidentMaxBytes) ||
         memoAt(s"$name/searches", gen)(new java.util.concurrent.atomic.AtomicLong)
           .incrementAndGet() < 2) frame
-    else memoAt(s"$name/rows", gen)(spark.createDataFrame(
-      java.util.Arrays.asList(frame.collect(): _*), frame.schema))
+    else memoAt(s"$name/rows", gen)(spark.createDataset(frame.collect().toSeq)(
+      org.apache.spark.sql.Encoders.row(frame.schema)).toDF())
 
   /** Test probe: the generation of each tree held in driver memory. */
   private[graft] def residentGenerations: Map[String, Long] =
@@ -3051,6 +3064,17 @@ object VectorLibrary {
 
   /** Distinct filters whose grid occupancy one generation memoizes. */
   private val FilteredOccupancyCap = 64
+
+  /** The largest tree (by its manifest's byte count) a library holds
+    * in driver memory, whatever the small-relation threshold. A held
+    * tree is scored on one driver thread at about 5.5 µs a row, where a
+    * file scan pays a near-constant job floor: at 4 cores and 64
+    * dimensions, warm searches of held trees of up to 4.5 MB (9,250
+    * store rows) were faster than file-backed ones for all eight
+    * algorithms; with 19,755 rows, a 9.0 MB store served flat and
+    * quantized slower than its files, and the 5.3 MB ivf and pq layouts
+    * were 5-10% faster. */
+  private[graft] val ResidentMaxBytes: Long = 4L << 20
 
   /** Index algorithms a library can route search through (reference
     * IndexAlgorithm enum + the quantized two-phase extension). */

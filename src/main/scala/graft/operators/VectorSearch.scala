@@ -19,8 +19,9 @@ import graft.GraftFunctions._
  *    (no query frame is joined in, collected or broadcast); a batch's
  *    query side is tiny and is broadcast. The corpus is never moved.
  *  - A corpus held in driver memory (a local relation: a library tree
- *    at or under `spark.sql.autoBroadcastJoinThreshold`, or a
- *    collected shortlist) is scored by the optimizer itself
+ *    at or under `spark.sql.autoBroadcastJoinThreshold` and the
+ *    library's residency cap, or a collected shortlist) is scored by
+ *    the optimizer itself
  *    (ConvertToLocalRelation folds the score projection and the
  *    filters) and its top k is taken on the driver with Spark's own
  *    ordering ([[localTop]]): no job, no file I/O, a local result.
@@ -86,9 +87,20 @@ object VectorSearch {
         val ordering = new InterpretedOrdering(sort.order.map(BindReferences.bindReference(_,
           analyzed.output)))
         val toScala = CatalystTypeConverters.createToScalaConverter(df.schema)
-        Some(l.data.sorted(ordering).take(n).map(r => toScala(r).asInstanceOf[Row]).toArray)
+        Some(firstN(l.data, n, ordering).map(r => toScala(r).asInstanceOf[Row]).toArray)
       case _ => None
     }
+
+  /** The first `n` of `rows` under `ord`, in order, through a heap of
+    * at most `n` rows: a large relation is never sorted whole. */
+  private def firstN(rows: Seq[InternalRow], n: Int, ord: Ordering[InternalRow]): Seq[InternalRow] = {
+    val kept = scala.collection.mutable.PriorityQueue.empty[InternalRow](ord)
+    rows.foreach { r =>
+      if (kept.size < n) kept.enqueue(r)
+      else if (n > 0 && ord.lt(r, kept.head)) { kept.dequeue(); kept.enqueue(r) }
+    }
+    kept.dequeueAll.reverse
+  }
 
   /**
    * Exact (Flat) top-k against the single query vector `qv` — the
@@ -720,11 +732,12 @@ object VectorSearch {
     * most Spark's small-relation threshold,
     * `spark.sql.autoBroadcastJoinThreshold` (negative: never). A
     * relation with no estimate (`defaultSizeInBytes`) is not small.
-    * The library holds a tree in driver memory by the same rule. */
-  private[graft] def scansSmall(phase1: DataFrame): Boolean = {
+    * The library holds a tree in driver memory by the same rule, under
+    * a lower `cap`. */
+  private[graft] def scansSmall(phase1: DataFrame, cap: Long = Long.MaxValue): Boolean = {
     val conf = phase1.sparkSession.sessionState.conf
     val size = phase1.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
-    size <= conf.autoBroadcastJoinThreshold && size < conf.defaultSizeInBytes
+    size <= math.min(conf.autoBroadcastJoinThreshold, cap) && size < conf.defaultSizeInBytes
   }
 
   /**

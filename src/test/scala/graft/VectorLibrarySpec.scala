@@ -998,6 +998,63 @@ class VectorLibrarySpec extends AnyFunSuite {
     lib.delete()
   }
 
+  test("a tree over the residency cap is read from its files, whatever the threshold") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-lib-cap").toString
+    val lib = new VectorLibrary(spark, root, "cap")
+    // long chunks of random words: a store past the cap in few rows
+    val r = new scala.util.Random(3)
+    lib.addChunkedDocuments((0 until 2000).map(i => (i / 4L, i % 4,
+        Seq.fill(600)(s"w${r.nextInt(20000)}").mkString(" "), s"src${i % 20}"))
+      .toDF("doc_id", "chunk_idx", "chunk_text", "source"))
+    val bytes = lib.manifestInfo.collect()
+      .find(_.getAs[String]("tree") == "store").get.getAs[Long]("live_bytes")
+    assert(bytes > VectorLibrary.ResidentMaxBytes, s"store bytes: $bytes")
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold", (2 * bytes).toString) {
+      for (i <- 1 to 3) {
+        val (rows, jobs) = SparkJobs.count(spark)(lib.search("w1 w2 w3", 10).collect())
+        assert(rows.length == 10 && jobs == 1, s"search $i: ${rows.length} rows, $jobs jobs")
+      }
+      assert(lib.residentGenerations.isEmpty, s"resident: ${lib.residentGenerations}")
+    }
+    lib.delete()
+  }
+
+  test("another instance's drop and rebuild at a held generation is served after this instance's next mutation") {
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(30)
+    val root = Files.createTempDirectory("graft-lib-twoheads").toString
+    val a = new VectorLibrary(spark, root, "two")
+    a.addDocuments(docs)
+    a.buildPartitionedIndex()
+    a.setAlgorithm("lsh")
+    val victim = a.chunks.orderBy("chunk_id").head
+    val victimId = victim.getAs[String]("chunk_id")
+    // the victim's own text scores it first under the symmetric embedder
+    def found(lib: VectorLibrary) = lib.search(victim.getAs[String]("chunk_text"), 10)
+      .collect().map(_.getString(0)).contains(victimId)
+    assert(found(a) && found(a), s"chunk $victimId not found")
+    def generation(lib: VectorLibrary) = lib.manifestInfo.collect()
+      .find(_.getAs[String]("tree") == "lsh").get.getAs[Long]("generation")
+    val held = a.residentGenerations.get("lsh")
+    assert(held.contains(generation(a)), s"resident: ${a.residentGenerations}")
+    // another instance deletes the victim's document, then drops and
+    // rebuilds the index, which restarts at the generation `a` holds
+    val b = new VectorLibrary(spark, root, "two")
+    b.deleteDocuments(col("doc_id") === victim.getAs[Long]("doc_id"))
+    b.dropPartitionedIndex()
+    b.buildPartitionedIndex()
+    assert(held.contains(generation(b)), s"rebuilt at ${generation(b)}, held $held")
+    assert(!found(b))
+    // `a` adopts the other instance's commits at its own next mutation,
+    // one that leaves the lsh tree alone; then the rebuilt generation
+    // is read from its files and held again
+    a.buildIvfIndex(4)
+    assert(!a.residentGenerations.contains("lsh"), s"resident: ${a.residentGenerations}")
+    for (i <- 1 to 3) assert(!found(a), s"search $i after the mutation returned deleted chunk $victimId")
+    assert(a.residentGenerations.get("lsh") == held)
+    a.delete()
+  }
+
   test("queryVector launches no job and no SQL execution, and returns the embedder's floats") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-lib-qvec").toString
@@ -2386,20 +2443,15 @@ class VectorLibrarySpec extends AnyFunSuite {
       .collect()(0).getString(0)
     lib.setAlgorithm("ivfpq")
     assert(rows(0).getString(0) == exactTop, "ivfpq top-1 diverged from flat")
-    // the layout read from its files (as a search pinned to an older
-    // generation reads it: the head's rows are held in memory), under
-    // the small-relation threshold, takes the library probe's one-job
-    // form: a cluster-pruned phase 1 carrying the floats
-    def sidecar(base: String) = geomRead(s"$root/ivfpq-lib/ivfpq_index/$base").inputFiles.head
-      .replaceAll("/[^/]+$", "")
-    val onDisk = operators.IvfPq.Index(operators.IvfIndex.readCentroids(spark, sidecar("centroids")),
-      operators.PqIndex.readBooks(spark, sidecar("books"), operators.IvfPq.BookWord),
-      manifestRead(s"$root/ivfpq-lib/ivfpq_index/encoded",
-        "cluster" -> org.apache.spark.sql.types.IntegerType))
+    // the first search after a commit (here one that builds another
+    // layout) reads the layout's files, as a generation is held in
+    // memory from its second search: under the small-relation
+    // threshold, the one-job form, a cluster-pruned phase 1 carrying
+    // the floats
+    lib.buildPartitionedIndex()
     val one = SparkJobs.assertOneJobSearch(spark)(
-      operators.IvfPq.search(onDisk, lib.queryVector("spark join stream table filter"),
-        "chunk_id", "embedding", 5, metric = "cosine", normalized = true),
-      "chunk_id", "embedding", Some("cluster"))
+      lib.search("spark join stream table filter", k = 5), "chunk_id", "embedding",
+      Some("cluster"))
     assert(one.toSeq == rows.toSeq)
     // above the threshold (here: none), the two-job form: phase 1
     // (codes-only, cluster-pruned) runs eagerly inside the probe; the
