@@ -1163,6 +1163,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * full rewrite. */
   def buildPartitionedIndex(): Unit = buildLayout(lshLayout, Nil)
 
+  /** Test seam: runs after a rebuild's rows+sidecars are staged but
+    * before the manifest commit — the window in which a concurrent
+    * ingest's store commit would make the fresh index stale. Specs
+    * install an ingest here to exercise the commit-time skew heal. */
+  private[graft] var onRebuildBeforeCommit: () => Unit = () => ()
+
   /** Install a rebuild history-preservingly: the fresh tree writes to
     * a tmp sibling, its files rename INTO the live root beside the
     * previous generation's files (fresh UUID part-names — no clashes,
@@ -1184,18 +1190,12 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     * becomes resolvable atomically WITH the manifest commit. A crash
     * after the sidecar write but before the commit leaves the sidecar
     * numbered ABOVE the head — invisible to resolution, overwritten
-    * by the next rebuild's identical prediction. This closes the two
-    * r10 holes at once: no crash window pairs new geometry with old
-    * manifested rows, and [[consistentAt]]/[[searchAt]] readers of
+    * by the next rebuild's identical prediction. So no crash window
+    * pairs new geometry with old manifested rows, and [[consistentAt]]/[[searchAt]] readers of
     * encoded trees decode old codes under the OLD geometry across a
-    * rebuild. */
-  /** Test seam: runs after a rebuild's rows+sidecars are staged but
-    * before the manifest commit — the window in which a concurrent
-    * ingest's store commit would make the fresh index stale. Specs
-    * install an ingest here to exercise the commit-time skew heal. */
-  private[graft] var onRebuildBeforeCommit: () => Unit = () => ()
-
-  /** `storeSnapGen` is the store generation the BUILD METHOD captured
+    * rebuild.
+    *
+    * `storeSnapGen` is the store generation the BUILD METHOD captured
     * at planning time (via [[buildSnapGen]], before its row-source
     * frames resolve). Capturing here at install entry instead would
     * race a concurrent same-instance ingest (a streaming foreachBatch
@@ -2786,16 +2786,11 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
    * scratch. foreachBatch drives the two sinks; the first batch after
    * a (re)start reconciles against the store (deterministic chunk_ids,
    * library#doc#idx), so a crash-replayed micro-batch never commits
-   * duplicate rows.
-   */
-  /**
-   * Streaming ingest with index maintenance (reference
-   * background_tasks: embed + index each arrival, plus the periodic
-   * cleanup loop): each micro-batch dual-writes store + partitioned
-   * index; every `compactEvery` batches the fragmented index
-   * directories compact in place (compactEvery = 0 disables). This is
-   * the always-on form of a lake table's OPTIMIZE schedule — the
-   * stream itself keeps its own files healthy, no external daemon.
+   * duplicate rows. Every `compactEvery` batches the fragmented index
+   * directories compact in place (compactEvery = 0 disables): the
+   * always-on form of a lake table's OPTIMIZE schedule (the reference's
+   * periodic cleanup loop) — the stream itself keeps its own files
+   * healthy, no external daemon.
    */
   def ingestStreamIndexed(docsStream: DataFrame, checkpoint: String,
                           chunkWindow: Int = 32, compactEvery: Int = 0,
@@ -3003,17 +2998,6 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     addDocuments(newDocs)
   }
 
-  /**
-   * Update a single chunk's text in place (reference PUT /chunks/{id},
-   * chunk_service.py:100-127 + background re-embed): the chunk keeps
-   * its (doc_id, source, chunk_idx) identity — and therefore its
-   * chunk_id — while text, token count, embedding and index columns
-   * re-derive. Store semantics are the same copy-on-write swap every
-   * other mutation uses. The identity fetch is pruned (see
-   * [[chunkLookup]]): doc_id parses out of the chunk_id for row-group
-   * skipping, and a caller-supplied `source` partition-prunes to one
-   * directory — no full-store scan per PUT.
-   */
   /** The 1-row identity frame behind a chunk PUT. chunk_id encodes
     * (library, doc_id, chunk_idx), so the fetch always filters on the
     * parsed doc_id too — store files are sorted by (source, doc_id),
@@ -3033,6 +3017,17 @@ class VectorLibrary(spark: SparkSession, root: String, val name: String,
     narrowed.filter(col("chunk_id") === chunkId)
   }
 
+  /**
+   * Update a single chunk's text in place (reference PUT /chunks/{id},
+   * chunk_service.py:100-127 + background re-embed): the chunk keeps
+   * its (doc_id, source, chunk_idx) identity — and therefore its
+   * chunk_id — while text, token count, embedding and index columns
+   * re-derive. Store semantics are the same copy-on-write swap every
+   * other mutation uses. The identity fetch is pruned (see
+   * [[chunkLookup]]): doc_id parses out of the chunk_id for row-group
+   * skipping, and a caller-supplied `source` partition-prunes to one
+   * directory — no full-store scan per PUT.
+   */
   def updateChunk(chunkId: String, newText: String,
                   source: Option[String] = None): Unit = withWriterLock {
     val old = chunkLookup(chunkId, source)

@@ -230,28 +230,14 @@ object IvfIndex {
 
   /** Batch twin of [[search]]: probe an already-opened assigned frame
     * against given centers — the manifest-planned serving path (the
-    * path-based form above re-lists the partition tree on every call). */
+    * path-based form above re-lists the partition tree on every call).
+    * A [[VectorSearch.probeBatch]] over clusters. */
   def searchBatch(assigned: DataFrame, centers: Seq[(Int, Array[Double])],
                   queries: DataFrame, idCol: String, vecCol: String,
-                  k: Int, nProbe: Int = 4, metric: String = "cosine"): DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id"), col("qvec")).collect()
-    require(qRows.nonEmpty, "searchBatch needs at least one query")
-    val pairs = qRows.flatMap { r =>
-      val qv = r.getSeq[Float](1).map(_.toDouble).toArray
-      nearestClusters(centers, qv, nProbe).map(c => (r.getLong(0), c))
-    }.toSeq
-    val union = pairs.map(_._2).distinct
-    val pairFrame = pairs.toDF("query_id", "cluster")
-    val scored = assigned
-      .filter(col("cluster").isin(union.map(Int.box): _*))
-      .join(broadcast(pairFrame), "cluster")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    VectorSearch.finishPerQueryTopK(scored, idCol, k)
-  }
+                  k: Int, nProbe: Int = 4, metric: String = "cosine"): DataFrame =
+    VectorSearch.probeBatch(assigned, Seq("cluster"), queries,
+      qv => nearestClusters(centers, qv.map(_.toDouble).toArray, nProbe).map(Seq(_)),
+      idCol, vecCol, k, metric)
 
   /**
    * ANN recall self-audit: recall@k of the pruned IVF probe against
@@ -294,7 +280,7 @@ object IvfIndex {
       .join(broadcast(pairFrame), Seq("cluster"))
       .join(broadcast(queries.select(col("query_id"), col("qvec"))), Seq("query_id"))
       .select(col("query_id"), col(idCol), col("probe_rank"),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+        VectorSearch.batchScoreCol(metric, vecCol).as("score"))
     // fan each candidate out to the swept depths it is visible at,
     // folded into a composite (query, depth) key for the heap agg
     val atDepth = scored.select(col("query_id").as("qid"),

@@ -113,12 +113,8 @@ object IvfPq {
     val qd = qvecCol(normalized, typedLit(qv)).cast("array<double>")
     val probe = IvfIndex.nearestClusters(idx.centers,
       VectorSearch.evalLocal(spark, qd).getSeq[Double](0).toArray, nProbe)
-    val cents = idx.centers.filter(c => probe.contains(c._1))
-    val tables = VectorSearch.evalLocal(spark, cents.map { case (_, c) =>
-      PqIndex.lutCol(idx.books, zip_with(qd, typedLit(c.toSeq), (x, y) => x - y))
-    }: _*)
-    val luts = typedLit(cents.indices.map(i =>
-      cents(i)._1 -> tables.getSeq[Seq[Double]](i)).toMap)
+    val tables = VectorSearch.evalLocal(spark, probe.map(cellLut(idx, qd, _)): _*)
+    val luts = typedLit(probe.indices.map(i => probe(i) -> tables.getSeq[Seq[Double]](i)).toMap)
     // Both phases read ONLY the probed cells (partition pruning); the
     // size rule of VectorSearch.twoPhaseTopK picks one job, or two with
     // the shortlist pushed into the float re-read as an id In-filter
@@ -128,63 +124,45 @@ object IvfPq {
       k * rerankFactor, qv, idCol, vecCol, k, metric)
   }
 
+  /** The lookup table of the query `qd` (as doubles, under the index's
+    * geometry) in cell `c`: the flat PQ table build over the query's
+    * residual against the cell's centroid. */
+  private def cellLut(idx: Index, qd: Column, c: Int): Column =
+    PqIndex.lutCol(idx.books,
+      zip_with(qd, typedLit(idx.centers.find(_._1 == c).get._2.toSeq), (x, y) => x - y))
+
   /**
-   * Batch twin: every query resolves its probe cells driver-side; ONE
-   * codes-only pass over the union of probed cells ranks rows for all
-   * queries at once (the broadcast carries (query_id, cluster, lut)
-   * rows — a row is scored only for the queries that probed its
-   * cell), bounded per-query heaps shortlist, one float join re-ranks.
+   * Batch twin: every query resolves its probe cells and their lookup
+   * tables on the driver, as [[search]] does; ONE codes-only pass over
+   * the union of probed cells ranks rows for all queries at once (each
+   * row picks, from a literal map, the tables of the queries that
+   * probed its cell), then the [[VectorSearch.twoPhaseBatch]] re-rank
+   * re-reads only those cells.
    */
   def searchBatch(idx: Index, queries: DataFrame, idCol: String, vecCol: String,
                   k: Int, nProbe: Int = 4, metric: String = "euclidean",
                   rerankFactor: Int = 5, normalized: Boolean = false): DataFrame = {
     val spark = idx.encoded.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id"),
-      qvecCol(normalized).cast("array<double>").as("qvec")).collect()
-    require(qRows.nonEmpty, "searchBatch needs at least one query")
-    val pairs = qRows.flatMap { r =>
-      val qv = r.getSeq[Double](1).toArray
-      IvfIndex.nearestClusters(idx.centers, qv, nProbe).map(c => (r.getLong(0), c))
-    }.toSeq
-    val union = pairs.map(_._2).distinct
-    val luts = pairs.toDF("query_id", "cluster")
-      .join(IvfIndex.centroidFrame(spark, idx.centers), "cluster")
-      .join(queries.select(col("query_id"), qvecCol(normalized).as("qvec")), "query_id")
-      .withColumn("__qres",
-        zip_with(col("qvec").cast("array<double>"), col("centroid"), (x, y) => x - y))
-      .select(col("query_id"), col("cluster"),
-        PqIndex.lutCol(idx.books, col("__qres")).as("__lut"))
-    val phase1 = idx.encoded
-      .filter(col("cluster").isin(union.map(Int.box): _*))
-      .select(col(idCol), col("cluster"), col("pq_codes"))
-      .join(broadcast(luts), "cluster")
+    val qvs = VectorSearch.queryVectors(queries)
+    val qds = qvs.map { case (_, qv) => qvecCol(normalized, typedLit(qv)).cast("array<double>") }
+    val pairs = if (qvs.isEmpty) Nil else {
+      val qd = VectorSearch.evalLocal(spark, qds: _*)
+      qvs.indices.flatMap(i => IvfIndex.nearestClusters(idx.centers,
+        qd.getSeq[Double](i).toArray, nProbe).map(c => (i, c)))
+    }
+    val probed = idx.encoded
+      .filter(col("cluster").isin(pairs.map(p => Int.box(p._2)).distinct: _*))
+    VectorSearch.twoPhaseBatch(probed, queries, qvs, k * rerankFactor, idCol, vecCol, k,
+        metric) {
+      val tables = VectorSearch.evalLocal(spark,
+        pairs.map { case (i, c) => cellLut(idx, qds(i), c) }: _*)
+      val byCell = pairs.indices.groupBy(j => pairs(j)._2).map { case (c, js) =>
+        c -> js.map(j => (qvs(pairs(j)._1)._1, tables.getSeq[Seq[Double]](j)))
+      }
       // negate: the bounded top-k finisher ranks score DESC
-      .select(col("query_id"), col(idCol),
-        (-PqIndex.adcCol(idx.books.size)).as("score"))
-    // Phase 2: probed-cells partition pruning + the bounded candidate
-    // union pushed in as an In-filter (row-group point reads on the
-    // id-sorted cell files); the broadcast pair join only attributes
-    // survivors to queries. Pinned — the pair frame feeds both the
-    // collect and the join.
-    val cand = graft.GraftFunctions.pin(
-      VectorSearch.finishPerQueryTopK(phase1, idCol, k * rerankFactor,
-          ordered = false)
-        .select(col("query_id"), col(idCol)))
-    val ids = cand.select(col(idCol)).distinct().collect().map(_.get(0))
-    if (ids.isEmpty)
-      return idx.encoded.limit(0)
-        .crossJoin(broadcast(queries.select(col("query_id"), col("qvec"))))
-        .select(col("query_id"), col(idCol), lit(0.0).as("score"),
-          lit(0).as("rank"))
-    val scored = idx.encoded
-      .filter(col("cluster").isin(union.map(Int.box): _*) &&
-        col(idCol).isin(ids: _*))
-      .join(broadcast(cand), idCol)
-      .join(broadcast(queries.select(col("query_id"), col("qvec"))), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    VectorSearch.finishPerQueryTopK(scored, idCol, k)
+      VectorSearch.literalPhase1(probed, element_at(typedLit(byCell), col("cluster")), idCol)(
+        lut => -PqIndex.adcCol(idx.books.size, lut))
+    }
   }
 
   /**
@@ -244,7 +222,7 @@ object IvfPq {
       .withColumn("qid", expr("query_id DIV 1000"))
       .join(broadcast(queries.select(col("query_id").as("qid"), col("qvec"))), "qid")
       .select(col("query_id"), col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+        VectorSearch.batchScoreCol(metric, vecCol).as("score"))
     val approx = VectorSearch.finishPerQueryTopK(rescored, idCol, k, ordered = false)
       .select(expr("query_id DIV 1000").as("query_id"),
         pmod(col("query_id"), lit(1000L)).cast("int").as("n_probe"), col(idCol))

@@ -115,6 +115,19 @@ object PqIndex {
         element_at(col("pq_codes"), s + 1) + 1))
       .reduce(_ + _)
 
+  /** The lookup tables of the query vectors `qvs`, built on the driver
+    * without a job ([[VectorSearch.evalLocal]]). `normalized` = codes
+    * were built over L2-normalized vectors (the library layout, where
+    * ADC squared-L2 tracks cosine): a query normalizes identically
+    * before the table build; the exact re-rank always runs on the raw
+    * vectors with the caller's metric. */
+  private def queryLuts(spark: SparkSession, books: Codebooks, qvs: Seq[Array[Float]],
+                        normalized: Boolean): Seq[Seq[Seq[Double]]] = {
+    val tables = VectorSearch.evalLocal(spark, qvs.map(qv => lutCol(books,
+      if (normalized) graft.GraftFunctions.l2Normalize(typedLit(qv)) else typedLit(qv))): _*)
+    qvs.indices.map(tables.getSeq[Seq[Double]])
+  }
+
   /**
    * Two-phase PQ top-k against pre-encoded rows: ADC shortlist of
    * rerankFactor*k ids, exact re-rank of the survivors on the floats —
@@ -130,53 +143,28 @@ object PqIndex {
              idCol: String, vecCol: String, k: Int,
              metric: String = "euclidean", rerankFactor: Int = 5,
              normalized: Boolean = false): DataFrame = {
-    // normalized = codes were built over L2-normalized vectors (the
-    // library layout, where ADC squared-L2 tracks cosine): the query
-    // normalizes identically before the table build; the exact
-    // re-rank always runs on the raw vectors with the caller's metric.
-    val q = if (normalized) graft.GraftFunctions.l2Normalize(typedLit(qv)) else typedLit(qv)
-    val lut = typedLit(VectorSearch.evalLocal(encoded.sparkSession, lutCol(books, q))
-      .getSeq[Seq[Double]](0))
+    val lut = typedLit(queryLuts(encoded.sparkSession, books, Seq(qv), normalized).head)
     VectorSearch.twoPhaseTopK(encoded, adcCol(books.size, lut), ascending = true,
       k * rerankFactor, qv, idCol, vecCol, k, metric)
   }
 
   /**
-   * Batch twin: ONE codes-only scan scores every query (the broadcast
-   * carries each query's lookup table, the phase-1 shuffle carries
-   * only bounded per-query heaps), then the union of all candidate
-   * sets joins the float column once for the exact per-query re-rank.
+   * Batch twin: ONE codes-only scan scores every query against its
+   * lookup table — built on the driver, once per query, and scored as
+   * a literal like [[search]]'s — then the
+   * [[VectorSearch.twoPhaseBatch]] re-rank.
    */
   def searchBatch(encoded: DataFrame, books: Codebooks, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
                   metric: String = "euclidean", rerankFactor: Int = 5,
                   normalized: Boolean = false): DataFrame = {
-    val qv = if (normalized) graft.GraftFunctions.l2Normalize(col("qvec")) else col("qvec")
-    val q2 = queries.select(col("query_id"), lutCol(books, qv).as("__lut"))
-    val phase1 = encoded.select(col(idCol), col("pq_codes"))
-      .crossJoin(broadcast(q2))
+    val qvs = VectorSearch.queryVectors(queries)
+    VectorSearch.twoPhaseBatch(encoded, queries, qvs, k * rerankFactor, idCol, vecCol, k,
+        metric) {
+      val luts = queryLuts(encoded.sparkSession, books, qvs.map(_._2), normalized)
+      val side = typedLit(qvs.map(_._1).zip(luts))
       // negate: the bounded top-k finisher ranks score DESC
-      .select(col("query_id"), col(idCol), (-adcCol(books.size)).as("score"))
-    // Bounded (Q * k * rerankFactor) candidate union: resolve it
-    // driver-side, push the id set into the float scan as an
-    // In-filter (row-group point reads), attribute via the broadcast
-    // pair join. The pair frame is pinned — it feeds both the collect
-    // and the join.
-    val cand = graft.GraftFunctions.pin(
-      VectorSearch.finishPerQueryTopK(phase1, idCol, k * rerankFactor,
-          ordered = false)
-        .select(col("query_id"), col(idCol)))
-    val ids = cand.select(col(idCol)).distinct().collect().map(_.get(0))
-    if (ids.isEmpty)
-      return encoded.limit(0)
-        .crossJoin(broadcast(queries.select(col("query_id"), col("qvec"))))
-        .select(col("query_id"), col(idCol), lit(0.0).as("score"),
-          lit(0).as("rank"))
-    val scored = encoded.filter(col(idCol).isin(ids: _*))
-      .join(broadcast(cand), idCol)
-      .join(broadcast(queries.select(col("query_id"), col("qvec"))), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(VectorSearch.similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    VectorSearch.finishPerQueryTopK(scored, idCol, k)
+      VectorSearch.literalPhase1(encoded, side, idCol)(lut => -adcCol(books.size, lut))
+    }
   }
 }

@@ -16,20 +16,37 @@ import graft.GraftFunctions._
  *    per-partition top-k heap + driver merge of k rows per partition.
  *    No global sort, no shuffle of the corpus.
  *  - A single query is a vector on the driver, scored as a literal
- *    (no query frame is joined in, collected or broadcast); a batch's
- *    query side is tiny and is broadcast. The corpus is never moved.
+ *    ([[scoreCol]]; no query frame is joined in, collected or
+ *    broadcast). Two-phase single searches share [[twoPhaseTopK]].
  *  - A corpus held in driver memory (a local relation: a library tree
  *    at or under `spark.sql.autoBroadcastJoinThreshold` and the
  *    library's residency cap, or a collected shortlist) is scored by
- *    the optimizer itself
- *    (ConvertToLocalRelation folds the score projection and the
- *    filters) and its top k is taken on the driver with Spark's own
- *    ordering ([[localTop]]): no job, no file I/O, a local result.
+ *    the optimizer itself (ConvertToLocalRelation folds the score
+ *    projection and the filters) and its top k is taken on the driver
+ *    with Spark's own ordering ([[localTop]]): no job, no file I/O, a
+ *    local result.
+ *  - A batch's query side is tiny; the corpus is never moved. Every
+ *    multi-query kernel ends in one of three shapes:
+ *     - the exact tail ([[exactTail]]): candidate rows, the broadcast
+ *       queries, the one batch score column ([[batchScoreCol]]), the
+ *       per-query bounded top-k ([[finishPerQueryTopK]]);
+ *     - the probe batch ([[probeBatch]]): driver-resolved
+ *       (query_id, key…) pairs — grid cells, IVF clusters, lsh
+ *       (tbl, bucket) — prune the scan by their union as literal
+ *       predicates and attribute rows by a broadcast pair join, then
+ *       the exact tail;
+ *     - the two-phase batch ([[twoPhaseBatch]]): a per-query
+ *       approximate shortlist (codes scored against literal query
+ *       values) collected once as (query_id, id) pairs, its ids pushed
+ *       into the float scan as an In-filter, then the exact tail.
  *  - LSH: bucket ids map-side, candidates via equi-join on
  *    (table, bucket) — shuffle carries only matching buckets; AQE
  *    handles skewed buckets.
- *  - Grid: bounds from one partial-aggregated pass; cell key map-side;
- *    probe = equi-join on cell key over neighbor cells.
+ *  - Grid: one geometry. Bounds from one partial-aggregated pass, one
+ *    cell formula ([[cellKeyCol]] over columns, [[qCellsOf]] for a
+ *    query on the driver), one expanding-radius rule
+ *    ([[radiusProbe]]) over per-cell occupancy; the ad-hoc expanding
+ *    probes cell-key the corpus and run the indexed ones.
  */
 object VectorSearch {
 
@@ -119,14 +136,11 @@ object VectorSearch {
 
   /** Batch exact k-NN for arbitrary id types: broadcast queries over
     * one corpus scan, per-query bounded top-k (native heap aggregate
-    * for long ids, a rank window over the scored rows otherwise). */
+    * for long ids, a rank window over the scored rows otherwise) —
+    * the [[exactTail]] over the whole corpus. */
   def knnBatch(corpus: DataFrame, queries: DataFrame, idCol: String,
-               vecCol: String, k: Int, metric: String = "cosine"): DataFrame = {
-    val scored = corpus.join(broadcast(queries))
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    finishPerQueryTopK(scored, idCol, k)
-  }
+               vecCol: String, k: Int, metric: String = "cosine"): DataFrame =
+    exactTail(corpus, queries, idCol, vecCol, k, metric)
 
   /**
    * LSH approximate top-k: sign-random-projection buckets
@@ -254,8 +268,8 @@ object VectorSearch {
   }
 
   /** Shared tail of the batch LSH paths: bucket join → distinct
-    * (query, id) candidates → one vector fetch per pair → exact score
-    * → bounded per-query top-k. */
+    * (query, id) candidates → one vector fetch per pair → the
+    * [[exactTail]]. */
   private def batchFromBuckets(corpus: DataFrame, corpusB: DataFrame,
                                queries: DataFrame, idCol: String, vecCol: String,
                                k: Int, metric: String, numTables: Int,
@@ -269,11 +283,7 @@ object VectorSearch {
       .distinct()
     val cand = corpusB.join(broadcast(queryB), Seq("tbl", "bucket"))
       .select(col("query_id"), col(idCol)).distinct()
-    val scored = corpus.join(cand, idCol)
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    finishPerQueryTopK(scored, idCol, k)
+    exactTail(corpus.join(cand, idCol), queries, idCol, vecCol, k, metric)
   }
 
   /** Per-query bounded top-k finisher over (query_id, id, score) rows:
@@ -296,6 +306,64 @@ object VectorSearch {
           .filter(col("rank") <= k)
       }
     if (ordered) ranked.orderBy(col("query_id").asc, col("rank").asc) else ranked
+  }
+
+  /** A row's exact score against its query's `qvec`: the one score
+    * column of every batch kernel, the batch twin of [[scoreCol]]. */
+  private[operators] def batchScoreCol(metric: String, vecCol: String): Column =
+    round(similarity(metric, col(vecCol), col("qvec")), 6)
+
+  /**
+   * The exact tail every batch kernel ends with: candidate rows meet
+   * the broadcast queries (on `query_id` when the candidates carry it,
+   * else every row meets every query), are scored with
+   * [[batchScoreCol]] and ranked per query by [[finishPerQueryTopK]].
+   * With `copies` > 1 a row may be a candidate of one query several
+   * times (once per probed lsh table), always with one score; it
+   * counts once, as in [[twoPhaseTopK]].
+   */
+  private[operators] def exactTail(cands: DataFrame, queries: DataFrame, idCol: String,
+                                   vecCol: String, k: Int, metric: String,
+                                   copies: Int = 1): DataFrame = {
+    val qs = broadcast(queries.select(col("query_id"), col("qvec")))
+    val joined = if (cands.columns.contains("query_id")) cands.join(qs, "query_id")
+      else cands.join(qs)
+    val scored = joined.select(col("query_id"), col(idCol),
+      batchScoreCol(metric, vecCol).as("score"))
+    finishPerQueryTopK(
+      if (copies == 1) scored
+      else scored.groupBy(col("query_id"), col(idCol)).agg(max(col("score")).as("score")),
+      idCol, k)
+  }
+
+  /**
+   * The probe batch: `probe` resolves each query vector's keys on the
+   * driver (one value per column of `keys`: a grid cell, an IVF
+   * cluster, an lsh (tbl, bucket)). The union of every query's keys
+   * filters `rows` as literal predicates, so a partitioned layout is
+   * pruned at planning time; a broadcast join of the (query_id, key…)
+   * pairs assigns each survivor to the queries that probed it, and the
+   * [[exactTail]] ranks. Q queries cost one pruned scan of their
+   * combined keys, not Q scans. No query, no rows.
+   */
+  private[operators] def probeBatch(rows: DataFrame, keys: Seq[String], queries: DataFrame,
+                                    probe: Seq[Float] => Seq[Seq[Any]], idCol: String,
+                                    vecCol: String, k: Int, metric: String,
+                                    copies: Int = 1): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val pairs = queries.select(col("query_id"), col("qvec")).collect().toSeq
+      .flatMap(r => probe(r.getSeq[Float](1)).map(r.getLong(0) +: _)).distinct
+    val schema = keys.foldLeft(new StructType().add("query_id", LongType, nullable = false))(
+      (s, c) => s.add(c, rows.schema(c).dataType))
+    val pairFrame = rows.sparkSession.createDataFrame(
+      java.util.Arrays.asList(pairs.map(Row.fromSeq): _*), schema)
+    // per distinct value of the leading keys, an IN list of the last
+    val union = pairs.map(_.tail).distinct.groupBy(_.init).map { case (lead, ps) =>
+      keys.init.zip(lead).foldRight(col(keys.last).isin(ps.map(_.last): _*)) {
+        case ((c, v), in) => col(c) === v && in }
+    }.reduceOption(_ || _).getOrElse(lit(false))
+    exactTail(rows.filter(union).join(broadcast(pairFrame), keys), queries, idCol, vecCol,
+      k, metric, copies)
   }
 
   /**
@@ -346,62 +414,17 @@ object VectorSearch {
       quantizedDot(col(codesCol), queryCodes(qv)), ascending = false, k * rerankFactor,
       qv, idCol, vecCol, k, metric, copies = numTables)
 
-  /**
-   * Batch probe of the bucket-PARTITIONED index: the UNION of all
-   * queries' probe partitions prunes the scan (still literal
-   * (tbl, bucket) predicates, so pruning happens at planning time),
-   * then a broadcast join on (tbl, bucket) assigns each surviving row
-   * to the queries that probed it. Scores dedup per (query, id) via a
-   * map-side max, then the bounded top-k aggregate per query. Serving
-   * amortizes: Q queries cost one pruned scan of their combined
-   * partitions, not Q scans.
-   */
+  /** Batch probe of the bucket-PARTITIONED index: a [[probeBatch]]
+    * over (tbl, bucket), each query's keys its multi-probe buckets; a
+    * row caught by several of one query's tables counts once. */
   def lshKnnPartitionedBatch(index: DataFrame, queries: DataFrame, idCol: String,
                              vecCol: String, k: Int, metric: String = "cosine",
                              numTables: Int = 8, bitsPerTable: Int = 8,
-                             seed: Long = 42L, extraProbes: Int = 2): DataFrame = {
-    finishPerQueryTopK(
-      partitionedBatchScores(index, queries, idCol, vecCol, metric,
-        numTables, bitsPerTable, seed, extraProbes),
-      idCol, k)
-  }
-
-  /** Shared scoring stage of the partitioned batch probe: union-pruned
-    * scan, pair assignment, exact scores deduplicated per (query, id).
-    * Returns (query_id, id, score); callers attach a top-k finisher
-    * (topKAgg for long ids, a rank window for string ids). */
-  private[graft] def partitionedBatchScores(index: DataFrame, queries: DataFrame,
-                                            idCol: String, vecCol: String, metric: String,
-                                            numTables: Int, bitsPerTable: Int,
-                                            seed: Long, extraProbes: Int): DataFrame = {
-    import graft.functions.TextHash
-    val spark = index.sparkSession
-    // Driver-side probe resolve per query (the query set is small by
-    // contract — it broadcasts below).
-    val qRows = queries.select(col("query_id"), col("qvec")).collect()
-    require(qRows.nonEmpty, "lshKnnPartitionedBatch needs at least one query")
-    val perTable = 1 + extraProbes
-    val qProbePairs = qRows.flatMap { r =>
-      val qv = r.getSeq[Float](1).map(_.toDouble).toArray
-      val flat = TextHash.hyperplaneProbesArr(qv, numTables, bitsPerTable, extraProbes, seed)
-      (0 until numTables).flatMap(t =>
-        flat.slice(t * perTable, (t + 1) * perTable).distinct
-          .map(b => (r.getLong(0), t, b)))
-    }.distinct.toSeq
-    val union = qProbePairs.map { case (_, t, b) => (t, b) }.distinct
-      .groupBy(_._1).map { case (t, bs) =>
-        col("tbl") === t && col("bucket").isin(bs.map(p => Int.box(p._2)): _*)
-      }.reduce(_ || _)
-    import spark.implicits._
-    val pairFrame = qProbePairs.toDF("query_id", "tbl", "bucket")
-    index.filter(union)
-      .join(broadcast(pairFrame), Seq("tbl", "bucket"))
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-      .groupBy(col("query_id"), col(idCol))
-      .agg(max(col("score")).as("score"))
-  }
+                             seed: Long = 42L, extraProbes: Int = 2): DataFrame =
+    probeBatch(index, Seq("tbl", "bucket"), queries,
+      qv => probeBuckets(qv.toArray, numTables, bitsPerTable, seed, extraProbes).toSeq
+        .zipWithIndex.flatMap { case (bs, t) => bs.toSeq.map(b => Seq(t, b)) },
+      idCol, vecCol, k, metric, copies = numTables)
 
   /**
    * Grid approximate top-k on a low-dimensional prefix subspace
@@ -435,7 +458,8 @@ object VectorSearch {
     (bounds.map(r => r.getFloat(1).toDouble), bounds.map(r => r.getFloat(2).toDouble))
   }
 
-  /** Clamped cell key of a stored vector, as "c0,c1,...". */
+  /** Clamped cell key of a stored vector, as "c0,c1,...": the grid's
+    * one cell formula over columns ([[qCellsOf]] is its driver twin). */
   private[graft] def cellKeyCol(vc: Column, lo: Array[Double], hi: Array[Double],
                                 cellsPerDim: Int): Column =
     concat_ws(",", lo.indices.map { d =>
@@ -444,32 +468,43 @@ object VectorSearch {
         lit(cellsPerDim - 1)).cast("int")
     }: _*)
 
-  /** Driver-resolved neighbor-cell probe keys for one query vector. */
-  private def queryProbeKeys(qv: Seq[Float], lo: Array[Double], hi: Array[Double],
-                             gridDims: Int, cellsPerDim: Int): Seq[String] = {
-    def qCell(d: Int): Int = {
+  /** Query cell coordinates under frozen bounds (clamped): the grid's
+    * one cell formula on the driver. */
+  private def qCellsOf(qv: Seq[Float], lo: Array[Double], hi: Array[Double],
+                       gridDims: Int, cellsPerDim: Int): Seq[Int] =
+    (0 until gridDims).map { d =>
       val range = math.max(hi(d) - lo(d), 1e-12)
       math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
         cellsPerDim - 1)
     }
+
+  /** Driver-resolved neighbor-cell probe keys for one query vector. */
+  private def queryProbeKeys(qv: Seq[Float], lo: Array[Double], hi: Array[Double],
+                             gridDims: Int, cellsPerDim: Int): Seq[String] = {
+    val qCells = qCellsOf(qv, lo, hi, gridDims, cellsPerDim)
     val offsets = Seq.fill(gridDims)(Seq(-1, 0, 1))
       .foldLeft(Seq(Seq.empty[Int]))((acc, s) => acc.flatMap(p => s.map(p :+ _)))
     offsets.map(off =>
-      (0 until gridDims).map(d => qCell(d) + off(d)).mkString(",")).distinct
+      (0 until gridDims).map(d => qCells(d) + off(d)).mkString(",")).distinct
   }
+
+  /** The corpus keyed by cell under the bounds (lo, hi); a row without
+    * a vector has no cell and is dropped. */
+  private def cellKeyed(corpus: DataFrame, vecCol: String, lo: Array[Double],
+                        hi: Array[Double], cellsPerDim: Int): DataFrame =
+    corpus.filter(col(vecCol).isNotNull)
+      .withColumn("cell", cellKeyCol(col(vecCol), lo, hi, cellsPerDim))
 
   /**
    * Expanding-radius grid probe (reference GridIndex.search,
    * algorithms.py:646-668): the probed neighborhood starts at the
    * query cell and widens one shell at a time until it holds >= 2k
-   * candidates or the radius reaches `maxRadius`. The radius-r box is
-   * exactly the cells at Chebyshev distance <= r from the query cell,
-   * so instead of enumerating an O((2r+1)^dims) neighbor-key list per
-   * radius, the corpus gets a map-side `cheb` column and the expansion
-   * becomes: one tiny histogram aggregate (counts for maxRadius+1
-   * groups), the radius choice on the driver, one pruned re-rank scan.
-   * Two jobs regardless of how far the probe expands — the
-   * data-dependent loop never launches per-radius scans.
+   * candidates or the radius reaches `maxRadius`. Ad hoc, over bounds
+   * fitted to `corpus` by one aggregate: the corpus is cell-keyed
+   * map-side and probed by [[gridKnnIndexed]], whose radius comes from
+   * the per-cell occupancy ([[gridCellCounts]]): one bounds aggregate,
+   * one occupancy count and one pruned re-rank however far the probe
+   * expands.
    *
    * `gridKnn` (the facade default) is the fixed ±1 probe; this variant
    * restores the reference's guarantee of reaching k results on
@@ -481,96 +516,26 @@ object VectorSearch {
                        maxRadius: Int = 3): DataFrame = {
     require(gridDims >= 2, "gridKnnExpanding needs at least 2 grid dimensions")
     val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
-    def qCell(d: Int): Int = {
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
-        cellsPerDim - 1)
-    }
-    val chebCol = greatest((0 until gridDims).map { d =>
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      val c = least(greatest(
-        floor((col(vecCol).getItem(d) - lit(lo(d))) / lit(range) * cellsPerDim),
-        lit(0)), lit(cellsPerDim - 1)).cast("int")
-      abs(c - lit(qCell(d)))
-    }: _*)
-    val corpusC = corpus.withColumn("cheb", chebCol)
-    val hist = corpusC.filter(col("cheb") <= maxRadius)
-      .groupBy(col("cheb")).count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).toMap
-    val cum = (0 to maxRadius).map(r => (0 to r).map(hist.getOrElse(_, 0L)).sum)
-    val radius = (0 to maxRadius).find(r => cum(r) >= 2L * k).getOrElse(maxRadius)
-    knnFlat(corpusC.filter(col("cheb") <= radius), qv, idCol, vecCol, k, metric)
+    gridKnnIndexed(cellKeyed(corpus, vecCol, lo, hi, cellsPerDim), lo, hi, qv, idCol, vecCol,
+      k, metric, gridDims, cellsPerDim, maxRadius)
   }
 
-  /**
-   * Batch twin of [[gridKnnExpanding]]: every query gets its own
-   * radius (smallest with >= 2k candidates, capped at maxRadius) from
-   * ONE histogram pass — per-(query, cheb) counts against the
-   * broadcast query-cell table — then one scoring pass filters each
-   * row to the queries whose chosen box contains it and feeds the
-   * bounded per-query top-k. Two corpus passes total for any Q, same
-   * as the single-query variant.
-   */
+  /** Batch twin of [[gridKnnExpanding]]: the corpus is cell-keyed under
+    * bounds fitted to it and probed by [[gridKnnIndexedBatch]], every
+    * query with its own radius from the one occupancy count. */
   def gridKnnExpandingBatch(corpus: DataFrame, queries: DataFrame, idCol: String,
                             vecCol: String, k: Int, metric: String = "euclidean",
                             gridDims: Int = 4, cellsPerDim: Int = 4,
                             maxRadius: Int = 3): DataFrame = {
     require(gridDims >= 2, "gridKnnExpandingBatch needs at least 2 grid dimensions")
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
-    def cellCol(d: Int): Column = {
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      least(greatest(
-        floor((col(vecCol).getItem(d) - lit(lo(d))) / lit(range) * cellsPerDim),
-        lit(0)), lit(cellsPerDim - 1)).cast("int")
-    }
-    val corpusC = corpus.withColumn("__cells",
-      array((0 until gridDims).map(cellCol): _*))
-    val qRows = queries.select(col("query_id"), col("qvec")).collect()
-    require(qRows.nonEmpty, "gridKnnExpandingBatch needs at least one query")
-    def qCells(qv: Seq[Float]): Seq[Int] = (0 until gridDims).map { d =>
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
-        cellsPerDim - 1)
-    }
-    val qCellRows = qRows.map(r => (r.getLong(0), qCells(r.getSeq[Float](1)))).toSeq
-    val qCellFrame = qCellRows.toDF("query_id", "qcells")
-    val cheb = greatest((0 until gridDims).map(d =>
-      abs(element_at(col("__cells"), d + 1) - element_at(col("qcells"), d + 1))): _*)
-    val hists = corpusC.crossJoin(broadcast(qCellFrame))
-      .select(col("query_id"), cheb.as("cheb"))
-      .filter(col("cheb") <= maxRadius)
-      .groupBy(col("query_id"), col("cheb")).count().collect()
-      .groupBy(_.getLong(0))
-    val radii = qCellRows.map { case (qid, _) =>
-      val hist = hists.get(qid).toSeq.flatten
-        .map(r => (r.getInt(1), r.getLong(2))).toMap
-      val cum = (0 to maxRadius).map(r => (0 to r).map(hist.getOrElse(_, 0L)).sum)
-      (qid, (0 to maxRadius).find(r => cum(r) >= 2L * k).getOrElse(maxRadius))
-    }
-    val qSide = qCellFrame
-      .join(radii.toDF("query_id", "radius"), "query_id")
-      .join(queries, "query_id")
-    val scored = corpusC.crossJoin(broadcast(qSide))
-      .filter(cheb <= col("radius"))
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    finishPerQueryTopK(scored, idCol, k)
+    gridKnnIndexedBatch(cellKeyed(corpus, vecCol, lo, hi, cellsPerDim), lo, hi, queries,
+      idCol, vecCol, k, metric, gridDims, cellsPerDim, maxRadius)
   }
 
-  /** Query cell coordinates under frozen bounds (clamped). */
-  private def qCellsOf(qv: Seq[Float], lo: Array[Double], hi: Array[Double],
-                       gridDims: Int, cellsPerDim: Int): Seq[Int] =
-    (0 until gridDims).map { d =>
-      val range = math.max(hi(d) - lo(d), 1e-12)
-      math.min(math.max(math.floor((qv(d) - lo(d)) / range * cellsPerDim).toInt, 0),
-        cellsPerDim - 1)
-    }
-
-  /** Expanding radius + probe cells from a per-cell histogram: the
+  /** The grid's one radius rule, from a per-cell histogram: the
     * smallest Chebyshev radius whose cumulative occupancy reaches 2k
-    * (capped), and the OCCUPIED cells inside it. */
+    * (capped at maxRadius), and the OCCUPIED cells inside it. */
   private def radiusProbe(cellCounts: Seq[(String, Long)], qCells: Seq[Int],
                           k: Int, maxRadius: Int): Seq[String] = {
     val withCheb = cellCounts.map { case (cell, n) =>
@@ -583,27 +548,28 @@ object VectorSearch {
     withCheb.collect { case (cell, cheb, _) if cheb <= radius => cell }
   }
 
-  /**
-   * Expanding-radius grid probe against a PRE-BUILT cell-partitioned
-   * grid index (rows (id, vector) under a `cell` partition column,
-   * bounds fitted at build time — the reference keeps the fitted grid
-   * in its index object, algorithms.py:443-686, and so does the
-   * library). Identical results to [[gridKnnExpanding]] under the same
-   * bounds, but NO corpus aggregate before the probe: the radius comes
-   * from per-cell occupancy counts — a partition-column-only aggregate
-   * over at most cellsPerDim^gridDims groups (row-group stats, not a
-   * data scan) — and the probe scan itself is partition-pruned to the
-   * chosen cells at planning time. At 100 TB the query-time I/O is the
-   * probed cells, never the corpus.
-   */
-  /** Per-cell occupancy of a cell-partitioned grid index: at most
-    * cellsPerDim^gridDims rows, read from the partition column only.
-    * Callers serving many queries should compute this once per index
-    * generation and pass it to the probes below. */
+  /** Per-cell occupancy of a cell-keyed grid: at most
+    * cellsPerDim^gridDims rows, read from the `cell` column only (on a
+    * cell-partitioned index, the partition column). Callers serving
+    * many queries should compute this once per index generation and
+    * pass it to the probes below. */
   def gridCellCounts(index: DataFrame): Seq[(String, Long)] =
     index.groupBy(col("cell")).count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
 
+  /**
+   * Expanding-radius grid probe against a cell-keyed grid: rows
+   * (id, vector) with a `cell` column under fitted bounds — a
+   * PRE-BUILT cell-partitioned index (the reference keeps the fitted
+   * grid in its index object, algorithms.py:443-686, and so does the
+   * library) or the corpus [[gridKnnExpanding]] keys ad hoc. NO corpus
+   * aggregate before the probe: the radius comes from per-cell
+   * occupancy counts — a partition-column-only aggregate over at most
+   * cellsPerDim^gridDims groups (row-group stats, not a data scan) —
+   * and the probe scan itself is partition-pruned to the chosen cells
+   * at planning time. At 100 TB the query-time I/O is the probed
+   * cells, never the corpus.
+   */
   def gridKnnIndexed(index: DataFrame, lo: Array[Double], hi: Array[Double],
                      qv: Array[Float], idCol: String, vecCol: String, k: Int,
                      metric: String = "euclidean", gridDims: Int = 4,
@@ -615,62 +581,33 @@ object VectorSearch {
     knnFlat(index.filter(col("cell").isin(probe: _*)), qv, idCol, vecCol, k, metric)
   }
 
-  /** Batch twin of [[gridKnnIndexed]]: every query's radius resolves
-    * from the SAME per-cell histogram collect; the scan reads the
-    * union of all queries' probe cells once (planning-time pruning), a
-    * broadcast (query_id, cell) table assigns survivors, bounded
-    * per-query top-k ranks. */
+  /** Batch twin of [[gridKnnIndexed]]: a [[probeBatch]] over cells,
+    * every query's radius resolved from the SAME per-cell histogram. */
   def gridKnnIndexedBatch(index: DataFrame, lo: Array[Double], hi: Array[Double],
                           queries: DataFrame, idCol: String, vecCol: String, k: Int,
                           metric: String = "euclidean", gridDims: Int = 4,
                           cellsPerDim: Int = 4, maxRadius: Int = 3,
                           countsOpt: Option[Seq[(String, Long)]] = None): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
     val counts = countsOpt.getOrElse(gridCellCounts(index))
-    val qRows = queries.select(col("query_id"), col("qvec")).collect()
-    require(qRows.nonEmpty, "gridKnnIndexedBatch needs at least one query")
-    val pairs = qRows.flatMap { r =>
-      val qCells = qCellsOf(r.getSeq[Float](1), lo, hi, gridDims, cellsPerDim)
-      radiusProbe(counts, qCells, k, maxRadius).map(cell => (r.getLong(0), cell))
-    }.toSeq
-    val pairFrame = pairs.toDF("query_id", "cell")
-    val scored = index.filter(col("cell").isin(pairs.map(_._2).distinct: _*))
-      .join(broadcast(pairFrame), "cell")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    finishPerQueryTopK(scored, idCol, k)
+    probeBatch(index, Seq("cell"), queries,
+      qv => radiusProbe(counts, qCellsOf(qv, lo, hi, gridDims, cellsPerDim), k, maxRadius)
+        .map(Seq(_)),
+      idCol, vecCol, k, metric)
   }
 
   /**
    * Batch grid top-k: N queries against the cell-keyed corpus in one
-   * pass. Probe keys resolve driver-side per query; the scan filters
-   * on the UNION of all queries' neighbor cells (one literal IN), a
-   * broadcast (query_id, cell) table assigns survivors to queries
-   * (each corpus row has exactly ONE cell, so no per-pair dedup is
-   * needed), and the bounded per-query top-k finisher ranks.
+   * pass, a [[probeBatch]] over each query's ±1 neighbor cells (each
+   * corpus row has exactly ONE cell, so no per-pair dedup is needed).
    */
   def gridKnnBatch(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
                    k: Int, metric: String = "euclidean",
                    gridDims: Int = 4, cellsPerDim: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val (lo, hi) = gridBounds(corpus, vecCol, gridDims)
-    val corpusC = corpus.withColumn("cell",
-      cellKeyCol(col(vecCol), lo, hi, cellsPerDim))
-    val qRows = queries.select(col("query_id"), col("qvec")).collect()
-    val pairs = qRows.flatMap { r =>
-      queryProbeKeys(r.getSeq[Float](1), lo, hi, gridDims, cellsPerDim)
-        .map(cell => (r.getLong(0), cell))
-    }.toSeq
-    val pairFrame = pairs.toDF("query_id", "cell")
-    val scored = corpusC.filter(col("cell").isin(pairs.map(_._2).distinct: _*))
-      .join(broadcast(pairFrame), "cell")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    finishPerQueryTopK(scored, idCol, k)
+    probeBatch(corpus.withColumn("cell", cellKeyCol(col(vecCol), lo, hi, cellsPerDim)),
+      Seq("cell"), queries,
+      qv => queryProbeKeys(qv, lo, hi, gridDims, cellsPerDim).map(Seq(_)),
+      idCol, vecCol, k, metric)
   }
 
   /**
@@ -797,29 +734,65 @@ object VectorSearch {
   private def localFrame(rows: Array[Row], like: DataFrame): DataFrame =
     like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
 
+  /** A batch's (query_id, qvec) rows on the driver: the query side is
+    * small by contract. */
+  private[operators] def queryVectors(queries: DataFrame): Seq[(Long, Array[Float])] =
+    queries.select(col("query_id"), col("qvec")).collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
   /**
-   * Batch two-phase quantized top-k: ONE int8 scan scores every query
-   * (codes never leave the map side — the phase-1 shuffle carries
-   * k*rerankFactor (id, ascore) partials per query per partition via
-   * the bounded heap), then the union of all candidate sets joins the
-   * float column once for the exact per-query re-rank.
+   * The two-phase batch, the batch twin of [[twoPhaseTopK]]. `phase1`
+   * scores rows against the query vectors `qvs` (the
+   * [[queryVectors]] of `queries`) approximately, as
+   * (query_id, id, score), higher first — with the query side as
+   * literals ([[literalPhase1]]), as a single search scores its
+   * query, so phase 1 broadcasts nothing. Each query's first
+   * `shortlist` ids (ties by id ascending) are collected once, as
+   * (query_id, id) pairs, into a local frame. Their ids are pushed
+   * into the float scan of `rows` as an In-filter (row-group point
+   * reads on an id-clustered store), a broadcast of the local pairs
+   * attributes the survivors to their queries, and the [[exactTail]]
+   * ranks. No query or an empty shortlist: no rows.
    */
+  private[operators] def twoPhaseBatch(rows: DataFrame, queries: DataFrame,
+                                       qvs: Seq[(Long, Array[Float])], shortlist: Int,
+                                       idCol: String, vecCol: String, k: Int, metric: String)(
+                                       phase1: => DataFrame): DataFrame = {
+    lazy val top = finishPerQueryTopK(phase1, idCol, shortlist, ordered = false)
+      .select(col("query_id"), col(idCol))
+    val pairs = if (qvs.isEmpty) Array.empty[Row] else top.collect()
+    val ids = pairs.map(_.get(1)).distinct
+    if (ids.isEmpty)
+      rows.limit(0).crossJoin(broadcast(queries.select(col("query_id"))))
+        .select(col("query_id"), col(idCol), lit(0.0).as("score"), lit(0).as("rank"))
+    else exactTail(rows.filter(col(idCol).isin(ids: _*)).join(broadcast(localFrame(pairs, top)),
+      idCol), queries, idCol, vecCol, k, metric)
+  }
+
+  /** Phase 1 of a [[twoPhaseBatch]]: each row of `rows` once per
+    * (query_id `_1`, query value `_2`) struct of the array `side`,
+    * scored `approx(value)` as (query_id, id, score). */
+  private[operators] def literalPhase1(rows: DataFrame, side: Column, idCol: String)(
+                                       approx: Column => Column): DataFrame =
+    rows.select(col("*"), explode(side).as("__q"))
+      .select(col("__q._1").as("query_id"), col(idCol), approx(col("__q._2")).as("score"))
+
+  /** The `side` of a [[literalPhase1]] whose query value is `code(qv)`:
+    * unary expressions over literals, which constant folding evaluates
+    * once, at planning. */
+  private def codesSide(qvs: Seq[(Long, Array[Float])], code: Column => Column): Column =
+    array(qvs.map { case (qid, qv) => struct(lit(qid).as("_1"), code(typedLit(qv)).as("_2")) }: _*)
+
+  /** Batch two-phase quantized top-k: ONE int8 scan scores every query
+    * (the phase-1 shuffle carries k*rerankFactor bounded-heap partials
+    * per query per partition), then the [[twoPhaseBatch]] re-rank. */
   def knnQuantizedBatch(indexed: DataFrame, queries: DataFrame, idCol: String,
                         vecCol: String, codesCol: String, k: Int,
                         metric: String = "cosine", rerankFactor: Int = 4): DataFrame = {
-    val queryQ = queries.select(col("query_id"),
-      quantizeVec(l2Normalize(col("qvec"))).as("qqv"))
-    val phase1 = indexed.select(col(idCol), col(codesCol).as("codes"))
-      .crossJoin(broadcast(queryQ))
-      .select(col("query_id"), col(idCol),
-        quantizedDot(col("codes"), col("qqv")).cast("double").as("score"))
-    val cand = finishPerQueryTopK(phase1, idCol, k * rerankFactor, ordered = false)
-      .select(col("query_id"), col(idCol))
-    val scored = indexed.join(broadcast(cand), idCol)
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    finishPerQueryTopK(scored, idCol, k)
+    val qvs = queryVectors(queries)
+    twoPhaseBatch(indexed, queries, qvs, k * rerankFactor, idCol, vecCol, k, metric)(
+      literalPhase1(indexed, codesSide(qvs, q => quantizeVec(l2Normalize(q))), idCol)(
+        q => quantizedDot(col(codesCol), q).cast("double")))
   }
 
   /**
@@ -858,41 +831,22 @@ object VectorSearch {
     twoPhaseTopK(indexed, bitHamming(col(codesCol), bitPack(typedLit(qv))), ascending = true,
       k * rerankFactor, qv, idCol, vecCol, k, metric)
 
-  /** Batch binary top-k: ONE codes scan serves every query (phase-1
-    * shuffle carries k*rerankFactor bounded-heap partials per query
-    * per partition, never the corpus), then the union of candidate
-    * sets joins the float column once for the exact per-query
-    * re-rank. Heap scores are negated Hamming distances so the
-    * shared descending-heap contract applies unchanged. */
+  /** Batch binary top-k: ONE codes scan serves every query, then the
+    * [[twoPhaseBatch]] re-rank. */
   def knnBinaryBatch(indexed: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, codesCol: String, k: Int,
                      metric: String = "cosine", rerankFactor: Int = 8): DataFrame = {
-    val queryB = queries.select(col("query_id"), bitPack(col("qvec")).as("qbits"))
-    val phase1 = indexed.select(col(idCol), col(codesCol).as("bits"))
-      .crossJoin(broadcast(queryB))
-      .select(col("query_id"), col(idCol),
-        (-bitHamming(col("bits"), col("qbits")).cast("double")).as("score"))
-    // The union of candidate ids is bounded (Q * k * rerankFactor):
-    // resolve it driver-side and push it into the float scan as an
-    // In-filter (row-group point reads on an id-clustered store); the
-    // broadcast pair join then only attributes survivors to queries.
-    // The pair frame is pinned — it feeds the ids collect AND the
-    // attribution join.
-    val cand = graft.GraftFunctions.pin(
-      finishPerQueryTopK(phase1, idCol, k * rerankFactor, ordered = false)
-        .select(col("query_id"), col(idCol)))
-    val ids = cand.select(col(idCol)).distinct().collect().map(_.get(0))
-    if (ids.isEmpty)
-      return indexed.limit(0).crossJoin(broadcast(queries))
-        .select(col("query_id"), col(idCol), lit(0.0).as("score"),
-          lit(0).as("rank"))
-    val scored = indexed.filter(col(idCol).isin(ids: _*))
-      .join(broadcast(cand), idCol)
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col(idCol),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
-    finishPerQueryTopK(scored, idCol, k)
+    val qvs = queryVectors(queries)
+    twoPhaseBatch(indexed, queries, qvs, k * rerankFactor, idCol, vecCol, k, metric)(
+      hammingPhase1(indexed, qvs, idCol, codesCol))
   }
+
+  /** Phase 1 of the binary batch: Hamming distances, negated so the
+    * shared descending heap ranks nearest first. */
+  private def hammingPhase1(indexed: DataFrame, qvs: Seq[(Long, Array[Float])], idCol: String,
+                            codesCol: String): DataFrame =
+    literalPhase1(indexed, codesSide(qvs, bitPack), idCol)(
+      q => -bitHamming(col(codesCol), q).cast("double"))
 
   /**
    * Accuracy self-audit of the binary rung: recall@k of the Hamming
@@ -927,17 +881,13 @@ object VectorSearch {
     val minQ = queries.agg(min(col("query_id"))).head
     require(minQ.isNullAt(0) || minQ.getLong(0) >= 0L,
       "binaryRecallSweep needs non-negative query ids")
-    val qBits = queries.select(col("query_id"), bitPack(col("qvec")).as("qbits"))
-    val phase1 = indexed.select(col(idCol), col(codesCol).as("bits"))
-      .crossJoin(broadcast(qBits))
-      .select(col("query_id"), col(idCol),
-        (-bitHamming(col("bits"), col("qbits")).cast("double")).as("score"))
-    val short = finishPerQueryTopK(phase1, idCol, sweep.last * k, ordered = false)
+    val short = finishPerQueryTopK(hammingPhase1(indexed, queryVectors(queries), idCol,
+        codesCol), idCol, sweep.last * k, ordered = false)
       .select(col("query_id"), col(idCol), col("rank").as("h_rank"))
     val scored = indexed.join(broadcast(short), Seq(idCol))
       .join(broadcast(queries.select(col("query_id"), col("qvec"))), Seq("query_id"))
       .select(col("query_id"), col(idCol), col("h_rank"),
-        round(similarity(metric, col(vecCol), col("qvec")), 6).as("score"))
+        batchScoreCol(metric, vecCol).as("score"))
     val atFactor = scored.select(col("query_id").as("qid"),
         explode(filter(typedLit(sweep.map(_.toLong)),
           f => f * k >= col("h_rank"))).as("f"),
@@ -1102,30 +1052,25 @@ object VectorSearch {
     val phase1 = corpus.crossJoin(broadcast(queries))
       .select(col("query_id"), col(idCol),
         cosineSim(col(vecCol), col("qvec")).as("score"))
-    val cand = graft.GraftFunctions.pin(
-      finishPerQueryTopK(phase1, idCol, window, ordered = false))
-    val (candRows, vecMap) =
-      try {
-        val rows = cand.select(col("query_id"), col(idCol), col("score")).collect()
-        val ids = rows.map(_.get(1)).distinct.toSeq
-        val fetched =
-          if (ids.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else corpus.filter(col(idCol).isin(ids: _*))
-            .select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-            .collect()
-        // the greedy needs ONE vector per id: a duplicate id would
-        // silently pick an arbitrary one (the single-query form keeps
-        // each row's own vector) — surface the contract loudly instead
-        val dup = fetched.groupBy(_.get(0)).collectFirst {
-          case (id, rs) if rs.length > 1 => id }
-        require(dup.isEmpty,
-          s"mmrRerankBatch: corpus has multiple rows for $idCol=${dup.get}" +
-          " — batch rerank requires unique ids (use mmrRerank per query" +
-          " for duplicate-id corpora)")
-        val vm: Map[Any, Array[Double]] =
-          fetched.map(r => r.get(0) -> r.getSeq[Double](1).toArray).toMap
-        (rows, vm)
-      } finally cand.unpersist()
+    val candRows = finishPerQueryTopK(phase1, idCol, window, ordered = false)
+      .select(col("query_id"), col(idCol), col("score")).collect()
+    val ids = candRows.map(_.get(1)).distinct.toSeq
+    val fetched =
+      if (ids.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else corpus.filter(col(idCol).isin(ids: _*))
+        .select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
+        .collect()
+    // the greedy needs ONE vector per id: a duplicate id would
+    // silently pick an arbitrary one (the single-query form keeps
+    // each row's own vector) — surface the contract loudly instead
+    val dup = fetched.groupBy(_.get(0)).collectFirst {
+      case (id, rs) if rs.length > 1 => id }
+    require(dup.isEmpty,
+      s"mmrRerankBatch: corpus has multiple rows for $idCol=${dup.get}" +
+      " — batch rerank requires unique ids (use mmrRerank per query" +
+      " for duplicate-id corpora)")
+    val vecMap: Map[Any, Array[Double]] =
+      fetched.map(r => r.get(0) -> r.getSeq[Double](1).toArray).toMap
     val perQuery = candRows.groupBy(_.get(0)).toSeq
       .sortWith((a, b) => idLess(a._1, b._1))
     val out = perQuery.flatMap { case (qid, rows) =>

@@ -123,6 +123,19 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("gridKnnBatch over the suite query's shape runs 9 jobs") {
+    // grid_knn_batch, the suite's timed batch: bounds, the query
+    // collect, the two broadcasts and the per-query finisher
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    def run(): Unit = VectorSearch.gridKnnBatch(emb.filter(col("vec_id") >= 3),
+        emb.filter(col("vec_id") < 3)
+          .select(col("vec_id").as("query_id"), col("embedding").as("qvec")),
+        "vec_id", "embedding", 10)
+      .write.format("noop").mode("overwrite").save()
+    run()
+    assert(SparkJobs.count(spark)(run())._2 == 9)
+  }
+
   test("knnQuantizedBatch matches per-query knnQuantizedIndexed results") {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val store = emb.filter(col("vec_id") >= 3).withColumn("codes",

@@ -1451,17 +1451,24 @@ class VectorLibrarySpec extends AnyFunSuite {
     val lib = new VectorLibrary(spark, root, "dispatch-lib")
     lib.addDocuments(Tables.load(spark, SparkTestSession.sfDir, "documents").limit(40))
     val qs = Seq("spark join stream table filter", "vector index search embedding")
-    for (alg <- Seq("flat", "lsh", "grid", "ivf", "quantized", "binary", "pq")) {
-      lib.setAlgorithm(alg)
-      // batch first: under "ivf" it builds the on-disk index that the
-      // per-query path then probes, so both sides serve the same index.
-      val rows = lib.searchBatch(qs, 5).collect()
-      val byQuery = qs.indices.map(i => rows.filter(_.getLong(0) == i.toLong)
-        .sortBy(_.getInt(3)).map(r => (r.getString(1), r.getDouble(2))).toSeq)
-      val single = qs.map(q => lib.search(q, 5).collect()
-        .map(r => (r.getString(0), r.getDouble(1))).toSeq)
-      assert(byQuery == single, s"algorithm $alg: batch diverged from per-query")
-    }
+    val src = lib.chunks.select("source").head.getString(0)
+    // every route of every algorithm: the store-only routes, then the
+    // layout probes, each unfiltered and scoped to one source
+    def check(layouts: String): Unit =
+      for (alg <- VectorLibrary.algorithms; f <- Seq(None, Some(col("source") === src))) {
+        lib.setAlgorithm(alg)
+        val rows = lib.searchBatch(qs, 5, filter = f).collect()
+        val byQuery = qs.indices.map(i => rows.filter(_.getLong(0) == i.toLong)
+          .sortBy(_.getInt(3)).map(r => (r.getString(1), r.getDouble(2))).toSeq)
+        val single = qs.map(q => lib.search(q, 5, filter = f).collect()
+          .map(r => (r.getString(0), r.getDouble(1))).toSeq)
+        assert(byQuery == single, s"$layouts, algorithm $alg, filter $f: batch diverged")
+        assert(alg != "flat" || single.forall(_.nonEmpty), s"$layouts, filter $f: no hits")
+      }
+    check("store only")
+    lib.buildPartitionedIndex(); lib.buildIvfIndex(nCentroids = 4); lib.buildGridIndex()
+    lib.buildPqIndex(m = 2, kk = 8); lib.buildIvfPqIndex(nCentroids = 4, m = 2, kk = 8)
+    check("five layouts")
 
     // payload variant: same hits, chunk columns riding along
     lib.setAlgorithm("flat")
@@ -1479,6 +1486,36 @@ class VectorLibrarySpec extends AnyFunSuite {
     val viaText = lib.search(qs.head, 5).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(viaVector == viaText, "searchVector did not route through the algorithm dispatch")
+    lib.delete()
+  }
+
+  test("searchBatch: exact warm job counts per algorithm with all five layouts") {
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, _) = fiveLayoutLibrary("batch-jobs", docs)
+    val qs = Seq("spark join stream table filter", "vector index search embedding")
+    val jobs = VectorLibrary.algorithms.map { a =>
+      lib.setAlgorithm(a)
+      (1 to 2).foreach(_ => lib.searchBatch(qs, 10).collect()) // warm: memos, held rows
+      a -> SparkJobs.count(spark)(lib.searchBatch(qs, 10).collect())._2
+    }.toMap
+    // the two-phase batches (quantized, binary, pq, ivfpq): the
+    // shortlist collect, then the exact tail over a pushed id In-filter
+    assert(jobs == Map("flat" -> 5, "lsh" -> 7, "grid" -> 6, "ivf" -> 6, "quantized" -> 8,
+      "binary" -> 8, "pq" -> 8, "ivfpq" -> 8), s"jobs per warm batch: ${jobs.toSeq.sorted}")
+    lib.delete()
+  }
+
+  test("library batches persist no frame") {
+    val docs = Tables.load(spark, SparkTestSession.sfDir, "documents").limit(60)
+    val (lib, _) = fiveLayoutLibrary("batch-cache", docs)
+    val qs = Seq("spark join stream table filter", "vector index search embedding")
+    spark.catalog.clearCache()
+    for (a <- VectorLibrary.algorithms; _ <- 1 to 2) {
+      lib.setAlgorithm(a)
+      lib.searchBatch(qs, 10).collect()
+      lib.searchDiverseBatch(qs, 5).collect()
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "a library batch left a frame persisted")
     lib.delete()
   }
 
